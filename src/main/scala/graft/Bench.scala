@@ -73,67 +73,22 @@ object Bench {
     // already absorbed JIT/codegen, so the min discards transient
     // machine-contention spikes (the graded round-3 run showed 6-26x
     // inflation on several queries that reproduced at 1x when idle).
-    //
-    // Per-query watchdog (same rationale as Verify's): a hung query
-    // must not lose the WHOLE bench artifact. The clock starts INSIDE
-    // the submitted callable (queue wait from a still-draining prior
-    // cancellation is never billed to the next query), each callable
-    // clears a stale interrupt flag first (task.cancel(true) can race
-    // query completion and leave the flag set for the NEXT query), and
-    // a worker stuck somewhere cancelJobGroup/interrupt cannot reach is
-    // ABANDONED: the executor is replaced so later queries never queue
-    // behind a dead one. Timeouts are reported in a separate
-    // "timed_out" list, not as a fake elapsed time.
+    // Per-query watchdog (same rationale as Verify's, see
+    // BenchTiming.Timer). Timeouts are reported in a separate
+    // "timed_out" list, not as a fake elapsed time; a query that
+    // throws is reported in "failed" with no time at all.
     val budgetMs = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_MS",
       "300000").toLong
-    var pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    // One timed run; None = timed out / never finished.
-    def timedOnce(name: String): Option[Double] = {
-      val elapsedNs = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val task = pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = {
-          Thread.interrupted() // drop a stale cancel-race interrupt
-          val t0 = System.nanoTime()
-          spark.sparkContext.setJobGroup(name, name,
-            interruptOnCancel = true)
-          try { SparkEntry.queries(name)(spark, sfDir).count(); () }
-          catch { case _: InterruptedException => throw new
-              RuntimeException("interrupted")
-            case _: Throwable => () }
-          finally {
-            spark.sparkContext.clearJobGroup()
-            elapsedNs.set(System.nanoTime() - t0)
-          }
-        }
-      })
-      try {
-        task.get(budgetMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-        Some(elapsedNs.get / 1e9)
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          spark.sparkContext.cancelJobGroup(name)
-          if (!task.isDone) task.cancel(true)
-          // give the cancelled run a short grace to unwind, then
-          // abandon a stuck worker so the next query gets a live one
-          try task.get(15000, java.util.concurrent.TimeUnit.MILLISECONDS)
-          catch { case _: Throwable => () }
-          if (!task.isDone) {
-            pool.shutdownNow()
-            pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-          }
-          None
-        case _: Throwable =>
-          if (elapsedNs.get >= 0) Some(elapsedNs.get / 1e9) else None
-      }
-    }
+    val timer = new BenchTiming.Timer(spark, budgetMs)
+    def timedOnce(name: String): BenchTiming.Outcome =
+      timer.run(name) { SparkEntry.queries(name)(spark, sfDir).count(); () }
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
     val loadStart = loadAvg()
     val twoRuns = SparkEntry.queries.keys.toSeq.sorted
-      .filter(selected).map { name =>
-      (name, Seq(timedOnce(name), timedOnce(name)).flatten)
-    }
+      .filter(selected).map(name => (name, Seq(timedOnce(name),
+        timedOnce(name))))
     // Contention hardening (r11: a sustained-load graded run inflated
     // every query 3-4x and min-of-2 couldn't absorb it): queries whose
     // two runs DISAGREE >2x (the contention signature — a stable-state
@@ -142,26 +97,13 @@ object Bench {
     // transient load spike has had minutes to pass; the overall min is
     // reported. Bounded extra cost: only flagged queries re-run.
     val results = twoRuns.map { case (name, runs) =>
-      val suspicious = runs.size == 2 &&
-        ((runs.max > 2 * runs.min && runs.min > 0.5) || runs.min > 5.0)
-      val all = if (suspicious) runs ++ timedOnce(name).toSeq else runs
-      (name, if (all.nonEmpty) all.min else budgetMs / 1000.0,
-        all.isEmpty, suspicious)
+      val suspicious = BenchTiming.suspicious(runs)
+      BenchTiming.fold(name,
+        if (suspicious) runs :+ timedOnce(name) else runs,
+        budgetMs, suspicious)
     }
     val loadEnd = loadAvg()
-    pool.shutdownNow()
-    // Output contract, hardened for the driver's bounded TAIL capture
-    // (rounds 1-3 all lost the artifact to FRONT-truncation of one big
-    // line): the long per-query map gets its own line FIRST, and the
-    // LAST line is a short (<120 char) self-contained total that
-    // always fits the capture window whole. Nothing prints after it.
-    def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + f(v) }
-      .mkString("{", ",", "}")
-    val timedOut = results.collect { case (k, _, true, _) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.map(_._2).sum
-    val thirdRuns = results.count(_._4)
+    timer.shutdown()
     val sfName = new java.io.File(sfDir).getName
     val cores = Runtime.getRuntime.availableProcessors
     spark.stop()
@@ -169,7 +111,9 @@ object Bench {
     // the artifact (r11's graded number was 2.4x machine noise and
     // indistinguishable from a regression without an idle re-run):
     // load >> cores at either sample means the box was busy.
-    println(s"""{"metric":"queries","unit":"sec","sf":"$sfName","memo_build_sec":${f(memoBuildSec)},"load_avg_start":${f(loadStart)},"load_avg_end":${f(loadEnd)},"cores":$cores,"third_runs":$thirdRuns,"timed_out":$timedOut,"queries":$qs}""")
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","sf":"$sfName","load_avg":${f(math.max(loadStart, loadEnd))}}""")
+    val (line1, line2) = BenchTiming.contractLines(results, sfName,
+      memoBuildSec, loadStart, loadEnd, cores)
+    println(line1)
+    println(line2)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Per-file Bloom-filter sidecar + point-lookup file pruning — the
@@ -42,8 +41,9 @@ import org.apache.spark.sql.functions._
   * plan with the roles reversed, which is what keeps it testable.
   * File assignment simulates a range-partitioned writer via
   * `ntile(files)` over the caller's layout ordering, exactly like
-  * [[ZoneMaps.statsAndPrune]] (a global sort at toy scale; in
-  * production the layout IS the writer's, and stats come for free).
+  * [[ZoneMaps.statsAndPrune]] ([[Layout.ntileBy]]: range-partitioned,
+  * never one reducer; in production the layout IS the writer's, and
+  * stats come for free).
   */
 object BloomSkip {
 
@@ -62,8 +62,8 @@ object BloomSkip {
                       keyCol: String, probes: DataFrame, probeCol: String,
                       mBits: Int = 256, kHashes: Int = 2): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
-    val assigned = df
-      .withColumn("file_id", ntile(files).over(Window.orderBy(layout: _*)))
+    val assigned = Layout
+      .ntileBy(df, layout, files, keep = Seq(keyCol), tileCol = "file_id")
       .select(col("file_id").cast("long").as("file_id"),
         col(keyCol).as("k"))
     val sidecar = assigned

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.IntegerType
 
@@ -59,5 +59,19 @@ object Layout {
       }
     }
     spark.createDataFrame(rdd, out)
+  }
+
+  /** [[globalNtile]] over order EXPRESSIONS (ascending, like a plain
+    * `Window.orderBy(layout)`): each expression is materialized as a
+    * hidden key column, the tiles are assigned, and only the `keep`
+    * columns plus `tileCol` come back — the checkpointed frame holds
+    * just what the caller reads.
+    */
+  def ntileBy(df: DataFrame, layout: Seq[Column], n: Int,
+              keep: Seq[String], tileCol: String): DataFrame = {
+    val keys = layout.indices.map(i => s"__ntile_key_$i")
+    val keyed = df.select(keep.map(col) ++
+      layout.zip(keys).map { case (c, k) => c.as(k) }: _*)
+    globalNtile(keyed, n, keys, tileCol).drop(keys: _*)
   }
 }

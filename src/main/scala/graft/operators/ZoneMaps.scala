@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** File-level zone maps (min/max column statistics per physical file)
@@ -11,7 +10,8 @@ import org.apache.spark.sql.functions._
   *
   * `statsAndPrune` simulates the physical layout with `ntile(files)`
   * over the provided layout ordering (exactly how a range-partitioned
-  * writer assigns rows to files), computes each file's zone map over
+  * writer assigns rows to files; computed by [[Layout.ntileBy]], not a
+  * one-reducer global window), computes each file's zone map over
   * the predicate columns in one aggregate pass, and evaluates
   * range-overlap pruning for a conjunctive interval predicate:
   * a file can be skipped iff ANY predicate interval misses the file's
@@ -34,8 +34,8 @@ object ZoneMaps {
     */
   def statsAndPrune(df: DataFrame, layout: Seq[Column], files: Int,
                     ranges: Seq[(String, Long, Long)]): DataFrame = {
-    val w = Window.orderBy(layout: _*)
-    val assigned = df.withColumn("file_id", ntile(files).over(w))
+    val assigned = Layout.ntileBy(df, layout, files,
+      keep = ranges.map(_._1).distinct, tileCol = "file_id")
     val stats = ranges.flatMap { case (c, _, _) =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))
     }

@@ -436,10 +436,14 @@ object VersionedTable {
     * dirs carry the value in DATA files), files not directly under
     * their leaf.
     */
-  private val dilDebug = sys.env.contains("SPARK_GRAFT_DIL_DEBUG")
+  // each bail is one DEBUG line (enable with
+  // `logger.graft.name = graft.sinks.VersionedTable`,
+  // `logger.graft.level = debug` in the log4j2 config)
+  private val log = org.apache.logging.log4j.LogManager
+    .getLogger("graft.sinks.VersionedTable")
   private def dilBail(why: String, base: Path)
       : Option[org.apache.spark.sql.types.StructType] = {
-    if (dilDebug) println(s"[dil-bail] $why base=$base")
+    log.debug(s"driver leaf inference bailed: $why base=$base")
     None
   }
 

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
@@ -563,30 +564,39 @@ private[sources] class GraftV1Relation(context: SQLContext,
       return context.sparkSession.createDataFrame(
         java.util.Collections.emptyList[Row](), required).rdd
     }
-    // buildScan runs per EXECUTION of the enclosing plan, and its
-    // inner snapshot plan pays full Catalyst analysis + optimization
-    // + physical planning every time (~the dominant driver cost of a
-    // DML statement sequence). The RDD it produces is pure lineage —
-    // no data is cached, every execution still scans the parquet — so
-    // reusing it across identical reads of an identical snapshot is
-    // sound by construction: the fingerprint pins the session, the
-    // options, the projection, the filters, and every metadata file
-    // the pruning consults; any commit/sidecar write moves it.
+    // buildScan runs per EXECUTION of the enclosing plan. Assembling
+    // the inner snapshot plan (manifest/sidecar reads, pruning, the
+    // MoR mask joins, analysis + optimization of the result) is the
+    // dominant driver cost of a DML statement sequence, so identical
+    // reads of an identical snapshot reuse the OPTIMIZED LOGICAL plan:
+    // the fingerprint pins the session, the options, the projection,
+    // the filters, and every metadata file the pruning consults; any
+    // commit/sidecar write moves it. Only the logical plan is kept —
+    // an executed RDD would pin its physical plan's broadcasts (the
+    // pos-delete mask hash relations) for as long as the memo entry
+    // lives. Every execution, hit or miss, plans the memoized tree
+    // afresh, so its broadcasts belong to that query and are freed
+    // with it.
     GraftScanPlanner.scanFingerprint(
         context.sparkSession, opts, required, pushed) match {
       case Some(key) =>
-        val (rdd, audit) =
-          GraftScanPlanner.scanRddMemo.getOrElseUpdate(key)(build())
+        val (plan, audit) =
+          GraftScanPlanner.scanPlanMemo.getOrElseUpdate(key) {
+            val df = build()
+            val decision = GraftScanAudit.last
+            (df.queryExecution.optimizedPlan, decision)
+          }
         // re-publish the pruning decision recorded when the plan was
         // first built — the fingerprint guarantees it is what the
         // rebuild would decide
         GraftScanAudit.last = audit
-        rdd
-      case None => build()._1
+        org.apache.spark.sql.graft.SqlShims
+          .ofRows(context.sparkSession, plan).rdd
+      case None => build().rdd
     }
   }
 
-  private def build(): (RDD[Row], Option[GraftScanAudit.Decision]) = {
+  private def build(): DataFrame = {
     val df = GraftScanPlanner
       .pruned(context.sparkSession, opts, pushed.toSeq)
     // a DECLARED column no data file carries yet (ALTER TABLE …
@@ -594,18 +604,16 @@ private[sources] class GraftV1Relation(context: SQLContext,
     // standard schema-evolution read contract; catalog analysis
     // already rejected genuinely unknown columns
     val have = df.columns.map(_.toLowerCase).toSet
-    val projected =
-      if (required.isEmpty) df.select()
-      else df.select(required.fields.toSeq.map { f =>
-        // cast to the DECLARED type: after ALTER COLUMN … TYPE
-        // widening, historical files carry the narrow physical type
-        // and must surface widened (a same-type cast folds away)
-        if (have(f.name.toLowerCase))
-          col(f.name).cast(f.dataType).as(f.name)
-        else org.apache.spark.sql.functions.lit(null)
-          .cast(f.dataType).as(f.name)
-      }: _*)
-    (projected.rdd, GraftScanAudit.last)
+    if (required.isEmpty) df.select()
+    else df.select(required.fields.toSeq.map { f =>
+      // cast to the DECLARED type: after ALTER COLUMN … TYPE
+      // widening, historical files carry the narrow physical type
+      // and must surface widened (a same-type cast folds away)
+      if (have(f.name.toLowerCase))
+        col(f.name).cast(f.dataType).as(f.name)
+      else org.apache.spark.sql.functions.lit(null)
+        .cast(f.dataType).as(f.name)
+    }: _*)
   }
 }
 
@@ -811,14 +819,16 @@ private[graft] object GraftScanPlanner {
     }
   }
 
-  /** Memo of built V1 scan RDDs keyed by [[scanFingerprint]] — the
-    * repeated-planning killer for DML/catalog statement sequences.
-    * Values are (lineage-only RDD, the pruning decision recorded when
-    * it was built); nothing is cached or persisted — every execution
-    * of a memoized RDD still reads the parquet files.
+  /** Memo of pruned V1 snapshot scans keyed by [[scanFingerprint]] —
+    * saves the metadata reads and Catalyst passes of repeated reads in
+    * DML/catalog statement sequences. Values are (the optimized
+    * logical plan of the projected snapshot read, the pruning decision
+    * recorded when it was built). A logical plan holds no executed
+    * state — no physical plan, no broadcast — so every execution
+    * replans it and reads the parquet files.
     */
-  private[sources] val scanRddMemo = new graft.core.FingerprintMemo[
-    String, (RDD[Row], Option[GraftScanAudit.Decision])](512)
+  private[graft] val scanPlanMemo = new graft.core.FingerprintMemo[
+    String, (LogicalPlan, Option[GraftScanAudit.Decision])](512)
 
   /** Fingerprint of EVERYTHING a pruned snapshot scan depends on:
     * the session (application id + session identity — plans bind to a

@@ -14,10 +14,10 @@ import graft.sinks.VersionedTable
   *    against Spark's own inference across the engine's type surface
   *    — a divergence here would silently misread every versioned
   *    table.
-  * 2. The V1-scan RDD memo: repeated identical reads of an identical
-  *    snapshot reuse the planned RDD (no data caching — lineage
-  *    only); ANY commit, sidecar write or delete must move the
-  *    fingerprint and re-plan.
+  * 2. The V1-scan plan memo: repeated identical reads of an
+  *    identical snapshot reuse the pruned snapshot's logical plan (no
+  *    data caching, no executed state); ANY commit, sidecar write or
+  *    delete must move the fingerprint and re-plan.
   */
 class InferenceParitySpec extends SparkSpec {
   import spark.implicits._
@@ -142,7 +142,7 @@ class InferenceParitySpec extends SparkSpec {
     assert(relax(ftyped) === finferred)
   }
 
-  test("V1-scan RDD memo: identical reads reuse the plan, a commit " +
+  test("V1-scan plan memo: identical reads reuse the plan, a commit " +
     "re-plans, results track the table") {
     val root = tmpDir("ipar_memo") + "/t"
     VersionedTable.append(spark, root,
@@ -151,7 +151,7 @@ class InferenceParitySpec extends SparkSpec {
     assert(read().count() === 2L)
     assert(read().count() === 2L) // second read: memo hit, same result
     VersionedTable.append(spark, root, Seq((3L, "c")).toDF("id", "s"))
-    // the commit moved the root listing token: stale RDD must not serve
+    // the commit moved the root listing token: stale plan must not serve
     assert(read().count() === 3L)
     assert(read().select(sum("id")).head.getLong(0) === 6L)
     VersionedTable.softDeletePos(spark, root, col("id") === 2L)
