@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, LessThanOrEqual}
 import graft.core.Tables
 import graft.functions.TextFunctions
 import graft.operators.{AsOfJoin, Dedup, Multimodal, RangeJoin, Similarity}
@@ -4235,14 +4236,15 @@ object SparkEntry {
           .write.partitionBy("fid").parquet(dir)
       }
       val (lo, hi) = (1000L, 3000L)
-      val agg = vt.readLivePruned(s, work, "cents", lo, hi)
+      val agg = vt.readLivePruned(s, work, between("cents", lo, hi))
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           min("event_id").as("min_eid"), max("event_id").as("max_eid"))
-      val (scanned, total) = vt.pruneDecision(work, "cents", lo, hi)
+      val dec = vt.pruneDecision(work, between("cents", lo, hi))
       agg.select(lit("rows").as("part"), col("n"), col("sum_cents"),
           col("min_eid"), col("max_eid"))
         .unionByName(s.range(1).select(lit("files").as("part"),
-          lit(scanned.toLong).as("n"), lit(total.toLong).as("sum_cents"),
+          lit(dec.filesScanned.toLong).as("n"),
+          lit(dec.filesTotal.toLong).as("sum_cents"),
           lit(0L).as("min_eid"), lit(0L).as("max_eid")))
     }),
 
@@ -4304,22 +4306,22 @@ object SparkEntry {
         ev.repartition(16).write.parquet(dir)
       }
       val (lo, hi) = (4000L, 6000L)
-      val (scanBefore, totalBefore) = vt.pruneDecision(work, "cents", lo, hi)
+      val before = vt.pruneDecision(work, between("cents", lo, hi))
       val v = vt.compactSorted(s, work, Seq("cents", "event_id"), 16)
-      val (scanAfter, totalAfter) = vt.pruneDecision(work, "cents", lo, hi)
-      val improved =
-        if (scanAfter < scanBefore && scanAfter <= totalAfter) 1L else 0L
+      val after = vt.pruneDecision(work, between("cents", lo, hi))
+      val improved = if (after.filesScanned < before.filesScanned &&
+        after.filesScanned <= after.filesTotal) 1L else 0L
       // the pruned read's aggregate IS the soundness grade: the oracle
       // replays the plain filter, so any wrongly-skipped file breaks
       // the value hash
-      val prunedAgg = vt.readLivePruned(s, work, "cents", lo, hi)
+      val prunedAgg = vt.readLivePruned(s, work, between("cents", lo, hi))
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           min("event_id").as("min_eid"), max("event_id").as("max_eid"))
       prunedAgg.select(lit("rows").as("part"), col("n"), col("sum_cents"),
           col("min_eid"), col("max_eid"))
         .unionByName(s.range(1).select(lit("files").as("part"),
-          lit(scanBefore.toLong).as("n"),
-          lit(totalBefore.toLong).as("sum_cents"),
+          lit(before.filesScanned.toLong).as("n"),
+          lit(before.filesTotal.toLong).as("sum_cents"),
           lit(improved).as("min_eid"), lit(v).as("max_eid")))
     }),
 
@@ -4342,15 +4344,17 @@ object SparkEntry {
           .write.partitionBy("fid").parquet(dir)
       }
       val target = "src5"
-      val (scanned, total) = vt.pruneDecisionEq(work, "source", target)
+      val probe = Seq(EqualTo("source", target))
+      val dec = vt.pruneDecision(work, probe)
       val metaCount = vt.countLive(work).getOrElse(-1L)
-      val agg = vt.readLivePrunedEq(s, work, "source", target)
+      val agg = vt.readLivePruned(s, work, probe)
         .agg(count(lit(1)).as("n"), min("doc_id").as("min_did"),
           max("doc_id").as("max_did"))
       agg.select(lit("rows").as("part"), col("n"), col("min_did"),
           col("max_did"))
         .unionByName(s.range(1).select(lit("files").as("part"),
-          lit(scanned.toLong).as("n"), lit(total.toLong).as("min_did"),
+          lit(dec.filesScanned.toLong).as("n"),
+          lit(dec.filesTotal.toLong).as("min_did"),
           lit(metaCount).as("max_did")))
     }),
 
@@ -4416,24 +4420,26 @@ object SparkEntry {
       }
       val probe = 777L
       val absent = 123456789L
-      val (mmScan, _) = vt.pruneDecision(work, "event_id", probe, probe)
+      val mmScan = vt.pruneDecision(work, between("event_id", probe, probe))
+        .filesScanned
       vt.addBloomSidecar(s, work, Seq("event_id"), bits = 1 << 18)
-      val (bScan, bTotal) = vt.pruneDecisionBloomLong(work, "event_id", probe)
-      val (aScan, _) = vt.pruneDecisionBloomLong(work, "event_id", absent)
+      val present = Seq(EqualTo("event_id", probe))
+      val missing = Seq(EqualTo("event_id", absent))
+      val bDec = vt.pruneDecision(work, present)
+      val (bScan, bTotal) = (bDec.filesScanned, bDec.filesTotal)
+      val aScan = vt.pruneDecision(work, missing).filesScanned
       def agg(df: org.apache.spark.sql.DataFrame, part: String) =
         df.agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
           .select(lit(part).as("part"), col("n"), col("sum_cents"),
             lit(0L).as("flag"))
-      val present = agg(
-        vt.readLivePrunedBloomLong(s, work, "event_id", probe), "present")
-      val absentR = agg(
-        vt.readLivePrunedBloomLong(s, work, "event_id", absent), "absent")
+      val presentR = agg(vt.readLivePruned(s, work, present), "present")
+      val absentR = agg(vt.readLivePruned(s, work, missing), "absent")
       val improved = if (bScan >= 1 && bScan < mmScan) 1L else 0L
       val absentPruned = if (aScan <= 2) 1L else 0L
       val audit = s.range(1).select(lit("files").as("part"),
         lit(mmScan.toLong).as("n"), lit(bTotal.toLong).as("sum_cents"),
         lit(improved + 2L * absentPruned).as("flag"))
-      present.unionByName(absentR).unionByName(audit)
+      presentR.unionByName(absentR).unionByName(audit)
     }),
 
     // Two-dimensional z-order compaction: two independent scrambled
@@ -4455,18 +4461,22 @@ object SparkEntry {
         ev.repartition(16).write.parquet(dir)
       }
       val (lo, hi) = (100L, 160L)
-      val (xb, _) = vt.pruneDecision(work, "x", lo, hi)
-      val (yb, _) = vt.pruneDecision(work, "y", lo, hi)
+      val xb = vt.pruneDecision(work, between("x", lo, hi)).filesScanned
+      val yb = vt.pruneDecision(work, between("y", lo, hi)).filesScanned
       vt.compactZOrder(s, work, "x", "y", 16)
-      val (xa, xt) = vt.pruneDecision(work, "x", lo, hi)
-      val (ya, yt) = vt.pruneDecision(work, "y", lo, hi)
+      val xDec = vt.pruneDecision(work, between("x", lo, hi))
+      val yDec = vt.pruneDecision(work, between("y", lo, hi))
+      val (xa, xt) = (xDec.filesScanned, xDec.filesTotal)
+      val (ya, yt) = (yDec.filesScanned, yDec.filesTotal)
       def agg(df: org.apache.spark.sql.DataFrame, part: String) =
         df.agg(count(lit(1)).as("n"), sum("event_id").as("s1"),
             min("event_id").as("s2"), max("event_id").as("s3"))
           .select(lit(part).as("part"), col("n"), col("s1"), col("s2"),
             col("s3"))
-      val rowsX = agg(vt.readLivePruned(s, work, "x", lo, hi), "rows_x")
-      val rowsY = agg(vt.readLivePruned(s, work, "y", lo, hi), "rows_y")
+      val rowsX = agg(vt.readLivePruned(s, work, between("x", lo, hi)),
+        "rows_x")
+      val rowsY = agg(vt.readLivePruned(s, work, between("y", lo, hi)),
+        "rows_y")
       val audit = s.range(1).select(lit("files").as("part"),
         lit(xb.toLong).as("n"), lit(yb.toLong).as("s1"),
         lit(if (xa < xt) 1L else 0L).as("s2"),
@@ -4495,18 +4505,18 @@ object SparkEntry {
         .repartitionByRange(8, col("doc_id"))
       vt.upsertPartitioned(s, work, docs, Seq("doc_id"), Seq("source"))
       val (lo, hi) = (100L, 220L)
-      val (pScan, pTotal, fScan, fTotal) =
-        vt.pruneDecisionPartitioned(work, "source=src5", "doc_id", lo, hi)
-      val pruned = vt.readLivePartitionedPruned(
-        s, work, "source=src5", "doc_id", lo, hi)
+      val probe = EqualTo("source", "src5") +: between("doc_id", lo, hi)
+      val dec = vt.pruneDecision(work, probe)
+      val pruned = vt.readLivePruned(s, work, probe)
       val agg = pruned.agg(count(lit(1)).as("n"),
         sum("n_chars").as("sum_chars"), min("doc_id").as("min_did"),
         max("doc_id").as("max_did"))
-      val improved = if (fScan < fTotal) 1L else 0L
+      val improved = if (dec.filesScanned < dec.filesTotal) 1L else 0L
       agg.select(lit("rows").as("part"), col("n"), col("sum_chars"),
           col("min_did"), col("max_did"))
         .unionByName(s.range(1).select(lit("files").as("part"),
-          lit(pScan.toLong).as("n"), lit(pTotal.toLong).as("sum_chars"),
+          lit(dec.partitionsScanned.toLong).as("n"),
+          lit(dec.partitionsTotal.toLong).as("sum_chars"),
           lit(improved).as("min_did"), lit(0L).as("max_did")))
     }),
 
@@ -4529,10 +4539,10 @@ object SparkEntry {
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
       vt.upsertPartitioned(s, work, ev, Seq("event_id"), Seq("day"))
       val (lo, hi) = (200L, 299L)
-      val (pScan, pTotal, fScan, fTotal) =
-        vt.pruneDecisionPartitionedInterval(work, "event_id", lo, hi)
-      val pruned = vt.readLivePartitionedPrunedInterval(
-        s, work, "event_id", lo, hi)
+      val dec = vt.pruneDecision(work, between("event_id", lo, hi))
+      val (pScan, pTotal, fScan, fTotal) = (dec.partitionsScanned,
+        dec.partitionsTotal, dec.filesScanned, dec.filesTotal)
+      val pruned = vt.readLivePruned(s, work, between("event_id", lo, hi))
       val agg = pruned.agg(count(lit(1)).as("n"),
         sum("cents").as("sum_cents"), min("day").as("min_day"),
         max("day").as("max_day"))
@@ -4600,14 +4610,16 @@ object SparkEntry {
         ev.repartition(16).write.parquet(dir)
       }
       val (lo, hi) = (100L, 160L)
-      val (rb, _) = vt.pruneDecision2(work, "x", lo, hi, "y", lo, hi)
+      val box = between("x", lo, hi) ++ between("y", lo, hi)
+      val rb = vt.pruneDecision(work, box).filesScanned
       vt.compactZOrder(s, work, "x", "y", 16)
-      val (rect, total) = vt.pruneDecision2(work, "x", lo, hi, "y", lo, hi)
-      val (xa, _) = vt.pruneDecision(work, "x", lo, hi)
-      val (ya, _) = vt.pruneDecision(work, "y", lo, hi)
+      val rectDec = vt.pruneDecision(work, box)
+      val (rect, total) = (rectDec.filesScanned, rectDec.filesTotal)
+      val xa = vt.pruneDecision(work, between("x", lo, hi)).filesScanned
+      val ya = vt.pruneDecision(work, between("y", lo, hi)).filesScanned
       val subsetBit = if (rect <= math.min(xa, ya)) 1L else 0L
       val improvedBit = if (rect < total) 1L else 0L
-      val agg = vt.readLivePruned2(s, work, "x", lo, hi, "y", lo, hi)
+      val agg = vt.readLivePruned(s, work, box)
         .agg(count(lit(1)).as("n"), sum("event_id").as("s1"),
           min("event_id").as("s2"), max("event_id").as("s3"))
       agg.select(lit("rows").as("part"), col("n"), col("s1"), col("s2"),
@@ -4985,15 +4997,16 @@ object SparkEntry {
         ev.repartition(16).write.parquet(dir)
       }
       val (lo, hi) = (100L, 260L)
-      val box = Seq(("x", lo, hi), ("y", lo, hi), ("w", lo, hi))
-      val (before, _) = vt.pruneDecisionBox(work, box)
+      val box = Seq("x", "y", "w").flatMap(between(_, lo, hi))
+      val before = vt.pruneDecision(work, box).filesScanned
       vt.compactZOrderN(s, work, Seq("x", "y", "w"), 16)
-      val (after, total) = vt.pruneDecisionBox(work, box)
+      val afterDec = vt.pruneDecision(work, box)
+      val (after, total) = (afterDec.filesScanned, afterDec.filesTotal)
       val singles = Seq("x", "y", "w")
-        .map(c => vt.pruneDecision(work, c, lo, hi)._1)
+        .map(c => vt.pruneDecision(work, between(c, lo, hi)).filesScanned)
       val subsetBit = if (after <= singles.min) 1L else 0L
       val improvedBit = if (after < total) 1L else 0L
-      val agg = vt.readLivePrunedBox(s, work, box)
+      val agg = vt.readLivePruned(s, work, box)
         .agg(count(lit(1)).as("n"), sum("event_id").as("s1"),
           min("event_id").as("s2"), max("event_id").as("s3"))
       agg.select(lit("rows").as("part"), col("n"), col("s1"), col("s2"),
@@ -5157,10 +5170,9 @@ object SparkEntry {
       }
       val filesAfter = liveFiles()
       val (lo, hi) = (200L, 299L)
-      val (pScan, _, _, _) =
-        vt.pruneDecisionPartitionedInterval(work, "event_id", lo, hi)
-      val pruned = vt.readLivePartitionedPrunedInterval(
-          s, work, "event_id", lo, hi)
+      val pScan = vt.pruneDecision(work, between("event_id", lo, hi))
+        .partitionsScanned
+      val pruned = vt.readLivePruned(s, work, between("event_id", lo, hi))
         .agg(count(lit(1)).as("n"), sum("cents").as("s1"),
           min("event_id").as("s2"), max("event_id").as("s3"))
         .select(lit("pruned").as("phase"), col("n"), col("s1"),
@@ -5194,13 +5206,12 @@ object SparkEntry {
         .repartition(4, col("event_id"))
       vt.upsertPartitioned(s, work, ev, Seq("event_id"), Seq("day"))
       val (lo, hi) = (1000L, 2000L)
-      val (_, _, fb, _) =
-        vt.pruneDecisionPartitionedInterval(work, "cents", lo, hi)
+      val fb = vt.pruneDecision(work, between("cents", lo, hi))
+        .filesScanned
       val v2 = vt.compactPartitionsSorted(s, work, Seq("cents"))
-      val (_, _, fa, ft) =
-        vt.pruneDecisionPartitionedInterval(work, "cents", lo, hi)
-      val pruned = vt.readLivePartitionedPrunedInterval(
-          s, work, "cents", lo, hi)
+      val after = vt.pruneDecision(work, between("cents", lo, hi))
+      val (fa, ft) = (after.filesScanned, after.filesTotal)
+      val pruned = vt.readLivePruned(s, work, between("cents", lo, hi))
         .agg(count(lit(1)).as("n"), sum("cents").as("s1"),
           min("event_id").as("s2"), max("event_id").as("s3"))
       pruned.select(lit("rows").as("phase"), col("n"), col("s1"),
@@ -5231,21 +5242,19 @@ object SparkEntry {
       vt.addBloomSidecarPartitioned(s, work, Seq("k"), bits = 1 << 17)
       val probe = 777L * 2654435761L % 100000L
       val absent = -12345L
-      val (pScan, pTot) =
-        vt.pruneDecisionPartitionedBloomLong(work, "k", probe)
-      val (aScan, _) =
-        vt.pruneDecisionPartitionedBloomLong(work, "k", absent)
+      val pDec = vt.pruneDecision(work, Seq(EqualTo("k", probe)))
+      val (pScan, pTot) = (pDec.filesScanned, pDec.filesTotal)
+      val aScan = vt.pruneDecision(work, Seq(EqualTo("k", absent)))
+        .filesScanned
       def agg(df: org.apache.spark.sql.DataFrame, part: String) =
         df.agg(count(lit(1)).as("n"), sum("event_id").as("s1"),
             min("event_id").as("s2"), max("event_id").as("s3"))
           .select(lit(part).as("part"), col("n"), col("s1"), col("s2"),
             col("s3"))
       val present = agg(
-        vt.readLivePartitionedPrunedBloomLong(s, work, "k", probe),
-        "present")
+        vt.readLivePruned(s, work, Seq(EqualTo("k", probe))), "present")
       val absentR = agg(
-        vt.readLivePartitionedPrunedBloomLong(s, work, "k", absent),
-        "absent")
+        vt.readLivePruned(s, work, Seq(EqualTo("k", absent))), "absent")
       val audit = s.range(1).select(lit("audit").as("part"),
         lit(if (pScan >= 1 && pScan < pTot) 1L else 0L).as("n"),
         lit(if (aScan <= 3) 1L else 0L).as("s1"),
@@ -5440,27 +5449,28 @@ object SparkEntry {
           .write.partitionBy("fid").parquet(dir)
       }
       val (lo, hi) = (0.25, 0.75)
-      val (scanned, total) = vt.pruneDecisionDouble(work, "value", lo, hi)
-      val agg = vt.readLivePrunedDouble(s, work, "value", lo, hi)
+      val dec = vt.pruneDecision(work, between("value", lo, hi))
+      val agg = vt.readLivePruned(s, work, between("value", lo, hi))
         .agg(count(lit(1)).as("n"), sum("value").as("sum_value"),
           min("event_id").as("min_eid"), max("event_id").as("max_eid"))
       agg.select(lit("rows").as("part"), col("n"), col("sum_value"),
           col("min_eid"), col("max_eid"))
         .unionByName(s.range(1).select(lit("files").as("part"),
-          lit(scanned.toLong).as("n"), lit(total.toDouble).as("sum_value"),
+          lit(dec.filesScanned.toLong).as("n"),
+          lit(dec.filesTotal.toDouble).as("sum_value"),
           lit(0L).as("min_eid"), lit(0L).as("max_eid")))
     }),
 
     // DSv2 read surface capstone (r13): the SAME table, read two ways
     // — spark.read.format("graft") with a WHERE (predicates pushed
     // through SupportsPushDownFilters into the footer-stats sidecar
-    // pruning automatically) vs the hand-picked library readLivePruned
-    // — must agree exactly; the audit row grades (a) the pruning
-    // decision the DSv2 path took (from its own audit, equal to the
-    // library's closed-form decision) and (b) that the physical plan
-    // really shows the pushed conjuncts on the scan node. This is what
-    // makes q287–q308's machinery reachable from SELECT: a user who
-    // knows none of the ~dozen read methods gets the same file
+    // pruning automatically) vs the library readLivePruned given the
+    // same interval as explicit filters — must agree exactly; the
+    // audit row grades (a) the pruning decision the DSv2 path took
+    // (from its own audit, equal to the library's decision) and (b)
+    // that the physical plan really shows the pushed conjuncts on the
+    // scan node. This is what makes q287–q308's machinery reachable
+    // from SELECT: a user who writes only a WHERE gets the same file
     // skipping from the format.
     "q309_dsv2_read_surface" -> ((s, d) => {
       val vt = graft.sinks.VersionedTable
@@ -5483,10 +5493,11 @@ object SparkEntry {
             plan.contains("GraftTable(")) 1L else 0L
       val dsv2 = q.agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
         min("event_id").as("min_eid"), max("event_id").as("max_eid"))
-      val lib = vt.readLivePruned(s, work, "cents", lo, hi)
+      val lib = vt.readLivePruned(s, work, between("cents", lo, hi))
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           min("event_id").as("min_eid"), max("event_id").as("max_eid"))
-      val (scanned, total) = vt.pruneDecision(work, "cents", lo, hi)
+      val libDec = vt.pruneDecision(work, between("cents", lo, hi))
+      val (scanned, total) = (libDec.filesScanned, libDec.filesTotal)
       // force the DSv2 scan so its audit is recorded, then grade that
       // the format took the SAME decision the library computes
       dsv2.collect()
@@ -5685,10 +5696,10 @@ object SparkEntry {
         vt.historyPartitionedManifest(work, 1L)
           .exists(_.partitionColumns == Seq("day"))
       val v1n = vt.readPartitionedVersion(s, work, 1L).count()
-      val (pSel, pTot, _, _) = vt.pruneDecisionPartitioned(
-        work, s"day=$d0", "event_id", 0L, Long.MaxValue)
-      val pruned = vt.readLivePartitionedPruned(
-        s, work, s"day=$d0", "event_id", 0L, Long.MaxValue)
+      val probe = EqualTo("day", d0) +: between("event_id", 0L, Long.MaxValue)
+      val dec = vt.pruneDecision(work, probe)
+      val (pSel, pTot) = (dec.partitionsScanned, dec.partitionsTotal)
+      val pruned = vt.readLivePruned(s, work, probe)
       val plain = vt.readLivePartitioned(s, work)
         .filter(col("day") === d0)
       val contentOk = pruned.agg(count(lit(1)), sum("cents")).head ==
@@ -15469,6 +15480,12 @@ object SparkEntry {
     * scale-free, so in-cluster similarity is exactly 1.0 and
     * cross-cluster exactly 0.0, with no float noise anywhere).
     */
+  /** `c BETWEEN lo AND hi` as pushdown filters — the interval shape
+    * the table-format queries prune and read by.
+    */
+  private def between(c: String, lo: Any, hi: Any): Seq[Filter] =
+    Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
+
   private def plantedOrthogonal(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d).select(col("vec_id"),
       transform(sequence(lit(0), lit(7)),

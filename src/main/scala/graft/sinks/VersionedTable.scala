@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{array, coalesce, col, concat, explode, expr, lit, shiftleft, struct, when, xxhash64}
+import org.apache.spark.sql.sources.Filter
+import graft.sources.{GraftFilterColumns, GraftScanAudit, GraftScanPlanner}
 
 /** Poor-man's commit protocol for the parquet-native upsert path —
   * closes the [[MergeWriter]] concurrency window (its dir swap gives a
@@ -657,7 +659,7 @@ object VersionedTable {
     * fast-forward publish references the BRANCH head's dir (dirs are
     * immutable; sharing beats copying).
     */
-  private[graft] def flatVersionDir(rootP: Path, v: Long): String = {
+  private def flatVersionDir(rootP: Path, v: Long): String = {
     val p = versionManifestPath(rootP, v)
     if (!Files.exists(p)) versionDirName(v)
     else """"live"\s*:\s*"([^"]+)"""".r
@@ -717,7 +719,19 @@ object VersionedTable {
     * version was never committed, or if retention already pruned its
     * data directory.
     */
-  def readVersion(spark: SparkSession, root: String, version: Long): DataFrame = {
+  def readVersion(spark: SparkSession, root: String, version: Long): DataFrame =
+    // time travel presents the CURRENT logical names (the "query
+    // through the current table definition" contract; per-snapshot
+    // schema re-presentation would need versioned schema metadata)
+    normalizeRenames(root,
+      memoFlatParquet(spark, flatVersionPath(root, version))
+        .drop(SeqCol))
+
+  /** The data dir of committed FLAT `version` — failing loudly if the
+    * version was never committed, is a partitioned snapshot, or was
+    * pruned by retention.
+    */
+  private[graft] def flatVersionPath(root: String, version: Long): Path = {
     val rootP = Paths.get(root)
     if (!Files.exists(versionManifestPath(rootP, version)))
       throw new IllegalStateException(
@@ -735,12 +749,7 @@ object VersionedTable {
       throw new IllegalStateException(
         s"version $version of $root was pruned by retention — " +
           "raise keepVersions on commit to travel further back")
-    // time travel presents the CURRENT logical names (the "query
-    // through the current table definition" contract; per-snapshot
-    // schema re-presentation would need versioned schema metadata)
-    normalizeRenames(root,
-      memoFlatParquet(spark, dir)
-        .drop(SeqCol))
+    dir
   }
 
   /** The immutable history entry of `version` parsed as a PARTITIONED
@@ -4745,230 +4754,37 @@ object VersionedTable {
       }.toMap
   }
 
-  /** (files the interval predicate must scan, total live files) — the
-    * decision a stats-aware planner makes, exposed for specs and the
-    * decision-table oracle.
+  /** The pruning decision a live base-row read under `filters` takes:
+    * partitions and files scanned of those in the snapshot, from the
+    * manifest, the version-checked partition bounds and the
+    * footer-stats and bloom sidecars — the metadata step of the DSv2
+    * scan ([[graft.sources.GraftScanPlanner.decide]]), so library and
+    * format reads share one skip policy. Launches no Spark job and
+    * leaves [[graft.sources.GraftScanAudit.last]] untouched. Delete
+    * masks are not consulted.
     */
-  def pruneDecision(root: String, column: String,
-                    lo: Long, hi: Long): (Int, Int) = {
-    val m = readManifest(root).getOrElse(throw new IllegalStateException(
-      s"no _manifest.json under $root"))
-    val dirP = Paths.get(root).resolve(m.live)
-    val stats = readStatsSidecar(dirP)
-    val all = dataFilesUnder(dirP)
-    val scanned = all.count { f =>
-      val rel = dirP.relativize(f).toString.replace('\\', '/')
-      stats.get(rel).map(_.cols.get(column)) match {
-        case Some(Some((mn, mx))) => mx >= lo && mn <= hi
-        case _                    => true // no stats → must scan (sound)
-      }
-    }
-    (scanned, all.size)
+  def pruneDecision(root: String,
+                    filters: Seq[Filter]): GraftScanAudit.Decision =
+    GraftScanPlanner.decide(baseRowOpts(root), filters)._1
+
+  /** [[readLive]] (either table form) restricted to the conjunction of
+    * `filters`, opening only the files [[pruneDecision]] keeps. The
+    * row filter still applies — file skipping is planning, never
+    * semantics — so the result equals the plain filtered read exactly.
+    */
+  def readLivePruned(spark: SparkSession, root: String,
+                     filters: Seq[Filter]): DataFrame = {
+    val o = baseRowOpts(root)
+    val df = GraftScanPlanner.assemble(spark, o,
+      GraftScanPlanner.decide(o, filters)._2)
+    filters.map(f => GraftFilterColumns.translate(f).getOrElse(
+        throw new IllegalArgumentException(
+          s"readLivePruned: filter $f has no row-level translation")))
+      .reduceOption(_ && _).fold(df)(df.filter)
   }
 
-  /** [[readLive]] restricted to rows with `column` in [lo, hi],
-    * opening ONLY the files whose footer stats overlap the interval
-    * (plus any file without stats). The row-level filter still
-    * applies — file skipping is a planning optimization, the result
-    * equals `readLive(...).filter(column between lo and hi)` exactly.
-    */
-  def readLivePruned(spark: SparkSession, root: String, column: String,
-                     lo: Long, hi: Long): DataFrame = {
-    val m = readManifest(root).getOrElse(throw new IllegalStateException(
-      s"no _manifest.json under $root — table has never committed"))
-    val dirP = Paths.get(root).resolve(m.live)
-    val stats = readStatsSidecar(dirP)
-    val survivors = dataFilesUnder(dirP).filter { f =>
-      val rel = dirP.relativize(f).toString.replace('\\', '/')
-      stats.get(rel).map(_.cols.get(column)) match {
-        case Some(Some((mn, mx))) => mx >= lo && mn <= hi
-        case _                    => true
-      }
-    }
-    val df =
-      if (survivors.isEmpty)
-        memoFlatParquet(spark, dirP).limit(0) // schema, zero rows
-      else memoFilesParquet(spark, dirP, survivors.map(_.toString))
-    stampDefaulted(df).drop(SeqCol)
-      .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
-
-  /** [[pruneDecision]] for a DOUBLE/FLOAT column: (files the interval
-    * predicate must scan, total live files) from the sidecar's `dbls`
-    * bounds. NaN-poisoned files carry no bounds (parquet omits their
-    * chunk stats; legacy NaN bounds are dropped at harvest) and always
-    * scan — and a NaN row can never satisfy lo ≤ x ≤ hi anyway, so
-    * skipping by non-NaN bounds is doubly sound.
-    */
-  def pruneDecisionDouble(root: String, column: String,
-                          lo: Double, hi: Double): (Int, Int) = {
-    val m = readManifest(root).getOrElse(throw new IllegalStateException(
-      s"no _manifest.json under $root"))
-    val dirP = Paths.get(root).resolve(m.live)
-    val stats = readStatsSidecar(dirP)
-    val all = dataFilesUnder(dirP)
-    val scanned = all.count { f =>
-      val rel = dirP.relativize(f).toString.replace('\\', '/')
-      stats.get(rel).map(_.dbls.get(column)) match {
-        case Some(Some((mn, mx))) => mx >= lo && mn <= hi
-        case _                    => true // no stats → must scan (sound)
-      }
-    }
-    (scanned, all.size)
-  }
-
-  /** [[readLivePruned]] for a DOUBLE/FLOAT column — opens only files
-    * whose floating bounds overlap [lo, hi] (plus any file without
-    * bounds); the row filter still applies, so the result equals the
-    * plain filtered read exactly (NaN rows fail the interval predicate
-    * in both plans).
-    */
-  def readLivePrunedDouble(spark: SparkSession, root: String,
-                           column: String, lo: Double,
-                           hi: Double): DataFrame = {
-    val m = readManifest(root).getOrElse(throw new IllegalStateException(
-      s"no _manifest.json under $root — table has never committed"))
-    val dirP = Paths.get(root).resolve(m.live)
-    val stats = readStatsSidecar(dirP)
-    val survivors = dataFilesUnder(dirP).filter { f =>
-      val rel = dirP.relativize(f).toString.replace('\\', '/')
-      stats.get(rel).map(_.dbls.get(column)) match {
-        case Some(Some((mn, mx))) => mx >= lo && mn <= hi
-        case _                    => true
-      }
-    }
-    val df =
-      if (survivors.isEmpty)
-        memoFlatParquet(spark, dirP).limit(0) // schema, zero rows
-      else memoFilesParquet(spark, dirP, survivors.map(_.toString))
-    stampDefaulted(df).drop(SeqCol)
-      .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
-
-  /** Must file `rel` be scanned for `column = value` (string)? Sound
-    * by construction: no stats entry → scan; bounds are the truncated
-    * [lower,upper] of the true [min,max] in unsigned UTF-8 byte order.
-    */
-  private def strFileOverlaps(stats: Map[String, FileStats], rel: String,
-                              column: String, value: String): Boolean =
-    stats.get(rel).map(_.strs.get(column)) match {
-      case Some(Some((lo, hi))) =>
-        u8cmp(value, lo) >= 0 && u8cmp(value, hi) <= 0
-      case _ => true
-    }
-
-  /** (files a string-equality predicate must scan, total live files)
-    * from the sidecar's truncated string bounds — [[pruneDecision]]'s
-    * UTF8 sibling, exposed for specs and the decision-table oracle.
-    */
-  def pruneDecisionEq(root: String, column: String,
-                      value: String): (Int, Int) = {
-    val m = readManifest(root).getOrElse(throw new IllegalStateException(
-      s"no _manifest.json under $root"))
-    val dirP = Paths.get(root).resolve(m.live)
-    val stats = readStatsSidecar(dirP)
-    val all = dataFilesUnder(dirP)
-    val scanned = all.count { f =>
-      strFileOverlaps(stats, dirP.relativize(f).toString.replace('\\', '/'),
-        column, value)
-    }
-    (scanned, all.size)
-  }
-
-  /** [[readLive]] restricted to `column = value` (string), opening
-    * only files whose truncated UTF8 bounds admit the value. Equals
-    * `readLive(...).filter(col(column) === value)` exactly — file
-    * skipping is planning, never semantics.
-    */
-  def readLivePrunedEq(spark: SparkSession, root: String, column: String,
-                       value: String): DataFrame = {
-    val m = readManifest(root).getOrElse(throw new IllegalStateException(
-      s"no _manifest.json under $root — table has never committed"))
-    val dirP = Paths.get(root).resolve(m.live)
-    val stats = readStatsSidecar(dirP)
-    val survivors = dataFilesUnder(dirP).filter { f =>
-      strFileOverlaps(stats, dirP.relativize(f).toString.replace('\\', '/'),
-        column, value)
-    }
-    val df =
-      if (survivors.isEmpty)
-        memoFlatParquet(spark, dirP).limit(0) // schema, zero rows
-      else memoFilesParquet(spark, dirP, survivors.map(_.toString))
-    stampDefaulted(df).drop(SeqCol).filter(col(column) === lit(value))
-  }
-
-  /** Files a CONJUNCTIVE rectangle predicate (`colA` in [loA,hiA] AND
-    * `colB` in [loB,hiB]) must scan per the footer-stats sidecar: a
-    * file survives only if its bounds overlap BOTH intervals (missing
-    * stats on either column → scan, sound). This is the read that
-    * makes [[compactZOrder]] pay off on both dimensions at once — the
-    * survivor set is the INTERSECTION of the per-column sets, which a
-    * z-ordered layout keeps near the rectangle's area fraction while a
-    * single-key sort only bounds one slab.
-    */
-  def pruneDecision2(root: String, colA: String, loA: Long, hiA: Long,
-                     colB: String, loB: Long, hiB: Long): (Int, Int) =
-    pruneDecisionBox(root, Seq((colA, loA, hiA), (colB, loB, hiB)))
-
-  /** Survivors of an N-dimensional box predicate (conjunction of
-    * per-column intervals): the INTERSECTION of the per-column
-    * survivor sets — a file must overlap EVERY interval to scan.
-    */
-  private def boxSurvivors(root: String,
-                           bounds: Seq[(String, Long, Long)])
-      : (Seq[Path], Path, Int) = {
-    val m = readManifest(root).getOrElse(throw new IllegalStateException(
-      s"no _manifest.json under $root"))
-    val dirP = Paths.get(root).resolve(m.live)
-    val stats = readStatsSidecar(dirP)
-    val all = dataFilesUnder(dirP)
-    def overlaps(rel: String, c: String, lo: Long, hi: Long): Boolean =
-      stats.get(rel).map(_.cols.get(c)) match {
-        case Some(Some((mn, mx))) => mx >= lo && mn <= hi
-        case _                    => true
-      }
-    val survivors = all.filter { f =>
-      val rel = dirP.relativize(f).toString.replace('\\', '/')
-      bounds.forall { case (c, lo, hi) => overlaps(rel, c, lo, hi) }
-    }
-    (survivors, dirP, all.size)
-  }
-
-  /** (files an N-dimensional box predicate must scan, total live
-    * files) — [[pruneDecision2]]'s arbitrary-arity sibling.
-    */
-  def pruneDecisionBox(root: String,
-                       bounds: Seq[(String, Long, Long)]): (Int, Int) = {
-    val (survivors, _, total) = boxSurvivors(root, bounds)
-    (survivors.size, total)
-  }
-
-  /** [[readLive]] restricted to an N-dimensional box, opening only
-    * files every column bound admits; equals the plain conjunctive
-    * filter exactly.
-    */
-  def readLivePrunedBox(spark: SparkSession, root: String,
-                        bounds: Seq[(String, Long, Long)]): DataFrame = {
-    require(bounds.nonEmpty, "readLivePrunedBox needs bounds")
-    val (survivors, dirP, _) = boxSurvivors(root, bounds)
-    val df =
-      if (survivors.isEmpty)
-        memoFlatParquet(spark, dirP).limit(0) // schema, zero rows
-      else memoFilesParquet(spark, dirP, survivors.map(_.toString))
-    stampDefaulted(df).drop(SeqCol)
-      .filter(bounds.map { case (c, lo, hi) =>
-        col(c) >= lit(lo) && col(c) <= lit(hi)
-      }.reduce(_ && _))
-  }
-
-  /** [[readLive]] restricted to the rectangle, opening only files both
-    * column bounds admit; equals the plain conjunctive filter exactly.
-    */
-  def readLivePruned2(spark: SparkSession, root: String,
-                      colA: String, loA: Long, hiA: Long,
-                      colB: String, loB: Long, hiB: Long): DataFrame =
-    readLivePrunedBox(spark, root,
-      Seq((colA, loA, hiA), (colB, loB, hiB)))
+  private def baseRowOpts(root: String): GraftScanPlanner.Opts =
+    GraftScanPlanner.Opts(root, None, withDeletes = false)
 
   /** Metadata-only COUNT(*) of the live snapshot — the sum of the
     * sidecar's per-file row counts, no data read (the manifest-stats
@@ -5067,112 +4883,6 @@ object VersionedTable {
     val rels = all.map(f => dirP.relativize(f).toString.replace('\\', '/'))
     if (rels.forall(stats.contains)) Some(rels.map(stats(_).rows).sum)
     else None
-  }
-
-  // ------------------------------------------------------------------
-  // Two-level pruning on PARTITIONED tables — Iceberg's partition+file
-  // scheme: the manifest's partition keys answer partition pruning
-  // (no listing, no IO), then each surviving partition's version-dir
-  // stats sidecar answers file pruning within it. At 100 TB with
-  // thousands of partitions × thousands of files, level 1 cuts the
-  // candidate set by the partition predicate's selectivity and level 2
-  // by the clustering of the interval column — both from metadata the
-  // table already maintains.
-  // ------------------------------------------------------------------
-
-  /** Partition keys (manifest-relative `col=value[/...]` paths) that a
-    * partition-equality probe selects: exactly `partKey`, or keys it
-    * prefixes (nested partitioning). `partKey` uses Spark's own
-    * partition-path rendering — e.g. `"source=src5"`.
-    */
-  private def selectedPartitions(m: PartitionedManifest,
-                                 partKey: String): Map[String, String] =
-    m.partitions.filter { case (k, _) =>
-      k == partKey || k.startsWith(partKey + "/")
-    }
-
-  /** Surviving (file, mustScan) pairs within the selected partitions,
-    * file-pruned by each version dir's footer-stats sidecar (a file
-    * with no stats entry always scans — sound), plus the version dirs
-    * touched (for basePath reads).
-    */
-  private def partitionedSurvivors(root: String, partKey: String,
-                                   column: String, lo: Long, hi: Long)
-      : (Seq[(Path, Boolean, Path)], Int, Int) = {
-    val m = readPartitionedManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no partitioned _manifest.json under $root"))
-    val rootP = Paths.get(root)
-    val selected = selectedPartitions(m, partKey)
-    val statsByDir = selected.values.toSeq.distinct
-      .map(d => d -> readStatsSidecar(rootP.resolve(d))).toMap
-    val files = selected.toSeq.sortBy(_._1).flatMap { case (k, dirName) =>
-      val verDir = rootP.resolve(dirName)
-      val stats = statsByDir(dirName)
-      dataFilesUnder(verDir.resolve(k)).map { f =>
-        val rel = verDir.relativize(f).toString.replace('\\', '/')
-        val scan = stats.get(rel).map(_.cols.get(column)) match {
-          case Some(Some((mn, mx))) => mx >= lo && mn <= hi
-          case _                    => true
-        }
-        (f, scan, verDir)
-      }
-    }
-    (files, selected.size, m.partitions.size)
-  }
-
-  /** The two-level pruning decision for `partKey`-partition rows with
-    * `column` in [lo, hi]: (partitions scanned, total partitions,
-    * files scanned within them, total files in the scanned
-    * partitions) — exposed for specs and the decision-table oracle.
-    */
-  def pruneDecisionPartitioned(root: String, partKey: String,
-                               column: String, lo: Long, hi: Long)
-      : (Int, Int, Int, Int) = {
-    val (files, pSel, pTotal) =
-      partitionedSurvivors(root, partKey, column, lo, hi)
-    (pSel, pTotal, files.count(_._2), files.size)
-  }
-
-  /** [[readLivePartitioned]] restricted to one partition and an
-    * interval on `column`, opening ONLY the files both pruning levels
-    * admit. The row-level filter still applies — the result equals
-    * `readLivePartitioned(...).filter(partition && interval)` exactly.
-    */
-  def readLivePartitionedPruned(spark: SparkSession, root: String,
-                                partKey: String, column: String,
-                                lo: Long, hi: Long): DataFrame = {
-    val (files, _, _) = partitionedSurvivors(root, partKey, column, lo, hi)
-    prunedPartitionedRead(spark, root, files, column, lo, hi)
-  }
-
-  private def prunedPartitionedRead(spark: SparkSession, root: String,
-                                    files: Seq[(Path, Boolean, Path)],
-                                    column: String, lo: Long, hi: Long)
-      : DataFrame =
-    prunedPartitionedReadWhere(spark, root, files,
-      col(column) >= lit(lo) && col(column) <= lit(hi))
-
-  /** Assemble a pruned partitioned read from (file, mustScan, version
-    * dir) triples — survivors grouped per version dir so partition
-    * values parse under the right basePath — then apply the row-level
-    * filter (file skipping is planning only; the filter preserves
-    * exact semantics).
-    */
-  private def prunedPartitionedReadWhere(spark: SparkSession,
-                                         root: String,
-                                         files: Seq[(Path, Boolean, Path)],
-                                         rowFilter: Column): DataFrame = {
-    val survivors = files.filter(_._2)
-    val df =
-      if (survivors.isEmpty) // schema (incl. partition cols), zero rows
-        readLivePartitioned(spark, root).limit(0)
-      else survivors.groupBy(_._3).toSeq.sortBy(_._1.toString)
-        .map { case (verDir, fs) =>
-          readLeavesTyped(spark, root, verDir.toString,
-            fs.map(_._1.toString))
-        }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-    df.filter(rowFilter)
   }
 
   // ------------------------------------------------------------------
@@ -5329,135 +5039,6 @@ object VersionedTable {
     Some((version, entries))
   }
 
-  /** Partition keys an interval predicate on a DATA column must scan
-    * per the version-checked partition bounds: unknown partitions
-    * (no trusted sidecar, no entry, no bound for the column) always
-    * scan.
-    */
-  private def intervalSelectedPartitions(root: String,
-                                         m: PartitionedManifest,
-                                         column: String, lo: Long,
-                                         hi: Long): Map[String, String] = {
-    val trusted = readPartStats(root)
-      .filter(_._1 == m.version).map(_._2)
-    m.partitions.filter { case (k, _) =>
-      trusted.flatMap(_.get(k)).flatMap(_.cols.get(column)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None           => true // unknown → must scan (sound)
-      }
-    }
-  }
-
-  private def intervalSurvivors(root: String, column: String,
-                                lo: Long, hi: Long)
-      : (Seq[(Path, Boolean, Path)], Int, Int) = {
-    val m = readPartitionedManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no partitioned _manifest.json under $root"))
-    val rootP = Paths.get(root)
-    val selected = intervalSelectedPartitions(root, m, column, lo, hi)
-    val statsByDir = selected.values.toSeq.distinct
-      .map(d => d -> readStatsSidecar(rootP.resolve(d))).toMap
-    val files = selected.toSeq.sortBy(_._1).flatMap { case (k, dirName) =>
-      val verDir = rootP.resolve(dirName)
-      val stats = statsByDir(dirName)
-      dataFilesUnder(verDir.resolve(k)).map { f =>
-        val rel = verDir.relativize(f).toString.replace('\\', '/')
-        val scan = stats.get(rel).map(_.cols.get(column)) match {
-          case Some(Some((mn, mx))) => mx >= lo && mn <= hi
-          case _                    => true
-        }
-        (f, scan, verDir)
-      }
-    }
-    (files, selected.size, m.partitions.size)
-  }
-
-  /** The partition-bounds pruning decision for `column` in [lo, hi]
-    * with NO partition predicate at all: (partitions scanned, total
-    * partitions, files scanned within them, total files in the
-    * scanned partitions).
-    */
-  def pruneDecisionPartitionedInterval(root: String, column: String,
-                                       lo: Long, hi: Long)
-      : (Int, Int, Int, Int) = {
-    val (files, pSel, pTotal) = intervalSurvivors(root, column, lo, hi)
-    (pSel, pTotal, files.count(_._2), files.size)
-  }
-
-  /** [[readLivePartitioned]] restricted to `column` in [lo, hi],
-    * opening only the files the partition-bounds + file-stats levels
-    * admit; equals the plain filtered read exactly.
-    */
-  def readLivePartitionedPrunedInterval(spark: SparkSession, root: String,
-                                        column: String, lo: Long,
-                                        hi: Long): DataFrame = {
-    val (files, _, _) = intervalSurvivors(root, column, lo, hi)
-    prunedPartitionedRead(spark, root, files, column, lo, hi)
-  }
-
-  /** The two-level interval machinery for a DOUBLE/FLOAT data column:
-    * partition bounds from `_part_stats.json`'s `dbls` entries (a
-    * partition with any NaN-poisoned file carries no bound and always
-    * scans), then per-file `dbls` bounds within survivors.
-    */
-  private def intervalSurvivorsDouble(root: String, column: String,
-                                      lo: Double, hi: Double)
-      : (Seq[(Path, Boolean, Path)], Int, Int) = {
-    val m = readPartitionedManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no partitioned _manifest.json under $root"))
-    val rootP = Paths.get(root)
-    val trusted = readPartStats(root)
-      .filter(_._1 == m.version).map(_._2)
-    val selected = m.partitions.filter { case (k, _) =>
-      trusted.flatMap(_.get(k)).flatMap(_.dbls.get(column)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None           => true // unknown → must scan (sound)
-      }
-    }
-    val statsByDir = selected.values.toSeq.distinct
-      .map(d => d -> readStatsSidecar(rootP.resolve(d))).toMap
-    val files = selected.toSeq.sortBy(_._1).flatMap { case (k, dirName) =>
-      val verDir = rootP.resolve(dirName)
-      val stats = statsByDir(dirName)
-      dataFilesUnder(verDir.resolve(k)).map { f =>
-        val rel = verDir.relativize(f).toString.replace('\\', '/')
-        val scan = stats.get(rel).map(_.dbls.get(column)) match {
-          case Some(Some((mn, mx))) => mx >= lo && mn <= hi
-          case _                    => true
-        }
-        (f, scan, verDir)
-      }
-    }
-    (files, selected.size, m.partitions.size)
-  }
-
-  /** [[pruneDecisionPartitionedInterval]] for a DOUBLE/FLOAT column:
-    * (partitions scanned, total partitions, files scanned, files in
-    * the scanned partitions).
-    */
-  def pruneDecisionPartitionedIntervalDouble(root: String, column: String,
-                                             lo: Double, hi: Double)
-      : (Int, Int, Int, Int) = {
-    val (files, pSel, pTotal) =
-      intervalSurvivorsDouble(root, column, lo, hi)
-    (pSel, pTotal, files.count(_._2), files.size)
-  }
-
-  /** [[readLivePartitionedPrunedInterval]] for a DOUBLE/FLOAT column —
-    * equals the plain filtered read exactly (NaN rows fail the
-    * interval predicate in both plans).
-    */
-  def readLivePartitionedPrunedIntervalDouble(spark: SparkSession,
-                                              root: String,
-                                              column: String, lo: Double,
-                                              hi: Double): DataFrame = {
-    val (files, _, _) = intervalSurvivorsDouble(root, column, lo, hi)
-    prunedPartitionedReadWhere(spark, root, files,
-      col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
-
   // ------------------------------------------------------------------
   // Bloom-filter file skipping. Min/max zone maps prune NOTHING for
   // an equality probe on a high-cardinality unclustered column (every
@@ -5578,76 +5159,6 @@ object VersionedTable {
       }.toMap
   }
 
-  /** Live files an equality probe must scan per the bloom sidecar:
-    * files with no bloom entry for the column always scan (sound).
-    * `hash` is the `xxhash64` of the probe value —
-    * [[graft.functions.Bloom.hashLong]]/`hashString` reproduce it.
-    */
-  private def bloomSurvivors(root: String, column: String,
-                             hash: Long): (Seq[Path], Path, Int) = {
-    val m = readManifest(root).getOrElse(throw new IllegalStateException(
-      s"no _manifest.json under $root"))
-    val dirP = Paths.get(root).resolve(m.live)
-    val blooms = readBloomSidecar(dirP)
-    val all = dataFilesUnder(dirP)
-    val survivors = all.filter { f =>
-      val rel = dirP.relativize(f).toString.replace('\\', '/')
-      blooms.get((rel, column)) match {
-        case Some(sketch) => graft.functions.Bloom.mightContain(sketch, hash)
-        case None         => true
-      }
-    }
-    (survivors, dirP, all.size)
-  }
-
-  /** (files `column = value` must scan per the bloom sidecar, total
-    * live files) — the planner decision, exposed for specs and the
-    * decision-table oracle.
-    */
-  def pruneDecisionBloomLong(root: String, column: String,
-                             value: Long): (Int, Int) = {
-    val (s, _, total) =
-      bloomSurvivors(root, column, graft.functions.Bloom.hashLong(value))
-    (s.size, total)
-  }
-
-  /** String flavor of [[pruneDecisionBloomLong]]. */
-  def pruneDecisionBloomStr(root: String, column: String,
-                            value: String): (Int, Int) = {
-    val (s, _, total) =
-      bloomSurvivors(root, column, graft.functions.Bloom.hashString(value))
-    (s.size, total)
-  }
-
-  /** [[readLive]] restricted to `column = value` (BIGINT), opening
-    * only the files whose bloom admits the value. The row filter still
-    * applies — false positives cost a file open, never a wrong row —
-    * so the result equals `readLive(...).filter(col === value)`
-    * exactly.
-    */
-  def readLivePrunedBloomLong(spark: SparkSession, root: String,
-                              column: String, value: Long): DataFrame = {
-    val (survivors, dirP, _) =
-      bloomSurvivors(root, column, graft.functions.Bloom.hashLong(value))
-    val df =
-      if (survivors.isEmpty)
-        memoFlatParquet(spark, dirP).limit(0) // schema, zero rows
-      else memoFilesParquet(spark, dirP, survivors.map(_.toString))
-    stampDefaulted(df).drop(SeqCol).filter(col(column) === lit(value))
-  }
-
-  /** String flavor of [[readLivePrunedBloomLong]]. */
-  def readLivePrunedBloomStr(spark: SparkSession, root: String,
-                             column: String, value: String): DataFrame = {
-    val (survivors, dirP, _) =
-      bloomSurvivors(root, column, graft.functions.Bloom.hashString(value))
-    val df =
-      if (survivors.isEmpty)
-        memoFlatParquet(spark, dirP).limit(0)
-      else memoFilesParquet(spark, dirP, survivors.map(_.toString))
-    stampDefaulted(df).drop(SeqCol).filter(col(column) === lit(value))
-  }
-
   /** Partitioned flavor of [[addBloomSidecar]]: build per-file blooms
     * for the LIVE partitions' files, one `_bloom.json` per distinct
     * version dir (the sidecar stays beside the immutable data it
@@ -5686,75 +5197,6 @@ object VersionedTable {
           ()
         }
     }
-  }
-
-  /** Live-partition files an equality probe must scan per the per-dir
-    * bloom sidecars (missing entries always scan — sound), plus each
-    * file's version dir for basePath reads.
-    */
-  private def partitionedBloomSurvivors(root: String, column: String,
-                                        hash: Long)
-      : (Seq[(Path, Boolean, Path)], Int) = {
-    val m = readPartitionedManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no partitioned _manifest.json under $root"))
-    val rootP = Paths.get(root)
-    val bloomsByDir = m.partitions.values.toSeq.distinct
-      .map(dn => dn -> readBloomSidecar(rootP.resolve(dn))).toMap
-    val files = m.partitions.toSeq.sortBy(_._1).flatMap { case (k, dn) =>
-      val dirP = rootP.resolve(dn)
-      dataFilesUnder(dirP.resolve(k)).map { f =>
-        val rel = dirP.relativize(f).toString.replace('\\', '/')
-        val scan = bloomsByDir(dn).get((rel, column)) match {
-          case Some(sketch) =>
-            graft.functions.Bloom.mightContain(sketch, hash)
-          case None => true
-        }
-        (f, scan, dirP)
-      }
-    }
-    (files, files.size)
-  }
-
-  /** (files `column = value` must scan, total live files) on a
-    * PARTITIONED table per the bloom sidecars.
-    */
-  def pruneDecisionPartitionedBloomLong(root: String, column: String,
-                                        value: Long): (Int, Int) = {
-    val (files, total) = partitionedBloomSurvivors(root, column,
-      graft.functions.Bloom.hashLong(value))
-    (files.count(_._2), total)
-  }
-
-  /** [[readLivePartitioned]] restricted to `column = value` (BIGINT),
-    * opening only bloom-admitted files; equals the plain equality
-    * filter exactly (false positives cost a file open, never a row).
-    */
-  def readLivePartitionedPrunedBloomLong(spark: SparkSession,
-                                         root: String, column: String,
-                                         value: Long): DataFrame = {
-    val (files, _) = partitionedBloomSurvivors(root, column,
-      graft.functions.Bloom.hashLong(value))
-    prunedPartitionedReadWhere(spark, root, files,
-      col(column) === lit(value))
-  }
-
-  /** String flavor of [[pruneDecisionPartitionedBloomLong]]. */
-  def pruneDecisionPartitionedBloomStr(root: String, column: String,
-                                       value: String): (Int, Int) = {
-    val (files, total) = partitionedBloomSurvivors(root, column,
-      graft.functions.Bloom.hashString(value))
-    (files.count(_._2), total)
-  }
-
-  /** String flavor of [[readLivePartitionedPrunedBloomLong]]. */
-  def readLivePartitionedPrunedBloomStr(spark: SparkSession,
-                                        root: String, column: String,
-                                        value: String): DataFrame = {
-    val (files, _) = partitionedBloomSurvivors(root, column,
-      graft.functions.Bloom.hashString(value))
-    prunedPartitionedReadWhere(spark, root, files,
-      col(column) === lit(value))
   }
 
   /** Packaged exactly-once-effect streaming sink: the foreachBatch
@@ -5843,7 +5285,7 @@ object VersionedTable {
     * Morton value, range-repartition + sort on it — each file then
     * covers a compact N-dimensional BOX of the domain and footer
     * stats prune narrow intervals on ANY of the columns
-    * ([[readLivePrunedBox]] reads the conjunction). Normalization
+    * ([[readLivePruned]] reads the conjunction). Normalization
     * uses double arithmetic: lane precision only shapes layout
     * QUALITY; pruning soundness always comes from the per-file footer
     * stats on the original columns. Folds pending position deletes

@@ -20,18 +20,18 @@ import graft.sinks.VersionedTable
   * graft OPTIONS (path ...)` + SQL) and gets the current observable
   * snapshot — live data minus equality AND position deletes — with
   * the manifest/sidecar pruning stack engaged AUTOMATICALLY from the
-  * query's own predicates, instead of hand-picking among the ~dozen
-  * library read methods.
+  * query's own predicates.
   *
   * Planning: [[GraftScanBuilder]] implements
   * `SupportsPushDownFilters` + `SupportsPushDownRequiredColumns`; the
-  * pushed eq/interval conjuncts are routed into the SAME two-level
-  * pruning metadata the library reads use — partition-path equality
-  * and version-checked partition bounds (`_part_stats.json`) at level
-  * 1, per-file footer-stats sidecars (`_stats.json`: INT/UTF8/DOUBLE
-  * bounds) AND per-file bloom sidecars (`_bloom.json`, equality/In
-  * probes on exact-typed Long/String literals) at level 2. File
-  * skipping is a sound approximation (a file
+  * pushed eq/interval conjuncts are routed into
+  * [[GraftScanPlanner.decide]], the one skip policy (the library's
+  * `pruneDecision`/`readLivePruned` run the same step): partition-path
+  * equality and version-checked partition bounds (`_part_stats.json`)
+  * at level 1, per-file footer-stats sidecars (`_stats.json`:
+  * INT/UTF8/DOUBLE bounds) AND per-file bloom sidecars (`_bloom.json`,
+  * equality/In probes on exact-typed Long/String literals) at level 2.
+  * File skipping is a sound approximation (a file
   * or partition without trusted bounds always scans), so EVERY filter
   * is also returned as residual for Spark to re-evaluate row-level —
   * exactly Iceberg/Delta's contract; `pushedFilters` advertises the
@@ -617,9 +617,9 @@ private[sources] class GraftV1Relation(context: SQLContext,
   }
 }
 
-/** The last scan's pruning decision — test/audit observability (the
-  * counts a `pruneDecision*` library call would report, as actually
-  * taken by the DSv2 path).
+/** The last DSv2 scan's pruning decision — test/audit observability.
+  * The library [[VersionedTable.pruneDecision]] computes the same
+  * counts for the same filters without writing here.
   */
 object GraftScanAudit {
   final case class Decision(partitionsScanned: Int, partitionsTotal: Int,
@@ -992,17 +992,9 @@ private[graft] object GraftScanPlanner {
     }
   }
 
-  /** The pruned dataframe: pushed conjuncts → partition + file
-    * survivor sets from the same sidecar metadata the library reads
-    * consult, survivors read through Spark's parquet source, deletes
-    * masked. Records the decision in [[GraftScanAudit]].
-    *
-    * NB: this survivor assembly deliberately PARALLELS
-    * `VersionedTable.partitionedSurvivors`/`prunedPartitionedReadWhere`
-    * (generalized to arbitrary conjunct lists + blooms + the
-    * mixed-spec path-segment rule). When changing the sound-skip
-    * contract in either place, change BOTH — GraftDataSourceSpec and
-    * the q287–q316 decision oracles pin the agreement.
+  /** The pruned dataframe: [[decide]]'s survivors read through
+    * Spark's parquet source, deletes masked, the decision published to
+    * [[GraftScanAudit]].
     */
   def pruned(spark: SparkSession, o: Opts,
              filters: Seq[Filter]): DataFrame = {
@@ -1014,12 +1006,38 @@ private[graft] object GraftScanPlanner {
       GraftScanAudit.last = None
       return observable(spark, o)
     }
+    val (decision, survivors) = decide(o, filters)
+    GraftScanAudit.last = Some(decision)
+    assemble(spark, o, survivors)
+  }
+
+  /** The files a snapshot read opens after pruning. */
+  sealed trait Survivors
+  /** Flat form: surviving files of one version dir; `live` is the
+    * live manifest (None under time travel, which never masks).
+    */
+  final case class FlatSurvivors(dir: Path, files: Seq[Path],
+                                 live: Option[VersionedTable.Manifest])
+      extends Survivors
+  /** Partitioned form: surviving files per version dir, dirs sorted. */
+  final case class PartitionedSurvivors(
+      m: VersionedTable.PartitionedManifest,
+      byDir: Seq[(Path, Seq[Path])]) extends Survivors
+
+  /** The metadata step of a pruned snapshot read: conjuncts →
+    * partition + file survivor sets from the manifest, the
+    * version-checked partition bounds and each version dir's
+    * footer-stats and bloom sidecars (each read once). Driver-side
+    * metadata only — no Spark job, no audit write. Snapshot reads
+    * only: change feeds and metadata tables are not file-assembled.
+    */
+  def decide(o: Opts, filters: Seq[Filter])
+      : (GraftScanAudit.Decision, Survivors) = {
     val rootP = Paths.get(o.root)
-    val livePm = VersionedTable.readPartitionedManifest(o.root)
     val pm = o.versionAsOf match {
       case Some(v) =>
         VersionedTable.historyPartitionedManifest(o.root, v)
-      case None => livePm
+      case None => VersionedTable.readPartitionedManifest(o.root)
     }
     pm match {
       case Some(m) => // ---------------- partitioned form
@@ -1060,76 +1078,84 @@ private[graft] object GraftScanPlanner {
           }
         }
         val survivors = files.filter(_._2)
-        GraftScanAudit.last = Some(GraftScanAudit.Decision(
-          selected.size, m.partitions.size, survivors.size, files.size,
-          filters.map(_.toString)))
-        val base =
-          if (survivors.isEmpty) {
-            // every base file skipped — but pending merge-on-read
-            // post-images live in NO file, so a live masked read must
-            // still surface them (residual filters re-apply above)
-            val empty = observable(spark, o).limit(0)
-            if (o.versionAsOf.isEmpty && o.withDeletes)
-              VersionedTable
-                .liveMorAppendsMaskedPartitioned(spark, o.root, m)
-                .map(a => empty.unionByName(a,
-                  allowMissingColumns = true))
-                .getOrElse(empty)
-            else empty
-          }
-          else {
-            val groups = survivors.groupBy(_._3).toSeq
-              .sortBy(_._1.toString)
-              .map { case (verDir, fs) =>
-                verDir.getFileName.toString ->
-                  VersionedTable.readLeavesTyped(spark, o.root,
-                    verDir.toString, fs.map(_._1.toString))
-              }
-            if (o.versionAsOf.isEmpty && o.withDeletes) {
-              // pos-delete masking needs addresses attached per dir
-              // BEFORE the union; identity without a pos sub-table
-              val read = VersionedTable.unionWithPosMask(spark, o.root,
-                m, groups)
-              VersionedTable.maskPartitionedDeletes(spark, o.root, read)
-            } else VersionedTable.normalizeRenames(o.root,
-              groups.map(_._2).reduce((a, b) =>
-                a.unionByName(b, allowMissingColumns = true)))
-          }
-        base
+        (GraftScanAudit.Decision(selected.size, m.partitions.size,
+          survivors.size, files.size, filters.map(_.toString)),
+          PartitionedSurvivors(m, survivors.groupBy(_._3).toSeq
+            .sortBy(_._1.toString)
+            .map { case (verDir, fs) => verDir -> fs.map(_._1) }))
       case None => // ---------------- flat form
-        val (dirName, mOpt) = o.versionAsOf match {
+        val (dirP, live) = o.versionAsOf match {
+          // the data dir comes from the history entry (a fast-forward
+          // publish shares the branch head's dir), validated loudly
           case Some(v) =>
-            // readVersion validates existence/retention loudly; the
-            // data dir comes from the history entry (a fast-forward
-            // publish shares the branch head's dir)
-            VersionedTable.readVersion(spark, o.root, v)
-            (VersionedTable.flatVersionDir(Paths.get(o.root), v), None)
+            (VersionedTable.flatVersionPath(o.root, v), None)
           case None =>
             val m = VersionedTable.readManifest(o.root).getOrElse(
               throw new IllegalStateException(
                 s"no _manifest.json under ${o.root}"))
-            (m.live, Some(m))
+            (rootP.resolve(m.live), Some(m))
         }
-        val dirP = rootP.resolve(dirName)
         val stats = VersionedTable.readStatsSidecar(dirP)
         val blooms =
           if (filters.exists(bloomable))
             VersionedTable.readBloomSidecar(dirP)
           else Map.empty[(String, String), Array[Long]]
-        val files = VersionedTable.dataFilesUnder(dirP).map { f =>
+        val files = VersionedTable.dataFilesUnder(dirP)
+        val survivors = files.filter { f =>
           val rel = dirP.relativize(f).toString.replace('\\', '/')
-          val keep = filters.forall(fl => statsSurvive(
+          filters.forall(fl => statsSurvive(
             stats.get(rel).map(fs => Bounds(fs.cols, fs.strs, fs.dbls)),
             fl) && bloomSurvives(blooms, rel, fl))
-          (f, keep)
         }
-        val survivors = files.filter(_._2)
-        GraftScanAudit.last = Some(GraftScanAudit.Decision(
-          1, 1, survivors.size, files.size, filters.map(_.toString)))
-        if (survivors.isEmpty) {
+        (GraftScanAudit.Decision(1, 1, survivors.size, files.size,
+          filters.map(_.toString)),
+          FlatSurvivors(dirP, survivors, live))
+    }
+  }
+
+  /** The frame assembly of a pruned snapshot read: [[decide]]'s
+    * survivors read through Spark's parquet source, with delete masks
+    * on a live `withDeletes` read.
+    */
+  def assemble(spark: SparkSession, o: Opts,
+               survivors: Survivors): DataFrame = {
+    val masked = o.versionAsOf.isEmpty && o.withDeletes
+    survivors match {
+      case PartitionedSurvivors(m, byDir) =>
+        if (byDir.isEmpty) {
+          // every base file skipped — but pending merge-on-read
+          // post-images live in NO file, so a live masked read must
+          // still surface them (residual filters re-apply above)
           val empty = observable(spark, o).limit(0)
-          mOpt match {
-            case Some(m) if o.withDeletes =>
+          if (masked)
+            VersionedTable
+              .liveMorAppendsMaskedPartitioned(spark, o.root, m)
+              .map(a => empty.unionByName(a,
+                allowMissingColumns = true))
+              .getOrElse(empty)
+          else empty
+        }
+        else {
+          val groups = byDir.map { case (verDir, fs) =>
+            verDir.getFileName.toString ->
+              VersionedTable.readLeavesTyped(spark, o.root,
+                verDir.toString, fs.map(_.toString))
+          }
+          if (masked) {
+            // pos-delete masking needs addresses attached per dir
+            // BEFORE the union; identity without a pos sub-table
+            val read = VersionedTable.unionWithPosMask(spark, o.root,
+              m, groups)
+            VersionedTable.maskPartitionedDeletes(spark, o.root, read)
+          } else VersionedTable.normalizeRenames(o.root,
+            groups.map(_._2).reduce((a, b) =>
+              a.unionByName(b, allowMissingColumns = true)))
+        }
+      case FlatSurvivors(dirP, files, live) =>
+        if (files.isEmpty) {
+          val empty = observable(spark, o).limit(0)
+          live match {
+            case Some(m) if masked =>
               // pending MoR post-images surface even when every base
               // file was stat-skipped
               VersionedTable.liveMorAppendsMaskedFlat(spark, o.root, m)
@@ -1141,9 +1167,9 @@ private[graft] object GraftScanPlanner {
         }
         else {
           val base = VersionedTable.memoFilesParquet(spark, dirP,
-            survivors.map(_._1.toString))
-          mOpt match {
-            case Some(m) if o.withDeletes =>
+            files.map(_.toString))
+          live match {
+            case Some(m) if masked =>
               VersionedTable.maskFlatDeletes(spark, o.root, m, base)
             case _ => VersionedTable.normalizeRenames(o.root,
               VersionedTable.stampDefaulted(base)

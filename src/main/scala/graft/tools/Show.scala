@@ -10,13 +10,15 @@ object Show {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // row-level SQL (UPDATE / MERGE INTO / DELETE-with-subquery)
+      .config("spark.sql.extensions", "graft.plans.GraftSqlExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.SparkEntry.queries(name)(spark, sfDir).show(200, false)

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import graft.sinks.VersionedTable
 import org.apache.spark.sql.functions._
+import graft.PruneFilters.{between, files, twoLevel}
 
 /** Round-13: footer + partition stats extended to DOUBLE/FLOAT.
   * Range-clustered files prune on a double interval; a NaN-poisoned
@@ -23,13 +24,13 @@ class DoubleStatsSpec extends SparkSpec {
       .select(col("id"), (col("id") / lit(10.0)).as("x"))
       .repartitionByRange(8, col("x"))
     VersionedTable.upsert(spark, root, df, Seq("id"))
-    val (scanned, total) = VersionedTable.pruneDecisionDouble(
-      root, "x", 10.5, 60.5)
+    val (scanned, total) = files(VersionedTable.pruneDecision(
+      root, between("x", 10.5, 60.5)))
     assert(total === 8)
     assert(scanned < total, s"no files skipped: $scanned/$total")
     assert(scanned >= 1)
-    val pruned = VersionedTable.readLivePrunedDouble(
-      spark, root, "x", 10.5, 60.5)
+    val pruned = VersionedTable.readLivePruned(
+      spark, root, between("x", 10.5, 60.5))
     val plain = VersionedTable.readLive(spark, root)
       .filter(col("x") >= 10.5 && col("x") <= 60.5)
     assert(pruned.count() === plain.count())
@@ -57,15 +58,15 @@ class DoubleStatsSpec extends SparkSpec {
       s"expected exactly one bound-less file, got ${unbounded.size}")
     // an interval far from the poisoned file's clean values still
     // scans it (no bounds → must scan), clean out-of-range files skip
-    val (scanned, total) = VersionedTable.pruneDecisionDouble(
-      root, "x", 0.0, 10.0)
+    val (scanned, total) = files(VersionedTable.pruneDecision(
+      root, between("x", 0.0, 10.0)))
     assert(total === 3)
     assert(scanned === 2, // one clean in-range file + the NaN file
       s"NaN file must always scan: scanned=$scanned")
     // and content still equals the plain filter (NaN row matches
     // neither plan)
-    val pruned = VersionedTable.readLivePrunedDouble(
-      spark, root, "x", 0.0, 10000.0)
+    val pruned = VersionedTable.readLivePruned(
+      spark, root, between("x", 0.0, 10000.0))
     val plain = VersionedTable.readLive(spark, root)
       .filter(col("x") >= 0.0 && col("x") <= 10000.0)
     assert(pruned.count() === plain.count())
@@ -82,12 +83,12 @@ class DoubleStatsSpec extends SparkSpec {
       Seq("id"), Seq("p"))
     // x within each partition spans ~[0, 225); probe an interval no
     // partition's bound excludes vs one that all exclude
-    val (pAll, pTot, _, _) = VersionedTable
-      .pruneDecisionPartitionedIntervalDouble(root, "x", 1000.0, 2000.0)
+    val (pAll, pTot, _, _) = twoLevel(VersionedTable
+      .pruneDecision(root, between("x", 1000.0, 2000.0)))
     assert(pTot === 3 && pAll === 0,
       s"out-of-range interval must skip all partitions: $pAll/$pTot")
-    val pruned = VersionedTable.readLivePartitionedPrunedIntervalDouble(
-      spark, root, "x", 10.0, 50.0)
+    val pruned = VersionedTable.readLivePruned(
+      spark, root, between("x", 10.0, 50.0))
     val plain = VersionedTable.readLivePartitioned(spark, root)
       .filter(col("x") >= 10.0 && col("x") <= 50.0)
     assert(pruned.count() === plain.count())
@@ -98,8 +99,8 @@ class DoubleStatsSpec extends SparkSpec {
     VersionedTable.upsertPartitioned(spark, root,
       Seq((9000L, "0", Double.NaN)).toDF("id", "p", "x"),
       Seq("id"), Seq("p"))
-    val (pSel2, pTot2, _, _) = VersionedTable
-      .pruneDecisionPartitionedIntervalDouble(root, "x", 1000.0, 2000.0)
+    val (pSel2, pTot2, _, _) = twoLevel(VersionedTable
+      .pruneDecision(root, between("x", 1000.0, 2000.0)))
     assert(pTot2 === 3)
     assert(pSel2 === 1, // only the poisoned partition must scan
       s"NaN partition must lose its bound and scan: $pSel2")

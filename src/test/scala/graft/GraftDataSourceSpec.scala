@@ -55,6 +55,12 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(d.filesTotal === 8)
     assert(d.filesScanned < d.filesTotal,
       s"pushdown skipped nothing: ${d.filesScanned}/${d.filesTotal}")
+    // the library decision for the same filters is the scan's own
+    // metadata step, and computing it leaves the audit untouched
+    val lib = VersionedTable.pruneDecision(root,
+      PruneFilters.between("id", 100L, 400L))
+    assert(PruneFilters.twoLevel(lib) === PruneFilters.twoLevel(d))
+    assert(GraftScanAudit.last.exists(_ eq d))
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters"), plan.take(2000))
     assert(plan.contains("GreaterThanOrEqual(id,100"), plan.take(2000))

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 import graft.functions.Bloom
 import graft.sinks.VersionedTable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.EqualTo
+import graft.PruneFilters.{between, files, twoLevel}
 
 /** Round-11 table-format surface: per-file bloom skipping, Iceberg-
   * style position deletes with rewrite folding + commit-lock
@@ -40,34 +42,37 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     VersionedTable.commit(root) { dir =>
       ids.repartition(8, col("id")).write.parquet(dir)
     }
-    val (mmScan, mmTotal) = VersionedTable.pruneDecision(root, "id", 1234L, 1234L)
+    val (mmScan, mmTotal) =
+      files(VersionedTable.pruneDecision(root, between("id", 1234L, 1234L)))
     assert(mmTotal === 8 && mmScan === 8,
       s"scattered layout must defeat min/max stats, got $mmScan/$mmTotal")
     VersionedTable.addBloomSidecar(spark, root, Seq("id"), bits = 1 << 14)
     // present value: bloom may keep false-positive files but MUST keep
     // the true holder — the row comes back exactly
-    val (bScan, bTotal) = VersionedTable.pruneDecisionBloomLong(root, "id", 1234L)
+    val probe = Seq(EqualTo("id", 1234L))
+    val (bScan, bTotal) = files(VersionedTable.pruneDecision(root, probe))
     assert(bTotal === 8 && bScan >= 1 && bScan < 8,
       s"bloom should prune most of 8 files, scanned $bScan")
-    val got = VersionedTable.readLivePrunedBloomLong(spark, root, "id", 1234L)
+    val got = VersionedTable.readLivePruned(spark, root, probe)
       .select("id", "payload").as[(Long, String)].collect().toSeq
     assert(got === Seq((1234L, "p1234")))
     // absent value: typically zero files survive (fpp ~ per-file)
-    val (aScan, _) = VersionedTable.pruneDecisionBloomLong(root, "id", 99999999L)
+    val absent = Seq(EqualTo("id", 99999999L))
+    val (aScan, _) = files(VersionedTable.pruneDecision(root, absent))
     assert(aScan <= 2, s"absent probe scanned $aScan of 8 files")
-    assert(VersionedTable.readLivePrunedBloomLong(spark, root, "id", 99999999L)
+    assert(VersionedTable.readLivePruned(spark, root, absent)
       .count() === 0L)
     // string column flavor via the string hash twin
     VersionedTable.addBloomSidecar(spark, root, Seq("payload"), bits = 1 << 14)
-    val (sScan, _) =
-      VersionedTable.pruneDecisionBloomStr(root, "payload", "p777")
+    val sProbe = Seq(EqualTo("payload", "p777"))
+    val (sScan, _) = files(VersionedTable.pruneDecision(root, sProbe))
     assert(sScan >= 1 && sScan < 8)
-    assert(VersionedTable.readLivePrunedBloomStr(spark, root, "payload", "p777")
+    assert(VersionedTable.readLivePruned(spark, root, sProbe)
       .count() === 1L)
     // no sidecar → full scan, identical result
     val m = VersionedTable.readManifest(root).get
     Files.delete(Paths.get(root).resolve(m.live).resolve("_bloom.json"))
-    val (legacy, _) = VersionedTable.pruneDecisionBloomLong(root, "id", 1234L)
+    val (legacy, _) = files(VersionedTable.pruneDecision(root, probe))
     assert(legacy === 8)
   }
 
@@ -226,7 +231,8 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     val lines = new String(Files.readAllBytes(statsP), "UTF-8")
       .split("\n").filter(_.nonEmpty)
     assert(lines.length === 4)
-    val (sc0, _) = VersionedTable.pruneDecision(root, "id", 0L, 10L)
+    val (sc0, _) =
+      files(VersionedTable.pruneDecision(root, between("id", 0L, 10L)))
     assert(sc0 < 4, "clustered layout should prune before corruption")
     // corrupt ONE line: inject a malformed \-u escape into its path
     // value — that file must drop to no-stats (always scans), the
@@ -239,10 +245,12 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     val stats = VersionedTable.readStatsSidecar(
       Paths.get(root).resolve(m.live))
     assert(stats.size === 3, "the corrupt line must drop out")
-    val (sc1, t1) = VersionedTable.pruneDecision(root, "id", 90L, 99L)
+    val (sc1, t1) =
+      files(VersionedTable.pruneDecision(root, between("id", 90L, 99L)))
     assert(t1 === 4 && sc1 >= 1 && sc1 <= 2,
       "stat-less corrupt file always scans; clean files still prune")
-    assert(VersionedTable.readLivePruned(spark, root, "id", 90L, 99L)
+    assert(VersionedTable
+      .readLivePruned(spark, root, between("id", 90L, 99L))
       .count() === 10L)
   }
 
@@ -253,14 +261,13 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
       .toDF("id", "grp", "v")
     VersionedTable.upsertPartitioned(spark, root,
       rows.repartitionByRange(8, col("id")), Seq("id"), Seq("grp"))
+    def grpProbe(g: String) = EqualTo("grp", g) +: between("id", 100L, 200L)
     val (pScan, pTotal, fScan, fTotal) =
-      VersionedTable.pruneDecisionPartitioned(root, "grp=p2", "id",
-        100L, 200L)
+      twoLevel(VersionedTable.pruneDecision(root, grpProbe("p2")))
     assert(pScan === 1 && pTotal === 5)
     assert(fScan >= 1 && fScan < fTotal,
       s"range-clustered files should prune, got $fScan/$fTotal")
-    val got = VersionedTable.readLivePartitionedPruned(
-        spark, root, "grp=p2", "id", 100L, 200L)
+    val got = VersionedTable.readLivePruned(spark, root, grpProbe("p2"))
       .select("id").as[Long].collect().toSet
     val want = (100L to 200L).filter(_ % 5 == 2).toSet
     assert(got === want, "pruned read must equal the plain filter")
@@ -269,13 +276,12 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     VersionedTable.upsertPartitioned(spark, root,
       Seq((102L, "p2", 9999L)).toDF("id", "grp", "v"),
       Seq("id"), Seq("grp"))
-    val got2 = VersionedTable.readLivePartitionedPruned(
-        spark, root, "grp=p2", "id", 100L, 200L)
+    val got2 = VersionedTable.readLivePruned(spark, root, grpProbe("p2"))
       .select("id", "v").as[(Long, Long)].collect().toMap
     assert(got2.keySet === want && got2(102L) === 9999L)
     // absent partition → zero rows, schema intact
-    val none = VersionedTable.readLivePartitionedPruned(
-      spark, root, "grp=nope", "id", 0L, 10L)
+    val none = VersionedTable.readLivePruned(spark, root,
+      EqualTo("grp", "nope") +: between("id", 0L, 10L))
     assert(none.count() === 0L &&
       none.columns.toSet === Set("id", "grp", "v"))
   }
@@ -290,14 +296,13 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
       .toDF("id", "grp", "v")
     VersionedTable.upsertPartitioned(spark, root, rows,
       Seq("id"), Seq("grp"))
-    val (pScan, pTotal, fScan, fTotal) =
-      VersionedTable.pruneDecisionPartitionedInterval(root, "id",
-        250L, 399L)
+    val (pScan, pTotal, fScan, fTotal) = twoLevel(
+      VersionedTable.pruneDecision(root, between("id", 250L, 399L)))
     assert(pTotal === 10 && pScan === 2,
       s"ids 250-399 live in exactly g2,g3 — got $pScan/$pTotal")
     assert(fScan <= fTotal)
-    val got = VersionedTable.readLivePartitionedPrunedInterval(
-        spark, root, "id", 250L, 399L)
+    val got = VersionedTable
+      .readLivePruned(spark, root, between("id", 250L, 399L))
       .select("id").as[Long].collect().toSet
     assert(got === (250L to 399L).toSet)
     // incremental upsert into ONE partition refreshes the bounds file
@@ -305,9 +310,8 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     VersionedTable.upsertPartitioned(spark, root,
       Seq((260L, "g2", 9999L)).toDF("id", "grp", "v"),
       Seq("id"), Seq("grp"))
-    val (pScan2, _, _, _) =
-      VersionedTable.pruneDecisionPartitionedInterval(root, "id",
-        250L, 399L)
+    val (pScan2, _, _, _) = twoLevel(
+      VersionedTable.pruneDecision(root, between("id", 250L, 399L)))
     assert(pScan2 === 2, "bounds must survive an incremental commit")
     // a version-stale bounds file is REJECTED: pruning degrades to
     // scan-all-partitions, never to pruning on stale bounds
@@ -315,12 +319,11 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     val stale = new String(Files.readAllBytes(sp), "UTF-8")
       .replaceFirst("\\{\"version\": \\d+\\}", "{\"version\": 1}")
     Files.write(sp, stale.getBytes("UTF-8"))
-    val (pScan3, pTotal3, _, _) =
-      VersionedTable.pruneDecisionPartitionedInterval(root, "id",
-        250L, 399L)
+    val (pScan3, pTotal3, _, _) = twoLevel(
+      VersionedTable.pruneDecision(root, between("id", 250L, 399L)))
     assert(pScan3 === pTotal3, "stale bounds must scan everything")
-    assert(VersionedTable.readLivePartitionedPrunedInterval(
-      spark, root, "id", 250L, 399L).count() === 150L)
+    assert(VersionedTable.readLivePruned(
+      spark, root, between("id", 250L, 399L)).count() === 150L)
   }
 
   test("compactPartitions rewrites only fragmented partitions to one " +
@@ -357,9 +360,8 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     assert(got === (0L until 1000L).map(i => (i, i * 2L)).toSet)
     // part-stats refreshed by the replace commit: interval pruning
     // still selects exactly the covering partitions
-    val (pScan, pTotal, _, _) =
-      VersionedTable.pruneDecisionPartitionedInterval(root, "id",
-        250L, 399L)
+    val (pScan, pTotal, _, _) = twoLevel(
+      VersionedTable.pruneDecision(root, between("id", 250L, 399L)))
     assert(pTotal === 5 && pScan === 1,
       s"ids 250-399 live in exactly g1 post-compaction, got $pScan")
     // nothing fragmented now → no-op, no new version
@@ -383,29 +385,29 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
       bits = 1 << 15)
     val probe = (777L * 2654435761L) % 100000L
     val (pScan, pTot) =
-      VersionedTable.pruneDecisionPartitionedBloomLong(root, "k", probe)
+      files(VersionedTable.pruneDecision(root, Seq(EqualTo("k", probe))))
     assert(pTot >= 16 && pScan >= 1 && pScan < pTot,
       s"bloom should prune most of $pTot files, scanned $pScan")
     val want = (0L until 2000L)
       .filter(i => (i * 2654435761L) % 100000L == probe).toSet
     assert(want.nonEmpty)
-    val got = VersionedTable.readLivePartitionedPrunedBloomLong(
-        spark, root, "k", probe)
+    val got = VersionedTable
+      .readLivePruned(spark, root, Seq(EqualTo("k", probe)))
       .select("id").as[Long].collect().toSet
     assert(got === want)
     // probe a value that lives ONLY in the second version dir
     val probe2 = (9999L * 2654435761L) % 100000L
-    val got2 = VersionedTable.readLivePartitionedPrunedBloomLong(
-        spark, root, "k", probe2)
+    val got2 = VersionedTable
+      .readLivePruned(spark, root, Seq(EqualTo("k", probe2)))
       .select("id").as[Long].collect().toSet
     assert(got2.contains(9999L),
       "a row in the newer version dir must be findable through blooms")
     // absent value: near-zero scan, zero rows
     val (aScan, _) =
-      VersionedTable.pruneDecisionPartitionedBloomLong(root, "k", -5L)
+      files(VersionedTable.pruneDecision(root, Seq(EqualTo("k", -5L))))
     assert(aScan <= 3)
-    assert(VersionedTable.readLivePartitionedPrunedBloomLong(
-      spark, root, "k", -5L).count() === 0L)
+    assert(VersionedTable.readLivePruned(
+      spark, root, Seq(EqualTo("k", -5L))).count() === 0L)
     // string twin over a derived string key
     val sroot = tmpRoot()
     VersionedTable.upsertPartitioned(spark, sroot,
@@ -414,14 +416,14 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
       Seq("id"), Seq("grp"))
     VersionedTable.addBloomSidecarPartitioned(spark, sroot, Seq("name"),
       bits = 1 << 15)
-    val (sScan, sTot) =
-      VersionedTable.pruneDecisionPartitionedBloomStr(sroot, "name", "u74")
+    val (sScan, sTot) = files(
+      VersionedTable.pruneDecision(sroot, Seq(EqualTo("name", "u74"))))
     assert(sScan >= 1 && sScan < sTot)
     val wantS = (0L until 1000L)
       .filter(i => s"u${(i * 37L) % 500L}" == "u74").toSet
     assert(wantS.nonEmpty)
-    assert(VersionedTable.readLivePartitionedPrunedBloomStr(
-        spark, sroot, "name", "u74")
+    assert(VersionedTable
+      .readLivePruned(spark, sroot, Seq(EqualTo("name", "u74")))
       .select("id").as[Long].collect().toSet === wantS)
   }
 
@@ -626,27 +628,31 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
       rows.toDF("id", "x", "y").repartition(16)
         .write.parquet(dir)
     }
-    val (xb, _) = VersionedTable.pruneDecision(root, "x", 100L, 160L)
-    val (yb, _) = VersionedTable.pruneDecision(root, "y", 100L, 160L)
+    val (xb, _) =
+      files(VersionedTable.pruneDecision(root, between("x", 100L, 160L)))
+    val (yb, _) =
+      files(VersionedTable.pruneDecision(root, between("y", 100L, 160L)))
     assert(xb === 16 && yb === 16, "scattered layout must not prune")
     VersionedTable.compactZOrder(spark, root, "x", "y", 16)
-    val (xa, xt) = VersionedTable.pruneDecision(root, "x", 100L, 160L)
-    val (ya, yt) = VersionedTable.pruneDecision(root, "y", 100L, 160L)
+    val (xa, xt) =
+      files(VersionedTable.pruneDecision(root, between("x", 100L, 160L)))
+    val (ya, yt) =
+      files(VersionedTable.pruneDecision(root, between("y", 100L, 160L)))
     assert(xa < 16 && ya < 16,
       s"z-order should prune both dims, got x=$xa/$xt y=$ya/$yt")
-    val got = VersionedTable.readLivePruned(spark, root, "x", 100L, 160L)
+    val got = VersionedTable
+      .readLivePruned(spark, root, between("x", 100L, 160L))
       .select("id").as[Long].collect().toSet
     val want = rows.filter(r => r._2 >= 100L && r._2 <= 160L).map(_._1).toSet
     assert(got === want, "pruned read must equal the plain filter")
     assert(VersionedTable.readLive(spark, root).count() === 4096L)
     // conjunctive rectangle: survivor set is the INTERSECTION of the
     // per-column sets, content equals the plain conjunctive filter
-    val (rect, rt) = VersionedTable.pruneDecision2(root,
-      "x", 100L, 160L, "y", 100L, 160L)
+    val rectangle = between("x", 100L, 160L) ++ between("y", 100L, 160L)
+    val (rect, rt) = files(VersionedTable.pruneDecision(root, rectangle))
     assert(rt === 16 && rect <= math.min(xa, ya) && rect < 16,
       s"rectangle must scan a subset of both slabs, got $rect vs $xa/$ya")
-    val gotRect = VersionedTable.readLivePruned2(spark, root,
-        "x", 100L, 160L, "y", 100L, 160L)
+    val gotRect = VersionedTable.readLivePruned(spark, root, rectangle)
       .select("id").as[Long].collect().toSet
     val wantRect = rows.filter(r => r._2 >= 100L && r._2 <= 160L &&
       r._3 >= 100L && r._3 <= 160L).map(_._1).toSet

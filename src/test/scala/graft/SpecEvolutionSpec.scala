@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import graft.sinks.VersionedTable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.EqualTo
+import graft.PruneFilters.{between, twoLevel}
 
 /** Partition-spec evolution (migrate-on-write): a commit may append
   * partition columns (day → day,type); touched parents are lifted
@@ -93,14 +95,16 @@ class SpecEvolutionSpec extends SparkSpec {
     VersionedTable.upsertPartitioned(spark, root,
       Seq((1000L, "d1", "t0", 77L)).toDF("id", "day", "typ", "cents"),
       Seq("id"), Seq("day", "typ"), keepManifests = 10)
-    val (pSelOld, pTot, _, _) = VersionedTable
-      .pruneDecisionPartitioned(root, "day=d0", "id", 0L, 10000L)
+    def dayProbe(day: String) =
+      EqualTo("day", day) +: between("id", 0L, 10000L)
+    val (pSelOld, pTot, _, _) = twoLevel(VersionedTable
+      .pruneDecision(root, dayProbe("d0")))
     assert(pSelOld === 1 && pTot === 4) // d0, d2, d1/t0, d1/t1
-    val (pSelNew, _, _, _) = VersionedTable
-      .pruneDecisionPartitioned(root, "day=d1", "id", 0L, 10000L)
+    val (pSelNew, _, _, _) = twoLevel(VersionedTable
+      .pruneDecision(root, dayProbe("d1")))
     assert(pSelNew === 2) // both children
-    val viaRead = VersionedTable.readLivePartitionedPruned(
-      spark, root, "day=d1", "id", 0L, 10000L)
+    val viaRead = VersionedTable.readLivePruned(
+      spark, root, dayProbe("d1"))
     assert(viaRead.count() === 21)
   }
 

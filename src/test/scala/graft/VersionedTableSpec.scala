@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import graft.sinks.{MergeWriter, VersionedTable}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.EqualTo
+import graft.PruneFilters.{between, files}
 
 /** The manifest commit protocol: snapshot reads under concurrent
   * commits (the property MergeWriter's dir swap cannot give), linear
@@ -307,23 +309,28 @@ class VersionedTableSpec extends SparkSpec {
     assert(stats.size === 4, s"expected 4 file entries: $stats")
     assert(stats.values.forall(_.cols.contains("v")))
     // interval [110, 220] overlaps files 1 and 2 only
-    val (scanned, total) = VersionedTable.pruneDecision(root, "v", 110L, 220L)
+    val (scanned, total) =
+      files(VersionedTable.pruneDecision(root, between("v", 110L, 220L)))
     assert(total === 4 && scanned === 2,
       s"expected 2 of 4 files scanned, got $scanned of $total")
-    val pruned = VersionedTable.readLivePruned(spark, root, "v", 110L, 220L)
+    val pruned = VersionedTable
+      .readLivePruned(spark, root, between("v", 110L, 220L))
       .select("v").as[Long].collect().sorted.toSeq
     val full = VersionedTable.readLive(spark, root)
       .filter($"v" >= 110L && $"v" <= 220L)
       .select("v").as[Long].collect().sorted.toSeq
     assert(pruned === full && pruned.nonEmpty)
     // a string column has no stats entry: every file scans
-    val (sAll, _) = VersionedTable.pruneDecision(root, "s", 0L, 0L)
+    val (sAll, _) =
+      files(VersionedTable.pruneDecision(root, between("s", 0L, 0L)))
     assert(sAll === 4, "unstatted column must scan everything")
     // no sidecar (legacy commit) → full scan, identical result
     Files.delete(verDir.resolve("_stats.json"))
-    val (legacy, _) = VersionedTable.pruneDecision(root, "v", 110L, 220L)
+    val (legacy, _) =
+      files(VersionedTable.pruneDecision(root, between("v", 110L, 220L)))
     assert(legacy === 4, "missing sidecar must scan everything")
-    assert(VersionedTable.readLivePruned(spark, root, "v", 110L, 220L)
+    assert(VersionedTable
+      .readLivePruned(spark, root, between("v", 110L, 220L))
       .count() === full.size.toLong)
   }
 
@@ -349,26 +356,33 @@ class VersionedTableSpec extends SparkSpec {
     assert(stats.values.forall(_.strs.get("longs").forall { case (lo, hi) =>
       lo.length <= 16 && hi.length <= 16
     }))
-    val (scanned, total) = VersionedTable.pruneDecisionEq(root, "s", "s2-010")
+    val (scanned, total) = files(
+      VersionedTable.pruneDecision(root, Seq(EqualTo("s", "s2-010"))))
     assert(total === 4 && scanned === 1,
       s"expected 1 of 4 files for s2-010, got $scanned of $total")
-    val pruned = VersionedTable.readLivePrunedEq(spark, root, "s", "s2-010")
+    val pruned = VersionedTable
+      .readLivePruned(spark, root, Seq(EqualTo("s", "s2-010")))
       .select("s").as[String].collect().toSeq
     assert(pruned === Seq("s2-010"))
     // a value below every file's range scans nothing and returns empty
-    val (none, _) = VersionedTable.pruneDecisionEq(root, "s", "a")
+    val (none, _) =
+      files(VersionedTable.pruneDecision(root, Seq(EqualTo("s", "a"))))
     assert(none === 0)
-    assert(VersionedTable.readLivePrunedEq(spark, root, "s", "a").count() === 0)
+    assert(VersionedTable.readLivePruned(spark, root, Seq(EqualTo("s", "a")))
+      .count() === 0)
     // truncated long column: every file shares the same 16-prefix
     // bounds region, equality inside file 1 must still find its row
     val target = ("p" * 20) + "1-007"
-    val got = VersionedTable.readLivePrunedEq(spark, root, "longs", target)
+    val got = VersionedTable
+      .readLivePruned(spark, root, Seq(EqualTo("longs", target)))
     assert(got.count() === 1, "truncation must never skip a match")
     // no sidecar → full scan, identical result
     Files.delete(verDir.resolve("_stats.json"))
-    val (legacy, _) = VersionedTable.pruneDecisionEq(root, "s", "s2-010")
+    val (legacy, _) = files(
+      VersionedTable.pruneDecision(root, Seq(EqualTo("s", "s2-010"))))
     assert(legacy === 4)
-    assert(VersionedTable.readLivePrunedEq(spark, root, "s", "s2-010")
+    assert(VersionedTable
+      .readLivePruned(spark, root, Seq(EqualTo("s", "s2-010")))
       .count() === 1)
   }
 
@@ -429,17 +443,20 @@ class VersionedTableSpec extends SparkSpec {
       (1L to 800L).map(i => (i, i % 400L)).toDF("id", "k")
         .repartition(8).write.parquet(dir)
     }
-    val before = VersionedTable.pruneDecision(root, "k", 10L, 30L)
+    val before =
+      files(VersionedTable.pruneDecision(root, between("k", 10L, 30L)))
     assert(before._2 === 8 && before._1 === 8,
       s"scattered layout should prune nothing: $before")
     val full = VersionedTable.readLive(spark, root)
       .filter($"k" >= 10L && $"k" <= 30L)
       .select("id").as[Long].collect().sorted.toSeq
     VersionedTable.compactSorted(spark, root, Seq("k"), 8)
-    val after = VersionedTable.pruneDecision(root, "k", 10L, 30L)
+    val after =
+      files(VersionedTable.pruneDecision(root, between("k", 10L, 30L)))
     assert(after._1 < after._2 && after._1 <= 2,
       s"sorted layout must prune a narrow interval: $after")
-    val pruned = VersionedTable.readLivePruned(spark, root, "k", 10L, 30L)
+    val pruned = VersionedTable
+      .readLivePruned(spark, root, between("k", 10L, 30L))
       .select("id").as[Long].collect().sorted.toSeq
     assert(pruned === full && full.size === 42)
     assert(VersionedTable.readLive(spark, root).count() === 800)
