@@ -229,7 +229,8 @@ object Graft {
     sinks.VersionedTable.vacuumDeletesPartitioned(spark, root, keyCols)
 
   /** Row-level delete BY POSITION (zero rewrite; Iceberg v2's second
-    * delete flavor) — see [[sinks.VersionedTable.softDeletePos]].
+    * delete flavor), either table form — see
+    * [[sinks.VersionedTable.softDeletePos]].
     */
   def softDeleteByPosition(spark: SparkSession, root: String,
                            predicate: org.apache.spark.sql.Column): Long =
@@ -240,8 +241,9 @@ object Graft {
                               root: String): DataFrame =
     sinks.VersionedTable.readLiveWithPosDeletes(spark, root)
 
-  /** Fold position deletes, rewriting ONLY delete-carrying files —
-    * returns (version, files rewritten).
+  /** Fold position deletes, rewriting ONLY delete-carrying files
+    * (flat) or partitions (partitioned) — returns (version, files or
+    * partitions rewritten).
     */
   def vacuumPositionDeletes(spark: SparkSession,
                             root: String): (Long, Int) =
@@ -614,22 +616,6 @@ object Graft {
   def readTableVersion(spark: SparkSession, root: String,
                        version: Long): DataFrame =
     spark.read.format("graft").option("versionAsOf", version).load(root)
-
-  /** Position deletes on the PARTITIONED table form — see
-    * [[sinks.VersionedTable.softDeletePosPartitioned]].
-    */
-  def softDeletePosPartitioned(spark: SparkSession, root: String,
-                               predicate: org.apache.spark.sql.Column)
-      : Long =
-    sinks.VersionedTable.softDeletePosPartitioned(spark, root, predicate)
-
-  def readPartitionedWithPosDeletes(spark: SparkSession,
-                                    root: String): DataFrame =
-    sinks.VersionedTable.readLivePartitionedWithPosDeletes(spark, root)
-
-  def vacuumPosDeletesPartitioned(spark: SparkSession,
-                                  root: String): (Long, Int) =
-    sinks.VersionedTable.vacuumPosDeletesPartitioned(spark, root)
 
   /** Row-level change feed (insert/delete/update pre+post, stamped
     * with the commit) — see [[sinks.VersionedTable.readChanges]].

@@ -4662,9 +4662,9 @@ object SparkEntry {
         keepManifests = 10)
       val d0 = ev.agg(min("day")).head.getString(0)
       val d1 = ev.agg(max("day")).head.getString(0)
-      vt.softDeletePosPartitioned(s, work,
+      vt.softDeletePos(s, work,
         col("day") === d0 && col("cents") % 2 === 0)
-      val mor = vt.readLivePartitionedWithPosDeletes(s, work)
+      val mor = vt.readLiveWithPosDeletes(s, work)
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           min("event_id").as("min_eid"), max("event_id").as("max_eid"))
         .head
@@ -4672,7 +4672,7 @@ object SparkEntry {
         Seq((-1L, d1, 77L)).toDF("event_id", "day", "cents"),
         Seq("event_id"), Seq("day"), keepManifests = 10)
       val (_, rewrittenParts) =
-        vt.vacuumPosDeletesPartitioned(s, work)
+        vt.vacuumPosDeletes(s, work)
       val m = vt.readPartitionedManifest(work).get
       val untouched = m.partitions.values.count(_ == "v00000001").toLong
       val fin = vt.readLivePartitioned(s, work)
@@ -4694,7 +4694,7 @@ object SparkEntry {
     // (keyed, day-partitioned), spec-EVOLVED to (day, event_type) by
     // a commit touching the earliest day, POSITION deletes landed by
     // predicate in a still-UNMIGRATED day, merge-on-read masking
-    // graded, then vacuumPosDeletesPartitioned folds them — and
+    // graded, then vacuumPosDeletes folds them — and
     // because the vacuum rewrites under the CURRENT spec, it
     // COMPLETES that day's migration as a side effect (parent pointer
     // swapped for per-type children). Audit: exactly 1 partition
@@ -4720,13 +4720,13 @@ object SparkEntry {
             (col("cents") + 5).as("cents")),
         Seq("event_id"), Seq("day", "event_type"), keepManifests = 10)
       // position deletes in the UNMIGRATED day d1
-      vt.softDeletePosPartitioned(s, work,
+      vt.softDeletePos(s, work,
         col("day") === d1 && col("cents") % 3 === 0)
-      val mor = vt.readLivePartitionedWithPosDeletes(s, work)
+      val mor = vt.readLiveWithPosDeletes(s, work)
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           min("event_id").as("min_eid"), max("event_id").as("max_eid"))
         .head
-      val (_, rewritten) = vt.vacuumPosDeletesPartitioned(s, work)
+      val (_, rewritten) = vt.vacuumPosDeletes(s, work)
       val m = vt.readPartitionedManifest(work).get
       val childrenD1 = m.partitions.keySet
         .count(_.startsWith(s"day=$d1/")).toLong

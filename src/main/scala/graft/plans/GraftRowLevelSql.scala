@@ -755,7 +755,7 @@ private[plans] object GraftMorExec {
       return None
     if (target.output.exists(a => VT.MorReservedCols(a.name) ||
         Internal(a.name))) return None
-    val pm = VT.readPartitionedManifest(root)
+    val view = VT.snapshotView(root)
     // partition-moving assignments route through the MOVE variant:
     // post-images qualify against their DESTINATION partition,
     // materialized on demand (the same machinery MERGE inserts use) —
@@ -765,21 +765,21 @@ private[plans] object GraftMorExec {
     // tuple-collection job and the entry job — it must reproduce),
     // and mid-spec-migration tables (parent keys at shallower depth
     // than the spec; destination qualifiers assume full-depth keys).
-    val moves = pm.exists { m =>
+    val moves = view.exists { m =>
       val assigned = assignments.getOrElse(Seq.empty)
         .map(a => attrName(a.key, "UPDATE SET")).toSet
       m.partitionColumns.exists(assigned)
     }
     if (moves) {
-      val pset = pm.get.partitionColumns.toSet
+      val pset = view.get.partitionColumns.toSet
       if (assignments.getOrElse(Seq.empty).exists(a =>
           pset(attrName(a.key, "UPDATE SET")) &&
             !a.value.deterministic)) return None
-      if (pm.get.partitions.keySet.exists(
-          _.count(_ == '/') + 1 != pm.get.partitionColumns.size))
+      if (view.get.partitions.keySet.exists(
+          _.count(_ == '/') + 1 != view.get.partitionColumns.size))
         return None
     }
-    if (pm.isEmpty && VT.readManifest(root).isEmpty)
+    if (view.isEmpty)
       return Some(false) // declared, never committed: nothing matches
     Some(retryLoop(root) {
       if (moves)
@@ -801,25 +801,12 @@ private[plans] object GraftMorExec {
     // serialize on this CAS (each sees the other's post-images on its
     // retry — two `SET v = v + 1` compose to +2, never duplicate)
     val pinnedPos = VT.posDeleteVersion(root)
-    val partitioned = VT.readPartitionedManifest(root).isDefined
-    val (stamp, adf, newQualifier, stillCurrent) =
-      if (partitioned) {
-        val (m, df) = VT.morAddressedPartitioned(spark, root).get
-        // post-images stay in their source partition (partition
-        // assignments were excluded), so the qualifier is the source
-        // address minus its file segment: "<dir>/<partitionKey>"
-        val qual = expr(
-          s"substring(${VT.AddrPathCol}, 1, " +
-            s"length(${VT.AddrPathCol}) - " +
-            s"length(substring_index(${VT.AddrPathCol}, '/', -1)) - 1)")
-        (m.version + 1, df, qual,
-          () => VT.readPartitionedManifest(root).map(_.version)
-            .contains(m.version))
-      } else {
-        val (m, df) = VT.morAddressedFlat(spark, root).get
-        (m.version + 1, df, lit(m.live),
-          () => VT.readManifest(root).map(_.live).contains(m.live))
-      }
+    val (view, adf) = VT.morAddressed(spark, root).get
+    val stamp = view.version + 1
+    // post-images stay where their source row lives (partition
+    // assignments were excluded)
+    val newQualifier = VT.postImageQualifier(view, col(VT.AddrPathCol))
+    val stillCurrent = () => VT.snapshotView(root).contains(view)
     val bind = (e: Expression) => rebind(e, target.output, adf)
     val condCol = condition.map(bind).getOrElse(lit(true))
     val matched = adf.filter(condCol)
@@ -904,7 +891,7 @@ private[plans] object GraftMorExec {
                              condition: Option[Expression])
       : Option[Boolean] = {
     val pinnedPos = VT.posDeleteVersion(root)
-    val (m, adf) = VT.morAddressedPartitioned(spark, root).get
+    val (m, adf) = VT.morAddressed(spark, root).get
     val pcols = m.partitionColumns
     val bind = (e: Expression) => rebind(e, target.output, adf)
     val condCol = condition.map(bind).getOrElse(lit(true))
@@ -1034,16 +1021,9 @@ private[plans] object GraftMorExec {
                         moving: Boolean): Option[Boolean] = {
     import GraftRowLevelExec.{ActB, ActI, ActM, SPresent, TPresent, Tid}
     val pinnedPos = VT.posDeleteVersion(root)
-    val pm0 = VT.readPartitionedManifest(root)
-    val partitioned = pm0.isDefined
-    val (baseVersion, adf, flatLive) =
-      if (partitioned) {
-        val (m, df) = VT.morAddressedPartitioned(spark, root).get
-        (m.version, df, "")
-      } else {
-        val (m, df) = VT.morAddressedFlat(spark, root).get
-        (m.version, df, m.live)
-      }
+    val (view, adf) = VT.morAddressed(spark, root).get
+    val partitioned = view.partitionColumns.nonEmpty
+    val baseVersion = view.version
     val bind = (e: Expression) =>
       GraftMorExec.rebind(e, target.output, adf)
     val sdf0 = SqlShims.ofRows(spark, source)
@@ -1118,11 +1098,7 @@ private[plans] object GraftMorExec {
             GraftRowLevelExec.insertProjection(nA, col(ActI),
               org.apache.spark.sql.types.StructType(dataFields),
               bind): _*)
-          pm0 match {
-            case Some(m) if partitioned =>
-              normalizePartStrings(raw, m.partitionColumns)
-            case _ => raw
-          }
+          normalizePartStrings(raw, view.partitionColumns)
         }
       // Post-image rows of a partition-MOVING MERGE (matched /
       // by-source update actions assigning a partition column): data
@@ -1134,7 +1110,7 @@ private[plans] object GraftMorExec {
         else Some(normalizePartStrings(
           rows.filter(act >= 0 && !isDel(act, actions))
             .select(post(actions, act): _*),
-          pm0.get.partitionColumns))
+          view.partitionColumns))
       val movedM = movedPostsOf(matchedRows, col(ActM), mA)
       val movedB = movedPostsOf(bySourceRows, col(ActB), bA)
       // (destination qualifier frame, post-materialization manifest)
@@ -1146,7 +1122,7 @@ private[plans] object GraftMorExec {
           graft.sinks.VersionedTable.PartitionedManifest)] =
         if (!partitioned) None
         else {
-          val pcols = pm0.get.partitionColumns
+          val pcols = view.partitionColumns
           val srcs = insertsData.toSeq ++ movedM.toSeq ++ movedB.toSeq
           val touched =
             srcs.map(d => d.select(pcols.map(c => d(quote(c))): _*))
@@ -1166,16 +1142,10 @@ private[plans] object GraftMorExec {
       val effectiveVersion =
         destPrep.map(_._2.version).getOrElse(baseVersion)
       val stamp = effectiveVersion + 1
-      // qualifier of a CHANGED row's post-image: its source address
-      // minus the file segment (partitioned) / the live dir (flat) —
-      // post-images never move partitions (guarded in tryMerge)
+      // qualifier of a CHANGED row's post-image — post-images never
+      // move partitions (guarded in tryMerge)
       def baseQual: Column =
-        if (partitioned) {
-          val ap = tcolA(VT.AddrPathCol)
-          val fileSeg = substring_index(ap, "/", -1)
-          ap.substr(lit(1),
-            (length(ap) - length(fileSeg) - lit(1)).cast("int"))
-        } else lit(flatLive)
+        VT.postImageQualifier(view, tcolA(VT.AddrPathCol))
       def entriesFor(rows: DataFrame, act: Column,
                      actions: Seq[MergeAction],
                      tag: String): Seq[DataFrame] = {
@@ -1238,10 +1208,10 @@ private[plans] object GraftMorExec {
         }
       val inserts: Seq[DataFrame] = insertsData match {
         case None => Seq.empty
-        case Some(ins) if !partitioned =>
+        case Some(ins) if !partitioned => // baseQual = the live dir
           Seq(ins.select((ins.columns.toSeq.map(c =>
             ins(quote(c))) ++
-            key(lit(s"$flatLive/${VT.MorMarker}${uuid}i"),
+            key(concat(baseQual, lit(s"/${VT.MorMarker}${uuid}i")),
               monotonically_increasing_id(), lit(stamp),
               lit(false))): _*))
         case Some(ins) => destPrep match {
@@ -1267,14 +1237,9 @@ private[plans] object GraftMorExec {
         .reduce(_.unionByName(_)).localCheckpoint()
       try {
         if (batch.limit(1).isEmpty) return Some(false)
-        val stillCurrent: () => Boolean =
-          if (partitioned)
-            () => VT.readPartitionedManifest(root).map(_.version)
-              .contains(effectiveVersion)
-          else
-            () => VT.readManifest(root).map(_.live).contains(flatLive)
+        val current = destPrep.map(_._2).getOrElse(view)
         VT.morCommitEntries(spark, root, batch, pinnedPos,
-          stillCurrent).map(_ => true)
+          () => VT.snapshotView(root).contains(current)).map(_ => true)
       } finally SqlShims.unpersistCheckpointed(batch)
     } finally SqlShims.unpersistCheckpointed(joined)
   }

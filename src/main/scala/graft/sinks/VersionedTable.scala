@@ -3,7 +3,7 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{array, coalesce, col, concat, explode, expr, lit, shiftleft, struct, when, xxhash64}
+import org.apache.spark.sql.functions.{array, coalesce, col, concat, explode, expr, length, lit, shiftleft, struct, substring_index, when, xxhash64}
 import org.apache.spark.sql.sources.Filter
 import graft.sources.{GraftFilterColumns, GraftScanAudit, GraftScanPlanner}
 
@@ -1182,9 +1182,7 @@ object VersionedTable {
   // ------------------------------------------------------------------
 
   private def currentMainVersion(root: String): Long =
-    readManifest(root).map(_.version)
-      .orElse(readPartitionedManifest(root).map(_.version))
-      .getOrElse(0L)
+    snapshotView(root).map(_.version).getOrElse(0L)
 
   private def commitToBranch(root: String, branch: String,
                              expectedRef: Option[Long],
@@ -1253,7 +1251,7 @@ object VersionedTable {
             .unionByName(stamped)
         case None =>
           if (readManifest(root).isEmpty) stamped
-          else readLiveWithPosDeletesStamped(spark, root)
+          else posMaskedSnapshot(spark, root, liveView(root))
             .unionByName(stamped)
       }
       commitToBranch(root, branch, curRef, next =>
@@ -1310,7 +1308,7 @@ object VersionedTable {
           val existing =
             if (curRef.isDefined)
               readPartitionedSnapshot(spark, root, m).filter(pred)
-            else posMaskedPartitionedSnapshot(spark, root, m)
+            else posMaskedSnapshot(spark, root, m)
               .filter(pred)
           existing.unionByName(batch)
       }
@@ -1721,7 +1719,7 @@ object VersionedTable {
           case None =>
             updatesStamped.write.mode(SaveMode.Overwrite).parquet(dir)
           case Some(_) =>
-            val existing = readLiveWithPosDeletesStamped(spark, root)
+            val existing = posMaskedSnapshot(spark, root, liveView(root))
             val (existingAligned, updatesAligned) =
               MergeWriter.alignSchemas(existing, updatesStamped, keys,
                 schemaMode)
@@ -1784,7 +1782,7 @@ object VersionedTable {
           case Some(_) =>
             // SyncAllColumns = the ALTER ADD COLUMNS / drifting-batch
             // shape: either side's missing columns null-fill
-            readLiveWithPosDeletesStamped(spark, root)
+            posMaskedSnapshot(spark, root, liveView(root))
               .unionByName(stamped, allowMissingColumns =
                 schemaMode == MergeWriter.SchemaMode.SyncAllColumns)
               .write.mode(SaveMode.Overwrite).parquet(dir)
@@ -2015,7 +2013,7 @@ object VersionedTable {
   // delete, the old conservative behavior.
   // ------------------------------------------------------------------
 
-  private def deletesRoot(root: String): String =
+  private[graft] def deletesRoot(root: String): String =
     Paths.get(root).resolve("_deletes").toString
 
   /** Delete-entry sequence column: the data version the delete masks
@@ -2215,17 +2213,17 @@ object VersionedTable {
   //     they rewrite, and VALIDATE inside the commit lock that the
   //     set version is unchanged — a delete landing mid-rewrite forces
   //     a retry that folds it, never a lost mask;
-  //   - softDeletePos re-checks the data version after committing its
+  //   - softDeletePos re-checks the snapshot view after committing its
   //     entries and redoes the identification if a rewrite interleaved
   //     — whichever side commits second detects the other;
-  //   - readers apply only entries whose path lies under the LIVE
-  //     version dir; entries left behind by a lost reset race are
+  //   - readers apply only entries that address a LIVE version dir of
+  //     the view; entries left behind by a lost reset race are
   //     stale by construction (their files were rewritten WITH the
   //     fold, or re-resolved by the deleter's redo) and are reaped at
   //     the next fold's reset.
   // ------------------------------------------------------------------
 
-  private def posDeletesRoot(root: String): String =
+  private[graft] def posDeletesRoot(root: String): String =
     Paths.get(root).resolve("_pos_deletes").toString
 
   private[graft] val PdPathCol = "_pd_path"
@@ -2277,15 +2275,6 @@ object VersionedTable {
       !coalesce(col(PdDeadCol), lit(false))
     else lit(true)
 
-  /** The sub-table's live rows, None when it never committed.
-    * The MAIN table's column renames normalize the append entries'
-    * data columns (entry keys are reserved names, never renamed).
-    */
-  private def posSubTableLive(spark: SparkSession,
-                              root: String): Option[DataFrame] =
-    readManifest(posDeletesRoot(root)).map(_ =>
-      normalizeRenames(root, readLive(spark, posDeletesRoot(root))))
-
   /** Names every MoR verb must keep out of user schemas (the entry
     * keys double as data columns in the sub-table).
     */
@@ -2293,96 +2282,202 @@ object VersionedTable {
     Set(PdPathCol, PdPosCol, PdSeqCol, PdDeadCol,
       MorKeyPathCol, MorKeyPosCol)
 
-  /** Live MoR-append entries of a FLAT table: entry keys
-    * ([[PdPathCol]]/[[PdPosCol]]) + post-image data columns + the
-    * write sequence as [[SeqCol]]. None when the sub-table is absent
-    * or carries no data columns (pure position deletes).
+  // ------------------------------------------------------------------
+  // The SNAPSHOT VIEW: every position-delete and merge-on-read verb
+  // reads the table through one shape, a [[PartitionedManifest]]. A
+  // partitioned table is its manifest; a flat table is a one-leaf view
+  // with no partition columns whose only key "" maps to the live
+  // version dir — a read-side view, nothing on disk changes.
+  // `partitionColumns.isEmpty` is the only test of table form. The
+  // rules that really differ between the forms are each chosen in ONE
+  // place below:
+  //   - the parquet read ([[readDir]]: flat goes through the schema
+  //     memo and carries the write-sequence stamp; partitioned reads
+  //     typed leaves, unstamped);
+  //   - entry liveness: a flat entry is live while its path lies under
+  //     the live dir at any depth (a flat version dir may hold
+  //     Hive-style subdirs); a partitioned delete entry while its first
+  //     segment is a live dir, a partitioned append while its
+  //     `dir/key` qualifier is still mapped;
+  //   - the post-image qualifier ([[postImageQualifier]]);
+  //   - the equality-delete rule ([[maskEqDeletes]]).
+  // ------------------------------------------------------------------
+
+  /** The snapshot view of `root`: live, or as of `version` (time
+    * travel — a partitioned history entry, else the flat version dir,
+    * validated loudly by [[flatVersionPath]]). A flat table reads as
+    * `PartitionedManifest(version, Nil, Map("" -> liveDir))`. None when
+    * the table has never committed.
     */
-  private def liveMorAppendEntriesFlat(spark: SparkSession, root: String,
-                                       m: Manifest): Option[DataFrame] =
-    posSubTableLive(spark, root).flatMap { all =>
+  private[graft] def snapshotView(root: String,
+                                  version: Option[Long] = None)
+      : Option[PartitionedManifest] =
+    version match {
+      case None =>
+        readPartitionedManifest(root).orElse(readManifest(root).map(m =>
+          PartitionedManifest(m.version, Nil, Map("" -> m.live))))
+      case Some(v) =>
+        historyPartitionedManifest(root, v).orElse(Some(
+          PartitionedManifest(v, Nil,
+            Map("" -> flatVersionPath(root, v).getFileName.toString))))
+    }
+
+  private def liveView(root: String): PartitionedManifest =
+    snapshotView(root).getOrElse(throw new IllegalStateException(
+      s"no _manifest.json under $root — table has never committed"))
+
+  private def isFlat(v: PartitionedManifest): Boolean =
+    v.partitionColumns.isEmpty
+
+  /** A flat view's live version dir. */
+  private def flatDir(v: PartitionedManifest): String = v.partitions("")
+
+  /** The path minus its last segment — a sub-table entry's qualifier. */
+  private[graft] def dirOf(path: Column): Column =
+    path.substr(lit(1), length(path) -
+      length(substring_index(path, "/", -1)) - lit(1))
+
+  /** One version dir of the view as a raw parquet frame (`_metadata`
+    * still attachable): the whole dir, or the `files` a pruned scan
+    * kept. Flat reads go through the schema memo; partitioned reads
+    * fix the recorded partition-value types.
+    */
+  private[graft] def readDir(spark: SparkSession, root: String,
+                             v: PartitionedManifest, dirName: String,
+                             files: Option[Seq[Path]]): DataFrame = {
+    val dir = Paths.get(root).resolve(dirName)
+    files match {
+      case Some(fs) if isFlat(v) =>
+        memoFilesParquet(spark, dir, fs.map(_.toString))
+      case None if isFlat(v) => memoFlatParquet(spark, dir)
+      case _ =>
+        readLeavesTyped(spark, root, dir.toString,
+          files.map(_.map(_.toString)).getOrElse(
+            v.partitions.toSeq.filter(_._2 == dirName).map(_._1).sorted
+              .map(k => s"$dir/$k")))
+    }
+  }
+
+  /** Every version dir the view maps, read whole, dirs sorted. */
+  private[graft] def dirFrames(spark: SparkSession, root: String,
+                               v: PartitionedManifest)
+      : Seq[(String, DataFrame)] =
+    v.partitions.values.toSeq.distinct.sorted
+      .map(d => d -> readDir(spark, root, v, d, None))
+
+  /** `df`, a raw read of version dir `dirName`, with each row's
+    * physical address attached: [[AddrPathCol]] = `dirName/<path under
+    * it>` (version-dir-qualified, so an entry can never match a file of
+    * another version) and [[AddrPosCol]] = the parquet row index
+    * (Spark's `_metadata.row_index` — stable for an immutable file).
+    * Per dir, BEFORE any union: metadata columns do not survive one.
+    */
+  private def withAddress(root: String, dirName: String,
+                          df: DataFrame): DataFrame = {
+    requireNoReservedColumns(df.columns, s"table $root",
+      Seq(AddrPathCol, AddrPosCol))
+    df.select(col("*"),
+      concat(lit(dirName + "/"),
+        expr(s"substring_index(_metadata.file_path, '/$dirName/', -1)"))
+        .as(AddrPathCol),
+      col("_metadata.row_index").as(AddrPosCol))
+  }
+
+  /** Per-dir frames as ONE snapshot frame: addresses attached first
+    * when `addressed`, then the union, the flat form's stamp default,
+    * and rename normalization. No mergeSchema: every file under one
+    * version dir was written by ONE commit, so footer-merging is pure
+    * planning cost — cross-COMMIT schema drift is reconciled by the
+    * allowMissingColumns union, the only place it can appear.
+    */
+  private[graft] def unionDirs(root: String, v: PartitionedManifest,
+                               groups: Seq[(String, DataFrame)],
+                               addressed: Boolean): DataFrame = {
+    val u = groups.map { case (d, df) =>
+      if (addressed) withAddress(root, d, df) else df
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    normalizeRenames(root, if (isFlat(v)) stampDefaulted(u) else u)
+  }
+
+  /** Live MoR-append entries of the view: entry keys
+    * ([[PdPathCol]]/[[PdPosCol]]) + post-image data columns, plus the
+    * write sequence as [[SeqCol]] on a flat view. An append is live
+    * when its qualifier is the flat live dir, or — partitioned — when
+    * the manifest STILL maps its qualifying partition key to its
+    * qualifying version dir (a rewrite of that partition folded and
+    * staled it). None when the sub-table is absent or carries no data
+    * columns (pure position deletes). The MAIN table's column renames
+    * normalize the data columns (entry keys are reserved names, never
+    * renamed).
+    */
+  private def liveMorAppendEntries(spark: SparkSession, root: String,
+                                   v: PartitionedManifest)
+      : Option[DataFrame] =
+    readManifest(posDeletesRoot(root)).flatMap { _ =>
+      val all = normalizeRenames(root, readLive(spark, posDeletesRoot(root)))
       val dataCols =
         all.columns.filterNot(MorReservedCols.contains).toSeq
       if (dataCols.isEmpty) None
       else Some {
-        val seqc =
-          if (all.columns.contains(PdSeqCol))
-            coalesce(col(PdSeqCol), lit(0L))
-          else lit(0L)
-        all.filter(col(PdPathCol)
-            .startsWith(m.live + "/" + MorMarker) && notDead(all))
-          .select((Seq(col(PdPathCol), col(PdPosCol), seqc.as(SeqCol)) ++
-            dataCols.map(col)): _*)
+        val kept = all.filter((if (isFlat(v))
+            col(PdPathCol).startsWith(flatDir(v) + "/" + MorMarker)
+          else isMorAppendPath) && notDead(all))
+        val live =
+          if (isFlat(v)) kept
+          else {
+            import spark.implicits._
+            // live qualifiers come straight from the manifest
+            // (driver-side, |partitions|-bounded, broadcast into the
+            // join)
+            val liveQuals = v.partitions.toSeq.sorted
+              .map { case (k, d) => s"$d/$k" }.toDF("__graft_mor_qual")
+            kept.withColumn("__graft_mor_qual", dirOf(col(PdPathCol)))
+              .join(org.apache.spark.sql.functions.broadcast(liveQuals),
+                Seq("__graft_mor_qual"))
+          }
+        val seq =
+          if (!isFlat(v)) Nil
+          else if (all.columns.contains(PdSeqCol))
+            Seq(coalesce(col(PdSeqCol), lit(0L)).as(SeqCol))
+          else Seq(lit(0L).as(SeqCol))
+        live.select((Seq(col(PdPathCol), col(PdPosCol)) ++ seq ++
+          dataCols.map(col)): _*)
       }
     }
 
-  /** Live MoR-append entries of a PARTITIONED table — an entry is
-    * live iff the manifest STILL maps its qualifying partition key to
-    * its qualifying version dir (a rewrite of that partition folded
-    * and staled it). Same shape as the flat form.
+  /** The view form's equality-delete rule on a snapshot frame, the
+    * stamp dropped: a flat frame carries [[SeqCol]] and uses the
+    * sequence rule; a partitioned frame is unstamped and masks
+    * unconditionally.
     */
-  private def liveMorAppendEntriesPartitioned(
-      spark: SparkSession, root: String,
-      m: PartitionedManifest): Option[DataFrame] =
-    posSubTableLive(spark, root).flatMap { all =>
-      val dataCols =
-        all.columns.filterNot(MorReservedCols.contains).toSeq
-      if (dataCols.isEmpty) None
-      else Some {
-        import spark.implicits._
-        val seqc =
-          if (all.columns.contains(PdSeqCol))
-            coalesce(col(PdSeqCol), lit(0L))
-          else lit(0L)
-        // qualifier = the entry path minus its marker segment; live
-        // qualifiers come straight from the manifest (driver-side,
-        // |partitions|-bounded, broadcast into the join)
-        val liveQuals = m.partitions.toSeq.sorted
-          .map { case (k, d) => s"$d/$k" }.toDF("__graft_mor_qual")
-        all.filter(isMorAppendPath && notDead(all))
-          .withColumn("__graft_mor_qual",
-            expr(s"substring($PdPathCol, 1, length($PdPathCol) - " +
-              s"length(substring_index($PdPathCol, '/', -1)) - 1)"))
-          .join(org.apache.spark.sql.functions.broadcast(liveQuals),
-            Seq("__graft_mor_qual"))
-          .select((Seq(col(PdPathCol), col(PdPosCol), seqc.as(SeqCol)) ++
-            dataCols.map(col)): _*)
-      }
-    }
-
-  /** Union pending append POST-IMAGES (data columns + [[SeqCol]])
-    * into a stamped snapshot frame — identity when none are pending.
-    * `allowMissingColumns` both ways: the table may have evolved past
-    * an old append (reads null-fill) or an append may carry a column
-    * the pruned base projection lacks.
-    */
-  private def withMorAppends(base: DataFrame,
-                             appends: Option[DataFrame]): DataFrame =
-    appends match {
-      case Some(a) => base.unionByName(
-        a.drop(PdPathCol, PdPosCol), allowMissingColumns = true)
-      case None => base
-    }
+  private def maskEqDeletes(spark: SparkSession, root: String,
+                            v: PartitionedManifest,
+                            df: DataFrame): DataFrame =
+    if (isFlat(v)) applyEqMaskSequenced(spark, root, df).drop(SeqCol)
+    else maskPartitionedDeletes(spark, root, df.drop(SeqCol))
 
   /** Pending append post-images ONLY, fully masked — what a pruned
     * scan whose every base file was skipped must still return (append
     * rows live in no file, so file-level skipping never covers them).
     */
-  private[graft] def liveMorAppendsMaskedFlat(
-      spark: SparkSession, root: String, m: Manifest)
+  private[graft] def liveMorAppendsMasked(spark: SparkSession,
+                                          root: String,
+                                          v: PartitionedManifest)
       : Option[DataFrame] =
-    liveMorAppendEntriesFlat(spark, root, m).map(a =>
-      applyEqMaskSequenced(spark, root, a.drop(PdPathCol, PdPosCol))
-        .drop(SeqCol))
+    liveMorAppendEntries(spark, root, v).map(a =>
+      maskEqDeletes(spark, root, v, a.drop(PdPathCol, PdPosCol)))
 
-  private[graft] def liveMorAppendsMaskedPartitioned(
-      spark: SparkSession, root: String, m: PartitionedManifest)
-      : Option[DataFrame] =
-    liveMorAppendEntriesPartitioned(spark, root, m).map(a =>
-      maskPartitionedDeletes(spark, root,
-        a.drop(PdPathCol, PdPosCol, SeqCol)))
+  /** Qualifier of a MoR post-image that stays where its source row
+    * lives: the live dir on a flat view (never "the address minus its
+    * file" — a flat version dir may hold Hive-style subdirs), the
+    * source address minus its file segment (`<dir>/<partitionKey>`)
+    * on a partitioned one.
+    */
+  private[graft] def postImageQualifier(v: PartitionedManifest,
+                                        addrPath: Column): Column =
+    if (isFlat(v)) lit(flatDir(v)) else dirOf(addrPath)
 
-  /** The OBSERVABLE flat snapshot with every row's merge-on-read
+  /** The OBSERVABLE live snapshot with every row's merge-on-read
     * address attached — the identification read a MoR UPDATE/MERGE
     * starts from:
     *   - base-file rows carry ([[AddrPathCol]], [[AddrPosCol]]) and
@@ -2390,13 +2485,15 @@ object VersionedTable {
     *   - pending append rows carry their sub-table entry keys
     *     ([[MorKeyPathCol]], [[MorKeyPosCol]]) and null addresses.
     * Both delete families are applied (the frame matches what SELECT
-    * sees). None when the table never committed.
+    * sees). None when the table never committed; the view is returned
+    * alongside for the statement's qualifiers and staleness check.
     */
-  private[graft] def morAddressedFlat(spark: SparkSession, root: String)
-      : Option[(Manifest, DataFrame)] =
-    readManifest(root).map { m =>
-      val base0 = withFilePos(spark, root, m)
-      val posMasked = livePosDeleteEntries(spark, root, m) match {
+  private[graft] def morAddressed(spark: SparkSession, root: String)
+      : Option[(PartitionedManifest, DataFrame)] =
+    snapshotView(root).map { v =>
+      val base0 =
+        unionDirs(root, v, dirFrames(spark, root, v), addressed = true)
+      val posMasked = livePosDeleteEntries(spark, root, v) match {
         case Some(d) =>
           base0.join(d, Seq(AddrPathCol, AddrPosCol), "left_anti")
         case None => base0
@@ -2404,7 +2501,7 @@ object VersionedTable {
       val baseSide = posMasked
         .withColumn(MorKeyPathCol, lit(null).cast("string"))
         .withColumn(MorKeyPosCol, lit(null).cast("long"))
-      val both = liveMorAppendEntriesFlat(spark, root, m) match {
+      val both = liveMorAppendEntries(spark, root, v) match {
         case Some(a) =>
           baseSide.unionByName(
             a.withColumnRenamed(PdPathCol, MorKeyPathCol)
@@ -2414,38 +2511,7 @@ object VersionedTable {
             allowMissingColumns = true)
         case None => baseSide
       }
-      (m, applyEqMaskSequenced(spark, root, both).drop(SeqCol))
-    }
-
-  /** [[morAddressedFlat]]'s partitioned sibling (unconditional
-    * equality mask, no sequence column).
-    */
-  private[graft] def morAddressedPartitioned(spark: SparkSession,
-                                             root: String)
-      : Option[(PartitionedManifest, DataFrame)] =
-    readPartitionedManifest(root).map { m =>
-      val base0 = withFilePosPartitioned(spark, root, m)
-      val posMasked =
-        livePosDeleteEntriesPartitioned(spark, root, m) match {
-          case Some(d) =>
-            base0.join(d, Seq(AddrPathCol, AddrPosCol), "left_anti")
-          case None => base0
-        }
-      val baseSide = posMasked
-        .withColumn(MorKeyPathCol, lit(null).cast("string"))
-        .withColumn(MorKeyPosCol, lit(null).cast("long"))
-      val both = liveMorAppendEntriesPartitioned(spark, root, m) match {
-        case Some(a) =>
-          baseSide.unionByName(
-            a.drop(SeqCol)
-              .withColumnRenamed(PdPathCol, MorKeyPathCol)
-              .withColumnRenamed(PdPosCol, MorKeyPosCol)
-              .withColumn(AddrPathCol, lit(null).cast("string"))
-              .withColumn(AddrPosCol, lit(null).cast("long")),
-            allowMissingColumns = true)
-        case None => baseSide
-      }
-      (m, maskPartitionedDeletes(spark, root, both))
+      (v, maskEqDeletes(spark, root, v, both))
     }
 
   /** Commit a merge-on-read mutation batch (delete entries + append
@@ -2510,39 +2576,18 @@ object VersionedTable {
     }
   }
 
-  // Read-time ADDRESS columns attached by [[withFilePos]] are named
+  // Read-time ADDRESS columns attached by [[withAddress]] are named
   // differently from the `_pos_deletes` table's own stored key columns
   // (PdPathCol/PdPosCol): the delete table itself is committed through
   // `upsert`, whose existing-snapshot read goes through the same
-  // withFilePos fold — identical names made drop(PdPathCol, PdPosCol)
-  // remove the table's REAL keys, null-padding prior entries and
-  // resurrecting deleted rows on the second softDeletePos.
+  // position-delete fold — identical names made drop(PdPathCol,
+  // PdPosCol) remove the table's REAL keys, null-padding prior entries
+  // and resurrecting deleted rows on the second softDeletePos.
   private[graft] val AddrPathCol = "__graft_addr_path"
   private[graft] val AddrPosCol = "__graft_addr_pos"
 
   private def posVersion(root: String): Long =
     readManifest(posDeletesRoot(root)).map(_.version).getOrElse(0L)
-
-  /** Live snapshot with each row's physical address attached:
-    * `_pd_path` = `vNNNNNNNN/<file>` (version-dir-qualified so entries
-    * can never match a file of a different version) and `_pd_pos` =
-    * parquet row index within the file (Spark's `_metadata.row_index`
-    * — stable for an immutable file by construction).
-    */
-  private def withFilePos(spark: SparkSession, root: String,
-                          m: Manifest): DataFrame = {
-    val dirP = Paths.get(root).resolve(m.live)
-    val plain = memoFlatParquet(spark, dirP)
-    requireNoReservedColumns(plain.columns, s"table $root",
-      Seq(AddrPathCol, AddrPosCol))
-    val df = plain
-      .select(col("*"),
-        concat(lit(m.live + "/"),
-          expr(s"substring_index(_metadata.file_path, '/${m.live}/', -1)"))
-          .as(AddrPathCol),
-        col("_metadata.row_index").as(AddrPosCol))
-    normalizeRenames(root, stampDefaulted(df))
-  }
 
   /** Loud failure instead of silent column loss: internal plumbing
     * attaches/derives columns with these names, so a user schema that
@@ -2556,89 +2601,96 @@ object VersionedTable {
         " — rename them before writing through VersionedTable")
   }
 
-  /** Pos-delete entries that apply to the live snapshot (path under
-    * the live version dir). None when no delete ever committed.
+  /** Pos-delete entries that can address a file of the view, as
+    * address columns: on a flat view the path lies under the live dir,
+    * on a partitioned one its first segment is a dir the manifest
+    * still maps. None when no delete ever committed.
     */
   private def livePosDeleteEntries(spark: SparkSession, root: String,
-                                   m: Manifest): Option[DataFrame] =
+                                   v: PartitionedManifest)
+      : Option[DataFrame] =
     readManifest(posDeletesRoot(root)).map { _ =>
       readLive(spark, posDeletesRoot(root))
-        .filter(col(PdPathCol).startsWith(m.live + "/"))
+        .filter(
+          if (isFlat(v)) col(PdPathCol).startsWith(flatDir(v) + "/")
+          else expr(s"substring_index($PdPathCol, '/', 1)")
+            .isin(v.partitions.values.toSeq.distinct: _*))
         .select(col(PdPathCol).as(AddrPathCol), col(PdPosCol).as(AddrPosCol))
     }
 
-  private def readLiveWithPosDeletesStamped(spark: SparkSession,
-                                            root: String): DataFrame = {
-    val m = readManifest(root).getOrElse(throw new IllegalStateException(
-      s"no _manifest.json under $root — table has never committed"))
-    val base = withFilePos(spark, root, m)
-    val masked = livePosDeleteEntries(spark, root, m) match {
-      case Some(dels) =>
-        base.join(dels, Seq(AddrPathCol, AddrPosCol), "left_anti")
+  /** Per-dir frames of the view minus live position deletes, plus the
+    * view's pending merge-on-read post-images — addresses attach only
+    * when a pos-delete sub-table exists (zero extra cost on tables
+    * that never used one). Flat frames keep the write-sequence stamp.
+    */
+  private def posMasked(spark: SparkSession, root: String,
+                        v: PartitionedManifest,
+                        groups: Seq[(String, DataFrame)]): DataFrame = {
+    val dels = livePosDeleteEntries(spark, root, v)
+    val base = unionDirs(root, v, groups, addressed = dels.isDefined)
+    val masked = dels match {
+      case Some(d) =>
+        base.join(d, Seq(AddrPathCol, AddrPosCol), "left_anti")
           .drop(AddrPathCol, AddrPosCol)
-      case None => base.drop(AddrPathCol, AddrPosCol)
+      case None => base
     }
-    // pending merge-on-read post-images join the snapshot here, so
-    // every verb that folds through this read (upsert/append/vacuum/
-    // row-level rewrites) folds them too — and their pinned
-    // pos-version CAS already guards the race
-    withMorAppends(masked, liveMorAppendEntriesFlat(spark, root, m))
+    // pending post-images (data columns, plus [[SeqCol]] on a flat
+    // view); `allowMissingColumns` both ways: the table may have
+    // evolved past an old append (reads null-fill) or an append may
+    // carry a column the pruned base projection lacks
+    liveMorAppendEntries(spark, root, v).fold(masked)(a =>
+      masked.unionByName(a.drop(PdPathCol, PdPosCol),
+        allowMissingColumns = true))
   }
 
-  /** Live snapshot minus position deletes (merge-on-read). Identical
-    * to [[readLive]] when no position delete has ever committed.
-    * Composes with equality deletes only additively (apply whichever
-    * read matches the delete flavor in use — mixing both on one table
-    * works but each read applies its own flavor).
+  /** The snapshot `v` describes through the position-delete fold —
+    * the read EVERY rewrite (upsert/append/vacuum/compaction/row-level
+    * rewrites) goes through, so pending post-images fold with it and
+    * the rewrite's pinned pos-version CAS guards the race. A
+    * restricted view restricts the appends too, so targeted folds fold
+    * exactly their own partitions' pending rows.
+    */
+  private def posMaskedSnapshot(spark: SparkSession, root: String,
+                                v: PartitionedManifest): DataFrame =
+    posMasked(spark, root, v, dirFrames(spark, root, v))
+
+  /** Live snapshot minus position deletes (merge-on-read), either
+    * table form. Identical to the plain live read when no position
+    * delete has ever committed. Composes with equality deletes only
+    * additively (apply whichever read matches the delete flavor in
+    * use — mixing both on one table works but each read applies its
+    * own flavor).
     */
   def readLiveWithPosDeletes(spark: SparkSession, root: String): DataFrame =
-    readLiveWithPosDeletesStamped(spark, root).drop(SeqCol)
+    posMaskedSnapshot(spark, root, liveView(root)).drop(SeqCol)
 
   // ------------------------------------------------------------------
   // DSv2 bridge (graft.sources.GraftDataSource): the scan planner
   // prunes FILES itself (sidecar + partition bounds routed from pushed
-  // filters), then needs the same merge-on-read masking the library
-  // reads apply — on a base that is a SUBSET of the live files. Key
-  // columns are derived from the delete sub-table's own schema, so
-  // the DSv2 surface needs no keyCols option.
+  // filters) over the same snapshot view, then applies the same
+  // merge-on-read masking the library reads do — on per-dir reads of
+  // a SUBSET of the view's files. Key columns are derived from the
+  // delete sub-table's own schema, so the DSv2 surface needs no
+  // keyCols option.
   // ------------------------------------------------------------------
 
-  /** Apply BOTH delete flavors to a raw parquet read of (a subset of)
-    * the flat live dir `m.live`. `base` must be the unprojected file
-    * relation (the `_metadata` address columns are attached here,
-    * before any join). Equality deletes use the sequence rule,
-    * position deletes the address anti-join — each applied only if
-    * its sub-table exists. Internal columns are dropped.
+  /** Apply BOTH delete flavors to per-dir raw parquet reads of (a
+    * subset of) the view's files. `groups` are (version dir name,
+    * unprojected parquet frame): addresses attach per dir, before the
+    * union. Position deletes use the address anti-join, pending
+    * post-images union in (ALL live ones — file pruning is
+    * file-stats-based and appends live in no file; every pushed
+    * filter is also residual, so extra rows are re-filtered above the
+    * scan), then the form's equality-delete rule applies — each only
+    * if its sub-table exists. Internal columns are dropped.
     */
-  private[graft] def maskFlatDeletes(spark: SparkSession, root: String,
-                                     m: Manifest,
-                                     base: DataFrame): DataFrame = {
-    val hasPos = readManifest(posDeletesRoot(root)).isDefined
-    val withAddr = normalizeRenames(root,
-      if (!hasPos) stampDefaulted(base)
-      else {
-        requireNoReservedColumns(base.columns, s"table $root",
-          Seq(AddrPathCol, AddrPosCol))
-        stampDefaulted(base.select(col("*"),
-          concat(lit(m.live + "/"),
-            expr(s"substring_index(_metadata.file_path, '/${m.live}/', -1)"))
-            .as(AddrPathCol),
-          col("_metadata.row_index").as(AddrPosCol)))
-      })
-    val posMasked =
-      if (!hasPos) withAddr
-      else livePosDeleteEntries(spark, root, m) match {
-        case Some(dels) =>
-          withAddr.join(dels, Seq(AddrPathCol, AddrPosCol), "left_anti")
-            .drop(AddrPathCol, AddrPosCol)
-        case None => withAddr.drop(AddrPathCol, AddrPosCol)
-      }
+  private[graft] def maskDeletes(spark: SparkSession, root: String,
+                                 v: PartitionedManifest,
+                                 groups: Seq[(String, DataFrame)])
+      : DataFrame =
     // appends union BEFORE the equality mask: a later eq delete must
-    // mask a pending post-image by the same sequence rule as any row
-    val withApps = withMorAppends(posMasked,
-      liveMorAppendEntriesFlat(spark, root, m))
-    applyEqMaskSequenced(spark, root, withApps).drop(SeqCol)
-  }
+    // mask a pending post-image by the same rule as any row
+    maskEqDeletes(spark, root, v, posMasked(spark, root, v, groups))
 
   /** The equality-delete SEQUENCE rule (a delete masks only rows
     * written at-or-before it) applied to any [[SeqCol]]-stamped
@@ -2662,48 +2714,6 @@ object VersionedTable {
       case None => df
     }
 
-  /** DSv2 bridge: union per-version-dir frames with POSITION-delete
-    * masking applied — addresses must attach per dir BEFORE the union
-    * (metadata columns do not survive it), so the planner hands the
-    * raw per-dir frames here. Plain union when no pos-delete
-    * sub-table exists.
-    */
-  private[graft] def unionWithPosMask(spark: SparkSession, root: String,
-                                      m: PartitionedManifest,
-                                      groups: Seq[(String, DataFrame)])
-      : DataFrame = {
-    val hasPos = readManifest(posDeletesRoot(root)).isDefined
-    if (!hasPos)
-      normalizeRenames(root, groups.map(_._2)
-        .reduce(_.unionByName(_, allowMissingColumns = true)))
-    else {
-      val withAddr = groups.map { case (dirName, df) =>
-        requireNoReservedColumns(df.columns, s"table $root",
-          Seq(AddrPathCol, AddrPosCol))
-        df.select(col("*"),
-          concat(lit(dirName + "/"),
-            expr(s"substring_index(_metadata.file_path, " +
-              s"'/$dirName/', -1)")).as(AddrPathCol),
-          col("_metadata.row_index").as(AddrPosCol))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-      val masked = normalizeRenames(root,
-        livePosDeleteEntriesPartitioned(spark, root, m) match {
-          case Some(dels) =>
-            withAddr.join(dels, Seq(AddrPathCol, AddrPosCol),
-              "left_anti").drop(AddrPathCol, AddrPosCol)
-          case None => withAddr.drop(AddrPathCol, AddrPosCol)
-        })
-      // ALL live appends, not just the scanned partitions': file
-      // pruning is file-stats-based and appends live in no file —
-      // every pushed filter is also residual, so extra rows are
-      // re-filtered above the scan, and a row that only exists as a
-      // pending append still surfaces
-      withMorAppends(masked,
-        liveMorAppendEntriesPartitioned(spark, root, m)
-          .map(_.drop(SeqCol)))
-    }
-  }
-
   /** Apply the partitioned table's (unconditional) equality-delete
     * mask to a pruned partitioned base — keyCols derived from the
     * delete sub-table schema, mirroring
@@ -2722,30 +2732,31 @@ object VersionedTable {
       case None => base
     }
 
-  /** Delete the live rows matching `predicate` BY POSITION: identify
-    * (file, row-index) pairs with one metadata-column scan, commit
-    * them into `_pos_deletes` (keyed upsert — re-deleting a position
-    * is a no-op), zero data rewrite. If a rewrite interleaves, the
-    * freshly-committed entries may reference replaced files — detected
-    * by the post-commit version re-check and redone against the new
-    * snapshot (the rewrite side's commit-lock validation covers the
-    * opposite interleaving, see the section comment). Returns the
-    * delete-set version.
+  /** Delete the live rows matching `predicate` BY POSITION, either
+    * table form: identify (file, row-index) pairs with one
+    * metadata-column scan, commit them into `_pos_deletes` (keyed
+    * upsert — re-deleting a position is a no-op), zero data rewrite.
+    * If a rewrite interleaves, the freshly-committed entries may
+    * reference replaced files — detected by the post-commit view
+    * re-check and redone against the new snapshot (the rewrite side's
+    * commit-lock validation covers the opposite interleaving, see the
+    * section comment). Returns the delete-set version.
     */
   def softDeletePos(spark: SparkSession, root: String, predicate: Column,
                     keepVersions: Int = 2, maxRetries: Int = 10): Long = {
     var attempt = 0
     while (true) {
-      val m = readManifest(root).getOrElse(throw new IllegalStateException(
-        s"no _manifest.json under $root"))
+      val v = liveView(root)
       try {
-        val baseHits = withFilePos(spark, root, m).filter(predicate)
+        val baseHits =
+          unionDirs(root, v, dirFrames(spark, root, v), addressed = true)
+          .filter(predicate)
           .select(col(AddrPathCol).as(PdPathCol),
             col(AddrPosCol).as(PdPosCol)).distinct()
         // pending merge-on-read post-images live in no data file —
         // a DELETE must tombstone the matching entries too (keyed
         // replace with _pd_dead) or the rows it "deleted" stay visible
-        val hits = liveMorAppendEntriesFlat(spark, root, m) match {
+        val hits = liveMorAppendEntries(spark, root, v) match {
           case Some(a) => baseHits.unionByName(
             a.filter(predicate)
               .select(col(PdPathCol), col(PdPosCol))
@@ -2753,15 +2764,16 @@ object VersionedTable {
             allowMissingColumns = true)
           case None => baseHits
         }
-        val v = upsert(spark, posDeletesRoot(root), hits,
+        val ver = upsert(spark, posDeletesRoot(root), hits,
           Seq(PdPathCol, PdPosCol),
           schemaMode = MergeWriter.SchemaMode.SyncAllColumns,
           keepVersions = keepVersions, maxRetries = maxRetries)
-        // entries are live only if the data snapshot we addressed is
-        // still the live one; otherwise a rewrite interleaved and we
-        // must re-identify (our stale entries stay harmlessly ignored
-        // until the next fold's reset reaps them)
-        if (readManifest(root).map(_.live).contains(m.live)) return v
+        // entries are live only if the view we addressed is still the
+        // live one (a flat version never moves without its dir);
+        // otherwise a rewrite interleaved and we must re-identify (our
+        // stale entries stay harmlessly ignored until the next fold's
+        // reset reaps them)
+        if (snapshotView(root).contains(v)) return ver
       } catch {
         // the identification scan read a snapshot that retention
         // pruned mid-read — same conflict, same retry
@@ -2782,21 +2794,16 @@ object VersionedTable {
     readManifest(posDeletesRoot(root)) match {
       case None => (0L, 0L)
       case Some(_) =>
-        // liveness mirrors the read path: flat = under the live dir;
-        // partitioned = the entry's "<dir>/<partitionKey>" qualifier
-        // still mapped by the manifest
-        val isLive: org.apache.spark.sql.Column =
-          readPartitionedManifest(root) match {
-            case Some(m) =>
-              val quals = m.partitions.toSeq
-                .map { case (k, d) => s"$d/$k" }
-              expr(s"substring($PdPathCol, 1, length($PdPathCol) - " +
-                s"length(substring_index($PdPathCol, '/', -1)) - 1)")
-                .isin(quals: _*)
-            case None =>
-              val live = readManifest(root).map(_.live).getOrElse("")
-              col(PdPathCol).startsWith(live + "/")
-          }
+        // liveness mirrors the read path, by the view's form: flat =
+        // under the live dir; partitioned = the entry's
+        // "<dir>/<partitionKey>" qualifier still mapped
+        val isLive: Column = snapshotView(root) match {
+          case Some(v) if !isFlat(v) =>
+            dirOf(col(PdPathCol)).isin(
+              v.partitions.toSeq.map { case (k, d) => s"$d/$k" }: _*)
+          case v =>
+            col(PdPathCol).startsWith(v.map(flatDir).getOrElse("") + "/")
+        }
         val all = readLive(spark, posDeletesRoot(root))
         val r = all.agg(
           org.apache.spark.sql.functions.sum(
@@ -2830,7 +2837,7 @@ object VersionedTable {
           s"no _manifest.json under $root — nothing to rewrite"))
       foldedPosVersion = posVersion(root)
       posFoldRaceHook() // test seam: deterministic delete↔rewrite race
-      val snap = readLiveWithPosDeletesStamped(spark, root)
+      val snap = posMaskedSnapshot(spark, root, liveView(root))
       commit(root, keepVersions, expectedBase = Some(base.version),
         validate = () => {
           if (posVersion(root) != foldedPosVersion)
@@ -2868,13 +2875,17 @@ object VersionedTable {
       }
     }
 
-  /** Fold the pos-delete set into a rewritten data version, touching
-    * ONLY the files that carry deletes: untouched files are copied
-    * byte-identical into the new version (a real format would
+  /** Fold the pos-delete set into the data, either table form, then
+    * reset the set (CAS — a racing delete's entries survive). The two
+    * folds really differ: a FLAT table copies untouched files
+    * byte-identical into a new version dir (a real format would
     * re-reference them in the manifest; self-contained version dirs
-    * trade that for simplicity), files with deletes are re-read minus
-    * their masked positions. Returns (new data version, files
-    * rewritten) — the rewrite decision is the audit surface.
+    * trade that for simplicity) and re-reads only the delete-carrying
+    * files minus their masked positions; a PARTITIONED table rewrites
+    * only the partitions whose current pointer holds a delete-carrying
+    * file, every other partition keeps its pinned dir. Returns (new
+    * data version, files — flat — or partitions — partitioned —
+    * rewritten): the rewrite decision is the audit surface.
     */
   def vacuumPosDeletes(spark: SparkSession, root: String,
                        keepVersions: Int = 2,
@@ -2882,167 +2893,180 @@ object VersionedTable {
     var foldedPosVersion = 0L
     var rewritten = 0
     def once(): Long = {
-      val base = readManifest(root).getOrElse(
-        throw new IllegalStateException(
-          s"no _manifest.json under $root — nothing to vacuum"))
+      val v = liveView(root)
       foldedPosVersion = posVersion(root)
-      val dirP = Paths.get(root).resolve(base.live)
-      // distinct delete-carrying paths: bounded by live file count —
-      // the same O(|files|) metadata the manifest itself is. Append
-      // entries (synthetic `_append_` paths) address no file — they
-      // fold by being WRITTEN below, not by rewriting anything.
-      val touched: Set[String] =
-        livePosDeleteEntries(spark, root, base) match {
-          case None => Set.empty
-          case Some(dels) => dels
-            .filter(!expr(s"substring_index($AddrPathCol, '/', -1)")
-              .startsWith(MorMarker))
-            .select(AddrPathCol).distinct()
-            .collect().map(_.getString(0)).toSet
-        }
-      val pendingAppends = liveMorAppendEntriesFlat(spark, root, base)
-      val allPre = dataFilesUnder(dirP)
-      // a partitionBy layout can't mix dir-encoded and column-encoded
-      // partition values in one version dir, so a selective rewrite
-      // (flat survivor files beside untouched partition dirs) would
-      // break partition discovery — fall back to rewriting everything
-      // (partition values survive as data columns via the basePath
-      // read); flat layouts get the real only-touched-files rewrite
-      val flatLayout =
-        allPre.forall(f => !dirP.relativize(f).toString.contains("/"))
-      // Byte-copies are sound only while the new dir stays SCHEMA-
-      // UNIFORM: reads infer from ONE footer (no mergeSchema), so a
-      // copied file whose physical columns differ from the rewritten
-      // survivors' / materialized post-images' (a rename event, a
-      // SeqCol-less legacy file, prior ADD COLUMNS) would have a
-      // whole generation's columns silently null out after the fold
-      // (ColumnMappingSpec's vacuum-after-RENAME read caught this).
-      // Probe PER-FILE footers for intra-set uniformity first (a
-      // single-footer set inference over a mixed set would itself miss
-      // the heterogeneity — a raw-committed legacy dir or a
-      // mergeSchema-era fold can mix generations INSIDE one dir), then
-      // the untouched set's (name, type) set against what the rewrites
-      // will write; any mismatch ⇒ rewrite everything.
-      def qualifyPre(f: Path): String =
-        base.live + "/" + dirP.relativize(f).toString.replace('\\', '/')
-      val untouchedPre = allPre.filterNot(f => touched(qualifyPre(f)))
-      val touchedPre = allPre.filter(f => touched(qualifyPre(f)))
-      val uniformCopies = flatLayout && {
-        untouchedPre.isEmpty || {
-          footersUniform(untouchedPre) && footersUniform(touchedPre) && {
-            def names(s: org.apache.spark.sql.types.StructType) =
-              s.filterNot(_.name == SeqCol)
-                .map(f => (f.name, f.dataType)).toSet
-            val untouchedSchema = memoFilesParquet(spark, dirP,
-              untouchedPre.map(_.toString)).schema
-            val rawNames = names(untouchedSchema)
-            val survivorsOk = touchedPre.isEmpty ||
-              names(normalizeRenames(root, stampDefaulted(
-                memoFilesParquet(spark, dirP,
-                  touchedPre.map(_.toString)))).schema) == rawNames
-            val morOk = pendingAppends.forall(a =>
-              names(a.drop(PdPathCol, PdPosCol).schema) == rawNames)
-            // SeqCol exemption (a missing/null sequence reads as 0 by
-            // the stamp-defaulting rule) is sound only when every
-            // stamp the rewrites will write is 0: the folded dir then
-            // mixes SeqCol-less copies with stamped files, a
-            // SeqCol-less footer may win inference, and a NONZERO
-            // stamp collapsing to 0 would let the equality-delete
-            // rule (DelSeqCol < SeqCol) mask post-images the fold
-            // explicitly preserves. Untouched files that carry SeqCol
-            // themselves need no exemption (every written file is
-            // stamped, so the dir stays SeqCol-carrying).
-            def maxStampZero(df: DataFrame): Boolean = {
-              val c = if (df.columns.contains(SeqCol))
-                coalesce(col(SeqCol), lit(0L)) else lit(0L)
-              val r = df.agg(org.apache.spark.sql.functions.max(c)).head
-              r.isNullAt(0) || r.getLong(0) <= 0L // null = empty set
-            }
-            val seqOk =
-              untouchedSchema.exists(_.name == SeqCol) || {
-                val touchedZero = touchedPre.isEmpty || maxStampZero(
-                  stampDefaulted(memoFilesParquet(spark, dirP,
-                    touchedPre.map(_.toString))))
-                val morZero = pendingAppends.forall(a =>
-                  a.limit(1).isEmpty || maxStampZero(a))
-                touchedZero && morZero
-              }
-            survivorsOk && morOk && seqOk
-          }
-        }
-      }
-      // The rewrite read below infers from one footer too: over an
-      // internally MIXED set it must merge every footer instead
-      // (once-per-fold planning cost on a rare shape), or a whole
-      // generation's columns would silently null out of the rewrite.
-      val mixedRewriteRead =
-        if (uniformCopies) !footersUniform(touchedPre)
-        else !footersUniform(allPre)
-      rewritten = if (uniformCopies) touched.size else allPre.size
-      commit(root, keepVersions, expectedBase = Some(base.version),
-        validate = () => {
-          if (posVersion(root) != foldedPosVersion)
-            throw new ConcurrentCommitException(
-              s"position deletes landed under $root during the " +
-                "vacuum — re-fold and retry")
-        }) { dir =>
-        val out = Paths.get(dir)
-        Files.createDirectories(out)
-        val all = dataFilesUnder(dirP)
-        def qualify(f: Path): String =
-          base.live + "/" + dirP.relativize(f).toString.replace('\\', '/')
-        def mustRewrite(f: Path): Boolean =
-          !uniformCopies || touched(qualify(f))
-        all.filterNot(mustRewrite).foreach { f =>
-          Files.copy(f, out.resolve(f.getFileName.toString))
-        }
-        val touchedFiles = all.filter(mustRewrite)
-        def rewriteRead(files: Seq[Path]): DataFrame =
-          if (!mixedRewriteRead)
-            memoFilesParquet(spark, dirP, files.map(_.toString))
-          else spark.read.option("mergeSchema", "true")
-            .option("basePath", dirP.toString)
-            .parquet(files.map(_.toString): _*)
-        if (touchedFiles.nonEmpty) {
-          val masked = normalizeRenames(root, stampDefaulted(
-            rewriteRead(touchedFiles)
-              .select(col("*"),
-                concat(lit(base.live + "/"),
-                  expr(s"substring_index(_metadata.file_path, " +
-                    s"'/${base.live}/', -1)")).as(AddrPathCol),
-                col("_metadata.row_index").as(AddrPosCol))))
-          // None only on a uniformity-forced full rewrite with no
-          // sub-table at all — nothing to mask then
-          val survivors = livePosDeleteEntries(spark, root, base) match {
-            case Some(dels) => masked
-              .join(dels, Seq(AddrPathCol, AddrPosCol), "left_anti")
-              .drop(AddrPathCol, AddrPosCol)
-            case None => masked.drop(AddrPathCol, AddrPosCol)
-          }
-          val rw = out.resolve("_rw")
-          survivors.write.mode(SaveMode.Overwrite).parquet(rw.toString)
-          dataFilesUnder(rw).foreach { f =>
-            Files.move(f, out.resolve(f.getFileName.toString))
-          }
-          deleteRecursively(rw)
-        }
-        // pending merge-on-read post-images materialize as NEW files
-        // (their sequence stamp survives the fold for the
-        // equality-delete rule); the CAS'd reset below reaps entries
-        pendingAppends.filter(!_.limit(1).isEmpty).foreach { apps =>
-          val rw = out.resolve("_rw_mor")
-          apps.drop(PdPathCol, PdPosCol)
-            .write.mode(SaveMode.Overwrite).parquet(rw.toString)
-          dataFilesUnder(rw).zipWithIndex.foreach { case (f, i) =>
-            Files.move(f, out.resolve(s"mor-$i-${f.getFileName}"))
-          }
-          deleteRecursively(rw)
-        }
-      }
+      val (version, n) =
+        if (isFlat(v))
+          foldFlatPosDeletes(spark, root, v, foldedPosVersion,
+            keepVersions)
+        else foldPartitionPosDeletes(spark, root, v, foldedPosVersion)
+      rewritten = n
+      version
     }
     val v = retryThenEscalate(Paths.get(root), maxRetries)(once())
     resetPosDeletes(spark, root, foldedPosVersion, keepVersions)
     (v, rewritten)
+  }
+
+  /** [[vacuumPosDeletes]]' flat fold: one new version dir, untouched
+    * files byte-copied while the dir stays schema-uniform. Returns
+    * (new version, files rewritten).
+    */
+  private def foldFlatPosDeletes(spark: SparkSession, root: String,
+                                 v: PartitionedManifest,
+                                 foldedPosVersion: Long,
+                                 keepVersions: Int): (Long, Int) = {
+    val live = flatDir(v)
+    val dirP = Paths.get(root).resolve(live)
+    // distinct delete-carrying paths: bounded by live file count —
+    // the same O(|files|) metadata the manifest itself is. Append
+    // entries (synthetic `_append_` paths) address no file — they
+    // fold by being WRITTEN below, not by rewriting anything.
+    val touched: Set[String] =
+      livePosDeleteEntries(spark, root, v) match {
+        case None => Set.empty
+        case Some(dels) => dels
+          .filter(!expr(s"substring_index($AddrPathCol, '/', -1)")
+            .startsWith(MorMarker))
+          .select(AddrPathCol).distinct()
+          .collect().map(_.getString(0)).toSet
+      }
+    val pendingAppends = liveMorAppendEntries(spark, root, v)
+    val allPre = dataFilesUnder(dirP)
+    // a partitionBy layout can't mix dir-encoded and column-encoded
+    // partition values in one version dir, so a selective rewrite
+    // (flat survivor files beside untouched partition dirs) would
+    // break partition discovery — fall back to rewriting everything
+    // (partition values survive as data columns via the basePath
+    // read); flat layouts get the real only-touched-files rewrite
+    val flatLayout =
+      allPre.forall(f => !dirP.relativize(f).toString.contains("/"))
+    // Byte-copies are sound only while the new dir stays SCHEMA-
+    // UNIFORM: reads infer from ONE footer (no mergeSchema), so a
+    // copied file whose physical columns differ from the rewritten
+    // survivors' / materialized post-images' (a rename event, a
+    // SeqCol-less legacy file, prior ADD COLUMNS) would have a
+    // whole generation's columns silently null out after the fold
+    // (ColumnMappingSpec's vacuum-after-RENAME read caught this).
+    // Probe PER-FILE footers for intra-set uniformity first (a
+    // single-footer set inference over a mixed set would itself miss
+    // the heterogeneity — a raw-committed legacy dir or a
+    // mergeSchema-era fold can mix generations INSIDE one dir), then
+    // the untouched set's (name, type) set against what the rewrites
+    // will write; any mismatch ⇒ rewrite everything.
+    def qualifyPre(f: Path): String =
+      live + "/" + dirP.relativize(f).toString.replace('\\', '/')
+    val untouchedPre = allPre.filterNot(f => touched(qualifyPre(f)))
+    val touchedPre = allPre.filter(f => touched(qualifyPre(f)))
+    val uniformCopies = flatLayout && {
+      untouchedPre.isEmpty || {
+        footersUniform(untouchedPre) && footersUniform(touchedPre) && {
+          def names(s: org.apache.spark.sql.types.StructType) =
+            s.filterNot(_.name == SeqCol)
+              .map(f => (f.name, f.dataType)).toSet
+          val untouchedSchema = memoFilesParquet(spark, dirP,
+            untouchedPre.map(_.toString)).schema
+          val rawNames = names(untouchedSchema)
+          val survivorsOk = touchedPre.isEmpty ||
+            names(normalizeRenames(root, stampDefaulted(
+              memoFilesParquet(spark, dirP,
+                touchedPre.map(_.toString)))).schema) == rawNames
+          val morOk = pendingAppends.forall(a =>
+            names(a.drop(PdPathCol, PdPosCol).schema) == rawNames)
+          // SeqCol exemption (a missing/null sequence reads as 0 by
+          // the stamp-defaulting rule) is sound only when every
+          // stamp the rewrites will write is 0: the folded dir then
+          // mixes SeqCol-less copies with stamped files, a
+          // SeqCol-less footer may win inference, and a NONZERO
+          // stamp collapsing to 0 would let the equality-delete
+          // rule (DelSeqCol < SeqCol) mask post-images the fold
+          // explicitly preserves. Untouched files that carry SeqCol
+          // themselves need no exemption (every written file is
+          // stamped, so the dir stays SeqCol-carrying).
+          def maxStampZero(df: DataFrame): Boolean = {
+            val c = if (df.columns.contains(SeqCol))
+              coalesce(col(SeqCol), lit(0L)) else lit(0L)
+            val r = df.agg(org.apache.spark.sql.functions.max(c)).head
+            r.isNullAt(0) || r.getLong(0) <= 0L // null = empty set
+          }
+          val seqOk =
+            untouchedSchema.exists(_.name == SeqCol) || {
+              val touchedZero = touchedPre.isEmpty || maxStampZero(
+                stampDefaulted(memoFilesParquet(spark, dirP,
+                  touchedPre.map(_.toString))))
+              val morZero = pendingAppends.forall(a =>
+                a.limit(1).isEmpty || maxStampZero(a))
+              touchedZero && morZero
+            }
+          survivorsOk && morOk && seqOk
+        }
+      }
+    }
+    // The rewrite read below infers from one footer too: over an
+    // internally MIXED set it must merge every footer instead
+    // (once-per-fold planning cost on a rare shape), or a whole
+    // generation's columns would silently null out of the rewrite.
+    val mixedRewriteRead =
+      if (uniformCopies) !footersUniform(touchedPre)
+      else !footersUniform(allPre)
+    val rewritten = if (uniformCopies) touched.size else allPre.size
+    val version = commit(root, keepVersions,
+      expectedBase = Some(v.version),
+      validate = () => {
+        if (posVersion(root) != foldedPosVersion)
+          throw new ConcurrentCommitException(
+            s"position deletes landed under $root during the " +
+              "vacuum — re-fold and retry")
+      }) { dir =>
+      val out = Paths.get(dir)
+      Files.createDirectories(out)
+      val all = dataFilesUnder(dirP)
+      def qualify(f: Path): String =
+        live + "/" + dirP.relativize(f).toString.replace('\\', '/')
+      def mustRewrite(f: Path): Boolean =
+        !uniformCopies || touched(qualify(f))
+      all.filterNot(mustRewrite).foreach { f =>
+        Files.copy(f, out.resolve(f.getFileName.toString))
+      }
+      val touchedFiles = all.filter(mustRewrite)
+      def rewriteRead(files: Seq[Path]): DataFrame =
+        if (!mixedRewriteRead)
+          memoFilesParquet(spark, dirP, files.map(_.toString))
+        else spark.read.option("mergeSchema", "true")
+          .option("basePath", dirP.toString)
+          .parquet(files.map(_.toString): _*)
+      if (touchedFiles.nonEmpty) {
+        val masked = unionDirs(root, v,
+          Seq(live -> rewriteRead(touchedFiles)), addressed = true)
+        // None only on a uniformity-forced full rewrite with no
+        // sub-table at all — nothing to mask then
+        val survivors = livePosDeleteEntries(spark, root, v) match {
+          case Some(dels) => masked
+            .join(dels, Seq(AddrPathCol, AddrPosCol), "left_anti")
+            .drop(AddrPathCol, AddrPosCol)
+          case None => masked.drop(AddrPathCol, AddrPosCol)
+        }
+        val rw = out.resolve("_rw")
+        survivors.write.mode(SaveMode.Overwrite).parquet(rw.toString)
+        dataFilesUnder(rw).foreach { f =>
+          Files.move(f, out.resolve(f.getFileName.toString))
+        }
+        deleteRecursively(rw)
+      }
+      // pending merge-on-read post-images materialize as NEW files
+      // (their sequence stamp survives the fold for the
+      // equality-delete rule); the CAS'd reset below reaps entries
+      pendingAppends.filter(!_.limit(1).isEmpty).foreach { apps =>
+        val rw = out.resolve("_rw_mor")
+        apps.drop(PdPathCol, PdPosCol)
+          .write.mode(SaveMode.Overwrite).parquet(rw.toString)
+        dataFilesUnder(rw).zipWithIndex.foreach { case (f, i) =>
+          Files.move(f, out.resolve(s"mor-$i-${f.getFileName}"))
+        }
+        deleteRecursively(rw)
+      }
+    }
+    (version, rewritten)
   }
 
   // ------------------------------------------------------------------
@@ -3135,23 +3159,8 @@ object VersionedTable {
     * tables consistently.
     */
   def readPartitionedSnapshot(spark: SparkSession, root: String,
-                              m: PartitionedManifest): DataFrame = {
-    val rootP = Paths.get(root)
-    val byDir = m.partitions.groupBy(_._2).toSeq.sortBy(_._1)
-    // no mergeSchema: every file under one version dir was written
-    // by ONE commit (uniform schema), so footer-merging is pure
-    // planning cost — cross-COMMIT schema drift is reconciled by the
-    // allowMissingColumns union below, which is the only place it
-    // can appear. Column renames normalize at the end (no caller
-    // attaches `_metadata` to THIS frame — the address paths build
-    // their own union from readLeavesTyped and normalize after
-    // attaching).
-    normalizeRenames(root, byDir.map { case (dir, parts) =>
-      val base = rootP.resolve(dir).toString
-      val leaves = parts.keys.toSeq.sorted.map(k => s"$base/$k")
-      readLeavesTyped(spark, root, base, leaves)
-    }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true)))
-  }
+                              m: PartitionedManifest): DataFrame =
+    unionDirs(root, m, dirFrames(spark, root, m), addressed = false)
 
   /** basePath read with partition-column types FIXED to the recorded
     * `_part_schema.json`: path type inference reinterprets lossy
@@ -3356,7 +3365,7 @@ object VersionedTable {
           // touched partitions' files, and carrying a masked row into
           // new addresses would resurrect it (entries go stale with
           // the old files). Identity when no pos sub-table exists.
-          val existing = posMaskedPartitionedSnapshot(spark, root, m)
+          val existing = posMaskedSnapshot(spark, root, m)
             .filter(touchedPred)
           if (antiJoin) {
             val (existingAligned, updatesAligned) =
@@ -3520,7 +3529,7 @@ object VersionedTable {
       val dels = readLive(spark, dr).select(keyCols.map(col): _*)
       // fold through the pos-delete mask too: this rewrite supersedes
       // the touched partitions' files
-      val base = posMaskedPartitionedSnapshot(spark, root, m)
+      val base = posMaskedSnapshot(spark, root, m)
       // partitions holding a deleted key — the only ones to rewrite
       val touched = base.join(dels, keyCols, "left_semi")
         .select(m.partitionColumns.map(col): _*).distinct().collect()
@@ -3555,179 +3564,45 @@ object VersionedTable {
   }
 
   // ------------------------------------------------------------------
-  // Position deletes, PARTITIONED form (r13 — closes the flat-only
-  // asymmetry): same `_pos_deletes` sub-table, addresses
-  // version-dir-qualified (`vNNNN/day=x/part-...`), so an entry can
-  // never match a file of a superseded dir. An entry is LIVE only
-  // while the manifest still maps its partition key to its version
-  // dir — a rewrite of that partition makes it stale (harmless: new
-  // files have new addresses), which is why EVERY partitioned
-  // rewrite path folds pending entries of the partitions it touches
-  // into its read and CAS-validates the pos-delete version at commit
-  // (the r12 "rewrite un-deletes rows" class, partitioned edition).
-  // Vacuum rewrites ONLY partitions holding a delete-carrying file.
+  // Position deletes on a PARTITIONED table: the same `_pos_deletes`
+  // sub-table and the same snapshot-view verbs as the flat form,
+  // addresses version-dir-qualified (`vNNNN/day=x/part-...`), so an
+  // entry can never match a file of a superseded dir. An entry is LIVE
+  // only while the manifest still maps its partition key to its
+  // version dir — a rewrite of that partition makes it stale
+  // (harmless: new files have new addresses), which is why EVERY
+  // partitioned rewrite path folds pending entries of the partitions
+  // it touches into its read ([[posMaskedSnapshot]] over a restricted
+  // view) and CAS-validates the pos-delete version at commit.
   // ------------------------------------------------------------------
 
-  /** Partitioned live snapshot with version-dir-qualified physical
-    * addresses attached (per version dir, BEFORE the union — metadata
-    * columns do not survive a union).
+  /** [[vacuumPosDeletes]]' partitioned fold: only partitions whose
+    * current pointer holds a delete-carrying file (or a pending
+    * post-image) rewrite; everything else keeps its pinned dir.
+    * Returns (version, partitions rewritten).
     */
-  private def withFilePosPartitioned(spark: SparkSession, root: String,
-                                     m: PartitionedManifest): DataFrame = {
-    val rootP = Paths.get(root)
-    val byDir = m.partitions.groupBy(_._2).toSeq.sortBy(_._1)
-    byDir.map { case (dirName, parts) =>
-      val base = rootP.resolve(dirName).toString
-      val leaves = parts.keys.toSeq.sorted.map(k => s"$base/$k")
-      val df = readLeavesTyped(spark, root, base, leaves)
-      requireNoReservedColumns(df.columns, s"table $root",
-        Seq(AddrPathCol, AddrPosCol))
-      df.select(col("*"),
-        concat(lit(dirName + "/"),
-          expr(s"substring_index(_metadata.file_path, '/$dirName/', -1)"))
-          .as(AddrPathCol),
-        col("_metadata.row_index").as(AddrPosCol))
-    }.reduce(_.unionByName(_, allowMissingColumns = true)) match {
-      case df => normalizeRenames(root, df)
-    }
-  }
-
-  /** Pos-delete entries addressing files the live partitioned
-    * manifest still references. None when no delete ever committed.
-    */
-  private def livePosDeleteEntriesPartitioned(
-      spark: SparkSession, root: String,
-      m: PartitionedManifest): Option[DataFrame] =
-    readManifest(posDeletesRoot(root)).map { _ =>
-      val dirs = m.partitions.values.toSeq.distinct
-      readLive(spark, posDeletesRoot(root))
-        .filter(expr(s"substring_index($PdPathCol, '/', 1)")
-          .isin(dirs: _*))
-        .select(col(PdPathCol).as(AddrPathCol),
-          col(PdPosCol).as(AddrPosCol))
-    }
-
-  /** The snapshot `m` describes, minus live position deletes —
-    * identity when no pos-delete sub-table exists (zero extra cost
-    * on tables that never used them). The fold every partitioned
-    * REWRITE must read through.
-    */
-  private def posMaskedPartitionedSnapshot(spark: SparkSession,
-                                           root: String,
-                                           m: PartitionedManifest)
-      : DataFrame = {
-    val masked = livePosDeleteEntriesPartitioned(spark, root, m) match {
-      case None => readPartitionedSnapshot(spark, root, m)
-      case Some(dels) =>
-        withFilePosPartitioned(spark, root, m)
-          .join(dels, Seq(AddrPathCol, AddrPosCol), "left_anti")
-          .drop(AddrPathCol, AddrPosCol)
-    }
-    // pending merge-on-read post-images of the partitions `m` covers
-    // (restricted manifests restrict the appends too, so targeted
-    // folds fold exactly their own partitions' pending rows);
-    // partitioned frames are sequence-free — drop the stamp
-    withMorAppends(masked,
-      liveMorAppendEntriesPartitioned(spark, root, m)
-        .map(_.drop(SeqCol)))
-  }
-
-  /** Delete live partitioned rows matching `predicate` BY POSITION:
-    * one metadata-column scan, O(|positions|) keyed commit into
-    * `_pos_deletes`, zero data rewrite — [[softDeletePos]]'s
-    * partitioned sibling, with the same interleaved-rewrite re-check.
-    */
-  def softDeletePosPartitioned(spark: SparkSession, root: String,
-                               predicate: Column,
-                               keepVersions: Int = 2,
-                               maxRetries: Int = 10): Long = {
-    var attempt = 0
-    while (true) {
-      val m = readPartitionedManifest(root).getOrElse(
-        throw new IllegalStateException(
-          s"no partitioned _manifest.json under $root"))
-      try {
-        val baseHits = withFilePosPartitioned(spark, root, m)
-          .filter(predicate)
-          .select(col(AddrPathCol).as(PdPathCol),
-            col(AddrPosCol).as(PdPosCol)).distinct()
-        // matching merge-on-read post-images tombstone, like the flat
-        // form — they exist only as sub-table entries
-        val hits = liveMorAppendEntriesPartitioned(spark, root, m) match {
-          case Some(a) => baseHits.unionByName(
-            a.filter(predicate)
-              .select(col(PdPathCol), col(PdPosCol))
-              .withColumn(PdDeadCol, lit(true)),
-            allowMissingColumns = true)
-          case None => baseHits
-        }
-        val v = upsert(spark, posDeletesRoot(root), hits,
-          Seq(PdPathCol, PdPosCol),
-          schemaMode = MergeWriter.SchemaMode.SyncAllColumns,
-          keepVersions = keepVersions, maxRetries = maxRetries)
-        if (readPartitionedManifest(root).map(_.version)
-            .contains(m.version)) return v
-      } catch {
-        case e: Throwable if isPrunedSnapshotRead(e, Paths.get(root)) => ()
-      }
-      attempt += 1
-      if (attempt > maxRetries) throw new ConcurrentCommitException(
-        s"softDeletePosPartitioned lost $attempt identification " +
-          s"races under $root")
-    }
-    0L // unreachable
-  }
-
-  /** Live partitioned snapshot minus position deletes (merge-on-read).
-    * Identical to [[readLivePartitioned]] when no position delete has
-    * ever committed.
-    */
-  def readLivePartitionedWithPosDeletes(spark: SparkSession,
-                                        root: String): DataFrame = {
-    val m = readPartitionedManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no partitioned _manifest.json under $root"))
-    posMaskedPartitionedSnapshot(spark, root, m)
-  }
-
-  /** Fold live position deletes into rewritten PARTITIONS — only
-    * partitions whose current pointer holds a delete-carrying file
-    * rewrite; everything else keeps its pinned dir — then reset the
-    * delete set (CAS, landing deletes win). Returns (version,
-    * partitions rewritten).
-    */
-  def vacuumPosDeletesPartitioned(spark: SparkSession, root: String,
-                                  maxRetries: Int = 10): (Long, Int) = {
-    var foldedPosVersion = 0L
-    var rewritten = 0
-    def once(): Long = {
-      val m = readPartitionedManifest(root).getOrElse(
-        throw new IllegalStateException(
-          s"no partitioned manifest under $root"))
-      foldedPosVersion = posVersion(root)
-      val entries = livePosDeleteEntriesPartitioned(spark, root, m)
-        .getOrElse { rewritten = 0; return m.version }
-      // delete-carrying (dir, partition-key) pairs, LIVE only when
-      // the manifest still maps that key to that dir
-      val touchedKeys = entries.select(AddrPathCol).distinct()
-        .collect().map(_.getString(0)).flatMap { p =>
-          val segs = p.split('/')
-          val dir = segs.head
-          val key = segs.slice(1, segs.length - 1).mkString("/")
-          if (m.partitions.get(key).contains(dir)) Some(key) else None
-        }.toSet
-      rewritten = touchedKeys.size
-      if (touchedKeys.isEmpty) return m.version // stale-only entries
-      val sub = m.copy(partitions =
-        m.partitions.filter(kv => touchedKeys(kv._1)))
-      val folded = posMaskedPartitionedSnapshot(spark, root, sub)
-      replacePartitioned(spark, root, folded, m.partitionColumns,
-        covered = touchedKeys.toSeq, expectedBase = Some(m.version),
-        expectedPosVersion = Some(foldedPosVersion))
-    }
-    val v = retryThenEscalate(Paths.get(root), maxRetries)(once())
-    resetPosDeletes(spark, root, foldedPosVersion, keepVersions = 2)
-    (v, rewritten)
+  private def foldPartitionPosDeletes(spark: SparkSession, root: String,
+                                      m: PartitionedManifest,
+                                      foldedPosVersion: Long)
+      : (Long, Int) = {
+    val entries = livePosDeleteEntries(spark, root, m)
+      .getOrElse(return (m.version, 0))
+    // delete-carrying (dir, partition-key) pairs, LIVE only when
+    // the manifest still maps that key to that dir
+    val touchedKeys = entries.select(AddrPathCol).distinct()
+      .collect().map(_.getString(0)).flatMap { p =>
+        val segs = p.split('/')
+        val dir = segs.head
+        val key = segs.slice(1, segs.length - 1).mkString("/")
+        if (m.partitions.get(key).contains(dir)) Some(key) else None
+      }.toSet
+    if (touchedKeys.isEmpty) return (m.version, 0) // stale-only entries
+    val sub = m.copy(partitions =
+      m.partitions.filter(kv => touchedKeys(kv._1)))
+    val folded = posMaskedSnapshot(spark, root, sub)
+    (replacePartitioned(spark, root, folded, m.partitionColumns,
+      covered = touchedKeys.toSeq, expectedBase = Some(m.version),
+      expectedPosVersion = Some(foldedPosVersion)), touchedKeys.size)
   }
 
   /** REPLACE the partitions `df` covers with exactly its rows (the
@@ -3978,7 +3853,7 @@ object VersionedTable {
           s"no _manifest.json under $root — nothing to overwrite"))
       val next = base.version + 1
       foldedPosVersion = posVersion(root)
-      val kept = readLiveWithPosDeletesStamped(spark, root)
+      val kept = posMaskedSnapshot(spark, root, liveView(root))
         .filter(!coalesce(predicate, lit(false)))
       val replStamped = replacement.withColumn(SeqCol, lit(next))
       commit(root, keepVersions, expectedBase = Some(base.version),
@@ -4232,10 +4107,10 @@ object VersionedTable {
       rewritten = frag.size
       if (frag.isEmpty) return m.version
       val pinnedPos = posVersion(root)
-      // posMaskedPartitionedSnapshot reads through readLeavesTyped
+      // posMaskedSnapshot reads through readLeavesTyped
       // (recorded partition-value types survive the rewrite) AND the
       // pos-delete fold (this rewrite supersedes the touched files)
-      val df = posMaskedPartitionedSnapshot(spark, root,
+      val df = posMaskedSnapshot(spark, root,
           m.copy(partitions = frag))
         .repartition(m.partitionColumns.map(col): _*)
       replacePartitioned(spark, root, df, m.partitionColumns,
@@ -4272,7 +4147,7 @@ object VersionedTable {
       val pinnedPos = posVersion(root)
       // typed partition values (readLeavesTyped) + the pos-delete
       // fold, like every partitioned rewrite
-      val df = posMaskedPartitionedSnapshot(spark, root, m)
+      val df = posMaskedSnapshot(spark, root, m)
         .repartitionByRange(n, keys: _*)
         .sortWithinPartitions(keys: _*)
       replacePartitioned(spark, root, df, m.partitionColumns,
@@ -4786,45 +4661,6 @@ object VersionedTable {
   private def baseRowOpts(root: String): GraftScanPlanner.Opts =
     GraftScanPlanner.Opts(root, None, withDeletes = false)
 
-  /** Metadata-only COUNT(*) of the live snapshot — the sum of the
-    * sidecar's per-file row counts, no data read (the manifest-stats
-    * answer a real table format gives; at 100 TB this is microseconds
-    * against a full-scan count job). None when any live file lacks a
-    * sidecar entry (legacy commit, harvest failure) — the caller
-    * falls back to `readLive(...).count()`. Counts BASE rows: delete
-    * masks (the `_deletes` sub-table) are not applied, matching
-    * [[readLive]].
-    */
-  /** Metadata-only COUNT(*) of a PARTITIONED live snapshot — the sum
-    * of every live partition's sidecar row counts. None when any file
-    * lacks a sidecar entry (fall back to counting). Counts BASE rows
-    * (no delete masks), matching [[readLivePartitioned]].
-    */
-  def countLivePartitioned(root: String): Option[Long] = {
-    val m = readPartitionedManifest(root).getOrElse(return None)
-    val rootP = Paths.get(root)
-    var total = 0L
-    m.partitions.groupBy(_._2).foreach { case (dirName, parts) =>
-      val verDir = rootP.resolve(dirName)
-      val stats = readStatsSidecar(verDir)
-      parts.keys.foreach { k =>
-        val rels = dataFilesUnder(verDir.resolve(k))
-          .map(f => verDir.relativize(f).toString.replace('\\', '/'))
-        if (!rels.forall(stats.contains)) return None
-        total += rels.map(stats(_).rows).sum
-      }
-    }
-    Some(total)
-  }
-
-  /** Either table form's metadata COUNT(*); None when sidecars are
-    * incomplete or the table never committed.
-    */
-  private[graft] def countLiveAny(root: String): Option[Long] =
-    if (readPartitionedManifest(root).isDefined) countLivePartitioned(root)
-    else if (readManifest(root).isDefined) countLive(root)
-    else None
-
   /** Does ANY merge-on-read delete sub-table exist? (A metadata count
     * of base rows would then over-count the observable snapshot.)
     */
@@ -4841,49 +4677,34 @@ object VersionedTable {
       : Option[Seq[FileStats]] = {
     val rootP = Paths.get(root)
     val out = Seq.newBuilder[FileStats]
-    readPartitionedManifest(root) match {
-      case Some(m) =>
-        m.partitions.groupBy(_._2).foreach { case (dn, parts) =>
-          val verDir = rootP.resolve(dn)
-          val stats = readStatsSidecar(verDir)
-          parts.keys.foreach { k =>
-            dataFilesUnder(verDir.resolve(k)).foreach { f =>
-              val rel = verDir.relativize(f).toString.replace('\\', '/')
-              stats.get(rel) match {
-                case Some(st) => out += st
-                case None     => return None
-              }
-            }
+    val m = snapshotView(root).getOrElse(return None)
+    m.partitions.groupBy(_._2).foreach { case (dn, parts) =>
+      val verDir = rootP.resolve(dn)
+      val stats = readStatsSidecar(verDir)
+      parts.keys.foreach { k =>
+        dataFilesUnder(verDir.resolve(k)).foreach { f =>
+          val rel = verDir.relativize(f).toString.replace('\\', '/')
+          stats.get(rel) match {
+            case Some(st) => out += st
+            case None     => return None
           }
         }
-        Some(out.result())
-      case None =>
-        readManifest(root) match {
-          case None => None
-          case Some(m) =>
-            val dirP = rootP.resolve(m.live)
-            val stats = readStatsSidecar(dirP)
-            dataFilesUnder(dirP).foreach { f =>
-              val rel = dirP.relativize(f).toString.replace('\\', '/')
-              stats.get(rel) match {
-                case Some(st) => out += st
-                case None     => return None
-              }
-            }
-            Some(out.result())
-        }
+      }
     }
+    Some(out.result())
   }
 
-  def countLive(root: String): Option[Long] = {
-    val m = readManifest(root).getOrElse(return None)
-    val dirP = Paths.get(root).resolve(m.live)
-    val stats = readStatsSidecar(dirP)
-    val all = dataFilesUnder(dirP)
-    val rels = all.map(f => dirP.relativize(f).toString.replace('\\', '/'))
-    if (rels.forall(stats.contains)) Some(rels.map(stats(_).rows).sum)
-    else None
-  }
+  /** Metadata-only COUNT(*) of the live snapshot, either table form —
+    * the sum of the sidecars' per-file row counts, no data read (the
+    * manifest-stats answer a real table format gives; at 100 TB this
+    * is microseconds against a full-scan count job). None when the
+    * table never committed or any live file lacks a sidecar entry
+    * (legacy commit, harvest failure) — the caller falls back to
+    * counting. Counts BASE rows: delete masks are not applied,
+    * matching [[readLive]].
+    */
+  def countLive(root: String): Option[Long] =
+    liveFileStatsAll(root).map(_.map(_.rows).sum)
 
   // ------------------------------------------------------------------
   // PARTITION-level column bounds (`_part_stats.json`) — the Iceberg
@@ -5075,7 +4896,7 @@ object VersionedTable {
     val files = dataFilesUnder(dirP)
     if (files.isEmpty) return
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    // relativize inside the job (the withFilePos idiom): _metadata
+    // relativize inside the job (the withAddress idiom): _metadata
     // .file_path is a URI string, and driver-side java.net.URI parsing
     // throws on legal roots containing spaces or other URI-illegal
     // characters
@@ -5587,8 +5408,7 @@ object VersionedTable {
     */
   private[graft] def statsFingerprint(root: String)
       : (Long, Long, Long) = {
-    val mainV = readPartitionedManifest(root).map(_.version)
-      .orElse(readManifest(root).map(_.version)).getOrElse(0L)
+    val mainV = snapshotView(root).map(_.version).getOrElse(0L)
     val posV = readManifest(posDeletesRoot(root)).map(_.version)
       .getOrElse(0L)
     val eqV = readManifest(deletesRoot(root)).map(_.version)

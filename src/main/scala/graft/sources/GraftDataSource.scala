@@ -167,9 +167,7 @@ private[graft] class GraftTable(
     val pred = filters.flatMap(GraftFilterColumns.translate)
       .reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true))
-    if (VersionedTable.readPartitionedManifest(opts.root).isDefined)
-      VersionedTable.softDeletePosPartitioned(spark, opts.root, pred)
-    else if (VersionedTable.readManifest(opts.root).isDefined)
+    if (VersionedTable.snapshotView(opts.root).isDefined)
       VersionedTable.softDeletePos(spark, opts.root, pred)
     // never-committed catalog table: DELETE of nothing is a no-op
     ()
@@ -851,7 +849,8 @@ private[graft] object GraftScanPlanner {
       return None
     val rootP = Paths.get(o.root)
     val token = VersionedTable.listingToken(Seq(rootP,
-      rootP.resolve("_pos_deletes"), rootP.resolve("_eq_deletes")))
+      Paths.get(VersionedTable.posDeletesRoot(o.root)),
+      Paths.get(VersionedTable.deletesRoot(o.root))))
     Some(spark.sparkContext.applicationId + "#" +
       System.identityHashCode(spark) + "|" + o.toString + "|" +
       required.json + "|" + pushed.mkString(";") + "|" + token)
@@ -892,10 +891,7 @@ private[graft] object GraftScanPlanner {
     if (o.changes.isDefined) return None
     manifestVer(o.root) match {
       case Some(v) =>
-        val posV = VersionedTable
-          .readManifest(Paths.get(o.root).resolve("_pos_deletes")
-            .toString)
-          .map(_.version).getOrElse(-1L)
+        val posV = VersionedTable.posDeleteVersion(o.root)
         liveBytesMemo.getOrElseUpdate((o, v, posV))(liveBytes0(o))
       // no manifest yet (empty/foreign dir): nothing to fingerprint,
       // and the uncached walk is a couple of file-exists probes
@@ -912,13 +908,13 @@ private[graft] object GraftScanPlanner {
     // (an over-count — it also holds delete entries — but statistics
     // here are an UPPER bound, and overstating only forgoes a
     // broadcast, never wrongly takes one)
-    def morBytes: Long =
+    def morBytes: Long = {
+      val pos = VersionedTable.posDeletesRoot(o.root)
       if (o.versionAsOf.isDefined) 0L
-      else VersionedTable
-        .readManifest(rootP.resolve("_pos_deletes").toString)
-        .map(pm => bytesUnder(rootP.resolve("_pos_deletes")
-          .resolve(pm.live)))
+      else VersionedTable.readManifest(pos)
+        .map(pm => bytesUnder(Paths.get(pos).resolve(pm.live)))
         .getOrElse(0L)
+    }
     val pm = o.versionAsOf match {
       case Some(v) => VersionedTable.historyPartitionedManifest(o.root, v)
       case None    => VersionedTable.readPartitionedManifest(o.root)
@@ -960,37 +956,32 @@ private[graft] object GraftScanPlanner {
         VersionedTable.readChangesEmptyFrame(spark, o.root)
       else VersionedTable.readChanges(spark, o.root, from, to, keys)
     }
-    val partitioned =
-      VersionedTable.readPartitionedManifest(o.root).isDefined ||
-        o.versionAsOf.exists(v =>
-          VersionedTable.historyPartitionedManifest(o.root, v).isDefined)
-    (partitioned, o.versionAsOf) match {
-      case (true, Some(v)) =>
-        VersionedTable.readPartitionedVersion(spark, o.root, v)
-      case (true, None) =>
-        val base =
-          if (o.withDeletes)
-            VersionedTable.readLivePartitionedWithPosDeletes(spark, o.root)
-          else VersionedTable.readLivePartitioned(spark, o.root)
-        if (o.withDeletes)
-          VersionedTable.maskPartitionedDeletes(spark, o.root, base)
-        else base
-      case (false, Some(v)) =>
-        VersionedTable.readVersion(spark, o.root, v)
-      case (false, None) =>
-        val m = VersionedTable.readManifest(o.root).getOrElse(
+    o.versionAsOf match {
+      case Some(v) =>
+        if (VersionedTable.readPartitionedManifest(o.root).isDefined ||
+            VersionedTable.historyPartitionedManifest(o.root, v).isDefined)
+          VersionedTable.readPartitionedVersion(spark, o.root, v)
+        else VersionedTable.readVersion(spark, o.root, v)
+      case None =>
+        val view = VersionedTable.snapshotView(o.root).getOrElse(
           throw new IllegalStateException(
             s"no _manifest.json under ${o.root} — not a graft table " +
               "(or it has never committed)"))
-        val dir = Paths.get(o.root).resolve(m.live)
-        val base = VersionedTable.memoFlatParquet(spark, dir)
-        if (o.withDeletes)
-          VersionedTable.maskFlatDeletes(spark, o.root, m, base)
-        else VersionedTable.normalizeRenames(o.root,
-          VersionedTable.stampDefaulted(base)
-            .drop(VersionedTable.SeqCol))
+        snapshotFrame(spark, o.root, view,
+          VersionedTable.dirFrames(spark, o.root, view), o.withDeletes)
     }
   }
+
+  /** Per-dir raw reads of the view as one frame: both delete families
+    * applied when `masked`, else the base rows.
+    */
+  private def snapshotFrame(spark: SparkSession, root: String,
+                            view: VersionedTable.PartitionedManifest,
+                            groups: Seq[(String, DataFrame)],
+                            masked: Boolean): DataFrame =
+    if (masked) VersionedTable.maskDeletes(spark, root, view, groups)
+    else VersionedTable.unionDirs(root, view, groups, addressed = false)
+      .drop(VersionedTable.SeqCol)
 
   /** The pruned dataframe: [[decide]]'s survivors read through
     * Spark's parquet source, deletes masked, the decision published to
@@ -1011,21 +1002,15 @@ private[graft] object GraftScanPlanner {
     assemble(spark, o, survivors)
   }
 
-  /** The files a snapshot read opens after pruning. */
-  sealed trait Survivors
-  /** Flat form: surviving files of one version dir; `live` is the
-    * live manifest (None under time travel, which never masks).
+  /** The files a snapshot read opens after pruning: the snapshot view
+    * it pruned (a flat table is a one-leaf view) and the surviving
+    * files per version dir, dirs sorted.
     */
-  final case class FlatSurvivors(dir: Path, files: Seq[Path],
-                                 live: Option[VersionedTable.Manifest])
-      extends Survivors
-  /** Partitioned form: surviving files per version dir, dirs sorted. */
-  final case class PartitionedSurvivors(
-      m: VersionedTable.PartitionedManifest,
-      byDir: Seq[(Path, Seq[Path])]) extends Survivors
+  final case class Survivors(view: VersionedTable.PartitionedManifest,
+                             byDir: Seq[(Path, Seq[Path])])
 
   /** The metadata step of a pruned snapshot read: conjuncts →
-    * partition + file survivor sets from the manifest, the
+    * partition + file survivor sets from the snapshot view, the
     * version-checked partition bounds and each version dir's
     * footer-stats and bloom sidecars (each read once). Driver-side
     * metadata only — no Spark job, no audit write. Snapshot reads
@@ -1034,83 +1019,51 @@ private[graft] object GraftScanPlanner {
   def decide(o: Opts, filters: Seq[Filter])
       : (GraftScanAudit.Decision, Survivors) = {
     val rootP = Paths.get(o.root)
-    val pm = o.versionAsOf match {
-      case Some(v) =>
-        VersionedTable.historyPartitionedManifest(o.root, v)
-      case None => VersionedTable.readPartitionedManifest(o.root)
+    val m = VersionedTable.snapshotView(o.root, o.versionAsOf).getOrElse(
+      throw new IllegalStateException(s"no _manifest.json under ${o.root}"))
+    val partCols = m.partitionColumns.toSet
+    val pathFilters = filters.filter(f =>
+      partitionPathPrunable(f, partCols))
+    // version-checked partition bounds apply to the LIVE manifest
+    // only (the sidecar is stamped with the live version); a view
+    // with no partition columns has none to read
+    val bounds: Map[String, VersionedTable.PartitionStats] =
+      if (o.versionAsOf.isDefined || partCols.isEmpty) Map.empty
+      else VersionedTable.readPartStats(o.root)
+        .filter(_._1 == m.version).map(_._2).getOrElse(Map.empty)
+    val selected = m.partitions.filter { case (k, _) =>
+      pathFilters.forall(partitionPathSurvives(k, _)) &&
+        filters.forall(f => statsSurvive(
+          bounds.get(k).map(ps =>
+            Bounds(ps.cols, Map.empty, ps.dbls)), f))
     }
-    pm match {
-      case Some(m) => // ---------------- partitioned form
-        val partCols = m.partitionColumns.toSet
-        val pathFilters = filters.filter(f =>
-          partitionPathPrunable(f, partCols))
-        // version-checked partition bounds apply to the LIVE manifest
-        // only (the sidecar is stamped with the live version)
-        val bounds: Map[String, VersionedTable.PartitionStats] =
-          if (o.versionAsOf.isDefined) Map.empty
-          else VersionedTable.readPartStats(o.root)
-            .filter(_._1 == m.version).map(_._2).getOrElse(Map.empty)
-        val selected = m.partitions.filter { case (k, _) =>
-          pathFilters.forall(partitionPathSurvives(k, _)) &&
-            filters.forall(f => statsSurvive(
-              bounds.get(k).map(ps =>
-                Bounds(ps.cols, Map.empty, ps.dbls)), f))
-        }
-        val statsByDir = selected.values.toSeq.distinct
-          .map(d => d -> VersionedTable.readStatsSidecar(rootP.resolve(d)))
-          .toMap
-        val bloomsByDir =
-          if (!filters.exists(bloomable)) Map.empty[String,
-            Map[(String, String), Array[Long]]]
-          else selected.values.toSeq.distinct
-            .map(d => d ->
-              VersionedTable.readBloomSidecar(rootP.resolve(d))).toMap
-        val files = selected.toSeq.sortBy(_._1).flatMap { case (k, dn) =>
-          val verDir = rootP.resolve(dn)
-          VersionedTable.dataFilesUnder(verDir.resolve(k)).map { f =>
-            val rel = verDir.relativize(f).toString.replace('\\', '/')
-            val keep = filters.forall(fl => statsSurvive(
-              statsByDir(dn).get(rel).map(fs =>
-                Bounds(fs.cols, fs.strs, fs.dbls)), fl) &&
-              bloomSurvives(
-                bloomsByDir.getOrElse(dn, Map.empty), rel, fl))
-            (f, keep, verDir)
-          }
-        }
-        val survivors = files.filter(_._2)
-        (GraftScanAudit.Decision(selected.size, m.partitions.size,
-          survivors.size, files.size, filters.map(_.toString)),
-          PartitionedSurvivors(m, survivors.groupBy(_._3).toSeq
-            .sortBy(_._1.toString)
-            .map { case (verDir, fs) => verDir -> fs.map(_._1) }))
-      case None => // ---------------- flat form
-        val (dirP, live) = o.versionAsOf match {
-          // the data dir comes from the history entry (a fast-forward
-          // publish shares the branch head's dir), validated loudly
-          case Some(v) =>
-            (VersionedTable.flatVersionPath(o.root, v), None)
-          case None =>
-            val m = VersionedTable.readManifest(o.root).getOrElse(
-              throw new IllegalStateException(
-                s"no _manifest.json under ${o.root}"))
-            (rootP.resolve(m.live), Some(m))
-        }
-        val stats = VersionedTable.readStatsSidecar(dirP)
-        val blooms =
-          if (filters.exists(bloomable))
-            VersionedTable.readBloomSidecar(dirP)
-          else Map.empty[(String, String), Array[Long]]
-        val files = VersionedTable.dataFilesUnder(dirP)
-        val survivors = files.filter { f =>
-          val rel = dirP.relativize(f).toString.replace('\\', '/')
-          filters.forall(fl => statsSurvive(
-            stats.get(rel).map(fs => Bounds(fs.cols, fs.strs, fs.dbls)),
-            fl) && bloomSurvives(blooms, rel, fl))
-        }
-        (GraftScanAudit.Decision(1, 1, survivors.size, files.size,
-          filters.map(_.toString)),
-          FlatSurvivors(dirP, survivors, live))
+    val statsByDir = selected.values.toSeq.distinct
+      .map(d => d -> VersionedTable.readStatsSidecar(rootP.resolve(d)))
+      .toMap
+    val bloomsByDir =
+      if (!filters.exists(bloomable)) Map.empty[String,
+        Map[(String, String), Array[Long]]]
+      else selected.values.toSeq.distinct
+        .map(d => d ->
+          VersionedTable.readBloomSidecar(rootP.resolve(d))).toMap
+    val files = selected.toSeq.sortBy(_._1).flatMap { case (k, dn) =>
+      val verDir = rootP.resolve(dn)
+      VersionedTable.dataFilesUnder(verDir.resolve(k)).map { f =>
+        val rel = verDir.relativize(f).toString.replace('\\', '/')
+        val keep = filters.forall(fl => statsSurvive(
+          statsByDir(dn).get(rel).map(fs =>
+            Bounds(fs.cols, fs.strs, fs.dbls)), fl) &&
+          bloomSurvives(
+            bloomsByDir.getOrElse(dn, Map.empty), rel, fl))
+        (f, keep, verDir)
+      }
     }
+    val survivors = files.filter(_._2)
+    (GraftScanAudit.Decision(selected.size, m.partitions.size,
+      survivors.size, files.size, filters.map(_.toString)),
+      Survivors(m, survivors.groupBy(_._3).toSeq
+        .sortBy(_._1.toString)
+        .map { case (verDir, fs) => verDir -> fs.map(_._1) }))
   }
 
   /** The frame assembly of a pruned snapshot read: [[decide]]'s
@@ -1120,63 +1073,23 @@ private[graft] object GraftScanPlanner {
   def assemble(spark: SparkSession, o: Opts,
                survivors: Survivors): DataFrame = {
     val masked = o.versionAsOf.isEmpty && o.withDeletes
-    survivors match {
-      case PartitionedSurvivors(m, byDir) =>
-        if (byDir.isEmpty) {
-          // every base file skipped — but pending merge-on-read
-          // post-images live in NO file, so a live masked read must
-          // still surface them (residual filters re-apply above)
-          val empty = observable(spark, o).limit(0)
-          if (masked)
-            VersionedTable
-              .liveMorAppendsMaskedPartitioned(spark, o.root, m)
-              .map(a => empty.unionByName(a,
-                allowMissingColumns = true))
-              .getOrElse(empty)
-          else empty
-        }
-        else {
-          val groups = byDir.map { case (verDir, fs) =>
-            verDir.getFileName.toString ->
-              VersionedTable.readLeavesTyped(spark, o.root,
-                verDir.toString, fs.map(_.toString))
-          }
-          if (masked) {
-            // pos-delete masking needs addresses attached per dir
-            // BEFORE the union; identity without a pos sub-table
-            val read = VersionedTable.unionWithPosMask(spark, o.root,
-              m, groups)
-            VersionedTable.maskPartitionedDeletes(spark, o.root, read)
-          } else VersionedTable.normalizeRenames(o.root,
-            groups.map(_._2).reduce((a, b) =>
-              a.unionByName(b, allowMissingColumns = true)))
-        }
-      case FlatSurvivors(dirP, files, live) =>
-        if (files.isEmpty) {
-          val empty = observable(spark, o).limit(0)
-          live match {
-            case Some(m) if masked =>
-              // pending MoR post-images surface even when every base
-              // file was stat-skipped
-              VersionedTable.liveMorAppendsMaskedFlat(spark, o.root, m)
-                .map(a => empty.unionByName(a,
-                  allowMissingColumns = true))
-                .getOrElse(empty)
-            case _ => empty
-          }
-        }
-        else {
-          val base = VersionedTable.memoFilesParquet(spark, dirP,
-            files.map(_.toString))
-          live match {
-            case Some(m) if masked =>
-              VersionedTable.maskFlatDeletes(spark, o.root, m, base)
-            case _ => VersionedTable.normalizeRenames(o.root,
-              VersionedTable.stampDefaulted(base)
-                .drop(VersionedTable.SeqCol))
-          }
-        }
+    val view = survivors.view
+    if (survivors.byDir.isEmpty) {
+      // every base file skipped — but pending merge-on-read
+      // post-images live in NO file, so a live masked read must
+      // still surface them (residual filters re-apply above)
+      val empty = observable(spark, o).limit(0)
+      if (masked)
+        VersionedTable.liveMorAppendsMasked(spark, o.root, view)
+          .map(a => empty.unionByName(a, allowMissingColumns = true))
+          .getOrElse(empty)
+      else empty
     }
+    else snapshotFrame(spark, o.root, view,
+      survivors.byDir.map { case (verDir, fs) =>
+        val dn = verDir.getFileName.toString
+        dn -> VersionedTable.readDir(spark, o.root, view, dn, Some(fs))
+      }, masked)
   }
 
   // ---- filter → bounds machinery -----------------------------------

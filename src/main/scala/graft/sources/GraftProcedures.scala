@@ -184,8 +184,6 @@ private[sources] object GraftProcedures {
           Paths.get(root).resolve("_pos_deletes/_manifest.json"))
         val posRewritten: Int =
           if (!hasPos) 0
-          else if (partitioned(root))
-            VersionedTable.vacuumPosDeletesPartitioned(spark, root)._2
           else VersionedTable.vacuumPosDeletes(spark, root)._2
         val eqFolded: Boolean =
           if (!hasEq) false

@@ -270,9 +270,9 @@ class GraftFacadeSpec extends SparkSpec {
     graft.sinks.VersionedTable.upsertPartitioned(spark, root,
       Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
         .toDF("id", "p", "x"), Seq("id"), Seq("p"))
-    Graft.softDeletePosPartitioned(spark, root, $"id" === 2L)
-    assert(Graft.readPartitionedWithPosDeletes(spark, root).count() === 2)
-    val (_, rewritten) = Graft.vacuumPosDeletesPartitioned(spark, root)
+    Graft.softDeleteByPosition(spark, root, $"id" === 2L)
+    assert(Graft.readWithPositionDeletes(spark, root).count() === 2)
+    val (_, rewritten) = Graft.vacuumPositionDeletes(spark, root)
     assert(rewritten === 1)
     assert(graft.sinks.VersionedTable
       .readLivePartitioned(spark, root).count() === 2)

@@ -131,7 +131,7 @@ class MorDmlSpec extends SparkSpec {
     assert(m3.partitions("day=d1") !== before.partitions("day=d1"))
     // partitioned vacuum folds the remainder; nothing changes
     // observably and the entry set drains
-    VersionedTable.vacuumPosDeletesPartitioned(spark, root)
+    VersionedTable.vacuumPosDeletes(spark, root)
     assert(spark.sql("SELECT id, v FROM mrcat.m.p ORDER BY id")
       .as[(Long, Long)].collect().toSeq ===
       Seq((1L, 10L), (2L, 1020L), (3L, 1030L), (4L, 1040L),
@@ -393,7 +393,7 @@ class MorDmlSpec extends SparkSpec {
     assert(spark.sql("SELECT id FROM mrcat.m.mvmor " +
       "WHERE day = 'md1'").count() === 0L)
     // vacuum folds to the same rows and drains the entry set
-    VersionedTable.vacuumPosDeletesPartitioned(spark, root)
+    VersionedTable.vacuumPosDeletes(spark, root)
     assert(prows("mvmor") === prows("mvcow"))
     assert(VersionedTable.posDeleteEntryCounts(spark, root)._1 === 0L)
     // nondeterministic partition assignments are rejected loudly on
@@ -458,7 +458,7 @@ class MorDmlSpec extends SparkSpec {
       .as[Long].collect().toSeq === Seq(2L))
     assert(spark.sql("SELECT id FROM mrcat.m.mmmor WHERE day = 'bs'")
       .as[Long].collect().toSeq === Seq(3L))
-    VersionedTable.vacuumPosDeletesPartitioned(spark, root)
+    VersionedTable.vacuumPosDeletes(spark, root)
     assert(prows("mmmor") === prows("mmcow"))
     assert(VersionedTable.posDeleteEntryCounts(spark, root)._1 === 0L)
   }
@@ -552,7 +552,7 @@ class MorDmlSpec extends SparkSpec {
       "SELECT v FROM mrcat.m.pmor WHERE day = 'd9'")
       .as[Long].collect().toSeq === Seq(900L))
     // vacuum folds; rows unchanged, entries drained
-    VersionedTable.vacuumPosDeletesPartitioned(spark, root)
+    VersionedTable.vacuumPosDeletes(spark, root)
     assert(prows("pmor") === prows("pcow"))
     val (liveAfter, _) =
       VersionedTable.posDeleteEntryCounts(spark, root)

@@ -26,19 +26,19 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     "keyed no-op; plain read unchanged") {
     val root = tmpRoot()
     seed(root)
-    VersionedTable.softDeletePosPartitioned(spark, root,
+    VersionedTable.softDeletePos(spark, root,
       col("x") % 40L === 0L) // ids 4,8,...,28 → 7 rows
     val masked = VersionedTable
-      .readLivePartitionedWithPosDeletes(spark, root)
+      .readLiveWithPosDeletes(spark, root)
     assert(masked.count() === 23)
     assert(masked.filter(col("id") === 4L).count() === 0)
     // raw read keeps everything (MoR metadata, zero rewrite)
     assert(VersionedTable.readLivePartitioned(spark, root).count() === 30)
     // re-deleting a subset must not disturb the set
-    VersionedTable.softDeletePosPartitioned(spark, root,
+    VersionedTable.softDeletePos(spark, root,
       col("id") === 8L)
     assert(VersionedTable
-      .readLivePartitionedWithPosDeletes(spark, root).count() === 23)
+      .readLiveWithPosDeletes(spark, root).count() === 23)
   }
 
   test("vacuumPosDeletesPartitioned rewrites ONLY delete-carrying " +
@@ -46,11 +46,11 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     val root = tmpRoot()
     seed(root)
     // delete rows only from partition p1 (ids ≡ 1 mod 3)
-    VersionedTable.softDeletePosPartitioned(spark, root,
+    VersionedTable.softDeletePos(spark, root,
       col("id").isin(1L, 7L, 13L))
     val before = VersionedTable.readPartitionedManifest(root).get
     val (v, rewritten) =
-      VersionedTable.vacuumPosDeletesPartitioned(spark, root)
+      VersionedTable.vacuumPosDeletes(spark, root)
     assert(rewritten === 1)
     val after = VersionedTable.readPartitionedManifest(root).get
     assert(after.version === v)
@@ -60,9 +60,9 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     // physically gone now — raw read agrees
     assert(VersionedTable.readLivePartitioned(spark, root).count() === 27)
     assert(VersionedTable
-      .readLivePartitionedWithPosDeletes(spark, root).count() === 27)
+      .readLiveWithPosDeletes(spark, root).count() === 27)
     // delete set reset: second vacuum is a no-op
-    val (_, r2) = VersionedTable.vacuumPosDeletesPartitioned(spark, root)
+    val (_, r2) = VersionedTable.vacuumPosDeletes(spark, root)
     assert(r2 === 0)
   }
 
@@ -70,7 +70,7 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     "folds them — no resurrection") {
     val root = tmpRoot()
     seed(root)
-    VersionedTable.softDeletePosPartitioned(spark, root,
+    VersionedTable.softDeletePos(spark, root,
       col("id") === 6L) // partition p0
     // upsert a DIFFERENT key into p0: rewrites p0's files
     VersionedTable.upsertPartitioned(spark, root,
@@ -80,7 +80,7 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     assert(VersionedTable.readLivePartitioned(spark, root)
       .filter(col("id") === 6L).count() === 0)
     assert(VersionedTable
-      .readLivePartitionedWithPosDeletes(spark, root).count() === 30)
+      .readLiveWithPosDeletes(spark, root).count() === 30)
   }
 
   test("compaction and equality-delete vacuum fold pending pos " +
@@ -94,7 +94,7 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     VersionedTable.upsertPartitioned(spark, root,
       Seq((101L, "p2", 6L)).toDF("id", "p", "x"), Seq("id"), Seq("p"),
       keepManifests = 10)
-    VersionedTable.softDeletePosPartitioned(spark, root,
+    VersionedTable.softDeletePos(spark, root,
       col("id") === 11L) // p2 row
     val (_, compacted) = VersionedTable.compactPartitions(spark, root)
     assert(compacted >= 1)
@@ -102,7 +102,7 @@ class PartitionedPosDeleteSpec extends SparkSpec {
       .filter(col("id") === 11L).count() === 0)
     // equality vacuum path: pos-delete then softDelete+vacuum another
     // partition — the rewrite reads through the pos mask
-    VersionedTable.softDeletePosPartitioned(spark, root,
+    VersionedTable.softDeletePos(spark, root,
       col("id") === 12L) // p0
     VersionedTable.softDeletePartitioned(spark, root,
       Seq(15L).toDF("id"), Seq("id")) // p0, equality
@@ -114,7 +114,7 @@ class PartitionedPosDeleteSpec extends SparkSpec {
   test("the DSv2 format masks partitioned position deletes by default") {
     val root = tmpRoot()
     seed(root)
-    VersionedTable.softDeletePosPartitioned(spark, root,
+    VersionedTable.softDeletePos(spark, root,
       col("id") <= 3L)
     val viaFmt = spark.read.format("graft").load(root)
     assert(viaFmt.count() === 27)

@@ -88,4 +88,24 @@ class ScanPlanMemoSpec extends SparkSpec {
       assert(left.isEmpty, s"${left.size} mask broadcasts still pinned")
     }
   }
+
+  test("an equality-delete commit misses the memo even where " +
+    "directories keep no mtime of their own") {
+    val root = tmpDir("scan_plan_memo_eq") + "/t"
+    VersionedTable.append(spark, root, (1L to 20L)
+      .map(i => (i, i * 10L)).toDF("id", "v"))
+    def del(id: Long): Unit =
+      VersionedTable.softDelete(spark, root, Seq(id).toDF("id"), Seq("id"))
+    def read(): Seq[Long] = spark.read.format("graft").load(root)
+      .where(col("v") <= 100L).select("id").as[Long].collect().toSeq.sorted
+    del(1L)
+    assert(read() === (2L to 10L))
+    val deletes = java.nio.file.Paths.get(root, "_deletes")
+    val mtime = java.nio.file.Files.getLastModifiedTime(deletes)
+    del(2L)
+    // a store without directory mtimes: only the sub-table's own
+    // listing can tell the two delete sets apart
+    java.nio.file.Files.setLastModifiedTime(deletes, mtime)
+    assert(read() === (3L to 10L), "the re-read must not serve key 2")
+  }
 }

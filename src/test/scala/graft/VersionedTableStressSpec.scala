@@ -241,14 +241,14 @@ class VersionedTableStressSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val deleter = new Thread(() => {
       try (1L to 6L).foreach { k =>
-        VersionedTable.softDeletePosPartitioned(spark, root,
+        VersionedTable.softDeletePos(spark, root,
           col("id") === k, maxRetries = 60)
       } catch { case t: Throwable => errors.add(t) }
     })
     val vacuumer = new Thread(() => {
       try (0 until 3).foreach { _ =>
         Thread.sleep(400)
-        VersionedTable.vacuumPosDeletesPartitioned(spark, root,
+        VersionedTable.vacuumPosDeletes(spark, root,
           maxRetries = 40)
         ()
       } catch { case t: Throwable => errors.add(t) }
@@ -259,10 +259,10 @@ class VersionedTableStressSpec extends SparkSpec {
       !vacuumer.isAlive, "a racer is stuck")
     assert(errors.isEmpty, s"racer threw: ${errors.toArray.toSeq}")
     // a final vacuum folds whatever is still merge-on-read
-    VersionedTable.vacuumPosDeletesPartitioned(spark, root,
+    VersionedTable.vacuumPosDeletes(spark, root,
       maxRetries = 40)
     val rows = VersionedTable
-      .readLivePartitionedWithPosDeletes(spark, root)
+      .readLiveWithPosDeletes(spark, root)
       .select("id", "v").as[(Long, Long)].collect()
     assert(rows.map(_._1).distinct.length === rows.length,
       s"duplicate live rows: ${rows.toSeq.sortBy(_._1)}")
