@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sinks.VersionedTable
+import graft.sinks.{TableFs, VersionedTable}
 
 /** PERSISTED MinHash-LSH near-duplicate index — the maintenance shape
   * [[Dedup.incrementalNearDups]] describes, with the corpus side
@@ -84,17 +84,9 @@ object NearDupIndex {
       .getOrElse(sys.error(s"publishSnapshot before bands commit at $root"))
     val g = VersionedTable.readPartitionedManifest(gramsRoot(root))
       .getOrElse(sys.error(s"publishSnapshot before grams commit at $root"))
-    val body = VersionedTable.renderPartitionedManifest(b) + "\n" +
-      VersionedTable.renderPartitionedManifest(g)
-    // UUID suffix: two concurrent ingests can observe the same final
-    // (bands, grams) versions — identical tmp names would make the
-    // loser's ATOMIC_MOVE throw after its tables already committed
-    val tmp = Paths.get(root, s"_snapshot.json.tmp${b.version}_" +
-      s"${g.version}_${java.util.UUID.randomUUID}")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, snapshotPath(root),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    TableFs.publishFile(snapshotPath(root),
+      VersionedTable.renderPartitionedManifest(b) + "\n" +
+        VersionedTable.renderPartitionedManifest(g))
   }
 
   /** The snapshot's (bands, grams) manifest pair. Falls back to the

@@ -1,11 +1,12 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{array, coalesce, col, concat, explode, expr, length, lit, shiftleft, struct, substring_index, when, xxhash64}
 import org.apache.spark.sql.sources.Filter
 import graft.sources.{GraftFilterColumns, GraftScanAudit, GraftScanPlanner}
+import TableFs.withCommitLock
 
 /** Poor-man's commit protocol for the parquet-native upsert path —
   * closes the [[MergeWriter]] concurrency window (its dir swap gives a
@@ -22,7 +23,8 @@ import graft.sources.{GraftFilterColumns, GraftScanAudit, GraftScanPlanner}
   * }}}
   *
   * Commit = write the NEW version directory completely, then replace
-  * the manifest via write-temp + ATOMIC_MOVE. Readers resolve the
+  * the manifest through [[TableFs]] (the one publish primitive: every
+  * table-state file and version dir goes through it). Readers resolve the
   * manifest first and read the named directory, so they always see a
   * complete, immutable snapshot: the swap window of the rename
   * protocol simply does not exist, and a reader that resolved the old
@@ -55,62 +57,6 @@ object VersionedTable {
     */
   final class ConcurrentCommitException(msg: String)
     extends RuntimeException(msg)
-
-  /** Commit-section mutex via atomic create-file; held only for the
-    * staging-dir rename + manifest flip (never during data writes).
-    * A lock older than `staleMs` is presumed crashed and reclaimed —
-    * commit sections are milliseconds, so a minute-old lock is a dead
-    * writer, not a slow one. (On object stores without atomic create,
-    * this slot is where a real table format's conditional-PUT goes.)
-    */
-  private def withCommitLock[T](root: Path, timeoutMs: Long = 60000,
-                                staleMs: Long = 60000,
-                                name: String = "_commit.lock")
-                               (body: => T): T = {
-    val lock = root.resolve(name)
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var acquired = false
-    while (!acquired) {
-      try { Files.createFile(lock); acquired = true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          try {
-            val age = System.currentTimeMillis() -
-              Files.getLastModifiedTime(lock).toMillis
-            if (age > staleMs) Files.deleteIfExists(lock)
-          } catch { case _: Throwable => () } // lock vanished: re-race
-          if (System.currentTimeMillis() > deadline)
-            throw new IllegalStateException(
-              s"commit lock $lock not acquired within ${timeoutMs}ms")
-          Thread.sleep(20)
-      }
-    }
-    // Staleness is judged by lock AGE, and some holders legitimately
-    // outlive staleMs (a merge-on-read commit keeps the MAIN lock
-    // across its sub-table merge job). Heartbeat the mtime while the
-    // body runs so a LIVE holder can never be reclaimed out from
-    // under its own critical section; a crashed holder stops
-    // refreshing and ages out exactly as before.
-    val hb = new Thread(() => {
-      var live = true
-      while (live) {
-        try {
-          Thread.sleep(math.max(staleMs / 4, 1000))
-          Files.setLastModifiedTime(lock, java.nio.file.attribute
-            .FileTime.fromMillis(System.currentTimeMillis()))
-        } catch {
-          case _: InterruptedException => live = false // body done
-          // transient IO hiccup must NOT kill the heartbeat — a dead
-          // heartbeat revives the stale-reclaim-of-a-live-holder race
-          // this thread exists to close; keep refreshing
-          case _: Throwable => ()
-        }
-      }
-    })
-    hb.setDaemon(true)
-    hb.start()
-    try body finally { hb.interrupt(); Files.deleteIfExists(lock) }
-  }
 
   private def stagingDir(root: Path): Path =
     root.resolve(s"_staging-${java.util.UUID.randomUUID}")
@@ -169,8 +115,8 @@ object VersionedTable {
       unescJson(m.group(1)) -> unescJson(m.group(2))).toSeq
   }
 
-  /** Append a rename event (atomic write-temp + move, like every
-    * other root-level metadata file).
+  /** Append a rename event (read-modify-write: callers serialize it
+    * under the table's commit lock, as GraftCatalog.alterTable does).
     */
   def addColumnRename(root: String, from: String, to: String): Unit = {
     require(from.nonEmpty && to.nonEmpty && from != to,
@@ -187,17 +133,10 @@ object VersionedTable {
         n == AddrPathCol || n == AddrPosCol || n.startsWith("__graft")
     require(!internal(to) && !internal(from),
       s"rename $from -> $to collides with internal column names")
-    val rootP = Paths.get(root)
-    Files.createDirectories(rootP)
     val events = columnRenames(root) :+ (from -> to)
-    val body = events.map { case (f, t) =>
-      s"""{"from": "${escJson(f)}", "to": "${escJson(t)}"}"""
-    }.mkString("[", ", ", "]")
-    val tmp = rootP.resolve("_column_renames.json.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, renamesPath(rootP), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
+    TableFs.publishFile(renamesPath(Paths.get(root)), events.map {
+      case (f, t) => s"""{"from": "${escJson(f)}", "to": "${escJson(t)}"}"""
+    }.mkString("[", ", ", "]"))
   }
 
   /** Fold superseded physical column names into their current logical
@@ -522,52 +461,15 @@ object VersionedTable {
   private def versionManifestPath(root: Path, v: Long): Path =
     root.resolve("_versions").resolve(s"${versionDirName(v)}.json")
 
-  /** History entries appear ATOMICALLY (write-temp + move, dot-prefix
-    * so listings and the commit-discovery file stream never see the
-    * temp): [[streamChanges]] subscribes to `_versions/` as a file
-    * stream, and a half-written entry would make it skip that commit
-    * forever.
+  /** History entries appear ATOMICALLY ([[TableFs.publishFile]]'s
+    * temp is dot-prefixed, so listings and the commit-discovery file
+    * stream never see it): [[streamChanges]] subscribes to `_versions/`
+    * as a file stream, and a half-written entry would make it skip
+    * that commit forever.
     */
   private def writeHistoryEntry(rootP: Path, v: Long,
-                                body: String): Unit = {
-    Files.createDirectories(rootP.resolve("_versions"))
-    val tmp = rootP.resolve("_versions")
-      .resolve(s".${versionDirName(v)}.json.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, versionManifestPath(rootP, v),
-      StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  /** The highest version number EVER allocated under this root —
-    * manifest or history entry, retained or pruned, main or branch.
-    * Every committer allocates `maxAllocatedVersion + 1` under the
-    * commit lock, so main-line and branch commits share one
-    * collision-free sequence (a branch commit does not move the
-    * manifest, so `manifest.version + 1` alone would re-allocate a
-    * taken number and the staging rename would explode).
-    */
-  private def maxAllocatedVersion(rootP: Path): Long = {
-    val hist = rootP.resolve("_versions")
-    val maxHist =
-      if (!Files.isDirectory(hist)) 0L
-      else {
-        val s = Files.list(hist)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.flatMap { p =>
-            """^v(\d{8})\.json$""".r
-              .findFirstMatchIn(p.getFileName.toString)
-              .map(_.group(1).toLong)
-          }.foldLeft(0L)(math.max)
-        } finally s.close()
-      }
-    val manifestV = readManifest(rootP.toString).map(_.version)
-      .orElse(readPartitionedManifest(rootP.toString).map(_.version))
-      .getOrElse(0L)
-    math.max(maxHist, manifestV)
-  }
+                                body: String): Unit =
+    TableFs.publishFile(versionManifestPath(rootP, v), body)
 
   /** Is version `v`'s history entry a BRANCH commit (carries the
     * branch marker)? Branch commits are real, time-travelable
@@ -1084,16 +986,10 @@ object VersionedTable {
     }.toMap
   }
 
-  private def writeRefs(rootP: Path, m: Map[String, Long]): Unit = {
-    val body = m.toSeq.sortBy(_._1)
+  private def writeRefs(rootP: Path, m: Map[String, Long]): Unit =
+    TableFs.publishFile(refsPath(rootP), m.toSeq.sortBy(_._1)
       .map { case (n, v) => s""""${escJson(n)}": $v""" }
-      .mkString("{", ", ", "}")
-    val tmp = rootP.resolve("_refs.json.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, refsPath(rootP), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
+      .mkString("{", ", ", "}"))
 
   /** Name a committed version. Fails if the version was never
     * committed (no history entry) OR if retention already pruned any
@@ -1169,10 +1065,11 @@ object VersionedTable {
   // the branch read (`option("ref", branch)` / VERSION AS OF), and
   // only then fast-forwards main to the branch head. A failed gate
   // costs nothing: main never saw the batch. Mechanics:
-  //   - branch versions share the main sequence (maxAllocatedVersion
-  //     under the commit lock) and carry a `"branch"` marker in their
-  //     history entry, so CDF walks / TIMESTAMP AS OF stay on the
-  //     main line while VERSION AS OF <n> can still address them;
+  //   - branch versions share the main sequence (TableFs.
+  //     publishVersionDir under the commit lock) and carry a
+  //     `"branch"` marker in their history entry, so CDF walks /
+  //     TIMESTAMP AS OF stay on the main line while VERSION AS OF <n>
+  //     can still address them;
   //   - the branch ref pins its head against retention; intermediate
   //     branch versions are prunable like any superseded snapshot;
   //   - the fork base is recorded as ref `<branch>@base`;
@@ -1203,9 +1100,7 @@ object VersionedTable {
           s"branch '$branch' of $root moved past " +
             s"${expectedRef.getOrElse(0L)} — re-read and retry")
       }
-      val next = maxAllocatedVersion(rootP) + 1
-      Files.move(staging, rootP.resolve(versionDirName(next)),
-        StandardCopyOption.ATOMIC_MOVE)
+      val next = TableFs.publishVersionDir(rootP, staging)
       writeHistoryEntry(rootP, next, historyBody(next))
       // the fork pins BOTH the main version and the pos-delete
       // sub-table version: merge-on-read DML and the DELETE fast path
@@ -1239,7 +1134,7 @@ object VersionedTable {
     def once(): Long = {
       val curRef = refs(root).get(branch)
       val stamped =
-        batch.withColumn(SeqCol, lit(maxAllocatedVersion(rootP) + 1))
+        batch.withColumn(SeqCol, lit(TableFs.maxAllocatedVersion(rootP) + 1))
       val content = curRef match {
         case Some(v) =>
           val dir = rootP.resolve(versionDirName(v))
@@ -1430,7 +1325,7 @@ object VersionedTable {
           s"$root took merge-on-read mutations (pos-delete sub-table " +
             s"moved past v$posBase) since branch '$branch' forked — " +
             "re-run the branch pipeline against the new base")
-      val next = maxAllocatedVersion(rootP) + 1
+      val next = TableFs.maxAllocatedVersion(rootP) + 1
       readHistoryPartitionedManifest(rootP, head) match {
         case Some(m) =>
           val published = PartitionedManifest(next,
@@ -1441,11 +1336,7 @@ object VersionedTable {
         case None =>
           val body =
             s"""{"version": $next, "live": "${versionDirName(head)}"}"""
-          val tmp = rootP.resolve(s"_manifest.json.tmp$next")
-          Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-          Files.move(tmp, manifestPath(rootP),
-            StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
+          TableFs.publishFile(manifestPath(rootP), body)
           writeHistoryEntry(rootP, next, body)
       }
       writeRefs(rootP, r - branch - s"$branch@base" -
@@ -1503,21 +1394,14 @@ object VersionedTable {
       // caller's retry loop.
       try validate()
       catch { case e: Throwable => deleteRecursively(staging); throw e }
-      // allocate past BRANCH commits too — they share the sequence
-      val next = math.max(live, maxAllocatedVersion(rootP)) + 1
+      // allocates past BRANCH commits too — they share the sequence
+      val next = TableFs.publishVersionDir(rootP, staging)
       val dirName = versionDirName(next)
-      Files.move(staging, rootP.resolve(dirName),
-        StandardCopyOption.ATOMIC_MOVE)
-      val tmp = rootP.resolve(s"_manifest.json.tmp$next")
-      Files.write(tmp,
-        s"""{"version": $next, "live": "$dirName"}"""
-          .getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, manifestPath(rootP), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      val body = s"""{"version": $next, "live": "$dirName"}"""
+      TableFs.publishFile(manifestPath(rootP), body)
       // immutable history entry for time travel — written AFTER the
       // flip so a version is only ever listed once fully committed
-      writeHistoryEntry(rootP, next,
-        s"""{"version": $next, "live": "$dirName"}""")
+      writeHistoryEntry(rootP, next, body)
       // prune: the newest `keepVersions` MAIN-LINE snapshots' dirs
       // survive (branch dirs never count toward K — they would evict
       // recent main data while themselves being retained), ref'd
@@ -1544,9 +1428,11 @@ object VersionedTable {
     * a CRASHED writer left behind that no manifest will ever reference
     * and no retention pass will ever visit —
     *   - `_staging-*` dirs (writer died before its commit-lock move),
-    *   - flip/update temp files (`_manifest.json.tmp*`,
-    *     `_part_stats.json.tmp*`, `_refs.json.tmp*`,
-    *     `_constraints.json.tmp*`),
+    *   - publish temps in the root and in `_versions/`: every name
+    *     [[TableFs.isTemp]] matches ([[TableFs.publishFile]]'s hidden
+    *     temps, and the per-file temp names of earlier releases for
+    *     manifests, stats, refs, renames, constraints, catalog meta and
+    *     stream commits),
     *   - `v????????` version dirs with NO `_versions/` history entry
     *     and not referenced by the live manifest (moved into place but
     *     the flip never happened — the only way a v-dir exists without
@@ -1592,11 +1478,6 @@ object VersionedTable {
           } finally s.close()
         System.currentTimeMillis - newest >= olderThanMs
       } catch { case _: Throwable => false }
-    val tmpRe =
-      ("_manifest\\.json\\.tmp.*|_part_stats\\.json\\.tmp.*|" +
-        "_part_schema\\.json\\.tmp.*|" +
-        "_refs\\.json\\.tmp.*|_constraints\\.json\\.tmp.*|" +
-        "_stream_commits\\.json\\.tmp.*").r
     def one(tp: Path): (Int, Int, Int, Int) = {
       // phase 1 (LOCKED, O(1) renames only): identify orphans and
       // move them into a trash dir; a stale prior trash dir is taken
@@ -1604,34 +1485,28 @@ object VersionedTable {
       val trash = tp.resolve(s"_trash-${java.util.UUID.randomUUID}")
       val counts = withCommitLock(tp) {
         import scala.jdk.CollectionConverters._
-        val referenced: Set[String] = {
-          val live = readManifest(tp.toString).map(_.live).toSet ++
+        def list(d: Path): Seq[Path] =
+          if (!Files.isDirectory(d)) Nil
+          else {
+            val s = Files.list(d)
+            try s.iterator().asScala.toSeq finally s.close()
+          }
+        val entries = list(tp)
+        val (histEntries, histOther) = list(tp.resolve("_versions"))
+          .partition(_.getFileName.toString.matches("v\\d{8}\\.json"))
+        val referenced: Set[String] =
+          readManifest(tp.toString).map(_.live).toSet ++
             readPartitionedManifest(tp.toString)
-              .map(_.partitions.values.toSet).getOrElse(Set.empty)
-          val hist = tp.resolve("_versions")
-          val fromHistory =
-            if (!Files.isDirectory(hist)) Set.empty[String]
-            else {
-              val s = Files.list(hist)
-              try s.iterator().asScala.toSeq
-                .filter(_.getFileName.toString.matches("v\\d{8}\\.json"))
-                .flatMap { p =>
-                  val txt = new String(Files.readAllBytes(p),
-                    StandardCharsets.UTF_8)
-                  // both manifest forms: "live" dir or partition map
-                  val liveRe = """"live"\s*:\s*"(v\d{8})"""".r
-                  liveRe.findFirstMatchIn(txt).map(_.group(1)).toSeq ++
-                    parsePartitionedManifest(txt)
-                      .map(_.partitions.values.toSeq).getOrElse(Seq.empty)
-                }.toSet
-              finally s.close()
+              .map(_.partitions.values.toSet).getOrElse(Set.empty) ++
+            histEntries.flatMap { p =>
+              val txt = new String(Files.readAllBytes(p),
+                StandardCharsets.UTF_8)
+              // both manifest forms: "live" dir or partition map
+              val liveRe = """"live"\s*:\s*"(v\d{8})"""".r
+              liveRe.findFirstMatchIn(txt).map(_.group(1)).toSeq ++
+                parsePartitionedManifest(txt)
+                  .map(_.partitions.values.toSeq).getOrElse(Seq.empty)
             }
-          live ++ fromHistory
-        }
-        val entries = {
-          val s = Files.list(tp)
-          try s.iterator().asScala.toSeq finally s.close()
-        }
         var (nStaging, nTmp, nVdir, nRw) = (0, 0, 0, 0)
         var trashed = 0
         def toTrash(p: Path): Unit = {
@@ -1639,11 +1514,13 @@ object VersionedTable {
           Files.move(p, trash.resolve(s"$trashed-${p.getFileName}"))
           trashed += 1
         }
-        entries.filter(oldEnough).foreach { p =>
+        val histTemps =
+          histOther.filter(p => TableFs.isTemp(p.getFileName.toString))
+        (entries ++ histTemps).filter(oldEnough).foreach { p =>
           val n = p.getFileName.toString
           if (n.startsWith("_staging-") && Files.isDirectory(p)) {
             if (stagingOldEnough(p)) { toTrash(p); nStaging += 1 }
-          } else if (tmpRe.pattern.matcher(n).matches()) {
+          } else if (TableFs.isTemp(n)) {
             toTrash(p); nTmp += 1
           } else if (n.matches("v\\d{8}") && Files.isDirectory(p) &&
                      !referenced(n)) {
@@ -1939,13 +1816,6 @@ object VersionedTable {
       throw new IllegalStateException("unreachable")
     }
 
-  /** The table's commit lock, for graft-internal metadata updates
-    * that must be atomic ACROSS PROCESSES (the streaming sink's
-    * replay markers) — JVM synchronized only covers one driver.
-    */
-  private[graft] def withTableLock[T](root: String)(body: => T): T =
-    withCommitLock(Paths.get(root))(body)
-
   /** Randomized linear backoff between CAS retries: without it, N
     * contending writers re-merge in lockstep (each merge takes longer
     * than the inter-commit gap) and optimistic concurrency degrades
@@ -2019,12 +1889,6 @@ object VersionedTable {
   /** Delete-entry sequence column: the data version the delete masks
     * up to (inclusive). */
   private[graft] val DelSeqCol = "_del_seq"
-
-  /** Test seam: runs between vacuum's data commit and its delete-set
-    * reset, so VersionedTableSpec can interleave a racing softDelete
-    * deterministically (the production value is a no-op).
-    */
-  private[graft] var vacuumRaceHook: () => Unit = () => ()
 
   /** Soft-delete by key: commit `keys` (projected to `keyCols`,
     * deduped) into the table's delete set, stamped with the data
@@ -2178,7 +2042,6 @@ object VersionedTable {
       }
     }
     val v = retryThenEscalate(Paths.get(root), maxRetries)(once())
-    vacuumRaceHook() // test seam: deterministic fold↔reset interleave
     // reset OUTSIDE the retried section: the fold is committed; losing
     // the reset (racing delete's CAS win, or its own pinned read
     // pruned) only leaves already-folded entries behind, which the
@@ -2820,13 +2683,6 @@ object VersionedTable {
     * reset the folded set (CAS'd — a racing delete's entries survive).
     * `layout` re-arranges rows only; it must not change their content.
     */
-  /** Test seam: runs between a rewrite's pos-delete-version pin and
-    * its commit, so a spec can interleave a racing softDeletePos
-    * deterministically and assert the commit-lock validation forces a
-    * re-fold (production value is a no-op).
-    */
-  private[graft] var posFoldRaceHook: () => Unit = () => ()
-
   private def rewriteFoldingPosDeletes(spark: SparkSession, root: String,
                                        keepVersions: Int, maxRetries: Int)
                                       (layout: DataFrame => DataFrame): Long = {
@@ -2836,7 +2692,6 @@ object VersionedTable {
         throw new IllegalStateException(
           s"no _manifest.json under $root — nothing to rewrite"))
       foldedPosVersion = posVersion(root)
-      posFoldRaceHook() // test seam: deterministic delete↔rewrite race
       val snap = posMaskedSnapshot(spark, root, liveView(root))
       commit(root, keepVersions, expectedBase = Some(base.version),
         validate = () => {
@@ -3133,13 +2988,8 @@ object VersionedTable {
   }
 
   private def writePartitionedManifest(root: Path,
-                                       m: PartitionedManifest): Unit = {
-    val tmp = root.resolve(s"_manifest.json.tmp${m.version}")
-    Files.write(tmp,
-      renderPartitionedManifest(m).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath(root), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+                                       m: PartitionedManifest): Unit =
+    TableFs.publishFile(manifestPath(root), renderPartitionedManifest(m))
 
   /** Live snapshot of a partitioned versioned table: the manifest's
     * partition→dir map, read per version dir with Spark's own
@@ -3398,11 +3248,8 @@ object VersionedTable {
               s"position deletes landed under $root during the " +
                 "merge — re-fold and retry")
           }
-          val next = math.max(prev.map(_.version).getOrElse(0L),
-            maxAllocatedVersion(rootP)) + 1
+          val next = TableFs.publishVersionDir(rootP, staging)
           val dirName = versionDirName(next)
-          Files.move(staging, rootP.resolve(dirName),
-            StandardCopyOption.ATOMIC_MOVE)
           // the partitions actually written are the touched set, keyed
           // by their Spark-escaped relative paths; under spec
           // evolution the lifted parents' pointers are dropped — their
@@ -3548,7 +3395,6 @@ object VersionedTable {
         expectedPosVersion = Some(pinnedPos))
     }
     val v = retryThenEscalate(Paths.get(root), maxRetries)(once())
-    vacuumRaceHook() // same fold↔reset interleave seam as unpartitioned
     foldedDeletesVersion.foreach { dv =>
       try {
         val empty = readLive(spark, dr).limit(0)
@@ -3642,17 +3488,10 @@ object VersionedTable {
   }
 
   private def writeConstraints(rootP: Path,
-                               m: Map[String, String]): Unit = {
-    val body = m.toSeq.sortBy(_._1)
+                               m: Map[String, String]): Unit =
+    TableFs.publishFile(constraintsPath(rootP), m.toSeq.sortBy(_._1)
       .map { case (n, p) => s""""${escJson(n)}": "${escJson(p)}"""" }
-      .mkString("{", ", ", "}")
-    val tmp = rootP.resolve("_constraints.json.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, constraintsPath(rootP),
-      StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
+      .mkString("{", ", ", "}"))
 
   /** Register a named CHECK constraint (a SQL boolean expression over
     * the table's columns). Applies to every subsequent row-adding
@@ -4050,17 +3889,10 @@ object VersionedTable {
 
   private def writePartSchema(rootP: Path,
       schema: Seq[(String, org.apache.spark.sql.types.DataType)]): Unit =
-    try {
-      val body = schema
-        .map { case (n, t) => s""""${escJson(n)}": "${escJson(t.json)}"""" }
-        .mkString("{", ", ", "}")
-      val tmp = rootP.resolve("_part_schema.json.tmp")
-      Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, partSchemaPath(rootP),
-        StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-      ()
-    } catch { case _: Throwable => () }
+    try TableFs.publishFile(partSchemaPath(rootP), schema
+      .map { case (n, t) => s""""${escJson(n)}": "${escJson(t.json)}"""" }
+      .mkString("{", ", ", "}"))
+    catch { case _: Throwable => () }
 
   /** Recorded partition-column types; empty for legacy tables (their
     * rewrites fall back to inference types — the pre-recording
@@ -4208,10 +4040,8 @@ object VersionedTable {
           s"position deletes landed under $root during the rewrite " +
             s"(pinned pos v$pv) — re-fold and retry")
       }
-      val next = math.max(live, maxAllocatedVersion(rootP)) + 1
+      val next = TableFs.publishVersionDir(rootP, staging)
       val dirName = versionDirName(next)
-      Files.move(staging, rootP.resolve(dirName),
-        StandardCopyOption.ATOMIC_MOVE)
       val written = partitionLeafDirs(rootP.resolve(dirName),
         partitionColumns.size).map(_.toString)
       // a covered partition with NO written rows (every row replaced
@@ -4797,12 +4627,7 @@ object VersionedTable {
               s""""cols": {$cols}, "dbls": {$dbls}}"""
           }
         }
-      val tmp = rootP.resolve(s"_part_stats.json.tmp${version}")
-      Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, partStatsPath(rootP),
-        StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-      ()
+      TableFs.publishFile(partStatsPath(rootP), lines.mkString("\n"))
     } catch { case _: Throwable => () }
 
   /** Parse `_part_stats.json`: (version it describes, partition key →
@@ -5256,10 +5081,8 @@ object VersionedTable {
             s"while materializing empty partitions against " +
             s"v$expectedBase — retrying")
       }
-      val next = math.max(expectedBase, maxAllocatedVersion(rootP)) + 1
+      val next = TableFs.publishVersionDir(rootP, staging)
       val dirName = versionDirName(next)
-      Files.move(staging, rootP.resolve(dirName),
-        StandardCopyOption.ATOMIC_MOVE)
       val newParts = cur.get.partitions ++ missing.map(_ -> dirName)
       val m = PartitionedManifest(next, m0.partitionColumns, newParts)
       // partition-level bounds track the manifest version (lagging or
@@ -5629,30 +5452,9 @@ object VersionedTable {
   }
 
   private def writeColumnStatsFile(rootP: Path, body: String): Unit = {
-    // crashed writers leak their uniquely-named temp file (no other
-    // reaper knows this name) — sweep hour-old ones before writing
-    try {
-      val cutoff = System.currentTimeMillis() - 3600L * 1000
-      val st = Files.list(rootP)
-      try st.forEach { p =>
-        try {
-          if (p.getFileName.toString
-                .startsWith("_column_stats.json.tmp-") &&
-              Files.getLastModifiedTime(p).toMillis < cutoff) {
-            Files.deleteIfExists(p); ()
-          }
-        } catch { case _: Exception => () }
-      } finally st.close()
-    } catch { case _: Exception => () }
-    // unique temp name: two concurrent writers (fold racing a fresh
-    // ANALYZE) must never interleave bytes in a shared temp file —
-    // last atomic move wins, and the loser's stamp simply reads stale
-    val tmp = rootP.resolve(
-      s"_column_stats.json.tmp-${java.util.UUID.randomUUID}")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, columnStatsPath(rootP),
-      StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    // a fold racing a fresh ANALYZE: the last publish wins, and the
+    // loser's stamp simply reads stale
+    TableFs.publishFile(columnStatsPath(rootP), body)
     colStatsEpochs.compute(epochKey(rootP),
       (_, v) => java.lang.Long.valueOf(if (v == null) 1L else v + 1L))
     ()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, Supp
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sinks.VersionedTable
+import graft.sinks.{TableFs, VersionedTable}
 
 /** A `TableCatalog` plugin over a warehouse directory of versioned
   * graft tables — the piece that makes the table format addressable
@@ -159,32 +159,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   // ---- table meta (declared schema + properties) -----------------------
 
-  private def readMeta(root: Path): Map[String, String] = {
-    val p = root.resolve(GraftCatalog.MetaFile)
-    if (!Files.exists(p)) return Map.empty
-    val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    val re = """"((?:[^"\\]|\\.)+)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-    re.findAllMatchIn(txt).flatMap { m =>
-      try Some(VersionedTable.unescJson(m.group(1)) ->
-        VersionedTable.unescJson(m.group(2)))
-      catch { case _: IllegalArgumentException => None }
-    }.toMap
-  }
+  private def metaFile(root: Path): Path = root.resolve(GraftCatalog.MetaFile)
 
-  private def writeMeta(root: Path, m: Map[String, String]): Unit = {
-    val body = m.toSeq.sortBy(_._1)
+  private def readMeta(root: Path): Map[String, String] =
+    readMeta0(metaFile(root))
+
+  /** Publish a flat string map (table meta or view definition) as
+    * the one-object JSON [[readMeta0]] parses.
+    */
+  private def writeMeta(file: Path, m: Map[String, String]): Unit =
+    TableFs.publishFile(file, m.toSeq.sortBy(_._1)
       .map { case (k, v) =>
         s""""${VersionedTable.escJson(k)}": "${VersionedTable.escJson(v)}""""
-      }
-      .mkString("{", ", ", "}")
-    Files.createDirectories(root)
-    val tmp = root.resolve(GraftCatalog.MetaFile + ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, root.resolve(GraftCatalog.MetaFile),
-      StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
+      }.mkString("{", ", ", "}"))
 
   // ---- TableCatalog -----------------------------------------------------
 
@@ -503,7 +490,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           s"existing committed graft table at $dataAt — declare " +
           "columns, or fix the LOCATION")
     }
-    writeMeta(root, meta)
+    writeMeta(metaFile(root), meta)
     graftTable(ident, root, None)
   }
 
@@ -559,7 +546,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     Option(info.properties().get(TableCatalog.PROP_LOCATION))
       .map(l => GraftCatalog.normalizePath(l)) match {
       case None =>
-        writeMeta(staged, meta0)
+        writeMeta(metaFile(staged), meta0)
         val inner = graftTable(ident, staged, None)
         new GraftStagedTable(inner,
           onCommit = () => commitStaged(ident, root, staged, replace),
@@ -583,7 +570,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           s".${loc.getFileName}.ctas-${java.util.UUID.randomUUID}")
         // the staged stub points at the staged DATA dir; the commit
         // re-points it to the final location before publishing
-        writeMeta(staged, meta0 +
+        writeMeta(metaFile(staged), meta0 +
           (GraftCatalog.LocationKey -> stagedData.toString))
         val inner = graftTable(ident, staged, None)
         new GraftStagedTable(inner,
@@ -621,7 +608,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           "write — nothing published")
     }
     // re-point the stub at the FINAL location before any move
-    writeMeta(staged, readMeta(staged) +
+    writeMeta(metaFile(staged), readMeta(staged) +
       (GraftCatalog.LocationKey -> loc.toString))
     val trashData: Option[Path] =
       if (replace && GraftCatalog.nonEmptyDir(loc)) {
@@ -768,7 +755,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // transactional here)
     val renameEvents =
       scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val updated = changes.foldLeft(readMeta(root)) {
+    def updatedOf(m0: Map[String, String]) = changes.foldLeft(m0) {
       case (m, c: TableChange.SetProperty) =>
         m + (guarded(c.property()) -> c.value())
       case (m, c: TableChange.RemoveProperty) =>
@@ -909,10 +896,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           "COLUMN TYPE, and table properties; other schema changes " +
           "evolve on write (tblproperty schemaMode=sync), not by DDL")
     }
-    renameEvents.foreach { case (from, to) =>
-      VersionedTable.addColumnRename(dataRootS, from, to)
+    // read-validate-write under the DATA root's commit lock: two
+    // concurrent ALTERs must not both build on one snapshot of the
+    // meta and of `_column_renames.json` (the later write would drop
+    // the earlier change)
+    val dataP = Paths.get(dataRootS)
+    Files.createDirectories(dataP)
+    TableFs.withCommitLock(dataP) {
+      val updated = updatedOf(readMeta(root))
+      renameEvents.foreach { case (from, to) =>
+        VersionedTable.addColumnRename(dataRootS, from, to)
+      }
+      writeMeta(metaFile(root), updated)
     }
-    writeMeta(root, updated)
     graftTable(ident, root, None)
   }
 
@@ -1054,16 +1050,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         .filterNot { case (k, _) => org.apache.spark.sql.connector
           .catalog.ViewCatalog.RESERVED_PROPERTIES.contains(k) }
         .map { case (k, v) => s"p:$k" -> v }
-    Files.createDirectories(dir)
-    val body = m.toSeq.sortBy(_._1)
-      .map { case (k, v) =>
-        s""""${VersionedTable.escJson(k)}": "${VersionedTable.escJson(v)}""""
-      }.mkString("{", ", ", "}")
-    val tmp = dir.resolve(GraftCatalog.ViewFile + ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(GraftCatalog.ViewFile),
-      StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    writeMeta(dir.resolve(GraftCatalog.ViewFile), m)
     // a new view must defeat any cached not-a-view probe result
     graft.plans.GraftViewLookups.invalidate()
     loadView(ident)
@@ -1086,14 +1073,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case (_, c) => throw new UnsupportedOperationException(
         s"ALTER VIEW ${ident.name()}: $c")
     }
-    val body = updated.toSeq.sortBy(_._1)
-      .map { case (k, v) =>
-        s""""${VersionedTable.escJson(k)}": "${VersionedTable.escJson(v)}""""
-      }.mkString("{", ", ", "}")
-    val tmp = dir.resolve(GraftCatalog.ViewFile + ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    writeMeta(f, updated)
     loadView(ident)
   }
 
@@ -1121,8 +1101,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     graft.plans.GraftViewLookups.invalidate()
   }
 
-  /** Parse a flat escaped-string-map JSON file (the readMeta format,
-    * for an arbitrary path).
+  /** Parse a flat escaped-string-map JSON file (table meta or view
+    * definition — what [[writeMeta]] publishes).
     */
   private def readMeta0(p: Path): Map[String, String] = {
     if (!Files.exists(p)) return Map.empty

@@ -1,12 +1,12 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import graft.sinks.VersionedTable
+import graft.sinks.{TableFs, VersionedTable}
 
 /** Native streaming SINK: `df.writeStream.format("graft")
   * .option("keys", …).start(root)` (and `.toTable` on a catalog
@@ -162,19 +162,11 @@ private[graft] object GraftStreamCommits {
     readAll(root).get(queryId)
 
   def record(root: String, queryId: String, epochId: Long): Unit =
-    VersionedTable.withTableLock(root) {
+    TableFs.withCommitLock(Paths.get(root)) {
       val m = readAll(root) + (queryId -> epochId)
-      val body = m.toSeq.sortBy(_._1)
+      TableFs.publishFile(path(root), m.toSeq.sortBy(_._1)
         .map { case (k, v) =>
           s""""${VersionedTable.escJson(k)}": $v""" }
-        .mkString("{", ", ", "}")
-      val p = path(root)
-      Files.createDirectories(p.getParent)
-      val tmp = p.resolveSibling(
-        s"_stream_commits.json.tmp${java.util.UUID.randomUUID}")
-      Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-      ()
+        .mkString("{", ", ", "}"))
     }
 }

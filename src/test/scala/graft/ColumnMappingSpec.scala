@@ -250,4 +250,45 @@ class ColumnMappingSpec extends SparkSpec {
       "SELECT count(*) FROM cmcat.m.wp WHERE n > 100")
       .head.getLong(0) === 1L)
   }
+
+  test("concurrent RENAME COLUMNs through the catalog: every rename " +
+    "survives in both the declared schema and the rename events") {
+    wh
+    import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog, TableChange}
+    val cat = spark.sessionState.catalogManager.catalog("cmcat")
+      .asInstanceOf[TableCatalog]
+    val cols = 0 until 8
+    (0 until 3).foreach { round =>
+      val name = s"cr$round"
+      spark.sql(s"CREATE TABLE cmcat.m.$name " +
+        cols.map(i => s"c$i BIGINT").mkString("(", ", ", ")") + " USING graft")
+      spark.sql(s"INSERT INTO cmcat.m.$name VALUES " +
+        cols.map(_.toString).mkString("(", ", ", ")"))
+      val ident = Identifier.of(Array("m"), name)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      // two ALTER streams on disjoint columns, released together
+      val threads = Seq(cols.filter(_ % 2 == 0), cols.filter(_ % 2 == 1))
+        .map { mine =>
+          new Thread(() => {
+            start.await()
+            mine.foreach { i =>
+              try cat.alterTable(ident,
+                TableChange.renameColumn(Array(s"c$i"), s"d$i"))
+              catch { case e: Throwable => errs.add(e) }
+            }
+          })
+        }
+      threads.foreach(_.start())
+      start.countDown()
+      threads.foreach(_.join())
+      assert(errs.isEmpty, s"round $round: ${errs.peek()}")
+      assert(VersionedTable.columnRenames(s"$wh/m/$name").toSet ===
+        cols.map(i => s"c$i" -> s"d$i").toSet, s"round $round")
+      assert(spark.table(s"cmcat.m.$name").columns.toSeq ===
+        cols.map(i => s"d$i"), s"round $round")
+      assert(spark.table(s"cmcat.m.$name").head.toSeq ===
+        cols.map(_.toLong), s"round $round")
+    }
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import graft.functions.Bloom
-import graft.sinks.VersionedTable
+import graft.sinks.{TableFs, VersionedTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.EqualTo
 import graft.PruneFilters.{between, files, twoLevel}
@@ -145,14 +145,12 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     // race: a delete lands AFTER the rewrite pinned the delete-set
     // version — validation must force a re-fold, never lose the mask
     var fired = false
-    VersionedTable.posFoldRaceHook = () => {
+    TableFs.withSeam(root, TableFs.BeforeLock) { _ =>
       if (!fired) {
         fired = true
         VersionedTable.softDeletePos(spark, root, col("id") === 60L)
       }
-    }
-    try VersionedTable.compact(spark, root, 2)
-    finally VersionedTable.posFoldRaceHook = () => ()
+    }(VersionedTable.compact(spark, root, 2))
     assert(fired)
     val ids2 = VersionedTable.readLive(spark, root)
       .select("id").as[Long].collect().toSet
@@ -615,6 +613,25 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     assert(VersionedTable.readLive(spark, root).count() === 101L)
     // idempotent
     assert(VersionedTable.removeOrphans(root, 0L) === ((0, 0, 0, 0)))
+  }
+
+  test("removeOrphans reaps publish temps the legacy rule missed: " +
+    "renames and catalog-meta temps in the root, history-entry temps " +
+    "in _versions/") {
+    val root = tmpRoot()
+    VersionedTable.upsert(spark, root,
+      (0L until 10L).map(i => (i, i * 2L)).toDF("id", "v"), Seq("id"))
+    val rootP = Paths.get(root)
+    val planted = Seq(rootP.resolve("_column_renames.json.tmp"),
+      rootP.resolve("_graft_catalog.json.tmp"),
+      rootP.resolve("_versions").resolve(".v00000002.json.tmp"),
+      rootP.resolve(s"._refs.json.${java.util.UUID.randomUUID}.tmp"))
+    planted.foreach(p => Files.write(p, "junk".getBytes))
+    assert(VersionedTable.removeOrphans(root, 3600000L) === ((0, 0, 0, 0)))
+    assert(VersionedTable.removeOrphans(root, 0L) === ((0, 4, 0, 0)))
+    planted.foreach(p => assert(!Files.exists(p), s"$p survived"))
+    assert(VersionedTable.versions(root).size === 1)
+    assert(VersionedTable.readLive(spark, root).count() === 10L)
   }
 
   test("compactZOrder clusters BOTH dimensions: narrow intervals on " +

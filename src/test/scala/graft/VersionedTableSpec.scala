@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.sinks.{MergeWriter, VersionedTable}
+import graft.sinks.{MergeWriter, TableFs, VersionedTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.EqualTo
 import graft.PruneFilters.{between, files}
@@ -124,10 +124,10 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.softDelete(spark, root, Seq(2L).toDF("id"), Seq("id"))
     // interleave: a new delete (key 4) lands AFTER vacuum folded key 2
     // into the rewrite but BEFORE it resets the delete set
-    VersionedTable.vacuumRaceHook = () =>
-      VersionedTable.softDelete(spark, root, Seq(4L).toDF("id"), Seq("id"))
-    try VersionedTable.vacuumDeletes(spark, root, Seq("id"))
-    finally VersionedTable.vacuumRaceHook = () => ()
+    TableFs.withSeam(root, TableFs.AfterUnlock)(_ =>
+      VersionedTable.softDelete(spark, root, Seq(4L).toDF("id"), Seq("id"))) {
+      VersionedTable.vacuumDeletes(spark, root, Seq("id"))
+    }
     // key 2 folded away physically; key 4's racing delete still masks
     assert(VersionedTable.readLive(spark, root).count() === 5)
     assert(VersionedTable.readLiveWithDeletes(spark, root, Seq("id"))
