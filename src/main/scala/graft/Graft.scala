@@ -210,24 +210,6 @@ object Graft {
                    keys: Seq[String]): DataFrame =
     sinks.VersionedTable.diffVersions(spark, root, v1, v2, keys)
 
-  /** Equality deletes on the PARTITIONED table form (unconditional
-    * mask until vacuum — see the contract note on
-    * [[sinks.VersionedTable.softDeletePartitioned]]).
-    */
-  def softDeletePartitioned(spark: SparkSession, root: String,
-                            keys: DataFrame,
-                            keyCols: Seq[String]): Long =
-    sinks.VersionedTable.softDeletePartitioned(spark, root, keys, keyCols)
-
-  def readPartitionedWithDeletes(spark: SparkSession, root: String,
-                                 keyCols: Seq[String]): DataFrame =
-    sinks.VersionedTable.readLivePartitionedWithDeletes(spark, root,
-      keyCols)
-
-  def vacuumPartitionedDeletes(spark: SparkSession, root: String,
-                               keyCols: Seq[String]): Long =
-    sinks.VersionedTable.vacuumDeletesPartitioned(spark, root, keyCols)
-
   /** Row-level delete BY POSITION (zero rewrite; Iceberg v2's second
     * delete flavor), either table form — see
     * [[sinks.VersionedTable.softDeletePos]].
@@ -479,8 +461,8 @@ object Graft {
                  tNum: Long = 1, tDen: Long = 5): DataFrame =
     operators.Privacy.tCloseness(df, qi, vbCol, m, tNum, tDen)
 
-  /** Merge-on-read soft delete / read / vacuum — see
-    * [[sinks.VersionedTable.softDelete]].
+  /** Merge-on-read soft delete / read / vacuum, either table form —
+    * see [[sinks.VersionedTable.softDelete]].
     */
   def softDelete(spark: SparkSession, root: String, keys: DataFrame,
                  keyCols: Seq[String]): Long =

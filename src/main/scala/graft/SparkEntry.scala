@@ -4186,12 +4186,12 @@ object SparkEntry {
         .select(col("doc_id"), col("source"), col("n_chars"))
       vt.upsertPartitioned(s, work, docs, Seq("doc_id"), Seq("source"),
         keepManifests = 3)
-      vt.softDeletePartitioned(s, work,
+      vt.softDelete(s, work,
         docs.where(col("doc_id") % 13 === 0 &&
           col("source").isin("src3", "src7")).select("doc_id"),
         Seq("doc_id"))
       def agg(phase: String) =
-        vt.readLivePartitionedWithDeletes(s, work, Seq("doc_id"))
+        vt.readLiveWithDeletes(s, work, Seq("doc_id"))
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"),
             min("doc_id").as("min_id"))
@@ -4199,7 +4199,7 @@ object SparkEntry {
       // eager checkpoint: materialize the merge-on-read result BEFORE
       // vacuum flips manifests (retention could prune its inputs)
       val morRows = agg("mor").localCheckpoint(true)
-      val vv = vt.vacuumDeletesPartitioned(s, work, Seq("doc_id"))
+      val vv = vt.vacuumDeletes(s, work, Seq("doc_id"))
       val m = vt.readPartitionedManifest(work).get
       val rewritten = m.partitions.values.count(_ == f"v$vv%08d").toLong
       val audit = s.range(1).select(
@@ -5145,16 +5145,16 @@ object SparkEntry {
         .repartition(4, col("event_id"))
       vt.upsertPartitioned(s, work, ev, Seq("event_id"), Seq("day"),
         keepManifests = 4)
-      vt.softDeletePartitioned(s, work,
+      vt.softDelete(s, work,
         ev.where(col("event_id") < 40L).select("event_id"),
         Seq("event_id"))
-      val mor = vt.readLivePartitionedWithDeletes(s, work, Seq("event_id"))
+      val mor = vt.readLiveWithDeletes(s, work, Seq("event_id"))
         .agg(count(lit(1)).as("n"), sum("cents").as("s1"),
           min("event_id").as("s2"), max("event_id").as("s3"))
         .select(lit("mor").as("phase"), col("n"), col("s1"), col("s2"),
           col("s3"))
         .localCheckpoint(true)
-      val vv = vt.vacuumDeletesPartitioned(s, work, Seq("event_id"))
+      val vv = vt.vacuumDeletes(s, work, Seq("event_id"))
       val mv = vt.readPartitionedManifest(work).get
       val vacuumRewrote =
         mv.partitions.values.count(_ == f"v$vv%08d").toLong

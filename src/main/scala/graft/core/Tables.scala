@@ -29,10 +29,6 @@ object Tables {
     (String, Long, Long, String),
     org.apache.spark.sql.types.StructType](64)
 
-  private def relaxNullable(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType =
-    SchemaMemoUtil.relaxNullable(dt)
-
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     val path = s"$sfDir/$table.parquet"
     val p = java.nio.file.Paths.get(path)
@@ -45,7 +41,7 @@ object Tables {
         java.nio.file.Files.getLastModifiedTime(p).toMillis, nanosConf)
     } catch { case _: Throwable => (path, -1L, -1L, nanosConf) }
     val schema = schemaMemo.getOrElseUpdate(key)(
-      relaxNullable(spark.read.parquet(path).schema)
+      SchemaMemoUtil.relaxNullable(spark.read.parquet(path).schema)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
     spark.read.schema(schema).parquet(path)
   }

@@ -264,6 +264,7 @@ private[plans] object GraftRowLevelExec {
     try VersionedTable.readPartitionedManifest(root) match {
       case Some(m) =>
         val pv = VersionedTable.posDeleteVersion(root)
+        val ev = VersionedTable.eqDeleteVersion(root)
         val pc = m.partitionColumns
         // touched = source partitions of matching rows + destination
         // partitions of their post-images (an assignment may move a
@@ -276,7 +277,7 @@ private[plans] object GraftRowLevelExec {
             val replacement =
               kept.filter(touchedPred).unionByName(transformed)
             VersionedTable.rewritePartitionsCovered(spark, root,
-              replacement, covered, m.version, pv)
+              replacement, covered, m.version, pv, ev)
             true
         }
       case None =>
@@ -303,13 +304,14 @@ private[plans] object GraftRowLevelExec {
     try VersionedTable.readPartitionedManifest(root) match {
       case Some(m) =>
         val pv = VersionedTable.posDeleteVersion(root)
+        val ev = VersionedTable.eqDeleteVersion(root)
         val pc = m.partitionColumns
         val affected = matched.select(pc.map(matched(_)): _*)
         VersionedTable.touchedCover(spark, root, affected) match {
           case None => false
           case Some((touchedPred, covered)) =>
             VersionedTable.rewritePartitionsCovered(spark, root,
-              kept.filter(touchedPred), covered, m.version, pv)
+              kept.filter(touchedPred), covered, m.version, pv, ev)
             true
         }
       case None =>
@@ -531,6 +533,7 @@ private[plans] object GraftRowLevelExec {
       VersionedTable.readPartitionedManifest(root) match {
         case Some(m) =>
           val pv = VersionedTable.posDeleteVersion(root)
+          val ev = VersionedTable.eqDeleteVersion(root)
           val pc = m.partitionColumns
           // pre-images of every row an applicable clause removes or
           // rewrites, plus post-images of everything written
@@ -557,7 +560,7 @@ private[plans] object GraftRowLevelExec {
             case None => false
             case Some((touchedPred, covered)) =>
               VersionedTable.rewritePartitionsCovered(spark, root,
-                content.filter(touchedPred), covered, m.version, pv)
+                content.filter(touchedPred), covered, m.version, pv, ev)
               true
           }
         case None =>

@@ -77,8 +77,9 @@ object VersionedTable {
     }
   }
 
-  /** Hidden per-row write-sequence column: [[upsert]] stamps every
-    * written row with the commit version that wrote it, which is what
+  /** Hidden per-row write-sequence column: every writer of either
+    * table form stamps the rows it adds with the commit version that
+    * wrote them (rewrites carry old stamps forward), which is what
     * lets equality deletes use Iceberg's sequence-number rule (a
     * delete masks only rows written at-or-before it). Stripped from
     * every public read; present in the physical parquet.
@@ -163,10 +164,9 @@ object VersionedTable {
     readLiveStamped(spark, root).drop(SeqCol)
 
   /** [[readLive]] keeping (and defaulting) the hidden write-sequence
-    * column — internal: the delete-mask join and vacuum's fold need
-    * it; rows from pre-stamping commits (or raw [[commit]] calls)
-    * default to sequence 0, i.e. "masked by any delete", the old
-    * conservative behavior.
+    * column — internal: the sub-table reads that compare commit
+    * stamps need it; rows from pre-stamping commits (or raw
+    * [[commit]] calls) default to sequence 0.
     */
   private def readLiveStamped(spark: SparkSession, root: String): DataFrame = {
     val m = readManifest(root).getOrElse(throw new IllegalStateException(
@@ -273,13 +273,8 @@ object VersionedTable {
     schemaMemo.getOrElseUpdate(
       kind + "|" + base + "|" + extra + "|" + inferenceConfKey(spark) +
         "|" + listingToken(paths.map(Paths.get(_))))(
-      relaxNullable(infer)
+      graft.core.SchemaMemoUtil.relaxNullable(infer)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
-
-  /** `StructType.asNullable` is private[sql] — same relaxation. */
-  private def relaxNullable(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType =
-    graft.core.SchemaMemoUtil.relaxNullable(dt)
 
   /** Read ONE file's footer message type — driver metadata IO. */
   private def readFooterType(f: Path)
@@ -1171,11 +1166,15 @@ object VersionedTable {
                                 maxRetries: Int = 10): Long = {
     require(partitionColumns.nonEmpty,
       "appendPartitionedToBranch needs partition columns")
+    requireNoReservedColumns(batch.columns,
+      s"branch append into $root", Seq(SeqCol, AddrPathCol, AddrPosCol))
     requirePartitionTypesMatch(root, batch, partitionColumns)
     enforceConstraints(root, batch)
     val rootP = Paths.get(root)
     def once(): Long = {
       val curRef = refs(root).get(branch)
+      val stamped =
+        batch.withColumn(SeqCol, lit(TableFs.maxAllocatedVersion(rootP) + 1))
       val baseM: Option[PartitionedManifest] = curRef match {
         case Some(v) =>
           Some(historyPartitionedManifest(root, v).getOrElse(
@@ -1190,7 +1189,7 @@ object VersionedTable {
           s"(${m.partitionColumns.mkString(",")}) — got " +
           partitionColumns.mkString(",")))
       val merged = baseM match {
-        case None => batch
+        case None => stamped
         case Some(m) =>
           val touched = batch
             .select(partitionColumns.map(batch(_)): _*)
@@ -1199,13 +1198,13 @@ object VersionedTable {
             return curRef.getOrElse(m.version) // empty batch: no-op
           val pred = touchedPredicate(partitionColumns, touched)
           // live fork reads through the observable masks; a branch
-          // head is a raw committed snapshot (the readRef contract)
+          // head is a raw committed snapshot (the readRef contract);
+          // both keep their rows' stamps
           val existing =
             if (curRef.isDefined)
-              readPartitionedSnapshot(spark, root, m).filter(pred)
+              unionDirs(root, dirFrames(spark, root, m), addressed = false)
             else posMaskedSnapshot(spark, root, m)
-              .filter(pred)
-          existing.unionByName(batch)
+          existing.filter(pred).unionByName(stamped)
       }
       commitToBranch(root, branch, curRef, { next =>
         val dirName = versionDirName(next)
@@ -1586,12 +1585,7 @@ object VersionedTable {
       foldedPosVersion = posVersion(root)
       commit(root, keepVersions,
         expectedBase = Some(base.map(_.version).getOrElse(0L)),
-        validate = () => {
-          if (posVersion(root) != foldedPosVersion)
-            throw new ConcurrentCommitException(
-              s"position deletes landed under $root during the " +
-                "merge — re-fold and retry")
-        }) { dir =>
+        validate = requirePosVersion(root, foldedPosVersion, "merge")) { dir =>
         base match {
           case None =>
             updatesStamped.write.mode(SaveMode.Overwrite).parquet(dir)
@@ -1647,12 +1641,7 @@ object VersionedTable {
       foldedPosVersion = posVersion(root)
       commit(root, keepVersions,
         expectedBase = Some(base.map(_.version).getOrElse(0L)),
-        validate = () => {
-          if (posVersion(root) != foldedPosVersion)
-            throw new ConcurrentCommitException(
-              s"position deletes landed under $root during the " +
-                "append — re-fold and retry")
-        }) { dir =>
+        validate = requirePosVersion(root, foldedPosVersion, "append")) { dir =>
         base match {
           case None =>
             stamped.write.mode(SaveMode.Overwrite).parquet(dir)
@@ -1873,14 +1862,15 @@ object VersionedTable {
   //
   // SEQUENCE NUMBERS (Iceberg's rule): every delete entry records the
   // data table's commit version at delete time (`_del_seq`), every
-  // upserted row records the commit version that wrote it (hidden
-  // [[SeqCol]]), and the read-time mask applies a delete ONLY to rows
-  // whose write sequence ≤ the delete's sequence. A key re-upserted
-  // AFTER a soft delete is therefore visible immediately — no vacuum
-  // needed — while the delete keeps masking the pre-delete row until
-  // vacuum folds it away. Rows with no stamp (pre-stamping commits, or
-  // raw [[commit]] writes) default to sequence 0 = masked by any
-  // delete, the old conservative behavior.
+  // written row of either table form records the commit version that
+  // wrote it (hidden [[SeqCol]]), and the read-time mask applies a
+  // delete ONLY to rows whose write sequence ≤ the delete's sequence
+  // ([[applyEqMaskSequenced]]). A key re-upserted AFTER a soft delete
+  // is therefore visible immediately — no vacuum needed — while the
+  // delete keeps masking the pre-delete row until vacuum folds it
+  // away. Rows with no stamp (pre-stamping commits, or raw [[commit]]
+  // writes) default to sequence 0 = masked by any delete, the old
+  // conservative behavior.
   // ------------------------------------------------------------------
 
   private[graft] def deletesRoot(root: String): String =
@@ -1890,12 +1880,14 @@ object VersionedTable {
     * up to (inclusive). */
   private[graft] val DelSeqCol = "_del_seq"
 
-  /** Soft-delete by key: commit `keys` (projected to `keyCols`,
-    * deduped) into the table's delete set, stamped with the data
-    * table's CURRENT version — the sequence up to which this delete
-    * masks. Re-deleting a key advances its stamp (keyed upsert).
-    * O(|keys|) write, zero data rewrite. Returns the delete-set
-    * version.
+  /** Soft-delete by key, either table form: commit `keys` (projected
+    * to `keyCols`, deduped) into the table's delete set, stamped with
+    * the data table's CURRENT version — the sequence up to which this
+    * delete masks. Re-deleting a key advances its stamp (keyed
+    * upsert). O(|keys|) write, zero data rewrite. On a flat and on a
+    * partitioned table alike, a key upserted again after its delete is
+    * visible again at once, and the key's pending merge-on-read
+    * post-images die with the delete. Returns the delete-set version.
     *
     * Concurrency note: a softDelete racing an in-flight upsert of the
     * same key reads the pre-upsert version and so masks only the old
@@ -1906,13 +1898,16 @@ object VersionedTable {
   def softDelete(spark: SparkSession, root: String, keys: DataFrame,
                  keyCols: Seq[String], keepVersions: Int = 2,
                  maxRetries: Int = 10): Long = {
-    val dataVersion = readManifest(root).map(_.version).getOrElse(0L)
+    // the snapshot view's version: a partitioned root has no flat
+    // manifest, and a 0 stamp would mask nothing the table holds
+    val dataVersion = snapshotView(root).map(_.version).getOrElse(0L)
     // pin the pos sub-table version BEFORE the delete commits: only
     // post-images written at-or-before this point belong to the
     // delete's snapshot (entries a RACING update appends afterwards
     // out-sequence the delete — reinsert-wins, the same race rule as
     // the equality mask itself)
     val pinnedPosV = posVersion(root)
+    val keySet = keys.select(keyCols.map(keys(_)): _*).distinct()
     // keepVersions applies to the DELETE-SET sub-table: under many
     // concurrent deleters a reader's pinned delete-set dir can lag
     // several commits, so size retention to the worst expected lag
@@ -1922,8 +1917,7 @@ object VersionedTable {
     // post-upgrade delete and make the documented legacy fallback
     // (null stamp → mask-always) unreachable.
     val out = upsert(spark, deletesRoot(root),
-      keys.select(keyCols.map(keys(_)): _*).distinct()
-        .withColumn(DelSeqCol, lit(dataVersion)),
+      keySet.withColumn(DelSeqCol, lit(dataVersion)),
       keyCols, schemaMode = MergeWriter.SchemaMode.SyncAllColumns,
       keepVersions = keepVersions, maxRetries = maxRetries)
     // Pending MoR post-images carry sequence dataVersion+1 (they must
@@ -1934,118 +1928,83 @@ object VersionedTable {
     // delete is durable: a crash between the two commits then leaves
     // the delete merely INCOMPLETE (post-images still visible; a
     // re-run of the same delete finishes the job), never rows dead
-    // with no delete committed — the previous order permanently
-    // killed post-images when the delete itself failed to land.
-    // No-op without pending rows. The pin compares the SUB-TABLE
-    // commit stamp (hidden [[SeqCol]] on the stored entries — NOT the
-    // main-table sequence the entries carry in [[PdSeqCol]], which
-    // racing updates share): entries committed at-or-before the
-    // pinned sub-table version predate this delete and die; later
-    // ones survive it.
-    readManifest(root).foreach { m =>
-      readManifest(posDeletesRoot(root)).foreach { _ =>
-        val all = normalizeRenames(root,
-          readLiveStamped(spark, posDeletesRoot(root)))
-        val dataCols = all.columns
-          .filterNot(c => MorReservedCols.contains(c) || c == SeqCol)
-        if (dataCols.nonEmpty) {
-          val hits = all
-            .filter(col(PdPathCol)
-              .startsWith(m.live + "/" + MorMarker) && notDead(all))
-            .filter(coalesce(col(SeqCol), lit(0L)) <= pinnedPosV)
-            .join(keys.select(keyCols.map(keys(_)): _*).distinct(),
-              keyCols)
-            .select(col(PdPathCol), col(PdPosCol))
-            .withColumn(PdDeadCol, lit(true))
-          if (!hits.limit(1).isEmpty)
-            upsert(spark, posDeletesRoot(root), hits,
-              Seq(PdPathCol, PdPosCol),
-              schemaMode = MergeWriter.SchemaMode.SyncAllColumns,
-              keepVersions = keepVersions, maxRetries = maxRetries)
-        }
-      }
+    // with no delete committed. No-op without pending rows. The pin
+    // compares the SUB-TABLE commit stamp, NOT the main-table
+    // sequence the entries carry in [[PdSeqCol]], which racing
+    // updates share: entries committed at-or-before the pinned
+    // sub-table version predate this delete and die; later ones
+    // survive it.
+    snapshotView(root).flatMap(v => liveMorAppendEntries(spark, root, v,
+        committedBy = Some(pinnedPosV))).foreach { a =>
+      val hits = a.join(keySet, keyCols)
+        .select(col(PdPathCol), col(PdPosCol))
+        .withColumn(PdDeadCol, lit(true))
+      if (!hits.limit(1).isEmpty)
+        upsert(spark, posDeletesRoot(root), hits,
+          Seq(PdPathCol, PdPosCol),
+          schemaMode = MergeWriter.SchemaMode.SyncAllColumns,
+          keepVersions = keepVersions, maxRetries = maxRetries)
     }
     out
   }
 
   /** Live snapshot minus the delete set (merge-on-read, sequence-
-    * aware): a delete entry masks a row only when the row's write
-    * sequence ≤ the delete's. Identical to [[readLive]] when no
-    * delete has ever committed.
+    * aware), either table form: a delete entry masks a row only when
+    * the row's write sequence ≤ the delete's. Identical to the plain
+    * live read when no delete has ever committed.
     */
   def readLiveWithDeletes(spark: SparkSession, root: String,
-                          keyCols: Seq[String]): DataFrame =
-    readLiveWithDeletesStamped(spark, root, keyCols).drop(SeqCol)
-
-  /** [[readLiveWithDeletes]] keeping the hidden write-sequence column
-    * — vacuum's fold must preserve stamps so that, if its delete-set
-    * reset loses the CAS race and stale entries survive, re-upserted
-    * rows (stamp > entry's sequence) stay visible.
-    */
-  private def readLiveWithDeletesStamped(spark: SparkSession, root: String,
-                                         keyCols: Seq[String]): DataFrame = {
-    val base = readLiveStamped(spark, root)
-    readManifest(deletesRoot(root)) match {
-      case Some(_) =>
-        // legacy (pre-sequence) delete entries mask unconditionally
-        val dels = readLive(spark, deletesRoot(root))
-        val delsSeq =
-          (if (dels.columns.contains(DelSeqCol))
-             dels.withColumn(DelSeqCol,
-               coalesce(col(DelSeqCol), lit(Long.MaxValue)))
-           else dels.withColumn(DelSeqCol, lit(Long.MaxValue)))
-            .select((keyCols.map(col) :+ col(DelSeqCol)): _*)
-        base.join(delsSeq, keyCols, "left")
-          .filter(col(DelSeqCol).isNull || col(DelSeqCol) < col(SeqCol))
-          .drop(DelSeqCol)
-      case None => base
-    }
+                          keyCols: Seq[String]): DataFrame = {
+    val v = liveView(root)
+    applyEqMaskSequenced(spark, root,
+      unionDirs(root, dirFrames(spark, root, v), addressed = false),
+      Some(keyCols)).drop(SeqCol)
   }
 
-  /** Fold the delete set into a rewritten data version (copy-on-write
-    * compaction) and reset the set to empty. Readers see the same
-    * rows before and after — only the physical layout changes. The
-    * data rewrite commits FIRST; a reader interleaving between the
-    * two flips sees the rewritten data plus the not-yet-cleared
-    * delete set, whose keys are already absent — the anti-join is
-    * then a no-op, so no anomaly window exists.
+  /** Fold the delete set into the data, either table form, then reset
+    * the set to empty (CAS — a racing delete's entries survive).
+    * Readers see the same rows before and after — only the physical
+    * layout changes. The data rewrite commits FIRST; a reader
+    * interleaving between the two flips sees the rewritten data plus
+    * the not-yet-cleared delete set, whose masked rows are already
+    * absent, so no anomaly window exists. Both folds read through the
+    * position-delete fold and keep every surviving row's stamp, so a
+    * stale entry left by a lost reset race cannot re-mask a row that
+    * out-sequences it. A flat table rewrites whole; a partitioned one
+    * rewrites only the partitions holding a row the sequence rule
+    * masks. Returns the data version after the fold.
     */
   def vacuumDeletes(spark: SparkSession, root: String,
                     keyCols: Seq[String], keepVersions: Int = 2,
                     maxRetries: Int = 10): Long = {
     val dr = deletesRoot(root)
-    // the delete-set version each fold attempt consumed — read by the
-    // reset AFTER the retried section, so a retryable failure in the
-    // reset can never re-run (and re-commit) the already-committed fold
+    // the versions each fold attempt consumed — read by the resets
+    // AFTER the retried section, so a retryable failure in a reset can
+    // never re-run (and re-commit) the already-committed fold
     var foldedDeletesVersion: Option[Long] = None
+    var foldedPosVersion = 0L
     def once(): Long = {
-      // pin the DATA version first, then build the fold plan: the
-      // commit CAS-checks this base, so an upsert landing between the
-      // fold's snapshot read and the commit makes the vacuum retry
-      // instead of silently overwriting the new rows (the same
-      // lost-update shape the upsert CAS closes). A plan that happens
-      // to resolve one version NEWER than the pinned base only causes
-      // a spurious retry, never a loss.
-      val dataBase = readManifest(root).map(_.version).getOrElse(0L)
-      // pin the delete-set version the fold consumes: the reset below
-      // CAS-checks it, so a softDelete landing BETWEEN fold and reset
-      // is never wiped (the reset is abandoned; the new keys keep
-      // masking, the folded-away keys are already absent so
-      // re-applying them is a no-op anti-join)
+      // pin the data view (the fold's commit CAS-checks it) and the
+      // delete-set version (the reset CAS-checks it, so a softDelete
+      // landing BETWEEN fold and reset is never wiped) before the
+      // fold reads either
+      val v = liveView(root)
       foldedDeletesVersion = readManifest(dr).map(_.version)
-      // stamped fold: surviving rows keep their write sequences, so a
-      // stale delete entry left behind by a lost reset race still
-      // cannot re-mask a row that out-sequences it
-      val folded = readLiveWithDeletesStamped(spark, root, keyCols)
-      commit(root, keepVersions, expectedBase = Some(dataBase)) { dir =>
-        folded.write.mode(SaveMode.Overwrite).parquet(dir)
-      }
+      if (isFlat(v)) {
+        // the whole-table rewrite stales every position entry: reset
+        // them below, like every flat rewrite
+        foldedPosVersion = posVersion(root)
+        foldFlatEqDeletes(spark, root, v, keyCols, foldedPosVersion,
+          keepVersions)
+      } else foldPartitionEqDeletes(spark, root, v, keyCols)
     }
     val v = retryThenEscalate(Paths.get(root), maxRetries)(once())
-    // reset OUTSIDE the retried section: the fold is committed; losing
-    // the reset (racing delete's CAS win, or its own pinned read
-    // pruned) only leaves already-folded entries behind, which the
-    // sequence stamps keep harmless — never worth re-folding for
+    // resets OUTSIDE the retried section: the fold is committed; losing
+    // a reset (racing delete's CAS win, or its own pinned read pruned)
+    // only leaves already-folded entries behind, which the sequence
+    // stamps and the position entries' liveness keep harmless — never
+    // worth re-folding for
+    resetPosDeletes(spark, root, foldedPosVersion, keepVersions)
     foldedDeletesVersion.foreach { dv =>
       try {
         val empty = readLive(spark, dr).limit(0)
@@ -2058,6 +2017,54 @@ object VersionedTable {
       }
     }
     v
+  }
+
+  /** [[vacuumDeletes]]' flat fold: the whole snapshot through both
+    * masks into one new version dir.
+    */
+  private def foldFlatEqDeletes(spark: SparkSession, root: String,
+                                v: PartitionedManifest,
+                                keyCols: Seq[String],
+                                foldedPosVersion: Long,
+                                keepVersions: Int): Long = {
+    val folded = applyEqMaskSequenced(spark, root,
+      posMaskedSnapshot(spark, root, v), Some(keyCols))
+    commit(root, keepVersions, expectedBase = Some(v.version),
+      validate = requirePosVersion(root, foldedPosVersion, "vacuum")) {
+      dir => folded.write.mode(SaveMode.Overwrite).parquet(dir)
+    }
+  }
+
+  /** [[vacuumDeletes]]' partitioned fold: only partitions holding a
+    * row the sequence rule masks rewrite (a key upserted again after
+    * its delete rewrites nothing); every other partition keeps its
+    * pinned dir. Returns the view's version when nothing is masked.
+    */
+  private def foldPartitionEqDeletes(spark: SparkSession, root: String,
+                                     m: PartitionedManifest,
+                                     keyCols: Seq[String]): Long = {
+    val pinnedPos = posVersion(root)
+    // fold through the pos-delete mask too: this rewrite supersedes
+    // the touched partitions' files
+    val base = posMaskedSnapshot(spark, root, m)
+    val judged = withDelSeq(spark, root, base, Some(keyCols))
+      .getOrElse(return m.version)
+    val touched = judged.filter(eqMasked)
+      .select(m.partitionColumns.map(col): _*).distinct().collect()
+    if (touched.isEmpty) return m.version
+    // covered keys rendered by Spark's OWN dynamic-partition writer
+    // (not a hand escapePathName over String.valueOf, which diverges
+    // for null — Spark writes __HIVE_DEFAULT_PARTITION__ — and for
+    // timestamp values), so fully-emptied partitions resolve to
+    // byte-identical manifest keys they must vacate
+    val coveredRel = renderPartitionKeys(spark,
+      base.select(m.partitionColumns.map(col): _*).schema, touched)
+    val folded = judged
+      .filter(touchedPredicate(m.partitionColumns, touched) && !eqMasked)
+      .drop(DelSeqCol)
+    replacePartitioned(spark, root, folded, m.partitionColumns,
+      covered = coveredRel, expectedBase = Some(m.version),
+      validate = requirePosVersion(root, pinnedPos, "rewrite"))
   }
 
   // ------------------------------------------------------------------
@@ -2151,19 +2158,18 @@ object VersionedTable {
   // partitioned table is its manifest; a flat table is a one-leaf view
   // with no partition columns whose only key "" maps to the live
   // version dir — a read-side view, nothing on disk changes.
-  // `partitionColumns.isEmpty` is the only test of table form. The
-  // rules that really differ between the forms are each chosen in ONE
-  // place below:
+  // `partitionColumns.isEmpty` is the only test of table form. Both
+  // forms carry the write-sequence stamp and share ONE equality-delete
+  // rule ([[applyEqMaskSequenced]]); the rules that really differ
+  // between the forms are each chosen in ONE place below:
   //   - the parquet read ([[readDir]]: flat goes through the schema
-  //     memo and carries the write-sequence stamp; partitioned reads
-  //     typed leaves, unstamped);
+  //     memo; partitioned reads typed leaves);
   //   - entry liveness: a flat entry is live while its path lies under
   //     the live dir at any depth (a flat version dir may hold
   //     Hive-style subdirs); a partitioned delete entry while its first
   //     segment is a live dir, a partitioned append while its
   //     `dir/key` qualifier is still mapped;
-  //   - the post-image qualifier ([[postImageQualifier]]);
-  //   - the equality-delete rule ([[maskEqDeletes]]).
+  //   - the post-image qualifier ([[postImageQualifier]]).
   // ------------------------------------------------------------------
 
   /** The snapshot view of `root`: live, or as of `version` (time
@@ -2247,46 +2253,47 @@ object VersionedTable {
   }
 
   /** Per-dir frames as ONE snapshot frame: addresses attached first
-    * when `addressed`, then the union, the flat form's stamp default,
-    * and rename normalization. No mergeSchema: every file under one
-    * version dir was written by ONE commit, so footer-merging is pure
-    * planning cost — cross-COMMIT schema drift is reconciled by the
+    * when `addressed`, then the union, the stamp default and rename
+    * normalization. No mergeSchema: every file under one version dir
+    * was written by ONE commit, so footer-merging is pure planning
+    * cost — cross-COMMIT schema drift is reconciled by the
     * allowMissingColumns union, the only place it can appear.
     */
-  private[graft] def unionDirs(root: String, v: PartitionedManifest,
+  private[graft] def unionDirs(root: String,
                                groups: Seq[(String, DataFrame)],
-                               addressed: Boolean): DataFrame = {
-    val u = groups.map { case (d, df) =>
+                               addressed: Boolean): DataFrame =
+    normalizeRenames(root, stampDefaulted(groups.map { case (d, df) =>
       if (addressed) withAddress(root, d, df) else df
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    normalizeRenames(root, if (isFlat(v)) stampDefaulted(u) else u)
-  }
+    }.reduce(_.unionByName(_, allowMissingColumns = true))))
 
   /** Live MoR-append entries of the view: entry keys
-    * ([[PdPathCol]]/[[PdPosCol]]) + post-image data columns, plus the
-    * write sequence as [[SeqCol]] on a flat view. An append is live
-    * when its qualifier is the flat live dir, or — partitioned — when
-    * the manifest STILL maps its qualifying partition key to its
+    * ([[PdPathCol]]/[[PdPosCol]]), the post-image's write sequence as
+    * [[SeqCol]] and its data columns. An append is live when its
+    * qualifier is the flat live dir, or — partitioned — when the
+    * manifest STILL maps its qualifying partition key to its
     * qualifying version dir (a rewrite of that partition folded and
-    * staled it). None when the sub-table is absent or carries no data
-    * columns (pure position deletes). The MAIN table's column renames
-    * normalize the data columns (entry keys are reserved names, never
-    * renamed).
+    * staled it). `committedBy` keeps only entries the sub-table
+    * committed at-or-before that sub-table version. None when the
+    * sub-table is absent or carries no data columns (pure position
+    * deletes). The MAIN table's column renames normalize the data
+    * columns (entry keys are reserved names, never renamed).
     */
   private def liveMorAppendEntries(spark: SparkSession, root: String,
-                                   v: PartitionedManifest)
+                                   v: PartitionedManifest,
+                                   committedBy: Option[Long] = None)
       : Option[DataFrame] =
     readManifest(posDeletesRoot(root)).flatMap { _ =>
-      val all = normalizeRenames(root, readLive(spark, posDeletesRoot(root)))
-      val dataCols =
-        all.columns.filterNot(MorReservedCols.contains).toSeq
+      // stamped with the SUB-TABLE commit version, for `committedBy`
+      val stamped =
+        normalizeRenames(root, readLiveStamped(spark, posDeletesRoot(root)))
+      val all = committedBy.fold(stamped)(p => stamped.filter(col(SeqCol) <= p))
+      val dataCols = all.columns
+        .filterNot(c => MorReservedCols.contains(c) || c == SeqCol).toSeq
       if (dataCols.isEmpty) None
       else Some {
-        val kept = all.filter((if (isFlat(v))
-            col(PdPathCol).startsWith(flatDir(v) + "/" + MorMarker)
-          else isMorAppendPath) && notDead(all))
         val live =
-          if (isFlat(v)) kept
+          if (isFlat(v))
+            all.filter(col(PdPathCol).startsWith(flatDir(v) + "/" + MorMarker))
           else {
             import spark.implicits._
             // live qualifiers come straight from the manifest
@@ -2294,30 +2301,18 @@ object VersionedTable {
             // join)
             val liveQuals = v.partitions.toSeq.sorted
               .map { case (k, d) => s"$d/$k" }.toDF("__graft_mor_qual")
-            kept.withColumn("__graft_mor_qual", dirOf(col(PdPathCol)))
+            all.filter(isMorAppendPath)
+              .withColumn("__graft_mor_qual", dirOf(col(PdPathCol)))
               .join(org.apache.spark.sql.functions.broadcast(liveQuals),
                 Seq("__graft_mor_qual"))
           }
         val seq =
-          if (!isFlat(v)) Nil
-          else if (all.columns.contains(PdSeqCol))
-            Seq(coalesce(col(PdSeqCol), lit(0L)).as(SeqCol))
-          else Seq(lit(0L).as(SeqCol))
-        live.select((Seq(col(PdPathCol), col(PdPosCol)) ++ seq ++
-          dataCols.map(col)): _*)
+          if (all.columns.contains(PdSeqCol)) coalesce(col(PdSeqCol), lit(0L))
+          else lit(0L)
+        live.filter(notDead(all)).select((Seq(col(PdPathCol), col(PdPosCol),
+          seq.as(SeqCol)) ++ dataCols.map(col)): _*)
       }
     }
-
-  /** The view form's equality-delete rule on a snapshot frame, the
-    * stamp dropped: a flat frame carries [[SeqCol]] and uses the
-    * sequence rule; a partitioned frame is unstamped and masks
-    * unconditionally.
-    */
-  private def maskEqDeletes(spark: SparkSession, root: String,
-                            v: PartitionedManifest,
-                            df: DataFrame): DataFrame =
-    if (isFlat(v)) applyEqMaskSequenced(spark, root, df).drop(SeqCol)
-    else maskPartitionedDeletes(spark, root, df.drop(SeqCol))
 
   /** Pending append post-images ONLY, fully masked — what a pruned
     * scan whose every base file was skipped must still return (append
@@ -2327,8 +2322,8 @@ object VersionedTable {
                                           root: String,
                                           v: PartitionedManifest)
       : Option[DataFrame] =
-    liveMorAppendEntries(spark, root, v).map(a =>
-      maskEqDeletes(spark, root, v, a.drop(PdPathCol, PdPosCol)))
+    liveMorAppendEntries(spark, root, v).map(a => applyEqMaskSequenced(
+      spark, root, a.drop(PdPathCol, PdPosCol)).drop(SeqCol))
 
   /** Qualifier of a MoR post-image that stays where its source row
     * lives: the live dir on a flat view (never "the address minus its
@@ -2355,7 +2350,7 @@ object VersionedTable {
       : Option[(PartitionedManifest, DataFrame)] =
     snapshotView(root).map { v =>
       val base0 =
-        unionDirs(root, v, dirFrames(spark, root, v), addressed = true)
+        unionDirs(root, dirFrames(spark, root, v), addressed = true)
       val posMasked = livePosDeleteEntries(spark, root, v) match {
         case Some(d) =>
           base0.join(d, Seq(AddrPathCol, AddrPosCol), "left_anti")
@@ -2374,7 +2369,7 @@ object VersionedTable {
             allowMissingColumns = true)
         case None => baseSide
       }
-      (v, maskEqDeletes(spark, root, v, both))
+      (v, applyEqMaskSequenced(spark, root, both).drop(SeqCol))
     }
 
   /** Commit a merge-on-read mutation batch (delete entries + append
@@ -2452,6 +2447,31 @@ object VersionedTable {
   private def posVersion(root: String): Long =
     readManifest(posDeletesRoot(root)).map(_.version).getOrElse(0L)
 
+  /** Commit-time check for a rewrite that folded the position deletes
+    * pinned at `pinned`: entries landing mid-rewrite would address
+    * superseded files after the flip (un-delete), so the commit aborts
+    * and the caller's retry re-folds.
+    */
+  private def requirePosVersion(root: String, pinned: Long,
+                                what: String): () => Unit = () =>
+    if (posVersion(root) != pinned)
+      throw new ConcurrentCommitException(
+        s"position deletes landed under $root during the $what — " +
+          "re-fold and retry")
+
+  /** [[requirePosVersion]] plus the equality-delete guard of a rewrite
+    * that restamps every row (see [[eqDeleteVersion]]).
+    */
+  private def requireDeleteVersions(root: String, pos: Long,
+                                    eq: Long): () => Unit = () => {
+    requirePosVersion(root, pos, "row-level rewrite")()
+    if (eqDeleteVersion(root) != eq)
+      throw new ConcurrentCommitException(
+        s"equality deletes landed under $root during the row-level " +
+          "rewrite — restamped rows would out-sequence them " +
+          "(un-delete); re-read and retry")
+  }
+
   /** Loud failure instead of silent column loss: internal plumbing
     * attaches/derives columns with these names, so a user schema that
     * collides would be dropped or overwritten mid-operation.
@@ -2484,21 +2504,21 @@ object VersionedTable {
   /** Per-dir frames of the view minus live position deletes, plus the
     * view's pending merge-on-read post-images — addresses attach only
     * when a pos-delete sub-table exists (zero extra cost on tables
-    * that never used one). Flat frames keep the write-sequence stamp.
+    * that never used one). Rows keep the write-sequence stamp.
     */
   private def posMasked(spark: SparkSession, root: String,
                         v: PartitionedManifest,
                         groups: Seq[(String, DataFrame)]): DataFrame = {
     val dels = livePosDeleteEntries(spark, root, v)
-    val base = unionDirs(root, v, groups, addressed = dels.isDefined)
+    val base = unionDirs(root, groups, addressed = dels.isDefined)
     val masked = dels match {
       case Some(d) =>
         base.join(d, Seq(AddrPathCol, AddrPosCol), "left_anti")
           .drop(AddrPathCol, AddrPosCol)
       case None => base
     }
-    // pending post-images (data columns, plus [[SeqCol]] on a flat
-    // view); `allowMissingColumns` both ways: the table may have
+    // pending post-images (data columns and [[SeqCol]]);
+    // `allowMissingColumns` both ways: the table may have
     // evolved past an old append (reads null-fill) or an append may
     // carry a column the pruned base projection lacks
     liveMorAppendEntries(spark, root, v).fold(masked)(a =>
@@ -2553,47 +2573,45 @@ object VersionedTable {
       : DataFrame =
     // appends union BEFORE the equality mask: a later eq delete must
     // mask a pending post-image by the same rule as any row
-    maskEqDeletes(spark, root, v, posMasked(spark, root, v, groups))
+    applyEqMaskSequenced(spark, root, posMasked(spark, root, v, groups))
+      .drop(SeqCol)
 
-  /** The equality-delete SEQUENCE rule (a delete masks only rows
-    * written at-or-before it) applied to any [[SeqCol]]-stamped
-    * frame — identity when no equality delete ever committed.
+  /** `df`, a [[SeqCol]]-stamped frame, left-joined with each key's
+    * delete sequence as [[DelSeqCol]] (legacy entries without one mask
+    * unconditionally). Keys default to the delete set's own columns.
+    * None when no equality delete ever committed.
+    */
+  private def withDelSeq(spark: SparkSession, root: String, df: DataFrame,
+                         keyCols: Option[Seq[String]]): Option[DataFrame] =
+    readManifest(deletesRoot(root)).map { _ =>
+      val dels = readLive(spark, deletesRoot(root))
+      val keys =
+        keyCols.getOrElse(dels.columns.filterNot(_ == DelSeqCol).toSeq)
+      val delsSeq =
+        (if (dels.columns.contains(DelSeqCol))
+           dels.withColumn(DelSeqCol,
+             coalesce(col(DelSeqCol), lit(Long.MaxValue)))
+         else dels.withColumn(DelSeqCol, lit(Long.MaxValue)))
+          .select((keys.map(col) :+ col(DelSeqCol)): _*)
+      df.join(delsSeq, keys, "left")
+    }
+
+  /** THE equality-delete SEQUENCE rule over a [[withDelSeq]] frame: a
+    * delete masks only rows written at-or-before it.
+    */
+  private def eqMasked: Column =
+    col(DelSeqCol).isNotNull && col(DelSeqCol) >= col(SeqCol)
+
+  /** [[eqMasked]] applied to any [[SeqCol]]-stamped frame, either
+    * table form, the stamp kept — identity when no equality delete
+    * ever committed.
     */
   private def applyEqMaskSequenced(spark: SparkSession, root: String,
-                                   df: DataFrame): DataFrame =
-    readManifest(deletesRoot(root)) match {
-      case Some(_) =>
-        val dels = readLive(spark, deletesRoot(root))
-        val keyCols = dels.columns.filterNot(_ == DelSeqCol).toSeq
-        val delsSeq =
-          (if (dels.columns.contains(DelSeqCol))
-             dels.withColumn(DelSeqCol,
-               coalesce(col(DelSeqCol), lit(Long.MaxValue)))
-           else dels.withColumn(DelSeqCol, lit(Long.MaxValue)))
-            .select((keyCols.map(col) :+ col(DelSeqCol)): _*)
-        df.join(delsSeq, keyCols, "left")
-          .filter(col(DelSeqCol).isNull || col(DelSeqCol) < col(SeqCol))
-          .drop(DelSeqCol)
-      case None => df
-    }
-
-  /** Apply the partitioned table's (unconditional) equality-delete
-    * mask to a pruned partitioned base — keyCols derived from the
-    * delete sub-table schema, mirroring
-    * [[readLivePartitionedWithDeletes]].
-    */
-  private[graft] def maskPartitionedDeletes(spark: SparkSession,
-                                            root: String,
-                                            base: DataFrame): DataFrame =
-    readManifest(deletesRoot(root)) match {
-      case Some(_) =>
-        val dels = readLive(spark, deletesRoot(root))
-        val keyCols = dels.columns.filterNot(_ == DelSeqCol).toSeq
-        if (keyCols.isEmpty) base
-        else base.join(dels.select(keyCols.map(col): _*), keyCols,
-          "left_anti")
-      case None => base
-    }
+                                   df: DataFrame,
+                                   keyCols: Option[Seq[String]] = None)
+      : DataFrame =
+    withDelSeq(spark, root, df, keyCols)
+      .fold(df)(_.filter(!eqMasked).drop(DelSeqCol))
 
   /** Delete the live rows matching `predicate` BY POSITION, either
     * table form: identify (file, row-index) pairs with one
@@ -2612,7 +2630,7 @@ object VersionedTable {
       val v = liveView(root)
       try {
         val baseHits =
-          unionDirs(root, v, dirFrames(spark, root, v), addressed = true)
+          unionDirs(root, dirFrames(spark, root, v), addressed = true)
           .filter(predicate)
           .select(col(AddrPathCol).as(PdPathCol),
             col(AddrPosCol).as(PdPosCol)).distinct()
@@ -2635,8 +2653,11 @@ object VersionedTable {
         // live one (a flat version never moves without its dir);
         // otherwise a rewrite interleaved and we must re-identify (our
         // stale entries stay harmlessly ignored until the next fold's
-        // reset reaps them)
-        if (snapshotView(root).contains(v)) return ver
+        // reset reaps them). Checked under the commit lock: a rewrite
+        // that validated the pos version before our entries landed
+        // flips its manifest under that lock, so we see its flip
+        if (withCommitLock(Paths.get(root))(snapshotView(root).contains(v)))
+          return ver
       } catch {
         // the identification scan read a snapshot that retention
         // pruned mid-read — same conflict, same retry
@@ -2694,12 +2715,8 @@ object VersionedTable {
       foldedPosVersion = posVersion(root)
       val snap = posMaskedSnapshot(spark, root, liveView(root))
       commit(root, keepVersions, expectedBase = Some(base.version),
-        validate = () => {
-          if (posVersion(root) != foldedPosVersion)
-            throw new ConcurrentCommitException(
-              s"position deletes landed under $root during the " +
-                "rewrite — re-fold and retry")
-        }) { dir =>
+        validate = requirePosVersion(root, foldedPosVersion,
+          "rewrite")) { dir =>
         layout(snap).write.mode(SaveMode.Overwrite).parquet(dir)
       }
     }
@@ -2867,12 +2884,7 @@ object VersionedTable {
     val rewritten = if (uniformCopies) touched.size else allPre.size
     val version = commit(root, keepVersions,
       expectedBase = Some(v.version),
-      validate = () => {
-        if (posVersion(root) != foldedPosVersion)
-          throw new ConcurrentCommitException(
-            s"position deletes landed under $root during the " +
-              "vacuum — re-fold and retry")
-      }) { dir =>
+      validate = requirePosVersion(root, foldedPosVersion, "vacuum")) { dir =>
       val out = Paths.get(dir)
       Files.createDirectories(out)
       val all = dataFilesUnder(dirP)
@@ -2891,7 +2903,7 @@ object VersionedTable {
           .option("basePath", dirP.toString)
           .parquet(files.map(_.toString): _*)
       if (touchedFiles.nonEmpty) {
-        val masked = unionDirs(root, v,
+        val masked = unionDirs(root,
           Seq(live -> rewriteRead(touchedFiles)), addressed = true)
         // None only on a uniformity-forced full rewrite with no
         // sub-table at all — nothing to mask then
@@ -3002,15 +3014,15 @@ object VersionedTable {
         throw new IllegalStateException(
           s"no partitioned _manifest.json under $root")))
 
-  /** The snapshot a SPECIFIC manifest describes — lets a writer pin
-    * its merge to the base version it CAS-commits against even if the
-    * live manifest moves mid-merge, and lets composite readers (the
+  /** The snapshot a SPECIFIC manifest describes (base rows, the
+    * hidden write sequence dropped) — lets composite readers (the
     * NearDupIndex cross-table snapshot) read a pinned older pair of
-    * tables consistently.
+    * tables consistently, and backs time travel and CDF.
     */
   def readPartitionedSnapshot(spark: SparkSession, root: String,
                               m: PartitionedManifest): DataFrame =
-    unionDirs(root, m, dirFrames(spark, root, m), addressed = false)
+    unionDirs(root, dirFrames(spark, root, m), addressed = false)
+      .drop(SeqCol)
 
   /** basePath read with partition-column types FIXED to the recorded
     * `_part_schema.json`: path type inference reinterprets lossy
@@ -3140,6 +3152,8 @@ object VersionedTable {
     // mental model of the partition key space is wrong (int 7 vs
     // string "07" address DIFFERENT partitions after path escaping)
     requirePartitionTypesMatch(root, updates, partitionColumns)
+    requireNoReservedColumns(updates.columns, s"write into $root",
+      Seq(SeqCol, AddrPathCol, AddrPosCol))
     enforceConstraints(root, updates)
     val rootP = Paths.get(root)
     Files.createDirectories(rootP)
@@ -3149,6 +3163,9 @@ object VersionedTable {
       val prev = readPartitionedManifest(root)
       preV = prev.map(_.version).getOrElse(0L)
       val pinnedPosVersion = posVersion(root)
+      // the batch carries this commit's write sequence (recomputed on
+      // CAS retry); kept rows keep theirs, as the flat upsert does
+      val stamped = updates.withColumn(SeqCol, lit(preV + 1))
       // PARTITION-SPEC EVOLUTION (migrate-on-write): a commit may use
       // a partition-column list that EXTENDS the table's current spec
       // (old cols a strict prefix, e.g. day → day,type). The touched
@@ -3190,9 +3207,8 @@ object VersionedTable {
           evolvesFrom.map(_.size).getOrElse(partitionColumns.size)))
       var liftedKeys: Set[String] = Set.empty
       val merged = prev match {
-        case None => updates
+        case None => stamped
         case Some(m) =>
-          import org.apache.spark.sql.functions.{col, lit}
           val touched = updates
             .select(predCols.map(updates(_)): _*).distinct().collect()
           if (touched.isEmpty) return m.version
@@ -3219,13 +3235,13 @@ object VersionedTable {
             .filter(touchedPred)
           if (antiJoin) {
             val (existingAligned, updatesAligned) =
-              MergeWriter.alignSchemas(existing, updates, keys,
+              MergeWriter.alignSchemas(existing, stamped, keys,
                 schemaMode)
             existingAligned.join(
                 updates.select(keys.map(updates(_)): _*), keys,
                 "left_anti")
               .unionByName(updatesAligned)
-          } else existing.unionByName(updates, allowMissingColumns =
+          } else existing.unionByName(stamped, allowMissingColumns =
             schemaMode == MergeWriter.SchemaMode.SyncAllColumns)
       }
       val staging = stagingDir(rootP)
@@ -3318,98 +3334,6 @@ object VersionedTable {
   }
 
   // ------------------------------------------------------------------
-  // Equality deletes, PARTITIONED form. Same nested delete-set
-  // sub-table and CAS protocol as the unpartitioned family, with one
-  // HONEST contract difference: partitioned rows carry no write
-  // sequence, so a delete masks its key UNCONDITIONALLY until
-  // [[vacuumDeletesPartitioned]] folds it — a key re-upserted after
-  // softDeletePartitioned stays hidden until vacuum (the pre-sequence
-  // behavior the unpartitioned table upgraded away from; stamping
-  // partitioned writes is the upgrade path if that corner matters).
-  // ------------------------------------------------------------------
-
-  /** Soft-delete by key on a PARTITIONED table: O(|keys|) commit into
-    * the nested delete set, zero data rewrite.
-    */
-  def softDeletePartitioned(spark: SparkSession, root: String,
-                            keys: DataFrame, keyCols: Seq[String],
-                            keepVersions: Int = 2,
-                            maxRetries: Int = 10): Long =
-    upsert(spark, deletesRoot(root),
-      keys.select(keyCols.map(keys(_)): _*).distinct(),
-      keyCols, schemaMode = MergeWriter.SchemaMode.SyncAllColumns,
-      keepVersions = keepVersions, maxRetries = maxRetries)
-
-  /** Live partitioned snapshot minus the delete set (merge-on-read;
-    * unconditional mask — see the partitioned-deletes contract note).
-    */
-  def readLivePartitionedWithDeletes(spark: SparkSession, root: String,
-                                     keyCols: Seq[String]): DataFrame = {
-    val base = readLivePartitioned(spark, root)
-    readManifest(deletesRoot(root)) match {
-      case Some(_) =>
-        val dels = readLive(spark, deletesRoot(root))
-          .select(keyCols.map(col): _*)
-        base.join(dels, keyCols, "left_anti")
-      case None => base
-    }
-  }
-
-  /** Fold the delete set into rewritten partitions (only partitions
-    * that actually hold a deleted key rewrite) and reset the set —
-    * the merge-on-read → copy-on-write flip, CAS-protected on both
-    * tables like the unpartitioned vacuum. Old version dirs are
-    * pruned by the NEXT upsertPartitioned's retention pass.
-    */
-  def vacuumDeletesPartitioned(spark: SparkSession, root: String,
-                               keyCols: Seq[String],
-                               maxRetries: Int = 10): Long = {
-    val dr = deletesRoot(root)
-    var foldedDeletesVersion: Option[Long] = None
-    def once(): Long = {
-      val m = readPartitionedManifest(root).getOrElse(
-        throw new IllegalStateException(
-          s"no partitioned manifest under $root"))
-      foldedDeletesVersion = readManifest(dr).map(_.version)
-      if (foldedDeletesVersion.isEmpty) return m.version // nothing to fold
-      val pinnedPos = posVersion(root)
-      val dels = readLive(spark, dr).select(keyCols.map(col): _*)
-      // fold through the pos-delete mask too: this rewrite supersedes
-      // the touched partitions' files
-      val base = posMaskedSnapshot(spark, root, m)
-      // partitions holding a deleted key — the only ones to rewrite
-      val touched = base.join(dels, keyCols, "left_semi")
-        .select(m.partitionColumns.map(col): _*).distinct().collect()
-      if (touched.isEmpty) return m.version
-      val touchedPred = touchedPredicate(m.partitionColumns, touched)
-      // covered keys rendered by Spark's OWN dynamic-partition writer
-      // (not a hand escapePathName over String.valueOf, which diverges
-      // for null — Spark writes __HIVE_DEFAULT_PARTITION__ — and for
-      // timestamp values), so fully-emptied partitions resolve to
-      // byte-identical manifest keys they must vacate
-      val coveredRel = renderPartitionKeys(spark,
-        base.select(m.partitionColumns.map(col): _*).schema, touched)
-      val folded = base.filter(touchedPred).join(dels, keyCols, "left_anti")
-      replacePartitioned(spark, root, folded, m.partitionColumns,
-        covered = coveredRel, expectedBase = Some(m.version),
-        expectedPosVersion = Some(pinnedPos))
-    }
-    val v = retryThenEscalate(Paths.get(root), maxRetries)(once())
-    foldedDeletesVersion.foreach { dv =>
-      try {
-        val empty = readLive(spark, dr).limit(0)
-        commit(dr, expectedBase = Some(dv)) { dir =>
-          empty.write.mode(SaveMode.Overwrite).parquet(dir)
-        }
-      } catch {
-        case _: ConcurrentCommitException => () // racing delete wins
-        case e: Throwable if isPrunedSnapshotRead(e, Paths.get(dr)) => ()
-      }
-    }
-    v
-  }
-
-  // ------------------------------------------------------------------
   // Position deletes on a PARTITIONED table: the same `_pos_deletes`
   // sub-table and the same snapshot-view verbs as the flat form,
   // addresses version-dir-qualified (`vNNNN/day=x/part-...`), so an
@@ -3448,7 +3372,8 @@ object VersionedTable {
     val folded = posMaskedSnapshot(spark, root, sub)
     (replacePartitioned(spark, root, folded, m.partitionColumns,
       covered = touchedKeys.toSeq, expectedBase = Some(m.version),
-      expectedPosVersion = Some(foldedPosVersion)), touchedKeys.size)
+      validate = requirePosVersion(root, foldedPosVersion, "vacuum")),
+      touchedKeys.size)
   }
 
   /** REPLACE the partitions `df` covers with exactly its rows (the
@@ -3603,6 +3528,8 @@ object VersionedTable {
                           maxRetries: Int = 10): Long = {
     require(partitionColumns.nonEmpty,
       "overwritePartitions needs partition columns")
+    requireNoReservedColumns(df.columns, s"overwrite of $root",
+      Seq(SeqCol, AddrPathCol, AddrPosCol))
     enforceConstraints(root, df)
     val rootP = Paths.get(root)
     Files.createDirectories(rootP)
@@ -3610,8 +3537,8 @@ object VersionedTable {
       val base = readPartitionedManifest(root).map(_.version).getOrElse(0L)
       // covered = exactly the written set: dynamic semantics never
       // vacate a partition the replacement doesn't mention
-      replacePartitioned(spark, root, df, partitionColumns,
-        covered = Seq.empty, expectedBase = Some(base))
+      replacePartitioned(spark, root, df.withColumn(SeqCol, lit(base + 1)),
+        partitionColumns, covered = Seq.empty, expectedBase = Some(base))
     }
     retryThenEscalate(rootP, maxRetries)(once())
   }
@@ -3631,6 +3558,8 @@ object VersionedTable {
                                keyMatches: String => Boolean,
                                replacement: DataFrame,
                                maxRetries: Int = 10): Long = {
+    requireNoReservedColumns(replacement.columns, s"overwrite of $root",
+      Seq(SeqCol, AddrPathCol, AddrPosCol))
     enforceConstraints(root, replacement)
     val rootP = Paths.get(root)
     def once(): Long = {
@@ -3640,8 +3569,10 @@ object VersionedTable {
             "overwritePartitionsWhere needs an existing partitioned " +
             "table"))
       val covered = m.partitions.keys.filter(keyMatches).toSeq
-      replacePartitioned(spark, root, replacement, m.partitionColumns,
-        covered = covered, expectedBase = Some(m.version))
+      replacePartitioned(spark, root,
+        replacement.withColumn(SeqCol, lit(m.version + 1)),
+        m.partitionColumns, covered = covered,
+        expectedBase = Some(m.version))
     }
     retryThenEscalate(rootP, maxRetries)(once())
   }
@@ -3658,14 +3589,18 @@ object VersionedTable {
                               maxRetries: Int = 10): Long = {
     require(partitionColumns.nonEmpty,
       "replaceTablePartitioned needs partition columns")
+    requireNoReservedColumns(df.columns, s"replace of $root",
+      Seq(SeqCol, AddrPathCol, AddrPosCol))
     enforceConstraints(root, df)
     val rootP = Paths.get(root)
     Files.createDirectories(rootP)
     def once(): Long = {
       val prev = readPartitionedManifest(root)
-      replacePartitioned(spark, root, df, partitionColumns,
+      val base = prev.map(_.version).getOrElse(0L)
+      replacePartitioned(spark, root, df.withColumn(SeqCol, lit(base + 1)),
+        partitionColumns,
         covered = prev.map(_.partitions.keys.toSeq).getOrElse(Seq.empty),
-        expectedBase = Some(prev.map(_.version).getOrElse(0L)))
+        expectedBase = Some(base))
     }
     retryThenEscalate(rootP, maxRetries)(once())
   }
@@ -3696,12 +3631,8 @@ object VersionedTable {
         .filter(!coalesce(predicate, lit(false)))
       val replStamped = replacement.withColumn(SeqCol, lit(next))
       commit(root, keepVersions, expectedBase = Some(base.version),
-        validate = () => {
-          if (posVersion(root) != foldedPosVersion)
-            throw new ConcurrentCommitException(
-              s"position deletes landed under $root during the " +
-                "overwrite — re-fold and retry")
-        }) { dir =>
+        validate = requirePosVersion(root, foldedPosVersion,
+          "overwrite")) { dir =>
         kept.unionByName(replStamped)
           .write.mode(SaveMode.Overwrite).parquet(dir)
       }
@@ -3733,13 +3664,11 @@ object VersionedTable {
     */
   def posDeleteVersion(root: String): Long = posVersion(root)
 
-  /** The EQUALITY-delete sub-table's current version — the flat
-    * row-level rewrite must pin this too: it restamps every surviving
-    * row with the new commit's sequence, so an equality delete landing
-    * between its observable read and its flip (no main-manifest or
-    * pos-version bump to CAS on) would be out-sequenced and silently
-    * un-deleted. Partitioned masks are sequence-free (unconditional
-    * until vacuum), so only [[rewriteLive]] needs the guard.
+  /** The EQUALITY-delete sub-table's current version — a row-level
+    * rewrite must pin this too: it restamps every surviving row with
+    * the new commit's sequence, so an equality delete landing between
+    * its observable read and its flip (no main-manifest or pos-version
+    * bump to CAS on) would be out-sequenced and silently un-deleted.
     */
   def eqDeleteVersion(root: String): Long =
     readManifest(deletesRoot(root)).map(_.version).getOrElse(0L)
@@ -3769,17 +3698,8 @@ object VersionedTable {
     enforceConstraints(root, content)
     val v = commit(root, keepVersions,
       expectedBase = Some(expectedVersion),
-      validate = () => {
-        if (posVersion(root) != expectedPosVersion)
-          throw new ConcurrentCommitException(
-            s"position deletes landed under $root during the " +
-              "row-level rewrite — re-fold and retry")
-        if (eqDeleteVersion(root) != expectedEqVersion)
-          throw new ConcurrentCommitException(
-            s"equality deletes landed under $root during the " +
-              "row-level rewrite — restamped rows would out-sequence " +
-              "them (un-delete); re-read and retry")
-      }) { dir =>
+      validate = requireDeleteVersions(root, expectedPosVersion,
+        expectedEqVersion)) { dir =>
       content.withColumn(SeqCol, lit(expectedVersion + 1))
         .write.mode(SaveMode.Overwrite).parquet(dir)
     }
@@ -3789,16 +3709,18 @@ object VersionedTable {
 
   /** Row-level COW rewrite, PARTITIONED form: the partitions named in
     * `covered` are vacated and `replacement` (their full new content,
-    * written at the manifest's spec depth) takes their place;
-    * untouched partition pointers survive as-is — per-statement work
-    * scales with the TOUCHED partitions, never the table. One
-    * attempt — conflicts throw.
+    * written at the manifest's spec depth, restamped like
+    * [[rewriteLive]]'s) takes their place; untouched partition
+    * pointers survive as-is — per-statement work scales with the
+    * TOUCHED partitions, never the table. One attempt — conflicts
+    * throw.
     */
   def rewritePartitionsCovered(spark: SparkSession, root: String,
                                replacement: DataFrame,
                                covered: Seq[String],
                                expectedVersion: Long,
-                               expectedPosVersion: Long): Long = {
+                               expectedPosVersion: Long,
+                               expectedEqVersion: Long): Long = {
     val m = readPartitionedManifest(root).getOrElse(
       throw new IllegalStateException(
         s"no partitioned _manifest.json under $root — nothing to " +
@@ -3808,9 +3730,12 @@ object VersionedTable {
       Seq(SeqCol, AddrPathCol, AddrPosCol))
     requirePartitionTypesMatch(root, replacement, m.partitionColumns)
     enforceConstraints(root, replacement)
-    replacePartitioned(spark, root, replacement, m.partitionColumns,
-      covered = covered, expectedBase = Some(expectedVersion),
-      expectedPosVersion = Some(expectedPosVersion))
+    replacePartitioned(spark, root,
+      replacement.withColumn(SeqCol, lit(expectedVersion + 1)),
+      m.partitionColumns, covered = covered,
+      expectedBase = Some(expectedVersion),
+      validate = requireDeleteVersions(root, expectedPosVersion,
+        expectedEqVersion))
   }
 
   /** The touched-partition cover for a row-level rewrite: given a
@@ -3887,12 +3812,16 @@ object VersionedTable {
         "recorded type, so a type flip silently re-addresses keys)")
   }
 
+  /** Record the partition-column types. A failure propagates and
+    * aborts the commit before its manifest flip (the published dir is
+    * left as an unreferenced orphan for [[removeOrphans]]): missing or
+    * stale types would make later reads re-infer lossy values.
+    */
   private def writePartSchema(rootP: Path,
       schema: Seq[(String, org.apache.spark.sql.types.DataType)]): Unit =
-    try TableFs.publishFile(partSchemaPath(rootP), schema
+    TableFs.publishFile(partSchemaPath(rootP), schema
       .map { case (n, t) => s""""${escJson(n)}": "${escJson(t.json)}"""" }
       .mkString("{", ", ", "}"))
-    catch { case _: Throwable => () }
 
   /** Recorded partition-column types; empty for legacy tables (their
     * rewrites fall back to inference types — the pre-recording
@@ -3921,7 +3850,7 @@ object VersionedTable {
     * file per partition. Returns (version, partitions rewritten) —
     * (current version, 0) when nothing is fragmented. Old version
     * dirs are pruned by the next upsertPartitioned's retention pass,
-    * same as vacuumDeletesPartitioned.
+    * same as the partitioned [[vacuumDeletes]].
     */
   def compactPartitions(spark: SparkSession, root: String,
                         minFiles: Int = 2,
@@ -3947,7 +3876,7 @@ object VersionedTable {
         .repartition(m.partitionColumns.map(col): _*)
       replacePartitioned(spark, root, df, m.partitionColumns,
         covered = frag.keys.toSeq, expectedBase = Some(m.version),
-        expectedPosVersion = Some(pinnedPos))
+        validate = requirePosVersion(root, pinnedPos, "rewrite"))
     }
     val v = retryThenEscalate(rootP, maxRetries)(once())
     (v, rewritten)
@@ -3985,7 +3914,7 @@ object VersionedTable {
       replacePartitioned(spark, root, df, m.partitionColumns,
         covered = m.partitions.keys.toSeq,
         expectedBase = Some(m.version),
-        expectedPosVersion = Some(pinnedPos))
+        validate = requirePosVersion(root, pinnedPos, "rewrite"))
     }
     retryThenEscalate(rootP, maxRetries)(once())
   }
@@ -3995,8 +3924,8 @@ object VersionedTable {
                                  partitionColumns: Seq[String],
                                  covered: Seq[String],
                                  expectedBase: Option[Long],
-                                 expectedPosVersion: Option[Long] =
-                                   None): Long = {
+                                 validate: () => Unit = () => ())
+      : Long = {
     val rootP = Paths.get(root)
     val staging = stagingDir(rootP)
     try df.write.mode(SaveMode.Overwrite)
@@ -4031,15 +3960,11 @@ object VersionedTable {
           s"$root moved to v$live while this writer replaced against " +
             s"v$base — re-read and retry")
       }
-      // rewrites that folded position deletes into their read must
-      // abort if NEW entries landed mid-rewrite, or the flip would
-      // resurrect freshly-deleted rows (the r12 un-delete class)
-      expectedPosVersion.filter(_ != posVersion(root)).foreach { pv =>
-        deleteRecursively(staging)
-        throw new ConcurrentCommitException(
-          s"position deletes landed under $root during the rewrite " +
-            s"(pinned pos v$pv) — re-fold and retry")
-      }
+      // rewrites that folded deletes into their read abort if NEW
+      // entries landed mid-rewrite, or the flip would resurrect
+      // freshly-deleted rows (the r12 un-delete class)
+      try validate()
+      catch { case e: Throwable => deleteRecursively(staging); throw e }
       val next = TableFs.publishVersionDir(rootP, staging)
       val dirName = versionDirName(next)
       val written = partitionLeafDirs(rootP.resolve(dirName),
@@ -4593,9 +4518,7 @@ object VersionedTable {
     * previous sidecar (trusted only when its version matches prev's),
     * and only touched/new partitions re-fold from their version dir's
     * sidecar — a one-partition commit pays one-partition metadata
-    * work, not table-wide IO under the commit lock. Failures are
-    * swallowed — partition bounds are optional metadata; a missing or
-    * stale file means scan-all, never wrong pruning.
+    * work, not table-wide IO under the commit lock.
     */
   private def writePartStats(rootP: Path, version: Long,
                              partitions: Map[String, String],
@@ -4628,7 +4551,13 @@ object VersionedTable {
           }
         }
       TableFs.publishFile(partStatsPath(rootP), lines.mkString("\n"))
-    } catch { case _: Throwable => () }
+    } catch {
+      // partition bounds are optional metadata: readers reject stats
+      // whose version differs from the manifest's and scan everything,
+      // so a failed write costs pruning, never correctness
+      case scala.util.control.NonFatal(e) =>
+        log.warn(s"partition stats not written under $rootP: $e")
+    }
 
   /** Parse `_part_stats.json`: (version it describes, partition key →
     * bounds). None when absent; malformed lines drop out (their

@@ -1065,15 +1065,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         .NoSuchViewException(ident)
     import org.apache.spark.sql.connector.catalog.ViewChange
     val f = dir.resolve(GraftCatalog.ViewFile)
-    val updated = changes.foldLeft(readMeta0(f)) {
-      case (m, c: ViewChange.SetProperty) =>
-        m + (s"p:${c.property()}" -> c.value())
-      case (m, c: ViewChange.RemoveProperty) =>
-        m - s"p:${c.property()}"
-      case (_, c) => throw new UnsupportedOperationException(
-        s"ALTER VIEW ${ident.name()}: $c")
+    // read-modify-write under the view dir's lock: two concurrent
+    // ALTERs must each see the other's properties
+    TableFs.withCommitLock(dir) {
+      writeMeta(f, changes.foldLeft(readMeta0(f)) {
+        case (m, c: ViewChange.SetProperty) =>
+          m + (s"p:${c.property()}" -> c.value())
+        case (m, c: ViewChange.RemoveProperty) =>
+          m - s"p:${c.property()}"
+        case (_, c) => throw new UnsupportedOperationException(
+          s"ALTER VIEW ${ident.name()}: $c")
+      })
     }
-    writeMeta(f, updated)
     loadView(ident)
   }
 

@@ -980,7 +980,7 @@ private[graft] object GraftScanPlanner {
                             groups: Seq[(String, DataFrame)],
                             masked: Boolean): DataFrame =
     if (masked) VersionedTable.maskDeletes(spark, root, view, groups)
-    else VersionedTable.unionDirs(root, view, groups, addressed = false)
+    else VersionedTable.unionDirs(root, groups, addressed = false)
       .drop(VersionedTable.SeqCol)
 
   /** The pruned dataframe: [[decide]]'s survivors read through

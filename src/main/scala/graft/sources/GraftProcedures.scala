@@ -192,9 +192,7 @@ private[sources] object GraftProcedures {
               throw new IllegalArgumentException(
                 s"vacuum of $root needs the 'keys' TBLPROPERTY to " +
                   "fold its equality deletes"))
-            if (partitioned(root))
-              VersionedTable.vacuumDeletesPartitioned(spark, root, keys)
-            else VersionedTable.vacuumDeletes(spark, root, keys)
+            VersionedTable.vacuumDeletes(spark, root, keys)
             true
           }
         new GenericInternalRow(Array[Any](liveVersion(root), eqFolded,

@@ -11,7 +11,9 @@ import graft.sources.GraftScanAudit
   * commit into one version dir) and partitioned — graded against a
   * plain-Scala model after every step: position deletes, SQL DELETE,
   * MoR UPDATE and MERGE, a pruned DSv2 read with pushed filters, the
-  * entry audit and the vacuum fold.
+  * entry audit and the vacuum fold; then the equality-delete rule
+  * (re-upsert after a delete, a delete after a MoR UPDATE, legacy
+  * unstamped leaves) and the hidden write-sequence column.
   */
 class FormParitySpec extends SparkSpec {
   import spark.implicits._
@@ -145,5 +147,129 @@ class FormParitySpec extends SparkSpec {
     }
     assert(audits.map(_._2).distinct.size === 1,
       s"every form holds the same live entries: $audits")
+  }
+
+  private val forms = Seq("flat" -> "fp_flat", "nested" -> "fp_nested",
+    "partitioned" -> "fp_part")
+
+  /** The paper's keyed load: upsert `rows` by `id` in `form`. */
+  private def upsertRows(root: String, form: String,
+                         rows: Seq[Row4]): Unit = {
+    val df = rows.toDF("id", "v", "s", "g")
+    if (form == "partitioned")
+      VersionedTable.upsertPartitioned(spark, root, df, Seq("id"), Seq("g"))
+    else VersionedTable.upsert(spark, root, df, Seq("id"))
+  }
+
+  private def eqRows(root: String): Seq[Row4] =
+    VersionedTable.readLiveWithDeletes(spark, root, Seq("id"))
+      .select("id", "v", "s", "g").as[Row4].collect().toSeq.sortBy(_._1)
+
+  test("softDelete k, then upsert k again: every form reads k back, " +
+    "before and after vacuumDeletes") {
+    forms.foreach { case (form, name) =>
+      val t = s"${name}_re"
+      val root = create(t, form)
+      var model: Map[Long, Row4] = seedRows.map(r => r._1 -> r).toMap
+      def check(step: String): Unit = {
+        val want = sorted(model.values.toSeq)
+        assert(tableRows(t) === want, s"$form after $step (SQL)")
+        assert(eqRows(root) === want, s"$form after $step (library)")
+      }
+      VersionedTable.softDelete(spark, root, Seq(2L, 5L).toDF("id"),
+        Seq("id"))
+      model --= Seq(2L, 5L)
+      check("softDelete")
+      val back = (2L, 21L, "r", "g2")
+      upsertRows(root, form, Seq(back))
+      model += 2L -> back
+      check("re-upsert")
+      VersionedTable.vacuumDeletes(spark, root, Seq("id"))
+      check("vacuumDeletes")
+    }
+  }
+
+  test("MoR UPDATE k, then softDelete k: k stays absent in every form, " +
+    "before and after vacuumDeletes") {
+    forms.foreach { case (form, name) =>
+      val t = s"${name}_mu"
+      val root = create(t, form)
+      var model: Map[Long, Row4] = seedRows.map(r => r._1 -> r).toMap
+      def check(step: String): Unit =
+        assert(tableRows(t) === sorted(model.values.toSeq),
+          s"$form after $step")
+      spark.sql(s"UPDATE fpcat.f.$t SET v = v + 1000 WHERE id IN (4, 8)")
+      model ++= Seq(4L, 8L).map(k =>
+        k -> model(k).copy(_2 = model(k)._2 + 1000))
+      check("MoR UPDATE")
+      VersionedTable.softDelete(spark, root, Seq(4L).toDF("id"), Seq("id"))
+      model -= 4L
+      check("softDelete")
+      VersionedTable.vacuumDeletes(spark, root, Seq("id"))
+      check("vacuumDeletes")
+    }
+  }
+
+  test("a partitioned leaf written without _graft_seq still masks its " +
+    "deleted keys beside stamped leaves") {
+    val root = tmpDir("fp_legacy") + "/t"
+    seedRows.toDF("id", "v", "s", "g")
+      .write.partitionBy("g").parquet(s"$root/v00000001")
+    Files.write(java.nio.file.Paths.get(root, "_manifest.json"),
+      VersionedTable.renderPartitionedManifest(
+        VersionedTable.PartitionedManifest(1L, Seq("g"),
+          Seq("g0", "g1", "g2").map(g => s"g=$g" -> "v00000001").toMap))
+        .getBytes("UTF-8"))
+    var model: Map[Long, Row4] = seedRows.map(r => r._1 -> r).toMap
+    val fresh = (13L, 130L, "n", "g1")
+    upsertRows(root, "partitioned", Seq(fresh))
+    model += 13L -> fresh
+    val m = VersionedTable.readPartitionedManifest(root).get
+    assert(m.partitions("g=g0") == "v00000001" &&
+      m.partitions("g=g1") != "v00000001", s"$m")
+    def check(step: String): Unit = {
+      val want = sorted(model.values.toSeq)
+      assert(eqRows(root) === want, s"after $step (library)")
+      assert(spark.read.format("graft").load(root)
+        .select("id", "v", "s", "g").as[Row4].collect().toSeq
+        .sortBy(_._1) === want, s"after $step (DSv2)")
+    }
+    check("stamped upsert")
+    // 3 lives in the unstamped g0 leaf, 13 in the stamped g1 leaf
+    VersionedTable.softDelete(spark, root, Seq(3L, 13L).toDF("id"),
+      Seq("id"))
+    model --= Seq(3L, 13L)
+    check("softDelete")
+    VersionedTable.vacuumDeletes(spark, root, Seq("id"))
+    check("vacuumDeletes")
+  }
+
+  test("SELECT *, DESCRIBE, time travel, CDF and diffs of a partitioned " +
+    "catalog table never show _graft_seq") {
+    val t = "fp_hidden"
+    val root = create(t, "partitioned")
+    val v1 = VersionedTable.readPartitionedManifest(root).get.version
+    upsertRows(root, "partitioned", Seq((1L, 11L, "o", "g1")))
+    val v2 = VersionedTable.readPartitionedManifest(root).get.version
+    val seq = VersionedTable.SeqCol
+    val leaf = Files.walk(java.nio.file.Paths.get(root, f"v$v2%08d"))
+      .filter(_.toString.endsWith(".parquet")).findFirst().get
+    assert(spark.read.parquet(leaf.toString).columns.contains(seq),
+      "the stamp is on disk")
+    def hidden(what: String, df: org.apache.spark.sql.DataFrame): Unit =
+      assert(!df.schema.json.contains(seq), s"$what shows $seq")
+    hidden("SELECT *", spark.sql(s"SELECT * FROM fpcat.f.$t"))
+    hidden("VERSION AS OF",
+      spark.sql(s"SELECT * FROM fpcat.f.$t VERSION AS OF $v1"))
+    assert(!spark.sql(s"DESCRIBE fpcat.f.$t").collect()
+      .exists(_.getString(0) == seq), "DESCRIBE")
+    hidden("readPartitionedVersion",
+      VersionedTable.readPartitionedVersion(spark, root, v1))
+    hidden("readLivePartitioned",
+      VersionedTable.readLivePartitioned(spark, root))
+    hidden("readChanges",
+      VersionedTable.readChanges(spark, root, v1, v2, Seq("id")))
+    hidden("diffVersions",
+      VersionedTable.diffVersions(spark, root, v1, v2, Seq("id")))
   }
 }

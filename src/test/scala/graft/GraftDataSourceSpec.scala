@@ -124,13 +124,13 @@ class GraftDataSourceSpec extends SparkSpec {
       .select(col("id"), (col("id") % 3).cast("string").as("p"),
         (col("id") % 1000).as("x"))
     VersionedTable.upsertPartitioned(spark, root, df, Seq("id"), Seq("p"))
-    VersionedTable.softDeletePartitioned(spark, root,
+    VersionedTable.softDelete(spark, root,
       Seq(0L, 9L).toDF("id"), Seq("id"))
     val q = spark.read.format("graft").load(root)
       .filter(col("p") === "1")
     val gotIds = q.select("id").as[Long].collect().sorted
     val wantIds = VersionedTable
-      .readLivePartitionedWithDeletes(spark, root, Seq("id"))
+      .readLiveWithDeletes(spark, root, Seq("id"))
       .filter(col("p") === "1").select("id").as[Long].collect().sorted
     assert(gotIds === wantIds)
     assert(!gotIds.contains(9L)) // 9 % 3 == 0 → other partition; use 1

@@ -147,11 +147,11 @@ class GraftFacadeSpec extends SparkSpec {
       .filter($"id" === 1L).select("v").as[Long].head() === 10L)
     assert(Graft.diffVersions(spark, root, 1L, 2L, Seq("dt", "id"))
       .filter($"status" === "changed").count() === 1L)
-    Graft.softDeletePartitioned(spark, root, Seq(2L).toDF("id"),
+    Graft.softDelete(spark, root, Seq(2L).toDF("id"),
       Seq("id"))
-    assert(Graft.readPartitionedWithDeletes(spark, root, Seq("id"))
+    assert(Graft.readWithDeletes(spark, root, Seq("id"))
       .select("id").as[Long].collect().toSeq === Seq(1L))
-    Graft.vacuumPartitionedDeletes(spark, root, Seq("id"))
+    Graft.vacuumDeletes(spark, root, Seq("id"))
     assert(Graft.readVersionedPartitioned(spark, root).count() === 1L)
   }
 

@@ -175,4 +175,38 @@ class GraftViewSpec extends SparkSpec {
     assert(e.getMessage.toLowerCase.contains("exist") ||
       e.getMessage.contains("justv"), e.getMessage)
   }
+
+  test("concurrent ALTER VIEW SET TBLPROPERTIES: every property " +
+    "survives") {
+    wh
+    import org.apache.spark.sql.connector.catalog.{Identifier, ViewCatalog, ViewChange}
+    val cat = spark.sessionState.catalogManager.catalog("vcat")
+      .asInstanceOf[ViewCatalog]
+    spark.sql("CREATE TABLE vcat.m.pt (id BIGINT) USING graft")
+    (0 until 3).foreach { round =>
+      val name = s"pv$round"
+      spark.sql(s"CREATE VIEW vcat.m.$name AS SELECT id FROM vcat.m.pt")
+      val ident = Identifier.of(Array("m"), name)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      // two ALTER streams on disjoint properties, released together
+      val threads = Seq("a", "b").map { t =>
+        new Thread(() => {
+          start.await()
+          (0 until 8).foreach { i =>
+            try cat.alterView(ident, ViewChange.setProperty(s"$t$i", "x"))
+            catch { case e: Throwable => errs.add(e) }
+          }
+        })
+      }
+      threads.foreach(_.start())
+      start.countDown()
+      threads.foreach(_.join())
+      assert(errs.isEmpty, s"round $round: ${errs.peek()}")
+      val props = cat.loadView(ident).properties()
+      val missing = Seq("a", "b").flatMap(t => (0 until 8).map(i => s"$t$i"))
+        .filterNot(props.containsKey)
+      assert(missing.isEmpty, s"round $round lost $missing")
+    }
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import graft.sinks.VersionedTable
+import graft.sinks.{TableFs, VersionedTable}
 import org.apache.spark.sql.functions._
 
 /** Position deletes on the PARTITIONED table form (r13): immediate
@@ -83,6 +83,31 @@ class PartitionedPosDeleteSpec extends SparkSpec {
       .readLiveWithPosDeletes(spark, root).count() === 30)
   }
 
+  test("a position delete landing between a merge's pos validation " +
+    "and its manifest flip is redone against the new snapshot") {
+    val root = tmpRoot()
+    seed(root)
+    var deleter: Thread = null
+    TableFs.withSeam(root, TableFs.BeforePublish) { target =>
+      // inside the merge's commit lock, after its pos validation
+      if (deleter == null && target.getFileName.toString.startsWith("v")) {
+        deleter = new Thread(() =>
+          VersionedTable.softDeletePos(spark, root, col("id") === 6L))
+        deleter.start()
+        deleter.join(3000) // a deleter that must wait for the lock
+      }
+    } {
+      VersionedTable.upsertPartitioned(spark, root,
+        Seq((300L, "p0", 1L)).toDF("id", "p", "x"),
+        Seq("id"), Seq("p"), keepManifests = 10)
+    }
+    deleter.join()
+    val ids = VersionedTable.readLiveWithPosDeletes(spark, root)
+      .select("id").as[Long].collect().toSet
+    assert(!ids.contains(6L) && ids.contains(300L) && ids.size === 30,
+      s"id 6 resurfaced or rows lost: ${ids.toSeq.sorted}")
+  }
+
   test("compaction and equality-delete vacuum fold pending pos " +
     "deletes too") {
     val root = tmpRoot()
@@ -104,9 +129,9 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     // partition — the rewrite reads through the pos mask
     VersionedTable.softDeletePos(spark, root,
       col("id") === 12L) // p0
-    VersionedTable.softDeletePartitioned(spark, root,
+    VersionedTable.softDelete(spark, root,
       Seq(15L).toDF("id"), Seq("id")) // p0, equality
-    VersionedTable.vacuumDeletesPartitioned(spark, root, Seq("id"))
+    VersionedTable.vacuumDeletes(spark, root, Seq("id"))
     val live = VersionedTable.readLivePartitioned(spark, root)
     assert(live.filter(col("id").isin(11L, 12L, 15L)).count() === 0)
   }

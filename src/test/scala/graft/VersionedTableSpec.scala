@@ -146,16 +146,16 @@ class VersionedTableSpec extends SparkSpec {
       Seq(("d0", 1L, "a"), ("d0", 2L, "b"), ("d1", 3L, "c"),
         ("d2", 4L, "d")).toDF("dt", "id", "v"),
       Seq("dt", "id"), Seq("dt"), keepManifests = 4)
-    VersionedTable.softDeletePartitioned(spark, root,
+    VersionedTable.softDelete(spark, root,
       Seq(1L, 3L).toDF("id"), Seq("id"))
     def liveIds() = VersionedTable
-      .readLivePartitionedWithDeletes(spark, root, Seq("id"))
+      .readLiveWithDeletes(spark, root, Seq("id"))
       .select("id").as[Long].collect().sorted.toSeq
     // masked immediately, physical data untouched
     assert(liveIds() === Seq(2L, 4L))
     assert(VersionedTable.readLivePartitioned(spark, root).count() === 4)
     val before = VersionedTable.readPartitionedManifest(root).get
-    VersionedTable.vacuumDeletesPartitioned(spark, root, Seq("id"))
+    VersionedTable.vacuumDeletes(spark, root, Seq("id"))
     val after = VersionedTable.readPartitionedManifest(root).get
     // d2 held no deleted key: its pointer must be untouched
     assert(after.partitions("dt=d2") === before.partitions("dt=d2"),
@@ -167,9 +167,32 @@ class VersionedTableSpec extends SparkSpec {
     assert(liveIds() === Seq(2L, 4L))
     assert(VersionedTable.readLivePartitioned(spark, root).count() === 2)
     // delete set reset: a fresh delete + immediate read still works
-    VersionedTable.softDeletePartitioned(spark, root,
+    VersionedTable.softDelete(spark, root,
       Seq(4L).toDF("id"), Seq("id"))
     assert(liveIds() === Seq(2L))
+  }
+
+  test("a failed _part_schema.json publish aborts the partitioned " +
+    "commit before its manifest flip") {
+    val root = tmpRoot()
+    val rows = Seq(("07", 1L), ("08", 2L)).toDF("dt", "id")
+    VersionedTable.upsertPartitioned(spark, root, rows, Seq("id"),
+      Seq("dt"))
+    val before = VersionedTable.readPartitionedManifest(root).get
+    val e = intercept[Exception] {
+      TableFs.withSeam(root, TableFs.BeforePublish) { target =>
+        if (target.getFileName.toString == "_part_schema.json")
+          throw new java.io.IOException("part schema publish failed")
+      } {
+        VersionedTable.upsertPartitioned(spark, root,
+          Seq(("09", 3L)).toDF("dt", "id"), Seq("id"), Seq("dt"))
+      }
+    }
+    assert(e.getMessage.contains("part schema publish failed"),
+      e.getMessage)
+    assert(VersionedTable.readPartitionedManifest(root).get === before)
+    assert(VersionedTable.readLivePartitioned(spark, root)
+      .select("dt").as[String].collect().sorted.toSeq === Seq("07", "08"))
   }
 
   test("partitioned vacuum vacates fully-emptied null and timestamp " +
@@ -186,9 +209,9 @@ class VersionedTableSpec extends SparkSpec {
     val before = VersionedTable.readPartitionedManifest(root).get
     assert(before.partitions.keySet ===
       Set("dt=d0", "dt=__HIVE_DEFAULT_PARTITION__"))
-    VersionedTable.softDeletePartitioned(spark, root,
+    VersionedTable.softDelete(spark, root,
       Seq(2L, 3L).toDF("id"), Seq("id"))
-    VersionedTable.vacuumDeletesPartitioned(spark, root, Seq("id"))
+    VersionedTable.vacuumDeletes(spark, root, Seq("id"))
     val after = VersionedTable.readPartitionedManifest(root).get
     assert(!after.partitions.contains("dt=__HIVE_DEFAULT_PARTITION__"),
       s"emptied null partition still pointed: ${after.partitions}")
@@ -204,9 +227,9 @@ class VersionedTableSpec extends SparkSpec {
         (java.sql.Timestamp.valueOf("2024-01-02 11:45:00"), 2L))
         .toDF("h", "id"),
       Seq("h", "id"), Seq("h"), keepManifests = 4)
-    VersionedTable.softDeletePartitioned(spark, troot,
+    VersionedTable.softDelete(spark, troot,
       Seq(2L).toDF("id"), Seq("id"))
-    VersionedTable.vacuumDeletesPartitioned(spark, troot, Seq("id"))
+    VersionedTable.vacuumDeletes(spark, troot, Seq("id"))
     val tafter = VersionedTable.readPartitionedManifest(troot).get
     assert(tafter.partitions.size === 1,
       s"emptied timestamp partition still pointed: ${tafter.partitions}")
@@ -222,9 +245,9 @@ class VersionedTableSpec extends SparkSpec {
         .toDF("k", "id"),
       Seq("k", "id"), Seq("k"), keepManifests = 4)
     val sbefore = VersionedTable.readPartitionedManifest(sroot).get
-    VersionedTable.softDeletePartitioned(spark, sroot,
+    VersionedTable.softDelete(spark, sroot,
       Seq(1L, 2L, 3L).toDF("id"), Seq("id"))
-    VersionedTable.vacuumDeletesPartitioned(spark, sroot, Seq("id"))
+    VersionedTable.vacuumDeletes(spark, sroot, Seq("id"))
     val safter = VersionedTable.readPartitionedManifest(sroot).get
     assert(safter.partitions.keySet === Set("k=keep"),
       s"emptied escaped partitions still pointed: ${safter.partitions} " +
