@@ -257,7 +257,7 @@ object SparkEntry {
       val dimLoc = graft.models.StarModels.dimLocation(staged)
       val dimDt = graft.models.StarModels.dimDate(staged)
       val failures =
-        graft.models.StarModels.runSchemaTestsFused(dimLoc, dimDt, fact)
+        graft.models.StarModels.runSchemaTests(dimLoc, dimDt, fact)
       require(failures.isEmpty, s"schema tests failed: $failures")
       val cityIdx = substring(col("city"), 6, 5).cast("int")
       fact
@@ -4264,14 +4264,14 @@ object SparkEntry {
       vt.commit(work) { dir =>
         ev.repartition(16).write.parquet(dir)
       }
-      def liveFiles(): Long = {
-        val m = vt.readManifest(work).get
-        val dirP = java.nio.file.Paths.get(work).resolve(m.live)
-        val st = java.nio.file.Files.walk(dirP)
-        try st.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .count()
-        finally st.close()
-      }
+      def liveFiles(): Long =
+        vt.readManifest(work).get.segments.map { seg =>
+          val st = java.nio.file.Files.walk(
+            java.nio.file.Paths.get(work).resolve(seg))
+          try st.filter(p => p.getFileName.toString.endsWith(".parquet"))
+            .count()
+          finally st.close()
+        }.sum
       val before = liveFiles()
       val v = vt.compact(s, work, 2)
       val after = liveFiles()
@@ -4570,7 +4570,7 @@ object SparkEntry {
         round(col("value") * 100).cast("long").as("cents"))
       vt.upsert(s, work, ev, Seq("event_id"))
       val rootP = java.nio.file.Paths.get(work)
-      val live = rootP.resolve(vt.readManifest(work).get.live)
+      val live = rootP.resolve(vt.readManifest(work).get.segments.last)
       def plantFile(p: java.nio.file.Path): Unit = {
         java.nio.file.Files.createDirectories(p.getParent)
         java.nio.file.Files.write(p, "junk".getBytes)

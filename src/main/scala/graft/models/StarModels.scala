@@ -77,16 +77,17 @@ object StarModels {
         Seq(childKey), "left_anti")
       .count()
 
-  /** The same 13 schema.yml tests fused into ONE Spark job: each test
-    * becomes a 1-row (test_name, violations) aggregate and the union
-    * is collected once — vs [[runSchemaTests]]'s 13 separate actions,
-    * whose per-job scheduling floor dominates on small dims (measured
-    * ~2s of pure overhead in the q228 capstone). Identical results;
-    * use this form from pipelines, the per-test form for debugging one
-    * failing test in isolation.
+  /** All schema.yml tests for the three models; returns failures as
+    * (testName, violationCount) pairs — empty means green. The 13
+    * tests run as ONE Spark job: each becomes a 1-row (test_name,
+    * violations) aggregate and the union is collected once — 13
+    * separate actions would pay the per-job scheduling floor 13 times,
+    * which dominates on small dims. The per-test `*Violations`
+    * functions count the same thing one test at a time (for debugging
+    * one failing test in isolation).
     */
-  def runSchemaTestsFused(dimLoc: DataFrame, dimDt: DataFrame,
-                          fact: DataFrame): Seq[(String, Long)] = {
+  def runSchemaTests(dimLoc: DataFrame, dimDt: DataFrame,
+                     fact: DataFrame): Seq[(String, Long)] = {
     def nn(df: DataFrame, c: String, name: String): DataFrame =
       df.filter(col(c).isNull)
         .agg(count(lit(1)).as("violations"))
@@ -120,35 +121,5 @@ object StarModels {
       .filter(col("violations") > 0)
       .collect()
       .map(r => r.getString(0) -> r.getLong(1)).toSeq
-  }
-
-  /** All schema.yml tests for the three models; returns failures as
-    * (testName, violationCount) pairs — empty means green.
-    */
-  def runSchemaTests(dimLoc: DataFrame, dimDt: DataFrame,
-                     fact: DataFrame): Seq[(String, Long)] = {
-    val checks: Seq[(String, () => Long)] = Seq(
-      "dim_location.location_id.not_null" ->
-        (() => notNullViolations(dimLoc, "location_id")),
-      "dim_location.location_id.unique" ->
-        (() => uniqueViolations(dimLoc, "location_id")),
-      "dim_location.city.not_null" -> (() => notNullViolations(dimLoc, "city")),
-      "dim_location.latitude.not_null" ->
-        (() => notNullViolations(dimLoc, "latitude")),
-      "dim_location.longitude.not_null" ->
-        (() => notNullViolations(dimLoc, "longitude")),
-      "dim_date.date_id.not_null" -> (() => notNullViolations(dimDt, "date_id")),
-      "dim_date.date_id.unique" -> (() => uniqueViolations(dimDt, "date_id")),
-      "fact.location_id.not_null" ->
-        (() => notNullViolations(fact, "location_id")),
-      "fact.date_id.not_null" -> (() => notNullViolations(fact, "date_id")),
-      "fact.ts_utc.not_null" -> (() => notNullViolations(fact, "ts_utc")),
-      "fact.temperature_c.not_null" ->
-        (() => notNullViolations(fact, "temperature_c")),
-      "fact.location_id.relationships" ->
-        (() => relationshipViolations(fact, "location_id", dimLoc, "location_id")),
-      "fact.date_id.relationships" ->
-        (() => relationshipViolations(fact, "date_id", dimDt, "date_id")))
-    checks.map { case (n, f) => n -> f() }.filter(_._2 > 0)
   }
 }

@@ -568,12 +568,17 @@ private[plans] object GraftRowLevelExec {
             case Some(fm) =>
               val pv = VersionedTable.posDeleteVersion(root)
               val ev = VersionedTable.eqDeleteVersion(root)
-              val anyChange = !matchedChangedPre.limit(1).isEmpty ||
-                !bySourceChangedPre.limit(1).isEmpty ||
-                !insertRows.limit(1).isEmpty
-              if (!anyChange) return false
-              VersionedTable.rewriteLive(spark, root, content,
-                fm.version, pv, ev)
+              val rowsChange = !matchedChangedPre.limit(1).isEmpty ||
+                !bySourceChangedPre.limit(1).isEmpty
+              if (rowsChange)
+                VersionedTable.rewriteLive(spark, root, content,
+                  fm.version, pv, ev)
+              else if (!insertRows.limit(1).isEmpty)
+                // inserts only: every target row stays where it is and
+                // the inserted rows become a new segment
+                VersionedTable.appendLive(spark, root, insertsOut,
+                  fm.version, pv, ev)
+              else return false
               true
             case None =>
               // declared-but-never-committed target: only inserts can

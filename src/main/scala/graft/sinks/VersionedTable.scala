@@ -3,7 +3,7 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{array, coalesce, col, concat, explode, expr, length, lit, shiftleft, struct, substring_index, when, xxhash64}
+import org.apache.spark.sql.functions.{array, coalesce, col, concat, explode, expr, length, lit, max, min, shiftleft, struct, substring_index, when, xxhash64}
 import org.apache.spark.sql.sources.Filter
 import graft.sources.{GraftFilterColumns, GraftScanAudit, GraftScanPlanner}
 import TableFs.withCommitLock
@@ -13,24 +13,39 @@ import TableFs.withCommitLock
   * sub-second interval in which a concurrent reader lists NO table
   * directory).
   *
-  * Layout: `root/_manifest.json` names the live data directory among
-  * immutable versioned siblings:
+  * Layout: `root/_manifest.json` names the live SNAPSHOT of a flat
+  * table as an ordered list of whole, immutable version dirs — its
+  * "segments" — among immutable versioned siblings:
   *
   * {{{
-  *   root/_manifest.json      {"version": 7, "live": "v00000007"}
-  *   root/v00000006/...       previous version (retained for readers)
-  *   root/v00000007/...       live version
+  *   root/_manifest.json      {"version": 7, "live": ["v00000006", "v00000007"]}
+  *   root/v00000006/...       the rows committed up to v6 (carried)
+  *   root/v00000007/...       only the rows v7 appended
   * }}}
+  *
+  * A one-segment snapshot renders `"live": "v00000007"` (the only form
+  * earlier releases wrote, so their tables read unchanged). A commit
+  * that only ADDS rows (append, an upsert whose key range footer
+  * stats show misses every live file, a MERGE that only inserts)
+  * writes a new dir holding just those rows and carries the live
+  * segments forward by reference; every other commit writes
+  * the whole snapshot into one new dir. Past [[MaxFlatSegments]]
+  * segments an append rewrites the whole snapshot too, which bounds
+  * read planning (one scan per segment). Every history entry records
+  * its snapshot's segment list; [[flatSegments]] is the one parser of
+  * the list and [[entryDirs]] the one reader of an entry's dirs.
   *
   * Commit = write the NEW version directory completely, then replace
   * the manifest through [[TableFs]] (the one publish primitive: every
   * table-state file and version dir goes through it). Readers resolve the
-  * manifest first and read the named directory, so they always see a
+  * manifest first and read the named directories, so they always see a
   * complete, immutable snapshot: the swap window of the rename
-  * protocol simply does not exist, and a reader that resolved the old
-  * manifest keeps reading the old directory, which is retained for one
-  * more commit before pruning (single-digit seconds of read latitude;
-  * long-running readers at 100 TB want a real table format).
+  * protocol simply does not exist. Retention keeps every dir that a
+  * retained snapshot lists: the newest `keepVersions` main-line
+  * snapshots, every ref'd one and the live one. A dir carried by
+  * reference therefore lives as long as the newest snapshot that
+  * lists it, and a reader that resolved the previous manifest finishes
+  * its scan (long-running readers at 100 TB want a real table format).
   *
   * This is deliberately the smallest useful subset of a transactional
   * table format: linear version history, atomic manifest flip,
@@ -50,7 +65,16 @@ import TableFs.withCommitLock
   */
 object VersionedTable {
 
-  final case class Manifest(version: Long, live: String)
+  /** A flat table's live manifest: the version and its ordered
+    * segment dirs (oldest first).
+    */
+  final case class Manifest(version: Long, segments: Seq[String])
+
+  /** Segment count past which an append rewrites the whole snapshot
+    * into one dir instead of adding a segment — the bound on scans per
+    * flat read plan.
+    */
+  private[graft] val MaxFlatSegments = 16
 
   /** The live version moved past the base a writer merged against —
     * re-read and retry ([[upsert]] does this automatically).
@@ -72,9 +96,60 @@ object VersionedTable {
     else {
       val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
       val vm = """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(s)
-      val lm = """"live"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(s)
-      for (v <- vm; l <- lm) yield Manifest(v.group(1).toLong, l.group(1))
+      for (v <- vm; l <- flatSegments(s)) yield
+        Manifest(v.group(1).toLong, l)
     }
+  }
+
+  /** THE parser of a flat manifest's or history entry's segment list:
+    * `"live"` holds one dir name or a JSON list of them. None when the
+    * body has no `"live"` field (a partitioned body).
+    */
+  private def flatSegments(body: String): Option[Seq[String]] =
+    """"live"\s*:\s*(?:"([^"]+)"|\[([^\]]*)\])""".r
+      .findFirstMatchIn(body).map { m =>
+        Option(m.group(1)).map(Seq(_)).getOrElse(
+          """"([^"]+)"""".r.findAllMatchIn(m.group(2))
+            .map(_.group(1)).toSeq)
+      }
+
+  /** The inverse of [[flatSegments]]: one segment renders as a plain
+    * string (the only form earlier releases wrote), several as a list.
+    * `branch` marks a branch commit's history entry.
+    */
+  private def renderFlatManifest(version: Long, segments: Seq[String],
+                                 branch: Option[String] = None): String = {
+    require(segments.nonEmpty, s"flat snapshot v$version lists no dir")
+    val live =
+      if (segments.size == 1) s""""${segments.head}""""
+      else segments.map(d => s""""$d"""").mkString("[", ", ", "]")
+    s"""{"version": $version, "live": $live""" +
+      branch.map(b => s""", "branch": "${escJson(b)}"""").getOrElse("") +
+      "}"
+  }
+
+  /** The data dirs a manifest or history entry body of version `v`
+    * references: a partitioned body's mapped dirs, else a flat body's
+    * segments, else the conventional `vNNNNNNNN`. Every retention,
+    * orphan and readability check goes through here — a reader that
+    * saw only one segment would let `removeOrphans` delete live data.
+    */
+  private def entryDirs(body: String, v: Long): Seq[String] =
+    bodyDirs(body).getOrElse(Seq(versionDirName(v)))
+
+  private def bodyDirs(body: String): Option[Seq[String]] =
+    parsePartitionedManifest(body)
+      .map(_.partitions.values.toSeq.distinct.sorted)
+      .orElse(flatSegments(body))
+
+  /** The data dirs the live manifest references, either table form
+    * (empty before the first commit).
+    */
+  private def liveDirs(rootP: Path): Set[String] = {
+    val p = manifestPath(rootP)
+    if (!Files.exists(p)) Set.empty
+    else bodyDirs(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+      .map(_.toSet).getOrElse(Set.empty)
   }
 
   /** Hidden per-row write-sequence column: every writer of either
@@ -171,8 +246,8 @@ object VersionedTable {
   private def readLiveStamped(spark: SparkSession, root: String): DataFrame = {
     val m = readManifest(root).getOrElse(throw new IllegalStateException(
       s"no _manifest.json under $root — table has never committed"))
-    normalizeRenames(root, stampDefaulted(
-      memoFlatParquet(spark, Paths.get(root).resolve(m.live))))
+    val v = flatView(m.version, m.segments)
+    unionDirs(root, dirFrames(spark, root, v), addressed = false)
   }
 
   /** THE stamp-defaulting rule, in one place: a missing or null
@@ -496,18 +571,9 @@ object VersionedTable {
             val txt = new String(Files.readAllBytes(p),
               StandardCharsets.UTF_8)
             if (txt.contains(""""branch":""")) None
-            else {
-              val dirs = parsePartitionedManifest(txt)
-                .map(_.partitions.values.toSet)
-                .getOrElse {
-                  """"live"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt)
-                    .map(m => Set(m.group(1)))
-                    .getOrElse(Set(versionDirName(v)))
-                }
-              if (dirs.forall(d => Files.isDirectory(rootP.resolve(d))))
-                Some(v)
-              else None
-            }
+            else if (entryDirs(txt, v).forall(d =>
+                Files.isDirectory(rootP.resolve(d)))) Some(v)
+            else None
           }
       }.sorted
     } finally s.close()
@@ -541,28 +607,28 @@ object VersionedTable {
         StandardCharsets.UTF_8)
       if (!txt.contains(""""branch":""")) {
         found += 1
-        out ++= parsePartitionedManifest(txt)
-          .map(_.partitions.values.toSet)
-          .getOrElse(
-            """"live"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt)
-              .map(m => Set(m.group(1))).getOrElse(Set.empty))
+        out ++= entryDirs(txt, versionOfEntry(p))
       }
     }
     out.result()
   }
 
-  /** The DATA dir of a FLAT version — the history entry's `live`
-    * field: normally the conventional `vNNNNNNNN`, but a
-    * fast-forward publish references the BRANCH head's dir (dirs are
-    * immutable; sharing beats copying).
+  /** The version number a `_versions/vNNNNNNNN.json` entry names. */
+  private def versionOfEntry(p: Path): Long =
+    p.getFileName.toString.substring(1, 9).toLong
+
+  /** The data dirs version `v`'s history entry references (see
+    * [[entryDirs]]): a flat entry's segments — normally ending in the
+    * conventional `vNNNNNNNN`, but an append carries older segments
+    * and a fast-forward publish references the BRANCH head's dirs
+    * (dirs are immutable; sharing beats copying) — or a partitioned
+    * entry's mapped dirs. The conventional dir when no entry exists.
     */
-  private def flatVersionDir(rootP: Path, v: Long): String = {
+  private def versionDirs(rootP: Path, v: Long): Seq[String] = {
     val p = versionManifestPath(rootP, v)
-    if (!Files.exists(p)) versionDirName(v)
-    else """"live"\s*:\s*"([^"]+)"""".r
-      .findFirstMatchIn(new String(Files.readAllBytes(p),
-        StandardCharsets.UTF_8))
-      .map(_.group(1)).getOrElse(versionDirName(v))
+    if (!Files.exists(p)) Seq(versionDirName(v))
+    else entryDirs(new String(Files.readAllBytes(p),
+      StandardCharsets.UTF_8), v)
   }
 
   /** Committed versions still readable (history entry AND data dir
@@ -584,14 +650,11 @@ object VersionedTable {
           }
           .filter { v =>
             // readable = every data dir the entry references survives
-            // (flat entries may reference a SHARED dir post-publish;
-            // partitioned entries reference their partition map)
-            readHistoryPartitionedManifest(rootP, v) match {
-              case Some(m) => m.partitions.values.forall(d =>
-                Files.isDirectory(rootP.resolve(d)))
-              case None => Files.isDirectory(
-                rootP.resolve(flatVersionDir(rootP, v)))
-            }
+            // (flat entries list their segments, shared with other
+            // versions; partitioned entries reference their partition
+            // map)
+            versionDirs(rootP, v).forall(d =>
+              Files.isDirectory(rootP.resolve(d)))
           }
           .sorted
       } finally s.close()
@@ -620,15 +683,16 @@ object VersionedTable {
     // time travel presents the CURRENT logical names (the "query
     // through the current table definition" contract; per-snapshot
     // schema re-presentation would need versioned schema metadata)
-    normalizeRenames(root,
-      memoFlatParquet(spark, flatVersionPath(root, version))
-        .drop(SeqCol))
+    unionDirs(root, dirFrames(spark, root,
+      flatView(version, flatVersionDirs(root, version))), addressed = false)
+      .drop(SeqCol)
 
-  /** The data dir of committed FLAT `version` — failing loudly if the
-    * version was never committed, is a partitioned snapshot, or was
-    * pruned by retention.
+  /** The segment dirs of committed FLAT `version` — failing loudly if
+    * the version was never committed, is a partitioned snapshot, or
+    * was pruned by retention.
     */
-  private[graft] def flatVersionPath(root: String, version: Long): Path = {
+  private[graft] def flatVersionDirs(root: String,
+                                     version: Long): Seq[String] = {
     val rootP = Paths.get(root)
     if (!Files.exists(versionManifestPath(rootP, version)))
       throw new IllegalStateException(
@@ -641,12 +705,12 @@ object VersionedTable {
         s"version $version of $root is a PARTITIONED snapshot — " +
           "use readPartitionedVersion (the flat dir holds only the " +
           "partitions that commit touched)")
-    val dir = rootP.resolve(flatVersionDir(rootP, version))
-    if (!Files.isDirectory(dir))
+    val dirs = versionDirs(rootP, version)
+    if (!dirs.forall(d => Files.isDirectory(rootP.resolve(d))))
       throw new IllegalStateException(
         s"version $version of $root was pruned by retention — " +
           "raise keepVersions on commit to travel further back")
-    dir
+    dirs
   }
 
   /** The immutable history entry of `version` parsed as a PARTITIONED
@@ -742,11 +806,11 @@ object VersionedTable {
   // Change-data-feed (Delta CDF / Iceberg changelog shape): row-level
   // (op, payload, commit version) between two retained versions,
   // computed from the version history the table already keeps. Each
-  // step diffs CONSECUTIVE retained snapshots — for partitioned
-  // tables only the partitions whose dir pointer moved between the
-  // two manifests are read (per-step cost ∝ touched partitions, the
-  // scale shape); flat tables diff whole snapshots (each commit
-  // rewrote the whole dir anyway). Equality/position deletes are
+  // step diffs CONSECUTIVE retained snapshots — only the leaves whose
+  // dir pointer moved between the two views are read: the touched
+  // partitions of a partitioned table, the segments a flat snapshot
+  // does not share with its predecessor (per-step cost ∝ what the
+  // commit wrote, the scale shape). Equality/position deletes are
   // merge-on-read METADATA — their row-level effect enters the feed
   // at the vacuum/rewrite commit that folds them into data files
   // (exactly when the physical rows disappear). A version pruned by
@@ -878,37 +942,34 @@ object VersionedTable {
   private def cdfStep(spark: SparkSession, root: String,
                       prior: Option[Long], v: Long,
                       keys: Seq[String]): Option[DataFrame] = {
-    val rootP = Paths.get(root)
-    def readAny(ver: Long): DataFrame =
-      if (readHistoryPartitionedManifest(rootP, ver).isDefined)
-        readPartitionedVersion(spark, root, ver)
-      else readVersion(spark, root, ver)
+    // both endpoints are retained main-line versions (readChanges
+    // checked), so their views resolve
+    def view(ver: Long): PartitionedManifest =
+      snapshotView(root, Some(ver)).get
     prior match {
       case None =>
-        val b = readAny(v)
+        val b = readPartitionedSnapshot(spark, root, view(v))
         requireNoReservedColumns(b.columns, s"readChanges over $root",
           Seq(ChangeTypeCol, ChangeVersionCol))
         Some(b.withColumn(ChangeTypeCol, lit("insert"))
           .withColumn(ChangeVersionCol, lit(v)))
       case Some(p) =>
-        val (a, b) = (readHistoryPartitionedManifest(rootP, p),
-            readHistoryPartitionedManifest(rootP, v)) match {
-          case (Some(pm0), Some(pm1)) =>
-            // only partitions whose dir pointer moved can differ —
-            // untouched partitions share the SAME immutable files
-            val touched = (pm0.partitions.keySet ++ pm1.partitions.keySet)
-              .filter(k => pm0.partitions.get(k) != pm1.partitions.get(k))
-            if (touched.isEmpty) return None
-            def restricted(m: PartitionedManifest): DataFrame = {
-              val sub = m.partitions.filter(kv => touched(kv._1))
-              if (sub.isEmpty)
-                readPartitionedSnapshot(spark, root, m).limit(0)
-              else readPartitionedSnapshot(spark, root,
-                m.copy(partitions = sub))
-            }
-            (restricted(pm0), restricted(pm1))
-          case _ => (readAny(p), readAny(v))
+        val (pm0, pm1) = (view(p), view(v))
+        // only leaves whose dir pointer moved can differ — a segment
+        // both snapshots list, or an untouched partition, is the SAME
+        // immutable files (a flat step across an append reads only the
+        // appended segment; across a change of form every leaf moved)
+        val touched = (pm0.partitions.keySet ++ pm1.partitions.keySet)
+          .filter(k => pm0.partitions.get(k) != pm1.partitions.get(k))
+        if (touched.isEmpty) return None
+        def restricted(m: PartitionedManifest): DataFrame = {
+          val sub = m.partitions.filter(kv => touched(kv._1))
+          if (sub.isEmpty)
+            readPartitionedSnapshot(spark, root, m).limit(0)
+          else readPartitionedSnapshot(spark, root,
+            m.copy(partitions = sub))
         }
+        val (a, b) = (restricted(pm0), restricted(pm1))
         requireNoReservedColumns((a.columns ++ b.columns).distinct.toSeq,
           s"readChanges over $root", Seq(ChangeTypeCol, ChangeVersionCol))
         // pack non-key columns (union of both schemas, b's type wins)
@@ -999,10 +1060,7 @@ object VersionedTable {
       if (!Files.exists(versionManifestPath(rootP, version)))
         throw new IllegalStateException(
           s"cannot tag $root@$version — version was never committed")
-      val needed = readHistoryPartitionedManifest(rootP, version)
-        .map(_.partitions.values.toSet)
-        .getOrElse(Set(versionDirName(version)))
-      val pruned = needed.filterNot(d =>
+      val pruned = versionDirs(rootP, version).filterNot(d =>
         Files.isDirectory(rootP.resolve(d)))
       if (pruned.nonEmpty)
         throw new IllegalStateException(
@@ -1036,9 +1094,9 @@ object VersionedTable {
       throw new IllegalStateException(s"no ref '$name' under $root")))
 
   /** Version dirs that ref'd snapshots reference — excluded from both
-    * retention passes. Unpartitioned snapshots pin their own dir;
-    * partitioned snapshots pin every dir in their history manifest's
-    * partition map.
+    * retention passes. Unpartitioned snapshots pin every segment they
+    * list; partitioned snapshots pin every dir in their history
+    * manifest's partition map.
     */
   private def refPinnedDirs(rootP: Path): Set[String] =
     refs(rootP.toString)
@@ -1048,9 +1106,7 @@ object VersionedTable {
       .values.toSet.flatMap { (v: Long) =>
         if (!Files.exists(versionManifestPath(rootP, v)))
           Set.empty[String]
-        else readHistoryPartitionedManifest(rootP, v)
-          .map(_.partitions.values.toSet)
-          .getOrElse(Set(flatVersionDir(rootP, v)))
+        else versionDirs(rootP, v).toSet
       }
 
   // ------------------------------------------------------------------
@@ -1132,12 +1188,12 @@ object VersionedTable {
         batch.withColumn(SeqCol, lit(TableFs.maxAllocatedVersion(rootP) + 1))
       val content = curRef match {
         case Some(v) =>
-          val dir = rootP.resolve(versionDirName(v))
-          if (!Files.isDirectory(dir))
+          val dirs = versionDirs(rootP, v)
+          if (!dirs.forall(d => Files.isDirectory(rootP.resolve(d))))
             throw new IllegalStateException(
               s"branch '$branch' head v$v of $root was pruned")
-          normalizeRenames(root, stampDefaulted(
-            memoFlatParquet(spark, dir)))
+          unionDirs(root, dirFrames(spark, root, flatView(v, dirs)),
+            addressed = false)
             .unionByName(stamped)
         case None =>
           if (readManifest(root).isEmpty) stamped
@@ -1145,8 +1201,8 @@ object VersionedTable {
             .unionByName(stamped)
       }
       commitToBranch(root, branch, curRef, next =>
-        s"""{"version": $next, "live": "${versionDirName(next)}", """ +
-          s""""branch": "${escJson(branch)}"}""") { dir =>
+        renderFlatManifest(next, Seq(versionDirName(next)),
+          Some(branch))) { dir =>
         content.write.mode(SaveMode.Overwrite).parquet(dir)
       }
     }
@@ -1267,21 +1323,12 @@ object VersionedTable {
       if (expire.isEmpty) return (currentMainVersion(root), 0)
       // dirs still referenced by ANY kept entry or the live manifest
       // survive; dirs only expired entries referenced are reclaimed
-      def dirsOf(txt: String, v: Long): Set[String] =
-        parsePartitionedManifest(txt)
-          .map(_.partitions.values.toSet)
-          .getOrElse(
-            """"live"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt)
-              .map(m => Set(m.group(1)))
-              .getOrElse(Set(versionDirName(v))))
       val referenced: Set[String] =
-        keep.flatMap { case (v, _, txt) => dirsOf(txt, v) }.toSet ++
-          readManifest(root).map(m => Set(m.live)).getOrElse(
-            readPartitionedManifest(root)
-              .map(_.partitions.values.toSet).getOrElse(Set.empty))
+        keep.flatMap { case (v, _, txt) => entryDirs(txt, v) }.toSet ++
+          liveDirs(rootP)
       expire.foreach { case (v, p, txt) =>
         Files.deleteIfExists(p)
-        dirsOf(txt, v).filterNot(referenced).foreach { d =>
+        entryDirs(txt, v).filterNot(referenced).foreach { d =>
           deleteRecursively(rootP.resolve(d))
         }
       }
@@ -1333,8 +1380,7 @@ object VersionedTable {
           writeHistoryEntry(rootP, next,
             renderPartitionedManifest(published))
         case None =>
-          val body =
-            s"""{"version": $next, "live": "${versionDirName(head)}"}"""
+          val body = renderFlatManifest(next, versionDirs(rootP, head))
           TableFs.publishFile(manifestPath(rootP), body)
           writeHistoryEntry(rootP, next, body)
       }
@@ -1359,15 +1405,24 @@ object VersionedTable {
     * blind/full-replace commits, which are serialized by the lock but
     * never rejected.
     *
-    * Retention: after the flip, only the newest `keepVersions`
-    * version dirs survive (default: live + immediate predecessor, so
-    * readers that resolved the previous manifest finish their scan;
-    * raise it when readers may lag more than one commit).
+    * `carry` lists live segments the new snapshot keeps BY REFERENCE
+    * ahead of the new dir (an add-only commit writes only its rows);
+    * it must come from the manifest at `expectedBase`, which the CAS
+    * then guarantees is still live.
+    *
+    * Retention: after the flip, only the dirs that the newest
+    * `keepVersions` main-line snapshots list survive (default: live +
+    * immediate predecessor, so readers that resolved the previous
+    * manifest finish their scan; raise it when readers may lag more
+    * than one commit), plus every dir a ref'd snapshot lists.
     */
   def commit(root: String, keepVersions: Int = 2,
              expectedBase: Option[Long] = None,
-             validate: () => Unit = () => ())
+             validate: () => Unit = () => (),
+             carry: Seq[String] = Nil)
             (writeTo: String => Unit): Long = {
+    require(carry.isEmpty || expectedBase.isDefined,
+      "a commit that carries segments must CAS its base")
     val rootP = Paths.get(root)
     Files.createDirectories(rootP)
     val staging = stagingDir(rootP)
@@ -1396,19 +1451,20 @@ object VersionedTable {
       // allocates past BRANCH commits too — they share the sequence
       val next = TableFs.publishVersionDir(rootP, staging)
       val dirName = versionDirName(next)
-      val body = s"""{"version": $next, "live": "$dirName"}"""
+      val body = renderFlatManifest(next, carry :+ dirName)
       TableFs.publishFile(manifestPath(rootP), body)
       // immutable history entry for time travel — written AFTER the
       // flip so a version is only ever listed once fully committed
       writeHistoryEntry(rootP, next, body)
-      // prune: the newest `keepVersions` MAIN-LINE snapshots' dirs
-      // survive (branch dirs never count toward K — they would evict
-      // recent main data while themselves being retained), ref'd
-      // snapshots (incl. branch heads) are pinned regardless of age,
-      // and the just-committed dir is always kept
+      // prune: every dir the newest `keepVersions` MAIN-LINE snapshots
+      // list survives — carried segments included (branch dirs never
+      // count toward K — they would evict recent main data while
+      // themselves being retained), ref'd snapshots (incl. branch
+      // heads) are pinned regardless of age, and the just-committed
+      // snapshot is always kept
       val pinned = refPinnedDirs(rootP)
       val keepMain = newestMainlineDirs(rootP,
-        math.max(1, keepVersions)) + dirName
+        math.max(1, keepVersions)) ++ carry + dirName
       val s = Files.list(rootP)
       try {
         import scala.jdk.CollectionConverters._
@@ -1493,19 +1549,12 @@ object VersionedTable {
         val entries = list(tp)
         val (histEntries, histOther) = list(tp.resolve("_versions"))
           .partition(_.getFileName.toString.matches("v\\d{8}\\.json"))
-        val referenced: Set[String] =
-          readManifest(tp.toString).map(_.live).toSet ++
-            readPartitionedManifest(tp.toString)
-              .map(_.partitions.values.toSet).getOrElse(Set.empty) ++
-            histEntries.flatMap { p =>
-              val txt = new String(Files.readAllBytes(p),
-                StandardCharsets.UTF_8)
-              // both manifest forms: "live" dir or partition map
-              val liveRe = """"live"\s*:\s*"(v\d{8})"""".r
-              liveRe.findFirstMatchIn(txt).map(_.group(1)).toSeq ++
-                parsePartitionedManifest(txt)
-                  .map(_.partitions.values.toSeq).getOrElse(Seq.empty)
-            }
+        // every dir the live manifest or any history entry lists
+        // (both forms: flat segments or partition map)
+        val referenced: Set[String] = liveDirs(tp) ++
+          histEntries.flatMap(p => entryDirs(new String(
+            Files.readAllBytes(p), StandardCharsets.UTF_8),
+            versionOfEntry(p)))
         var (nStaging, nTmp, nVdir, nRw) = (0, 0, 0, 0)
         var trashed = 0
         def toTrash(p: Path): Unit = {
@@ -1559,6 +1608,10 @@ object VersionedTable {
     * the new live snapshot and re-merges (bounded retries — updates
     * are a plan, so re-executing them against the fresh base is safe
     * for deterministic inputs, the same contract MERGE INTO gives).
+    * A batch that footer stats prove matches no live row
+    * ([[keysDisjoint]]) is an add-only commit through [[commitAdded]]:
+    * it becomes a new segment and the live segments carry by
+    * reference; any other batch rewrites the whole snapshot.
     */
   def upsert(spark: SparkSession, root: String, updates: DataFrame,
              keys: Seq[String],
@@ -1569,6 +1622,7 @@ object VersionedTable {
       Seq(SeqCol, AddrPathCol, AddrPosCol))
     enforceConstraints(root, updates)
     var foldedPosVersion = 0L
+    lazy val ranges = keyRanges(updates, keys) // one job, across retries
     def once(): Long = {
       val base = readManifest(root)
       // Rows written by THIS commit carry its version as their write
@@ -1582,23 +1636,38 @@ object VersionedTable {
       // deletes must be folded into the base read and validated at
       // commit (see the position-deletes section) — else the rewrite
       // silently un-deletes them
-      foldedPosVersion = posVersion(root)
-      commit(root, keepVersions,
-        expectedBase = Some(base.map(_.version).getOrElse(0L)),
-        validate = requirePosVersion(root, foldedPosVersion, "merge")) { dir =>
-        base match {
-          case None =>
+      val pinnedPos = posVersion(root)
+      val validate = requirePosVersion(root, pinnedPos, "merge")
+      val expected = Some(base.map(_.version).getOrElse(0L))
+      base match {
+        case None =>
+          foldedPosVersion = pinnedPos
+          commit(root, keepVersions, expected, validate) { dir =>
             updatesStamped.write.mode(SaveMode.Overwrite).parquet(dir)
-          case Some(_) =>
-            val existing = posMaskedSnapshot(spark, root, liveView(root))
-            val (existingAligned, updatesAligned) =
-              MergeWriter.alignSchemas(existing, updatesStamped, keys,
-                schemaMode)
-            val kept = existingAligned.join(
-              updates.select(keys.map(updates(_)): _*), keys, "left_anti")
-            kept.unionByName(updatesAligned)
-              .write.mode(SaveMode.Overwrite).parquet(dir)
-        }
+          }
+        case Some(m) =>
+          val existing = posMaskedSnapshot(spark, root,
+            flatView(m.version, m.segments))
+          val (existingAligned, updatesAligned) =
+            MergeWriter.alignSchemas(existing, updatesStamped, keys,
+              schemaMode)
+          if (keysDisjoint(root, ranges)) {
+            // add-only: no committed row is replaced; the pinned pos
+            // version still guards a racing merge-on-read insert
+            val (v, folded) = commitAdded(spark, root, m, updatesAligned,
+              schemaMode == MergeWriter.SchemaMode.SyncAllColumns,
+              keepVersions, validate)
+            foldedPosVersion = folded
+            v
+          } else {
+            val batchKeys = updates.select(keys.map(updates(_)): _*)
+            foldedPosVersion = pinnedPos
+            commit(root, keepVersions, expected, validate) { dir =>
+              existingAligned.join(batchKeys, keys, "left_anti")
+                .unionByName(updatesAligned)
+                .write.mode(SaveMode.Overwrite).parquet(dir)
+            }
+          }
       }
     }
     val v = retryThenEscalate(Paths.get(root), maxRetries)(once())
@@ -1606,13 +1675,87 @@ object VersionedTable {
     v
   }
 
+  /** The batch's [min, max] per key column it can bound (integral,
+    * date and timestamp keys); None where every batch value is null (a
+    * null key matches no row). A batch that is a plain parquet scan —
+    * the staged batch of a SQL or streaming write — is bounded from its
+    * files' footers with no job; any other batch by one aggregate.
+    */
+  private def keyRanges(batch: DataFrame, keys: Seq[String])
+      : Seq[(String, Option[(Any, Any)])] =
+    parquetScanFiles(batch) match {
+      case Some(files) =>
+        val stats = files.map(footerStats).filter(_.rows > 0)
+        keys.filter(k => stats.forall(_.cols.contains(k))).map { k =>
+          k -> (if (stats.isEmpty) None
+                else Some((stats.map(_.cols(k)._1).min,
+                  stats.map(_.cols(k)._2).max)))
+        }
+      case None =>
+        import org.apache.spark.sql.types._
+        val ranged = keys.filter(k => batch.schema(k).dataType match {
+          case ByteType | ShortType | IntegerType | LongType | DateType |
+               TimestampType => true
+          case _ => false
+        })
+        if (ranged.isEmpty) Nil
+        else {
+          val aggs = ranged.flatMap(k => Seq(min(batch(k)), max(batch(k))))
+          val r = batch.agg(aggs.head, aggs.tail: _*).head()
+          ranged.zipWithIndex.map { case (k, i) =>
+            k -> Option(r.get(2 * i)).map(_ -> r.get(2 * i + 1))
+          }
+        }
+    }
+
+  /** The files of `df` when its analyzed plan is one local parquet scan. */
+  private def parquetScanFiles(df: DataFrame): Option[Seq[Path]] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation
+            if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          scala.util.Try(fs.location.inputFiles.toSeq
+            .map(f => Paths.get(java.net.URI.create(f)))).toOption
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
+  /** Footer-stats proof that no live row of flat table `root` shares a
+    * key with a batch whose key ranges are `ranges`: some key column's
+    * batch range overlaps no live file's bounds — the scan planner's
+    * own skip rule ([[pruneDecision]]), so no job reads the table.
+    * Nothing is proved while a merge-on-read sub-table exists (its
+    * post-images live in no base file) or a column rename is recorded
+    * (a pre-rename file's stats are keyed by its physical names). A
+    * false answer only costs a whole rewrite.
+    */
+  private def keysDisjoint(root: String,
+                           ranges: => Seq[(String, Option[(Any, Any)])])
+      : Boolean =
+    readManifest(posDeletesRoot(root)).isEmpty &&
+      columnRenames(root).isEmpty &&
+      ranges.exists {
+        case (_, None) => true
+        case (k, Some((lo, hi))) =>
+          pruneDecision(root, Seq(
+            org.apache.spark.sql.sources.GreaterThanOrEqual(k, lo),
+            org.apache.spark.sql.sources.LessThanOrEqual(k, hi)))
+            .filesScanned == 0
+      }
+
   /** APPEND (no keying): new version = live snapshot ∪ batch, exact
     * duplicates preserved — the ingest shape for event/log tables
     * where rows have no natural key. Strict schema (use [[upsert]]
     * with SyncAllColumns to evolve). Appended rows carry the new
     * commit's write sequence, so equality-delete masks from older
-    * commits never hide them; pending position deletes are folded
-    * like every rewrite.
+    * commits never hide them. The batch becomes a new segment and the
+    * live segments carry by reference, with the pending deletes and
+    * post-images that address them — O(batch) writes (see
+    * [[commitAdded]]).
     */
   def append(spark: SparkSession, root: String, batch: DataFrame,
              keepVersions: Int = 2, maxRetries: Int = 10,
@@ -1638,21 +1781,18 @@ object VersionedTable {
       preV = base.map(_.version).getOrElse(0L)
       val next = base.map(_.version + 1).getOrElse(1L)
       val stamped = b.withColumn(SeqCol, lit(next))
-      foldedPosVersion = posVersion(root)
-      commit(root, keepVersions,
-        expectedBase = Some(base.map(_.version).getOrElse(0L)),
-        validate = requirePosVersion(root, foldedPosVersion, "append")) { dir =>
-        base match {
-          case None =>
+      base match {
+        case None =>
+          foldedPosVersion = 0L
+          commit(root, keepVersions, expectedBase = Some(0L)) { dir =>
             stamped.write.mode(SaveMode.Overwrite).parquet(dir)
-          case Some(_) =>
-            // SyncAllColumns = the ALTER ADD COLUMNS / drifting-batch
-            // shape: either side's missing columns null-fill
-            posMaskedSnapshot(spark, root, liveView(root))
-              .unionByName(stamped, allowMissingColumns =
-                schemaMode == MergeWriter.SchemaMode.SyncAllColumns)
-              .write.mode(SaveMode.Overwrite).parquet(dir)
-        }
+          }
+        case Some(m) =>
+          val (v, folded) = commitAdded(spark, root, m, stamped,
+            schemaMode == MergeWriter.SchemaMode.SyncAllColumns,
+            keepVersions, () => ())
+          foldedPosVersion = folded
+          v
       }
     }
     val v = retryThenEscalate(Paths.get(root), maxRetries)(once())
@@ -1661,6 +1801,39 @@ object VersionedTable {
     v
     } finally if (foldEligible)
       org.apache.spark.sql.graft.SqlShims.unpersistCheckpointed(b)
+  }
+
+  /** An add-only flat commit on live manifest `base`: `stamped` (rows
+    * carrying this commit's write sequence) becomes a new segment and
+    * every live segment carries by reference — pending position
+    * deletes and post-images keep addressing the segments they name,
+    * so nothing folds. A snapshot already at [[MaxFlatSegments]]
+    * instead rewrites whole: the pos-masked snapshot plus `stamped`
+    * into one dir (stamps kept), folding pending position deletes.
+    * `sync` lets either side's missing columns null-fill (the ALTER
+    * ADD COLUMNS / drifting-batch shape); the union is analysed on
+    * both paths, so the schema rule is the same. `validate` runs
+    * inside the commit lock. Returns (version, the pos version folded
+    * — 0 when nothing folded, else the caller resets the set).
+    */
+  private def commitAdded(spark: SparkSession, root: String,
+                          base: Manifest, stamped: DataFrame,
+                          sync: Boolean, keepVersions: Int,
+                          validate: () => Unit): (Long, Long) = {
+    val pinnedPos = posVersion(root)
+    val whole = posMaskedSnapshot(spark, root,
+      flatView(base.version, base.segments))
+      .unionByName(stamped, allowMissingColumns = sync)
+    if (base.segments.size < MaxFlatSegments)
+      (commit(root, keepVersions, Some(base.version), validate,
+        carry = base.segments) { dir =>
+        stamped.write.mode(SaveMode.Overwrite).parquet(dir)
+      }, 0L)
+    else
+      (commit(root, keepVersions, Some(base.version), () => {
+        validate(); requirePosVersion(root, pinnedPos, "append")()
+      }) { dir => whole.write.mode(SaveMode.Overwrite).parquet(dir) },
+        pinnedPos)
   }
 
   /** True when `_column_stats.json` exists and is stamped at the
@@ -1967,12 +2140,13 @@ object VersionedTable {
     * layout changes. The data rewrite commits FIRST; a reader
     * interleaving between the two flips sees the rewritten data plus
     * the not-yet-cleared delete set, whose masked rows are already
-    * absent, so no anomaly window exists. Both folds read through the
-    * position-delete fold and keep every surviving row's stamp, so a
+    * absent, so no anomaly window exists. The fold reads through the
+    * position-delete fold and keeps every surviving row's stamp, so a
     * stale entry left by a lost reset race cannot re-mask a row that
-    * out-sequences it. A flat table rewrites whole; a partitioned one
-    * rewrites only the partitions holding a row the sequence rule
-    * masks. Returns the data version after the fold.
+    * out-sequences it. Only the segments (flat) or partitions
+    * (partitioned) holding a row the sequence rule masks rewrite;
+    * nothing commits when no row is masked, and an empty delete set is
+    * not reset again. Returns the data version after the fold.
     */
   def vacuumDeletes(spark: SparkSession, root: String,
                     keyCols: Seq[String], keepVersions: Int = 2,
@@ -1982,7 +2156,6 @@ object VersionedTable {
     // AFTER the retried section, so a retryable failure in a reset can
     // never re-run (and re-commit) the already-committed fold
     var foldedDeletesVersion: Option[Long] = None
-    var foldedPosVersion = 0L
     def once(): Long = {
       // pin the data view (the fold's commit CAS-checks it) and the
       // delete-set version (the reset CAS-checks it, so a softDelete
@@ -1990,21 +2163,17 @@ object VersionedTable {
       // fold reads either
       val v = liveView(root)
       foldedDeletesVersion = readManifest(dr).map(_.version)
-      if (isFlat(v)) {
-        // the whole-table rewrite stales every position entry: reset
-        // them below, like every flat rewrite
-        foldedPosVersion = posVersion(root)
-        foldFlatEqDeletes(spark, root, v, keyCols, foldedPosVersion,
-          keepVersions)
-      } else foldPartitionEqDeletes(spark, root, v, keyCols)
+        .filterNot(_ => readLive(spark, dr).limit(1).isEmpty)
+      if (foldedDeletesVersion.isEmpty) v.version
+      else foldEqDeletes(spark, root, v, keyCols, keepVersions)
     }
     val v = retryThenEscalate(Paths.get(root), maxRetries)(once())
-    // resets OUTSIDE the retried section: the fold is committed; losing
-    // a reset (racing delete's CAS win, or its own pinned read pruned)
-    // only leaves already-folded entries behind, which the sequence
-    // stamps and the position entries' liveness keep harmless — never
-    // worth re-folding for
-    resetPosDeletes(spark, root, foldedPosVersion, keepVersions)
+    // the reset runs OUTSIDE the retried section: the fold is
+    // committed; losing a reset (racing delete's CAS win, or its own
+    // pinned read pruned) only leaves already-folded entries behind,
+    // which the sequence stamps keep harmless — never worth re-folding
+    // for. Position entries of rewritten segments or partitions go
+    // stale with their dirs and are reaped at the next pos fold.
     foldedDeletesVersion.foreach { dv =>
       try {
         val empty = readLive(spark, dr).limit(0)
@@ -2019,31 +2188,42 @@ object VersionedTable {
     v
   }
 
-  /** [[vacuumDeletes]]' flat fold: the whole snapshot through both
-    * masks into one new version dir.
+  /** [[vacuumDeletes]]' fold, either table form: only the segments
+    * (flat) or partitions (partitioned) holding a row the sequence rule
+    * masks rewrite, through the position-delete fold of exactly those
+    * leaves (a restricted view restricts the pending post-images too);
+    * every other leaf keeps its dir — a flat commit carries the
+    * untouched segments by reference. Returns the view's version when
+    * nothing is masked (a key upserted again after its delete rewrites
+    * nothing).
     */
-  private def foldFlatEqDeletes(spark: SparkSession, root: String,
-                                v: PartitionedManifest,
-                                keyCols: Seq[String],
-                                foldedPosVersion: Long,
-                                keepVersions: Int): Long = {
-    val folded = applyEqMaskSequenced(spark, root,
-      posMaskedSnapshot(spark, root, v), Some(keyCols))
-    commit(root, keepVersions, expectedBase = Some(v.version),
-      validate = requirePosVersion(root, foldedPosVersion, "vacuum")) {
-      dir => folded.write.mode(SaveMode.Overwrite).parquet(dir)
-    }
-  }
-
-  /** [[vacuumDeletes]]' partitioned fold: only partitions holding a
-    * row the sequence rule masks rewrite (a key upserted again after
-    * its delete rewrites nothing); every other partition keeps its
-    * pinned dir. Returns the view's version when nothing is masked.
-    */
-  private def foldPartitionEqDeletes(spark: SparkSession, root: String,
-                                     m: PartitionedManifest,
-                                     keyCols: Seq[String]): Long = {
+  private def foldEqDeletes(spark: SparkSession, root: String,
+                            m: PartitionedManifest,
+                            keyCols: Seq[String],
+                            keepVersions: Int): Long = {
     val pinnedPos = posVersion(root)
+    val validate = requirePosVersion(root, pinnedPos, "vacuum")
+    if (isFlat(m)) {
+      // each row tagged with the segment whose fold carries it
+      val segs = m.partitions.values.toSeq.sorted
+      val tagged = segs.map(d =>
+        posMaskedSnapshot(spark, root,
+          m.copy(partitions = m.partitions.filter(_._2 == d)))
+          .withColumn(SegCol, lit(d)))
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+      val judged = withDelSeq(spark, root, tagged, Some(keyCols))
+        .getOrElse(return m.version)
+      val touched = judged.filter(eqMasked).select(SegCol).distinct()
+        .collect().map(_.getString(0)).toSet
+      if (touched.isEmpty) return m.version
+      val folded = judged
+        .filter(col(SegCol).isin(touched.toSeq: _*) && !eqMasked)
+        .drop(DelSeqCol, SegCol)
+      return commit(root, keepVersions, Some(m.version), validate,
+        carry = segs.filterNot(touched)) { dir =>
+        folded.write.mode(SaveMode.Overwrite).parquet(dir)
+      }
+    }
     // fold through the pos-delete mask too: this rewrite supersedes
     // the touched partitions' files
     val base = posMaskedSnapshot(spark, root, m)
@@ -2064,8 +2244,11 @@ object VersionedTable {
       .drop(DelSeqCol)
     replacePartitioned(spark, root, folded, m.partitionColumns,
       covered = coveredRel, expectedBase = Some(m.version),
-      validate = requirePosVersion(root, pinnedPos, "rewrite"))
+      validate = validate)
   }
+
+  /** The segment tag of [[foldEqDeletes]]' flat judgement. */
+  private val SegCol = "__graft_segment"
 
   // ------------------------------------------------------------------
   // POSITION deletes (Iceberg v2's second delete flavor): entries are
@@ -2155,28 +2338,27 @@ object VersionedTable {
   // ------------------------------------------------------------------
   // The SNAPSHOT VIEW: every position-delete and merge-on-read verb
   // reads the table through one shape, a [[PartitionedManifest]]. A
-  // partitioned table is its manifest; a flat table is a one-leaf view
-  // with no partition columns whose only key "" maps to the live
-  // version dir — a read-side view, nothing on disk changes.
+  // partitioned table is its manifest; a flat table is a view with no
+  // partition columns and one leaf per segment, keyed by the segment
+  // dir's own name — a read-side view, nothing on disk changes.
   // `partitionColumns.isEmpty` is the only test of table form. Both
   // forms carry the write-sequence stamp and share ONE equality-delete
-  // rule ([[applyEqMaskSequenced]]); the rules that really differ
-  // between the forms are each chosen in ONE place below:
+  // rule ([[applyEqMaskSequenced]]) and one entry-liveness rule: a
+  // delete entry is live while its first path segment is a dir the
+  // view maps, a post-image while its qualifier is a leaf of the view
+  // ([[viewLeaf]]). The rules that really differ between the forms are
+  // each chosen in ONE place below:
   //   - the parquet read ([[readDir]]: flat goes through the schema
   //     memo; partitioned reads typed leaves);
-  //   - entry liveness: a flat entry is live while its path lies under
-  //     the live dir at any depth (a flat version dir may hold
-  //     Hive-style subdirs); a partitioned delete entry while its first
-  //     segment is a live dir, a partitioned append while its
-  //     `dir/key` qualifier is still mapped;
+  //   - the leaf path ([[viewLeaf]]: the segment dir itself, or
+  //     `dir/key`);
   //   - the post-image qualifier ([[postImageQualifier]]).
   // ------------------------------------------------------------------
 
   /** The snapshot view of `root`: live, or as of `version` (time
-    * travel — a partitioned history entry, else the flat version dir,
-    * validated loudly by [[flatVersionPath]]). A flat table reads as
-    * `PartitionedManifest(version, Nil, Map("" -> liveDir))`. None when
-    * the table has never committed.
+    * travel — a partitioned history entry, else the flat segment
+    * list, validated loudly by [[flatVersionDirs]]). None when the
+    * table has never committed.
     */
   private[graft] def snapshotView(root: String,
                                   version: Option[Long] = None)
@@ -2184,12 +2366,18 @@ object VersionedTable {
     version match {
       case None =>
         readPartitionedManifest(root).orElse(readManifest(root).map(m =>
-          PartitionedManifest(m.version, Nil, Map("" -> m.live))))
+          flatView(m.version, m.segments)))
       case Some(v) =>
         historyPartitionedManifest(root, v).orElse(Some(
-          PartitionedManifest(v, Nil,
-            Map("" -> flatVersionPath(root, v).getFileName.toString))))
+          flatView(v, flatVersionDirs(root, v))))
     }
+
+  /** A flat snapshot as a view: one leaf per segment, keyed by the
+    * segment dir's name.
+    */
+  private def flatView(version: Long,
+                       segments: Seq[String]): PartitionedManifest =
+    PartitionedManifest(version, Nil, segments.map(d => d -> d).toMap)
 
   private def liveView(root: String): PartitionedManifest =
     snapshotView(root).getOrElse(throw new IllegalStateException(
@@ -2198,8 +2386,12 @@ object VersionedTable {
   private def isFlat(v: PartitionedManifest): Boolean =
     v.partitionColumns.isEmpty
 
-  /** A flat view's live version dir. */
-  private def flatDir(v: PartitionedManifest): String = v.partitions("")
+  /** The root-relative path of the view's leaf `key` mapped to `dir`:
+    * a flat segment is its whole dir, a partition `dir/key`.
+    */
+  private[graft] def viewLeaf(v: PartitionedManifest, key: String,
+                              dir: String): String =
+    if (isFlat(v)) dir else s"$dir/$key"
 
   /** The path minus its last segment — a sub-table entry's qualifier. */
   private[graft] def dirOf(path: Column): Column =
@@ -2227,7 +2419,9 @@ object VersionedTable {
     }
   }
 
-  /** Every version dir the view maps, read whole, dirs sorted. */
+  /** Every version dir the view maps, read whole, dirs sorted — at
+    * most [[MaxFlatSegments]] on a flat view.
+    */
   private[graft] def dirFrames(spark: SparkSession, root: String,
                                v: PartitionedManifest)
       : Seq[(String, DataFrame)] =
@@ -2268,11 +2462,11 @@ object VersionedTable {
 
   /** Live MoR-append entries of the view: entry keys
     * ([[PdPathCol]]/[[PdPosCol]]), the post-image's write sequence as
-    * [[SeqCol]] and its data columns. An append is live when its
-    * qualifier is the flat live dir, or — partitioned — when the
-    * manifest STILL maps its qualifying partition key to its
-    * qualifying version dir (a rewrite of that partition folded and
-    * staled it). `committedBy` keeps only entries the sub-table
+    * [[SeqCol]] and its data columns. An append is live while its
+    * qualifier is still a leaf of the view: a flat segment the
+    * snapshot lists, or a partition key the manifest STILL maps to the
+    * qualifying version dir (a rewrite of that segment or partition
+    * folded and staled it). `committedBy` keeps only entries the sub-table
     * committed at-or-before that sub-table version. None when the
     * sub-table is absent or carries no data columns (pure position
     * deletes). The MAIN table's column renames normalize the data
@@ -2291,21 +2485,15 @@ object VersionedTable {
         .filterNot(c => MorReservedCols.contains(c) || c == SeqCol).toSeq
       if (dataCols.isEmpty) None
       else Some {
-        val live =
-          if (isFlat(v))
-            all.filter(col(PdPathCol).startsWith(flatDir(v) + "/" + MorMarker))
-          else {
-            import spark.implicits._
-            // live qualifiers come straight from the manifest
-            // (driver-side, |partitions|-bounded, broadcast into the
-            // join)
-            val liveQuals = v.partitions.toSeq.sorted
-              .map { case (k, d) => s"$d/$k" }.toDF("__graft_mor_qual")
-            all.filter(isMorAppendPath)
-              .withColumn("__graft_mor_qual", dirOf(col(PdPathCol)))
-              .join(org.apache.spark.sql.functions.broadcast(liveQuals),
-                Seq("__graft_mor_qual"))
-          }
+        import spark.implicits._
+        // live qualifiers come straight from the view (driver-side,
+        // |leaves|-bounded, broadcast into the join)
+        val liveQuals = v.partitions.toSeq.sorted
+          .map { case (k, d) => viewLeaf(v, k, d) }.toDF("__graft_mor_qual")
+        val live = all.filter(isMorAppendPath)
+          .withColumn("__graft_mor_qual", dirOf(col(PdPathCol)))
+          .join(org.apache.spark.sql.functions.broadcast(liveQuals),
+            Seq("__graft_mor_qual"))
         val seq =
           if (all.columns.contains(PdSeqCol)) coalesce(col(PdSeqCol), lit(0L))
           else lit(0L)
@@ -2325,15 +2513,16 @@ object VersionedTable {
     liveMorAppendEntries(spark, root, v).map(a => applyEqMaskSequenced(
       spark, root, a.drop(PdPathCol, PdPosCol)).drop(SeqCol))
 
-  /** Qualifier of a MoR post-image that stays where its source row
-    * lives: the live dir on a flat view (never "the address minus its
-    * file" — a flat version dir may hold Hive-style subdirs), the
-    * source address minus its file segment (`<dir>/<partitionKey>`)
-    * on a partitioned one.
+  /** Qualifier of a MoR post-image: on a flat view the NEWEST
+    * segment, whatever row it replaces (never "the address minus its
+    * file" — a flat version dir may hold Hive-style subdirs — and
+    * defined for inserted rows, which have no address); on a
+    * partitioned one the source address minus its file segment
+    * (`<dir>/<partitionKey>`), where the source row lives.
     */
   private[graft] def postImageQualifier(v: PartitionedManifest,
                                         addrPath: Column): Column =
-    if (isFlat(v)) lit(flatDir(v)) else dirOf(addrPath)
+    if (isFlat(v)) lit(v.partitions.values.max) else dirOf(addrPath)
 
   /** The OBSERVABLE live snapshot with every row's merge-on-read
     * address attached — the identification read a MoR UPDATE/MERGE
@@ -2485,19 +2674,17 @@ object VersionedTable {
   }
 
   /** Pos-delete entries that can address a file of the view, as
-    * address columns: on a flat view the path lies under the live dir,
-    * on a partitioned one its first segment is a dir the manifest
-    * still maps. None when no delete ever committed.
+    * address columns: the entry's first path segment is a dir the view
+    * still maps (a flat segment, or a partitioned manifest's dir).
+    * None when no delete ever committed.
     */
   private def livePosDeleteEntries(spark: SparkSession, root: String,
                                    v: PartitionedManifest)
       : Option[DataFrame] =
     readManifest(posDeletesRoot(root)).map { _ =>
       readLive(spark, posDeletesRoot(root))
-        .filter(
-          if (isFlat(v)) col(PdPathCol).startsWith(flatDir(v) + "/")
-          else expr(s"substring_index($PdPathCol, '/', 1)")
-            .isin(v.partitions.values.toSeq.distinct: _*))
+        .filter(expr(s"substring_index($PdPathCol, '/', 1)")
+          .isin(v.partitions.values.toSeq.distinct: _*))
         .select(col(PdPathCol).as(AddrPathCol), col(PdPosCol).as(AddrPosCol))
     }
 
@@ -2678,15 +2865,17 @@ object VersionedTable {
     readManifest(posDeletesRoot(root)) match {
       case None => (0L, 0L)
       case Some(_) =>
-        // liveness mirrors the read path, by the view's form: flat =
-        // under the live dir; partitioned = the entry's
-        // "<dir>/<partitionKey>" qualifier still mapped
+        // liveness by the view's form: flat = the entry's first
+        // segment is a listed segment (a flat dir may hold Hive-style
+        // subdirs); partitioned = its "<dir>/<partitionKey>" qualifier
+        // still mapped
         val isLive: Column = snapshotView(root) match {
           case Some(v) if !isFlat(v) =>
             dirOf(col(PdPathCol)).isin(
-              v.partitions.toSeq.map { case (k, d) => s"$d/$k" }: _*)
+              v.partitions.toSeq.map { case (k, d) => viewLeaf(v, k, d) }: _*)
           case v =>
-            col(PdPathCol).startsWith(v.map(flatDir).getOrElse("") + "/")
+            expr(s"substring_index($PdPathCol, '/', 1)").isin(
+              v.toSeq.flatMap(_.partitions.values): _*)
         }
         val all = readLive(spark, posDeletesRoot(root))
         val r = all.agg(
@@ -2780,16 +2969,17 @@ object VersionedTable {
     (v, rewritten)
   }
 
-  /** [[vacuumPosDeletes]]' flat fold: one new version dir, untouched
-    * files byte-copied while the dir stays schema-uniform. Returns
-    * (new version, files rewritten).
+  /** [[vacuumPosDeletes]]' flat fold: the whole snapshot — every
+    * segment — into one new version dir, untouched files byte-copied
+    * while the dir stays schema-uniform. Returns (new version, files
+    * rewritten).
     */
   private def foldFlatPosDeletes(spark: SparkSession, root: String,
                                  v: PartitionedManifest,
                                  foldedPosVersion: Long,
                                  keepVersions: Int): (Long, Int) = {
-    val live = flatDir(v)
-    val dirP = Paths.get(root).resolve(live)
+    val rootP = Paths.get(root)
+    val segs = v.partitions.values.toSeq.sorted
     // distinct delete-carrying paths: bounded by live file count —
     // the same O(|files|) metadata the manifest itself is. Append
     // entries (synthetic `_append_` paths) address no file — they
@@ -2804,45 +2994,60 @@ object VersionedTable {
           .collect().map(_.getString(0)).toSet
       }
     val pendingAppends = liveMorAppendEntries(spark, root, v)
-    val allPre = dataFilesUnder(dirP)
+    // (segment, file) for every live data file; a file's address is
+    // its segment-qualified path
+    val allPre: Seq[(String, Path)] = segs.flatMap(seg =>
+      dataFilesUnder(rootP.resolve(seg)).map(seg -> _))
+    def qualify(seg: String, f: Path): String =
+      seg + "/" + rootP.resolve(seg).relativize(f).toString
+        .replace('\\', '/')
     // a partitionBy layout can't mix dir-encoded and column-encoded
     // partition values in one version dir, so a selective rewrite
     // (flat survivor files beside untouched partition dirs) would
     // break partition discovery — fall back to rewriting everything
     // (partition values survive as data columns via the basePath
     // read); flat layouts get the real only-touched-files rewrite
-    val flatLayout =
-      allPre.forall(f => !dirP.relativize(f).toString.contains("/"))
+    val flatLayout = allPre.forall { case (seg, f) =>
+      f.getParent == rootP.resolve(seg) }
     // Byte-copies are sound only while the new dir stays SCHEMA-
     // UNIFORM: reads infer from ONE footer (no mergeSchema), so a
     // copied file whose physical columns differ from the rewritten
     // survivors' / materialized post-images' (a rename event, a
-    // SeqCol-less legacy file, prior ADD COLUMNS) would have a
-    // whole generation's columns silently null out after the fold
-    // (ColumnMappingSpec's vacuum-after-RENAME read caught this).
-    // Probe PER-FILE footers for intra-set uniformity first (a
-    // single-footer set inference over a mixed set would itself miss
-    // the heterogeneity — a raw-committed legacy dir or a
-    // mergeSchema-era fold can mix generations INSIDE one dir), then
-    // the untouched set's (name, type) set against what the rewrites
-    // will write; any mismatch ⇒ rewrite everything.
-    def qualifyPre(f: Path): String =
-      live + "/" + dirP.relativize(f).toString.replace('\\', '/')
-    val untouchedPre = allPre.filterNot(f => touched(qualifyPre(f)))
-    val touchedPre = allPre.filter(f => touched(qualifyPre(f)))
+    // SeqCol-less legacy file, prior ADD COLUMNS, a segment appended
+    // with a drifting schema) would have a whole generation's columns
+    // silently null out after the fold (ColumnMappingSpec's
+    // vacuum-after-RENAME read caught this). Probe PER-FILE footers
+    // for intra-set uniformity first (a single-footer set inference
+    // over a mixed set would itself miss the heterogeneity — a
+    // raw-committed legacy dir or a mergeSchema-era fold can mix
+    // generations INSIDE one dir), then the untouched set's (name,
+    // type) set against what the rewrites will write; any mismatch ⇒
+    // rewrite everything.
+    val (touchedPre, untouchedPre) =
+      allPre.partition { case (seg, f) => touched(qualify(seg, f)) }
+    // one frame over (segment, files) pairs: a read per segment
+    def read(files: Seq[(String, Path)],
+             mixed: Boolean): DataFrame =
+      files.groupBy(_._1).toSeq.sortBy(_._1).map { case (seg, fs) =>
+        val dirP = rootP.resolve(seg)
+        val paths = fs.map(_._2.toString)
+        if (!mixed) memoFilesParquet(spark, dirP, paths)
+        else spark.read.option("mergeSchema", "true")
+          .option("basePath", dirP.toString).parquet(paths: _*)
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
     val uniformCopies = flatLayout && {
       untouchedPre.isEmpty || {
-        footersUniform(untouchedPre) && footersUniform(touchedPre) && {
+        footersUniform(untouchedPre.map(_._2)) &&
+          footersUniform(touchedPre.map(_._2)) && {
           def names(s: org.apache.spark.sql.types.StructType) =
             s.filterNot(_.name == SeqCol)
               .map(f => (f.name, f.dataType)).toSet
-          val untouchedSchema = memoFilesParquet(spark, dirP,
-            untouchedPre.map(_.toString)).schema
+          // a uniform set's schema is any one member's
+          val untouchedSchema = read(untouchedPre.take(1), false).schema
           val rawNames = names(untouchedSchema)
           val survivorsOk = touchedPre.isEmpty ||
             names(normalizeRenames(root, stampDefaulted(
-              memoFilesParquet(spark, dirP,
-                touchedPre.map(_.toString)))).schema) == rawNames
+              read(touchedPre.take(1), false))).schema) == rawNames
           val morOk = pendingAppends.forall(a =>
             names(a.drop(PdPathCol, PdPosCol).schema) == rawNames)
           // SeqCol exemption (a missing/null sequence reads as 0 by
@@ -2864,8 +3069,7 @@ object VersionedTable {
           val seqOk =
             untouchedSchema.exists(_.name == SeqCol) || {
               val touchedZero = touchedPre.isEmpty || maxStampZero(
-                stampDefaulted(memoFilesParquet(spark, dirP,
-                  touchedPre.map(_.toString))))
+                stampDefaulted(read(touchedPre, false)))
               val morZero = pendingAppends.forall(a =>
                 a.limit(1).isEmpty || maxStampZero(a))
               touchedZero && morZero
@@ -2874,37 +3078,26 @@ object VersionedTable {
         }
       }
     }
-    // The rewrite read below infers from one footer too: over an
-    // internally MIXED set it must merge every footer instead
+    // The rewrite read below infers from one footer per segment too:
+    // over an internally MIXED set it must merge every footer instead
     // (once-per-fold planning cost on a rare shape), or a whole
     // generation's columns would silently null out of the rewrite.
-    val mixedRewriteRead =
-      if (uniformCopies) !footersUniform(touchedPre)
-      else !footersUniform(allPre)
-    val rewritten = if (uniformCopies) touched.size else allPre.size
+    val toRewrite = if (uniformCopies) touchedPre else allPre
+    val mixedRewriteRead = toRewrite.groupBy(_._1).values
+      .exists(fs => !footersUniform(fs.map(_._2)))
     val version = commit(root, keepVersions,
       expectedBase = Some(v.version),
       validate = requirePosVersion(root, foldedPosVersion, "vacuum")) { dir =>
       val out = Paths.get(dir)
       Files.createDirectories(out)
-      val all = dataFilesUnder(dirP)
-      def qualify(f: Path): String =
-        live + "/" + dirP.relativize(f).toString.replace('\\', '/')
-      def mustRewrite(f: Path): Boolean =
-        !uniformCopies || touched(qualify(f))
-      all.filterNot(mustRewrite).foreach { f =>
+      if (uniformCopies) untouchedPre.foreach { case (_, f) =>
         Files.copy(f, out.resolve(f.getFileName.toString))
       }
-      val touchedFiles = all.filter(mustRewrite)
-      def rewriteRead(files: Seq[Path]): DataFrame =
-        if (!mixedRewriteRead)
-          memoFilesParquet(spark, dirP, files.map(_.toString))
-        else spark.read.option("mergeSchema", "true")
-          .option("basePath", dirP.toString)
-          .parquet(files.map(_.toString): _*)
-      if (touchedFiles.nonEmpty) {
+      if (toRewrite.nonEmpty) {
         val masked = unionDirs(root,
-          Seq(live -> rewriteRead(touchedFiles)), addressed = true)
+          toRewrite.groupBy(_._1).toSeq.sortBy(_._1).map { case (seg, fs) =>
+            seg -> read(fs, mixedRewriteRead)
+          }, addressed = true)
         // None only on a uniformity-forced full rewrite with no
         // sub-table at all — nothing to mask then
         val survivors = livePosDeleteEntries(spark, root, v) match {
@@ -2933,7 +3126,7 @@ object VersionedTable {
         deleteRecursively(rw)
       }
     }
-    (version, rewritten)
+    (version, toRewrite.size)
   }
 
   // ------------------------------------------------------------------
@@ -3707,6 +3900,29 @@ object VersionedTable {
     v
   }
 
+  /** Row-level ADD-ONLY commit, FLAT form (a MERGE whose only effect
+    * is inserts): `rows` become a new segment stamped like
+    * [[rewriteLive]]'s, every live row stays where it is (see
+    * [[commitAdded]]). CAS'd on the same three versions as
+    * [[rewriteLive]]. One attempt — conflicts throw.
+    */
+  def appendLive(spark: SparkSession, root: String, rows: DataFrame,
+                 expectedVersion: Long, expectedPosVersion: Long,
+                 expectedEqVersion: Long, keepVersions: Int = 2): Long = {
+    requireNoReservedColumns(rows.columns,
+      s"row-level insert into $root", Seq(SeqCol, AddrPathCol, AddrPosCol))
+    enforceConstraints(root, rows)
+    val m = readManifest(root).filter(_.version == expectedVersion)
+      .getOrElse(throw new ConcurrentCommitException(
+        s"$root moved past v$expectedVersion — re-read and retry"))
+    val (v, folded) = commitAdded(spark, root, m,
+      rows.withColumn(SeqCol, lit(expectedVersion + 1)), sync = false,
+      keepVersions, requireDeleteVersions(root, expectedPosVersion,
+        expectedEqVersion))
+    resetPosDeletes(spark, root, folded, keepVersions)
+    v
+  }
+
   /** Row-level COW rewrite, PARTITIONED form: the partitions named in
     * `covered` are vacated and `replacement` (their full new content,
     * written at the manifest's spec depth, restamped like
@@ -4437,7 +4653,7 @@ object VersionedTable {
       val verDir = rootP.resolve(dn)
       val stats = readStatsSidecar(verDir)
       parts.keys.foreach { k =>
-        dataFilesUnder(verDir.resolve(k)).foreach { f =>
+        dataFilesUnder(rootP.resolve(viewLeaf(m, k, dn))).foreach { f =>
           val rel = verDir.relativize(f).toString.replace('\\', '/')
           stats.get(rel) match {
             case Some(st) => out += st
@@ -4646,7 +4862,15 @@ object VersionedTable {
     require(columns.nonEmpty, "addBloomSidecar needs at least one column")
     val m = readManifest(root).getOrElse(throw new IllegalStateException(
       s"no _manifest.json under $root"))
-    val dirP = Paths.get(root).resolve(m.live)
+    m.segments.foreach(seg =>
+      addBloomSidecarToDir(spark, Paths.get(root), seg, columns, bits))
+  }
+
+  /** [[addBloomSidecar]] for one flat segment dir. */
+  private def addBloomSidecarToDir(spark: SparkSession, rootP: Path,
+                                   seg: String, columns: Seq[String],
+                                   bits: Int): Unit = {
+    val dirP = rootP.resolve(seg)
     val files = dataFilesUnder(dirP)
     if (files.isEmpty) return
     graft.functions.GraftFunctions.ensureRegistered(spark)
@@ -4656,7 +4880,7 @@ object VersionedTable {
     // characters
     val src = spark.read.option("basePath", dirP.toString)
       .parquet(files.map(_.toString): _*)
-      .select(expr(s"substring_index(_metadata.file_path, '/${m.live}/', -1)")
+      .select(expr(s"substring_index(_metadata.file_path, '/$seg/', -1)")
         .as("_graft_file") +:
         columns.map(c => xxhash64(col(c)).as(s"_graft_h_$c")): _*)
     val aggs = columns.map(c =>

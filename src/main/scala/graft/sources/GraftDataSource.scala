@@ -749,12 +749,14 @@ private[graft] object GraftScanPlanner {
             val m = fm.getOrElse(return spark.emptyDataset[
               (String, String, Long, Option[Long])].toDF(
               "partition", "file", "bytes", "row_count"))
-            val dirP = rootP.resolve(m.live)
-            val stats = VersionedTable.readStatsSidecar(dirP)
-            VersionedTable.dataFilesUnder(dirP).map { f =>
-              val rel = dirP.relativize(f).toString.replace('\\', '/')
-              (null: String, s"${m.live}/$rel", Files.size(f),
-                stats.get(rel).map(_.rows))
+            m.segments.flatMap { seg =>
+              val dirP = rootP.resolve(seg)
+              val stats = VersionedTable.readStatsSidecar(dirP)
+              VersionedTable.dataFilesUnder(dirP).map { f =>
+                val rel = dirP.relativize(f).toString.replace('\\', '/')
+                (null: String, s"$seg/$rel", Files.size(f),
+                  stats.get(rel).map(_.rows))
+              }
             }
         }
         rows.toDF("partition", "file", "bytes", "row_count")
@@ -775,8 +777,9 @@ private[graft] object GraftScanPlanner {
                 (k, dn, fs.size.toLong, fs.map(Files.size(_)).sum, rc)
               }
             case None =>
-              fm.toSeq.map { m =>
-                val dirP = rootP.resolve(m.live)
+              // one synthetic root row per flat segment
+              fm.toSeq.flatMap(_.segments).map { seg =>
+                val dirP = rootP.resolve(seg)
                 val stats = VersionedTable.readStatsSidecar(dirP)
                 val fs = VersionedTable.dataFilesUnder(dirP)
                 val rels = fs.map(f => dirP.relativize(f).toString
@@ -785,7 +788,7 @@ private[graft] object GraftScanPlanner {
                   if (rels.forall(stats.contains))
                     Some(rels.map(stats(_).rows).sum)
                   else None
-                (null: String, m.live, fs.size.toLong,
+                (null: String, seg, fs.size.toLong,
                   fs.map(Files.size(_)).sum, rc)
               }
           }
@@ -903,6 +906,8 @@ private[graft] object GraftScanPlanner {
     val rootP = Paths.get(o.root)
     def bytesUnder(dir: Path): Long =
       VersionedTable.dataFilesUnder(dir).map(Files.size(_)).sum
+    def segmentBytes(base: Path, segs: Seq[String]): Long =
+      segs.map(d => bytesUnder(base.resolve(d))).sum
     // pending merge-on-read post-images add size a live read will
     // produce beyond the base files: count the sub-table's live dir
     // (an over-count — it also holds delete entries — but statistics
@@ -912,7 +917,7 @@ private[graft] object GraftScanPlanner {
       val pos = VersionedTable.posDeletesRoot(o.root)
       if (o.versionAsOf.isDefined) 0L
       else VersionedTable.readManifest(pos)
-        .map(pm => bytesUnder(Paths.get(pos).resolve(pm.live)))
+        .map(pm => segmentBytes(Paths.get(pos), pm.segments))
         .getOrElse(0L)
     }
     val pm = o.versionAsOf match {
@@ -927,12 +932,13 @@ private[graft] object GraftScanPlanner {
       case None =>
         o.versionAsOf match {
           case Some(v) =>
-            val dir = rootP.resolve(VersionedTable.versionDirName(v))
-            if (Files.isDirectory(dir)) Some(bytesUnder(dir)) else None
+            // never committed or pruned: unknowable
+            scala.util.Try(VersionedTable.flatVersionDirs(o.root, v))
+              .toOption.map(segmentBytes(rootP, _))
           case None =>
             VersionedTable.readManifest(o.root) match {
               case Some(m) =>
-                Some(bytesUnder(rootP.resolve(m.live)) + morBytes)
+                Some(segmentBytes(rootP, m.segments) + morBytes)
               case None => if (o.emptyOk) Some(0L) else None
             }
         }
@@ -1048,7 +1054,8 @@ private[graft] object GraftScanPlanner {
           VersionedTable.readBloomSidecar(rootP.resolve(d))).toMap
     val files = selected.toSeq.sortBy(_._1).flatMap { case (k, dn) =>
       val verDir = rootP.resolve(dn)
-      VersionedTable.dataFilesUnder(verDir.resolve(k)).map { f =>
+      VersionedTable.dataFilesUnder(
+        rootP.resolve(VersionedTable.viewLeaf(m, k, dn))).map { f =>
         val rel = verDir.relativize(f).toString.replace('\\', '/')
         val keep = filters.forall(fl => statsSurvive(
           statsByDir(dn).get(rel).map(fs =>

@@ -111,7 +111,7 @@ class ColumnMappingSpec extends SparkSpec {
     // whole generation's values. The uniformity probe forces a full
     // rewrite here — every file of the folded dir carries `cents`.
     val (_, rewritten) = VersionedTable.vacuumPosDeletes(spark, root)
-    val live = VersionedTable.readManifest(root).get.live
+    val live = VersionedTable.readManifest(root).get.segments.last
     val foldedFiles = Files.list(
         java.nio.file.Paths.get(root).resolve(live))
       .iterator()

@@ -50,7 +50,7 @@ class DoubleStatsSpec extends SparkSpec {
       clean.unionByName(poison).repartitionByRange(3, col("x")),
       Seq("id"))
     val live = Paths.get(root)
-      .resolve(VersionedTable.readManifest(root).get.live)
+      .resolve(VersionedTable.readManifest(root).get.segments.last)
     val stats = VersionedTable.readStatsSidecar(live)
     // exactly the NaN-holding file must lack an x bound
     val unbounded = stats.values.filter(!_.dbls.contains("x")).toSeq

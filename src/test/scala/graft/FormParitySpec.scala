@@ -58,7 +58,7 @@ class FormParitySpec extends SparkSpec {
       }
       val m = VersionedTable.readManifest(root).get
       assert(Files.isDirectory(
-        java.nio.file.Paths.get(root, m.live, "g=g1")))
+        java.nio.file.Paths.get(root, m.segments.last, "g=g1")))
     }
     root
   }

@@ -211,7 +211,7 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(d.filesScanned === d.filesTotal,
       s"decimal pruned: ${d.filesScanned}/${d.filesTotal}")
     val live = java.nio.file.Paths.get(root)
-      .resolve(VersionedTable.readManifest(root).get.live)
+      .resolve(VersionedTable.readManifest(root).get.segments.last)
     assert(VersionedTable.readStatsSidecar(live)
       .values.forall(fs => !fs.cols.contains("dec")))
     // float: 0.7f is representable only in binary — equality through

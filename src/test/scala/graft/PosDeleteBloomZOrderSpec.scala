@@ -71,7 +71,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
       .count() === 1L)
     // no sidecar → full scan, identical result
     val m = VersionedTable.readManifest(root).get
-    Files.delete(Paths.get(root).resolve(m.live).resolve("_bloom.json"))
+    Files.delete(Paths.get(root).resolve(m.segments.last).resolve("_bloom.json"))
     val (legacy, _) = files(VersionedTable.pruneDecision(root, probe))
     assert(legacy === 8)
   }
@@ -101,7 +101,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     assert(VersionedTable.posDeleteEntryCounts(spark, root)._1 === 10L)
     // vacuum: only the one delete-carrying file rewrites
     val mBefore = VersionedTable.readManifest(root).get
-    val dirBefore = Paths.get(root).resolve(mBefore.live)
+    val dirBefore = Paths.get(root).resolve(mBefore.segments.last)
     val bytesBefore = Files.list(dirBefore).toArray.map(_.toString)
       .filter(_.endsWith(".parquet"))
       .map(p => Paths.get(p).getFileName.toString ->
@@ -110,7 +110,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     assert(rewritten === 1, s"expected 1 of 4 files rewritten, got $rewritten")
     val mAfter = VersionedTable.readManifest(root).get
     assert(mAfter.version === v2)
-    val dirAfter = Paths.get(root).resolve(mAfter.live)
+    val dirAfter = Paths.get(root).resolve(mAfter.segments.last)
     val after = Files.list(dirAfter).toArray.map(_.toString)
       .filter(_.endsWith(".parquet"))
       .map(p => Paths.get(p).getFileName.toString ->
@@ -135,10 +135,10 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     VersionedTable.compact(spark, root, 2)
     assert(VersionedTable.readLive(spark, root).count() === 90L)
     assert(VersionedTable.posDeleteEntryCounts(spark, root)._1 === 0L)
-    // upsert folds too
+    // a rewriting upsert (it replaces key 99) folds too
     VersionedTable.softDeletePos(spark, root, col("id") === 50L)
     VersionedTable.upsert(spark, root,
-      Seq((200L, "new")).toDF("id", "v"), Seq("id"))
+      Seq((200L, "new"), (99L, "v99")).toDF("id", "v"), Seq("id"))
     val ids = VersionedTable.readLive(spark, root)
       .select("id").as[Long].collect().toSet
     assert(!ids.contains(50L) && ids.contains(200L) && ids.size === 90)
@@ -225,7 +225,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
         .write.parquet(dir)
     }
     val m = VersionedTable.readManifest(root).get
-    val statsP = Paths.get(root).resolve(m.live).resolve("_stats.json")
+    val statsP = Paths.get(root).resolve(m.segments.last).resolve("_stats.json")
     val lines = new String(Files.readAllBytes(statsP), "UTF-8")
       .split("\n").filter(_.nonEmpty)
     assert(lines.length === 4)
@@ -241,7 +241,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
       lines(0).substring(0, j) + "\\u12Z" + lines(0).substring(j))
     Files.write(statsP, corrupted.mkString("\n").getBytes("UTF-8"))
     val stats = VersionedTable.readStatsSidecar(
-      Paths.get(root).resolve(m.live))
+      Paths.get(root).resolve(m.segments.last))
     assert(stats.size === 3, "the corrupt line must drop out")
     val (sc1, t1) =
       files(VersionedTable.pruneDecision(root, between("id", 90L, 99L)))
@@ -537,9 +537,12 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
   test("setRef refuses to tag a retention-pruned version: a tag must " +
     "pin a READABLE snapshot, never reclaimed storage") {
     val root = tmpRoot()
+    // each batch re-upserts key 1, so every commit after the first
+    // rewrites the whole snapshot
     (1 to 3).foreach { i =>
       VersionedTable.upsert(spark, root,
-        Seq((i.toLong, i.toLong)).toDF("id", "v"), Seq("id"))
+        Seq((1L, 1L), (i.toLong, i.toLong)).distinct.toDF("id", "v"),
+        Seq("id"))
     } // keepVersions=2 → v1's data dir is pruned, history entry stays
     assert(!VersionedTable.versions(root).contains(1L))
     val e = intercept[IllegalStateException] {
@@ -598,7 +601,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     plant(rootP.resolve("_staging-dead").resolve("f.parquet"))
     plant(rootP.resolve("_manifest.json.tmp7"))
     plant(rootP.resolve("v00000042").resolve("f.parquet"))
-    val live = rootP.resolve(VersionedTable.readManifest(root).get.live)
+    val live = rootP.resolve(VersionedTable.readManifest(root).get.segments.last)
     plant(live.resolve("_rw").resolve("f.parquet"))
     // a LONG grace period protects everything just planted
     assert(VersionedTable.removeOrphans(root, 3600000L) === ((0, 0, 0, 0)))

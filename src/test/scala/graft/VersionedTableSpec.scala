@@ -327,7 +327,7 @@ class VersionedTableSpec extends SparkSpec {
       rows.toDF("fid", "v", "s").write.partitionBy("fid").parquet(dir)
     }
     val m = VersionedTable.readManifest(root).get
-    val verDir = Paths.get(root).resolve(m.live)
+    val verDir = Paths.get(root).resolve(m.segments.last)
     val stats = VersionedTable.readStatsSidecar(verDir)
     assert(stats.size === 4, s"expected 4 file entries: $stats")
     assert(stats.values.forall(_.cols.contains("v")))
@@ -372,7 +372,7 @@ class VersionedTableSpec extends SparkSpec {
       rows.toDF("fid", "s", "longs").write.partitionBy("fid").parquet(dir)
     }
     val m = VersionedTable.readManifest(root).get
-    val verDir = Paths.get(root).resolve(m.live)
+    val verDir = Paths.get(root).resolve(m.segments.last)
     val stats = VersionedTable.readStatsSidecar(verDir)
     assert(stats.size === 4 && stats.values.forall(_.strs.contains("s")))
     // truncation really happened for the long column
@@ -418,7 +418,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.countLive(root).get ===
       VersionedTable.readLive(spark, root).count())
     val m = VersionedTable.readManifest(root).get
-    Files.delete(Paths.get(root).resolve(m.live).resolve("_stats.json"))
+    Files.delete(Paths.get(root).resolve(m.segments.last).resolve("_stats.json"))
     assert(VersionedTable.countLive(root) === None)
   }
 
@@ -434,7 +434,7 @@ class VersionedTableSpec extends SparkSpec {
       Seq(5L, 6L, 7L).toDF("id"), Seq("id"))
     def liveFiles(): Int = {
       val m = VersionedTable.readManifest(root).get
-      Files.walk(Paths.get(root).resolve(m.live)).filter(p =>
+      Files.walk(Paths.get(root).resolve(m.segments.last)).filter(p =>
         p.getFileName.toString.endsWith(".parquet")).count().toInt
     }
     assert(liveFiles() === 8)
@@ -487,8 +487,12 @@ class VersionedTableSpec extends SparkSpec {
 
   test("retention keeps exactly live + predecessor versions") {
     val root = tmpRoot()
+    // each batch re-upserts key 1, so every commit after the first
+    // replaces a row and rewrites the whole snapshot (a key-disjoint
+    // batch would add a segment instead)
     (1 to 4).foreach(i => VersionedTable.upsert(spark, root,
-      Seq((i.toLong, s"r$i")).toDF("id", "v"), Seq("id")))
+      Seq((1L, "r1"), (i.toLong, s"r$i")).distinct.toDF("id", "v"),
+      Seq("id")))
     val dirs = Files.list(Paths.get(root)).toArray.map(_.toString)
       .filter(_.matches(".*v\\d{8}$")).sorted
       .map(d => d.substring(d.length - 9)).toSeq

@@ -30,7 +30,11 @@ class VersionedTableStressSpec extends SparkSpec {
     val nWriters = 8
     val opsPerWriter = 10
     val keysPerWriter = 10
-    val dataCommits = new java.util.concurrent.atomic.AtomicInteger(0)
+    // the version each upsert / vacuum returned
+    val upsertVersions =
+      new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val vacuumVersions =
+      new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val errors =
       new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     // per-writer serial model: key -> live value after its own ops
@@ -48,9 +52,9 @@ class VersionedTableStressSpec extends SparkSpec {
               val ks = Vector.fill(1 + rnd.nextInt(3))(
                 myKeys(rnd.nextInt(keysPerWriter))).distinct
               val rows = ks.map(k => (k, s"w${w}s$step"))
-              VersionedTable.upsert(spark, root, rows.toDF("id", "v"),
-                Seq("id"), keepVersions = keep, maxRetries = 30)
-              dataCommits.incrementAndGet()
+              upsertVersions.add(VersionedTable.upsert(spark, root,
+                rows.toDF("id", "v"), Seq("id"), keepVersions = keep,
+                maxRetries = 30))
               rows.foreach { case (k, v) => models(w)(k) = v }
             } else if (r < 9) { // softDelete 1-2 of my keys
               val ks = Vector.fill(1 + rnd.nextInt(2))(
@@ -59,9 +63,8 @@ class VersionedTableStressSpec extends SparkSpec {
                 Seq("id"), keepVersions = keep, maxRetries = 30)
               ks.foreach(models(w).remove)
             } else { // vacuum: logical identity, physical fold
-              VersionedTable.vacuumDeletes(spark, root, Seq("id"),
-                keepVersions = keep, maxRetries = 30)
-              dataCommits.incrementAndGet()
+              vacuumVersions.add(VersionedTable.vacuumDeletes(spark, root,
+                Seq("id"), keepVersions = keep, maxRetries = 30))
             }
           }
         } catch { case t: Throwable => errors.add(t) }
@@ -79,10 +82,15 @@ class VersionedTableStressSpec extends SparkSpec {
         s"extra=${got.keySet -- expected.keySet} " +
         s"changed=${expected.collect { case (k, v)
           if got.get(k).exists(_ != v) => k -> (v, got(k)) }}")
-    // history is linear: one version per successful data commit
-    // (seed + every upsert + every vacuum), CAS retries create none
-    assert(VersionedTable.readManifest(root).get.version ===
-      1L + dataCommits.get())
+    // history is linear: every version is the commit of the seed, of
+    // exactly one upsert or of a vacuum that folded something (a vacuum
+    // with nothing masked commits nothing and returns the version it
+    // read), so CAS retries create none
+    import scala.jdk.CollectionConverters._
+    val ups = upsertVersions.asScala.toSeq
+    assert(ups.distinct.size === ups.size)
+    assert((ups ++ vacuumVersions.asScala :+ 1L).toSet ===
+      (1L to VersionedTable.readManifest(root).get.version).toSet)
   }
 
   test("8 partitioned writers converge: cross-partition interleaving " +
