@@ -167,40 +167,16 @@ object Graft {
   /** Keyed upsert committed through manifest indirection: concurrent
     * readers always see a complete snapshot (the parquet-native
     * alternative to [[upsert]]'s dir swap when readers overlap
-    * writers).
+    * writers). Either table form: `partitionBy` shapes the first
+    * commit (Nil = flat); later commits follow the table's manifest —
+    * see [[sinks.VersionedTable.upsert]]. Read it back with
+    * [[readTable]] / [[readTableVersion]].
     */
   def versionedUpsert(spark: org.apache.spark.sql.SparkSession,
                       root: String, updates: DataFrame,
-                      keys: Seq[String]): Long =
-    sinks.VersionedTable.upsert(spark, root, updates, keys)
-
-  /** Live snapshot of a manifest-committed table. */
-  def readVersioned(spark: org.apache.spark.sql.SparkSession,
-                    root: String): DataFrame =
-    sinks.VersionedTable.readLive(spark, root)
-
-  /** Partitioned manifest-committed upsert: only touched partitions
-    * rewrite; readers see complete snapshots across the flip.
-    */
-  def versionedUpsertPartitioned(spark: org.apache.spark.sql.SparkSession,
-                                 root: String, updates: DataFrame,
-                                 keys: Seq[String],
-                                 partitionColumns: Seq[String],
-                                 keepManifests: Int = 2): Long =
-    sinks.VersionedTable.upsertPartitioned(spark, root, updates, keys,
-      partitionColumns, keepManifests = keepManifests)
-
-  /** Live snapshot of a partitioned manifest-committed table. */
-  def readVersionedPartitioned(spark: org.apache.spark.sql.SparkSession,
-                               root: String): DataFrame =
-    sinks.VersionedTable.readLivePartitioned(spark, root)
-
-  /** Time-travel read of a partitioned table version — see
-    * [[sinks.VersionedTable.readPartitionedVersion]].
-    */
-  def readVersionedPartitionedAt(spark: org.apache.spark.sql.SparkSession,
-                                 root: String, version: Long): DataFrame =
-    sinks.VersionedTable.readPartitionedVersion(spark, root, version)
+                      keys: Seq[String],
+                      partitionBy: Seq[String] = Nil): Long =
+    sinks.VersionedTable.upsert(spark, root, updates, keys, partitionBy)
 
   /** Keyed added/removed/changed/same diff of two retained versions —
     * see [[sinks.VersionedTable.diffVersions]].
@@ -217,11 +193,6 @@ object Graft {
   def softDeleteByPosition(spark: SparkSession, root: String,
                            predicate: org.apache.spark.sql.Column): Long =
     sinks.VersionedTable.softDeletePos(spark, root, predicate)
-
-  /** Live snapshot minus position deletes (merge-on-read). */
-  def readWithPositionDeletes(spark: SparkSession,
-                              root: String): DataFrame =
-    sinks.VersionedTable.readLiveWithPosDeletes(spark, root)
 
   /** Fold position deletes, rewriting ONLY delete-carrying files
     * (flat) or partitions (partitioned) — returns (version, files or
@@ -270,20 +241,13 @@ object Graft {
     sinks.VersionedTable.compactPartitionsSorted(spark, root, sortCols,
       bucketsPerPartition)
 
-  /** Build per-file bloom sidecars for equality point lookups —
-    * unpartitioned tables.
+  /** Build per-file bloom sidecars for equality point lookups,
+    * either table form.
     */
   def addBloomSkipping(spark: SparkSession, root: String,
                        columns: Seq[String],
                        bits: Int = 1 << 16): Unit =
     sinks.VersionedTable.addBloomSidecar(spark, root, columns, bits)
-
-  /** Partitioned flavor of [[addBloomSkipping]]. */
-  def addBloomSkippingPartitioned(spark: SparkSession, root: String,
-                                  columns: Seq[String],
-                                  bits: Int = 1 << 16): Unit =
-    sinks.VersionedTable.addBloomSidecarPartitioned(spark, root,
-      columns, bits)
 
   /** Reap crashed writers' leftovers (staging dirs, flip temps,
     * never-flipped version dirs, vacuum scratch) — returns the four
@@ -299,9 +263,8 @@ object Graft {
     */
   def overwritePartitions(spark: SparkSession, root: String,
                           df: DataFrame,
-                          partitionColumns: Seq[String]): Long =
-    sinks.VersionedTable.overwritePartitions(spark, root, df,
-      partitionColumns)
+                          partitionBy: Seq[String] = Nil): Long =
+    sinks.VersionedTable.overwritePartitions(spark, root, df, partitionBy)
 
   /** Predicate backfill (replaceWhere): matching rows replaced by
     * `replacement` in one CAS-committed rewrite.
@@ -329,10 +292,9 @@ object Graft {
     */
   def streamUpsertWriter(spark: SparkSession, root: String,
                          keys: Seq[String],
-                         partitionColumns: Seq[String] = Seq.empty)
+                         partitionBy: Seq[String] = Nil)
       : (DataFrame, Long) => Unit =
-    sinks.VersionedTable.streamUpsertWriter(spark, root, keys,
-      partitionColumns)
+    sinks.VersionedTable.streamUpsertWriter(spark, root, keys, partitionBy)
 
   /** Name a committed snapshot; the tag PINS retention. */
   def tag(root: String, name: String, version: Long): Unit =
@@ -342,14 +304,9 @@ object Graft {
   def dropTag(root: String, name: String): Unit =
     sinks.VersionedTable.dropRef(root, name)
 
-  /** Read the snapshot a tag names (unpartitioned). */
+  /** Read the snapshot a tag names through the DSv2 `ref` option. */
   def readTag(spark: SparkSession, root: String, name: String): DataFrame =
-    sinks.VersionedTable.readRef(spark, root, name)
-
-  /** Read the snapshot a tag names (partitioned). */
-  def readTagPartitioned(spark: SparkSession, root: String,
-                         name: String): DataFrame =
-    sinks.VersionedTable.readPartitionedRef(spark, root, name)
+    spark.read.format("graft").option("ref", name).load(root)
 
   /** Add one epoch of documents to a persisted near-dup index (builds
     * the index if `root` is empty): per-ingest work scales with the
@@ -461,16 +418,13 @@ object Graft {
                  tNum: Long = 1, tDen: Long = 5): DataFrame =
     operators.Privacy.tCloseness(df, qi, vbCol, m, tNum, tDen)
 
-  /** Merge-on-read soft delete / read / vacuum, either table form —
-    * see [[sinks.VersionedTable.softDelete]].
+  /** Merge-on-read soft delete / vacuum, either table form — see
+    * [[sinks.VersionedTable.softDelete]]; [[readTable]] reads through
+    * the delete set.
     */
   def softDelete(spark: SparkSession, root: String, keys: DataFrame,
                  keyCols: Seq[String]): Long =
     sinks.VersionedTable.softDelete(spark, root, keys, keyCols)
-
-  def readWithDeletes(spark: SparkSession, root: String,
-                      keyCols: Seq[String]): DataFrame =
-    sinks.VersionedTable.readLiveWithDeletes(spark, root, keyCols)
 
   def vacuumDeletes(spark: SparkSession, root: String,
                     keyCols: Seq[String]): Long =

@@ -4112,7 +4112,7 @@ object SparkEntry {
     // q243's transaction-time reproducibility on the PARTITIONED
     // store: two keyed-merge commits into a dt-partitioned
     // VersionedTable (dt a function of the merge keys), then BOTH
-    // snapshots reassembled through readPartitionedVersion — each
+    // snapshots reassembled through readVersion — each
     // commit's history entry pins the full partition→dir map, so
     // "what did the Jan-15 report say" replays exactly even though
     // the second commit rewrote some of the same partitions.
@@ -4126,11 +4126,11 @@ object SparkEntry {
         .groupBy("cohort", "day")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
         .withColumn("dt", (col("cohort") % 2).cast("string"))
-      vt.upsertPartitioned(s, work, daily("2024-01-15"),
-        Seq("dt", "cohort", "day"), Seq("dt"), keepManifests = 3)
-      vt.upsertPartitioned(s, work, daily("2024-01-31"),
-        Seq("dt", "cohort", "day"), Seq("dt"), keepManifests = 3)
-      def asOf(v: Long) = vt.readPartitionedVersion(s, work, v)
+      vt.upsert(s, work, daily("2024-01-15"),
+        Seq("dt", "cohort", "day"), Seq("dt"), keepVersions = 3)
+      vt.upsert(s, work, daily("2024-01-31"),
+        Seq("dt", "cohort", "day"), Seq("dt"), keepVersions = 3)
+      def asOf(v: Long) = vt.readVersion(s, work, v)
         .where(col("day").between(lit("2024-01-10"), lit("2024-01-20")))
         .groupBy("cohort")
         .agg(sum("n").as("n_events"), sum("sum_cents").as("sum_cents"))
@@ -4155,10 +4155,10 @@ object SparkEntry {
       def daily(src: DataFrame) = src.groupBy("cohort", "day")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
         .withColumn("dt", (col("cohort") % 2).cast("string"))
-      vt.upsertPartitioned(s, work, daily(ev.filter(col("event_id") % 2 === 0)),
-        Seq("dt", "cohort", "day"), Seq("dt"), keepManifests = 3)
-      vt.upsertPartitioned(s, work, daily(ev),
-        Seq("dt", "cohort", "day"), Seq("dt"), keepManifests = 3)
+      vt.upsert(s, work, daily(ev.filter(col("event_id") % 2 === 0)),
+        Seq("dt", "cohort", "day"), Seq("dt"), keepVersions = 3)
+      vt.upsert(s, work, daily(ev),
+        Seq("dt", "cohort", "day"), Seq("dt"), keepVersions = 3)
       vt.diffVersions(s, work, 1L, 2L, Seq("dt", "cohort", "day"))
         .groupBy("cohort")
         .agg(sum(when(col("status") === "added", 1L).otherwise(0L))
@@ -4184,8 +4184,8 @@ object SparkEntry {
       val work = graft.core.ScratchDirs.fresh("q285_pd").toString
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
-      vt.upsertPartitioned(s, work, docs, Seq("doc_id"), Seq("source"),
-        keepManifests = 3)
+      vt.upsert(s, work, docs, Seq("doc_id"), Seq("source"),
+        keepVersions = 3)
       vt.softDelete(s, work,
         docs.where(col("doc_id") % 13 === 0 &&
           col("source").isin("src3", "src7")).select("doc_id"),
@@ -4503,7 +4503,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .repartitionByRange(8, col("doc_id"))
-      vt.upsertPartitioned(s, work, docs, Seq("doc_id"), Seq("source"))
+      vt.upsert(s, work, docs, Seq("doc_id"), Seq("source"))
       val (lo, hi) = (100L, 220L)
       val probe = EqualTo("source", "src5") +: between("doc_id", lo, hi)
       val dec = vt.pruneDecision(work, probe)
@@ -4537,7 +4537,7 @@ object SparkEntry {
       val ev = Tables.events(s, d).select(col("event_id"),
         round(col("value") * 100).cast("long").as("cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      vt.upsertPartitioned(s, work, ev, Seq("event_id"), Seq("day"))
+      vt.upsert(s, work, ev, Seq("event_id"), Seq("day"))
       val (lo, hi) = (200L, 299L)
       val dec = vt.pruneDecision(work, between("event_id", lo, hi))
       val (pScan, pTotal, fScan, fTotal) = (dec.partitionsScanned,
@@ -4631,7 +4631,7 @@ object SparkEntry {
 
     // Exactly-once streaming ingest into a PARTITIONED VersionedTable
     // (q215's twin on the partitioned store): file-stream micro-
-    // batches land via upsertPartitioned — only the touched event_type
+    // batches land via a partitioned upsert — only the touched event_type
     // partitions rewrite per batch, untouched partitions keep their
     // pinned dirs — and a simulated at-least-once REDELIVERY of batch
     // 0 is absorbed by the keyed merge (same rows, new no-op version).
@@ -4658,8 +4658,8 @@ object SparkEntry {
       val ev = Tables.events(s, d).select(col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"),
         round(col("value") * 100).cast("long").as("cents"))
-      vt.upsertPartitioned(s, work, ev, Seq("event_id"), Seq("day"),
-        keepManifests = 10)
+      vt.upsert(s, work, ev, Seq("event_id"), Seq("day"),
+        keepVersions = 10)
       val d0 = ev.agg(min("day")).head.getString(0)
       val d1 = ev.agg(max("day")).head.getString(0)
       vt.softDeletePos(s, work,
@@ -4668,14 +4668,14 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           min("event_id").as("min_eid"), max("event_id").as("max_eid"))
         .head
-      vt.upsertPartitioned(s, work,
+      vt.upsert(s, work,
         Seq((-1L, d1, 77L)).toDF("event_id", "day", "cents"),
-        Seq("event_id"), Seq("day"), keepManifests = 10)
+        Seq("event_id"), Seq("day"), keepVersions = 10)
       val (_, rewrittenParts) =
         vt.vacuumPosDeletes(s, work)
       val m = vt.readPartitionedManifest(work).get
       val untouched = m.partitions.values.count(_ == "v00000001").toLong
-      val fin = vt.readLivePartitioned(s, work)
+      val fin = vt.readLive(s, work)
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           min("event_id").as("min_eid"), max("event_id").as("max_eid"))
       fin.select(lit("final").as("part"), col("n"), col("sum_cents"),
@@ -4714,11 +4714,11 @@ object SparkEntry {
       val d0 = ev.agg(min("day")).head.getString(0)
       val d1 = ev.agg(max("day")).head.getString(0)
       // evolution commit: migrate d0 to (day, event_type), cents+5
-      vt.upsertPartitioned(s, work,
+      vt.upsert(s, work,
         ev.filter(col("day") === d0)
           .select(col("event_id"), col("day"), col("event_type"),
             (col("cents") + 5).as("cents")),
-        Seq("event_id"), Seq("day", "event_type"), keepManifests = 10)
+        Seq("event_id"), Seq("day", "event_type"), keepVersions = 10)
       // position deletes in the UNMIGRATED day d1
       vt.softDeletePos(s, work,
         col("day") === d1 && col("cents") % 3 === 0)
@@ -4731,7 +4731,7 @@ object SparkEntry {
       val childrenD1 = m.partitions.keySet
         .count(_.startsWith(s"day=$d1/")).toLong
       val untouched = m.partitions.values.count(_ == "v00000001").toLong
-      val fin = vt.readLivePartitioned(s, work)
+      val fin = vt.readLive(s, work)
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           min("event_id").as("min_eid"), max("event_id").as("max_eid"))
       fin.select(lit("final").as("part"), col("n"), col("sum_cents"),
@@ -4906,10 +4906,10 @@ object SparkEntry {
       val work = graft.core.ScratchDirs.fresh("q322").toString
       val ev = Tables.events(s, d).select(col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      vt.upsertPartitioned(s, work,
+      vt.upsert(s, work,
         ev.filter(col("event_id") % 2 === 1), Seq("event_id"),
         Seq("day"))
-      vt.upsertPartitioned(s, work,
+      vt.upsert(s, work,
         ev.filter(col("event_id") % 2 === 0), Seq("event_id"),
         Seq("day"))
       vt.setRef(work, "stable", 1L)
@@ -4951,7 +4951,7 @@ object SparkEntry {
         date_format(col("ts"), "yyyy-MM-dd").as("day"),
         round(col("value") * 100).cast("long").as("cents"))
       vt.upsert(s, rootA, ev.select("event_id", "cents"), Seq("event_id"))
-      vt.upsertPartitioned(s, rootB, ev, Seq("event_id"), Seq("day"))
+      vt.upsert(s, rootB, ev, Seq("event_id"), Seq("day"))
       def countVia(root: String): (Long, Long) = {
         val q = s.read.format("graft").load(root).agg(count(lit(1)))
         val n = q.head.getLong(0)
@@ -5033,18 +5033,18 @@ object SparkEntry {
         .parquet(src)
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.sinks.VersionedTable.upsertPartitioned(s, root, batch,
-            keys = Seq("event_id"), partitionColumns = Seq("event_type"))
+          graft.sinks.VersionedTable.upsert(s, root, batch,
+            keys = Seq("event_id"), partitionBy = Seq("event_type"))
           if (id == 0) // at-least-once redelivery of the first batch
-            graft.sinks.VersionedTable.upsertPartitioned(s, root, batch,
-              keys = Seq("event_id"), partitionColumns = Seq("event_type"))
+            graft.sinks.VersionedTable.upsert(s, root, batch,
+              keys = Seq("event_id"), partitionBy = Seq("event_type"))
           ()
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
       val m = graft.sinks.VersionedTable.readPartitionedManifest(root).get
-      graft.sinks.VersionedTable.readLivePartitioned(s, root)
+      graft.sinks.VersionedTable.readLive(s, root)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           countDistinct(col("event_id")).as("n_ids"),
@@ -5103,7 +5103,7 @@ object SparkEntry {
       val work = graft.core.ScratchDirs.fresh("q300_pc").toString
       val ev = Tables.events(s, d).select(col("event_id"), col("event_type"))
         .repartition(6, col("event_id"))
-      vt.upsertPartitioned(s, work, ev, Seq("event_id"), Seq("event_type"))
+      vt.upsert(s, work, ev, Seq("event_id"), Seq("event_type"))
       def liveFiles(): Long = {
         val m = vt.readPartitionedManifest(work).get
         m.partitions.toSeq.map { case (k, dn) =>
@@ -5116,7 +5116,7 @@ object SparkEntry {
       val before = liveFiles()
       val (v2, rewritten) = vt.compactPartitions(s, work)
       val after = liveFiles()
-      vt.readLivePartitioned(s, work)
+      vt.readLive(s, work)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           countDistinct(col("event_id")).as("n_ids"),
@@ -5143,8 +5143,8 @@ object SparkEntry {
         round(col("value") * 100).cast("long").as("cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
         .repartition(4, col("event_id"))
-      vt.upsertPartitioned(s, work, ev, Seq("event_id"), Seq("day"),
-        keepManifests = 4)
+      vt.upsert(s, work, ev, Seq("event_id"), Seq("day"),
+        keepVersions = 4)
       vt.softDelete(s, work,
         ev.where(col("event_id") < 40L).select("event_id"),
         Seq("event_id"))
@@ -5204,7 +5204,7 @@ object SparkEntry {
         round(col("value") * 100).cast("long").as("cents"),
         date_format(col("ts"), "yyyy-MM").as("day"))
         .repartition(4, col("event_id"))
-      vt.upsertPartitioned(s, work, ev, Seq("event_id"), Seq("day"))
+      vt.upsert(s, work, ev, Seq("event_id"), Seq("day"))
       val (lo, hi) = (1000L, 2000L)
       val fb = vt.pruneDecision(work, between("cents", lo, hi))
         .filesScanned
@@ -5238,8 +5238,8 @@ object SparkEntry {
         ((col("event_id") * 2654435761L) % 100000L).as("k"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
         .repartition(4, col("event_id"))
-      vt.upsertPartitioned(s, work, ev, Seq("event_id"), Seq("day"))
-      vt.addBloomSidecarPartitioned(s, work, Seq("k"), bits = 1 << 17)
+      vt.upsert(s, work, ev, Seq("event_id"), Seq("day"))
+      vt.addBloomSidecar(s, work, Seq("k"), bits = 1 << 17)
       val probe = 777L * 2654435761L % 100000L
       val absent = -12345L
       val pDec = vt.pruneDecision(work, Seq(EqualTo("k", probe)))
@@ -5311,14 +5311,14 @@ object SparkEntry {
       val ev = Tables.events(s, d).select(col("event_id"),
         round(col("value") * 100).cast("long").as("cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      vt.upsertPartitioned(s, work, ev, Seq("event_id"), Seq("day"))
+      vt.upsert(s, work, ev, Seq("event_id"), Seq("day"))
       val redo = Seq("2024-01-02", "2024-01-04")
       val backfill = ev.where(col("day").isin(redo: _*))
         .withColumn("cents", col("cents") * 10)
       val v2 = vt.overwritePartitions(s, work, backfill, Seq("day"))
       val m = vt.readPartitionedManifest(work).get
       val flipped = m.partitions.values.count(_ == f"v$v2%08d").toLong
-      vt.readLivePartitioned(s, work)
+      vt.readLive(s, work)
         .groupBy("day")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           min("event_id").as("min_eid"))
@@ -5406,12 +5406,12 @@ object SparkEntry {
         .select(col("doc_id"), col("n_chars"),
           lpad((col("doc_id") % 7).cast("string"), 2, "0").as("pad"))
         .repartition(4, col("doc_id"))
-      vt.upsertPartitioned(s, work, docs, Seq("doc_id"), Seq("pad"))
+      vt.upsert(s, work, docs, Seq("doc_id"), Seq("pad"))
       val (_, rewritten) = vt.compactPartitions(s, work)
       val keys = vt.readPartitionedManifest(work).get.partitions.keySet
       val expected = (0 until 7).map(i => f"pad=$i%02d").toSet
       val keysOk = if (keys == expected) 1L else 0L
-      vt.readLivePartitioned(s, work)
+      vt.readLive(s, work)
         .groupBy("pad")
         .agg(count(lit(1)).as("n"), sum("n_chars").as("sum_chars"),
           min("doc_id").as("min_did"))
@@ -5679,14 +5679,14 @@ object SparkEntry {
         date_format(col("ts"), "yyyy-MM-dd").as("day"),
         col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
-      vt.upsertPartitioned(s, work, ev, Seq("event_id"), Seq("day"),
-        keepManifests = 10)
+      vt.upsert(s, work, ev, Seq("event_id"), Seq("day"),
+        keepVersions = 10)
       val d0 = ev.agg(min("day")).head.getString(0)
       val upd = ev.filter(col("day") === d0)
         .select(col("event_id"), col("day"), col("event_type"),
           (col("cents") + 5).as("cents"))
-      vt.upsertPartitioned(s, work, upd, Seq("event_id"),
-        Seq("day", "event_type"), keepManifests = 10)
+      vt.upsert(s, work, upd, Seq("event_id"),
+        Seq("day", "event_type"), keepVersions = 10)
       val m = vt.readPartitionedManifest(work).get
       val keys = m.partitions.keySet
       val nTypes = ev.filter(col("day") === d0)
@@ -5695,12 +5695,12 @@ object SparkEntry {
         keys.count(_.startsWith(s"day=$d0/")) == nTypes &&
         vt.historyPartitionedManifest(work, 1L)
           .exists(_.partitionColumns == Seq("day"))
-      val v1n = vt.readPartitionedVersion(s, work, 1L).count()
+      val v1n = vt.readVersion(s, work, 1L).count()
       val probe = EqualTo("day", d0) +: between("event_id", 0L, Long.MaxValue)
       val dec = vt.pruneDecision(work, probe)
       val (pSel, pTot) = (dec.partitionsScanned, dec.partitionsTotal)
       val pruned = vt.readLivePruned(s, work, probe)
-      val plain = vt.readLivePartitioned(s, work)
+      val plain = vt.readLive(s, work)
         .filter(col("day") === d0)
       val contentOk = pruned.agg(count(lit(1)), sum("cents")).head ==
         plain.agg(count(lit(1)), sum("cents")).head

@@ -179,18 +179,18 @@ object NearDupIndex {
       .shingleRows(docs, textCol, idCol, params.shingleSize)
       .localCheckpoint(true) // shingles feed both tables — compute once
     val epochLit = lit(epoch).as("epoch")
-    // keepManifests = 4: a snapshot-pinned probe stays valid across
+    // keepVersions = 4: a snapshot-pinned probe stays valid across
     // THREE further ingests (see probe's snapshot-lifetime contract),
     // at the cost of a few extra epoch dirs on disk
-    VersionedTable.upsertPartitioned(spark, gramsRoot(root),
+    VersionedTable.upsert(spark, gramsRoot(root),
       grams.select(epochLit, col("id"), col("g"), col("n_sh")),
-      keys = Seq("epoch", "id", "g"), partitionColumns = Seq("epoch"),
-      keepManifests = 4)
-    VersionedTable.upsertPartitioned(spark, bandsRoot(root),
+      keys = Seq("epoch", "id", "g"), partitionBy = Seq("epoch"),
+      keepVersions = 4)
+    VersionedTable.upsert(spark, bandsRoot(root),
       bandRows(grams, params)
         .select(epochLit, col("id"), col("band"), col("h")),
-      keys = Seq("epoch", "id", "band"), partitionColumns = Seq("epoch"),
-      keepManifests = 4)
+      keys = Seq("epoch", "id", "band"), partitionBy = Seq("epoch"),
+      keepVersions = 4)
     publishSnapshot(root)
     Files.createDirectories(fpPath.getParent)
     Files.write(fpPath, fp.getBytes(StandardCharsets.UTF_8))
@@ -227,7 +227,7 @@ object NearDupIndex {
     * Snapshot lifetime contract: the returned plan is pinned to the
     * snapshot resolved HERE, which stays readable while its version
     * dirs survive the tables' retention — [[ingest]] commits with
-    * `keepManifests = 4`, so the pinned snapshot survives THREE
+    * `keepVersions = 4`, so the pinned snapshot survives THREE
     * further ingests. Materialize within that window (every engine
     * call site materializes within the ingest step —
     * [[ingestAndProbe]] checkpoints before appending); a probe held

@@ -232,6 +232,25 @@ private[plans] object GraftRowLevelExec {
     }
   }
 
+  /** The CAS tokens of a COW statement: the snapshot view it rewrites
+    * and both delete-set versions.
+    */
+  final case class Pin(view: VersionedTable.PartitionedManifest,
+                       pos: Long, eq: Long)
+
+  /** Take the statement's [[Pin]] — BEFORE its first materialization
+    * (a subquery match flag, MERGE's joined checkpoint): a commit that
+    * lands after the pin fails the rewrite's CAS and the statement
+    * re-runs, one that lands before is in what it reads. A pin taken
+    * after a materialization would pass commits the materialized rows
+    * never saw, and the rewrite would drop them. None = declared,
+    * never committed.
+    */
+  def pin(root: String): Option[Pin] =
+    VersionedTable.snapshotView(root).map(v =>
+      Pin(v, VersionedTable.posDeleteVersion(root),
+        VersionedTable.eqDeleteVersion(root)))
+
   /** One pass of UPDATE: build (kept, transformed) from the resolved
     * relation plan, commit COW. Returns true when a commit happened
     * (false = no matching rows, no-op).
@@ -258,37 +277,34 @@ private[plans] object GraftRowLevelExec {
         condition).foreach(return _)
     val outCols = df.schema.fieldNames.toSeq.map(c =>
       assignMap.getOrElse(c, col(c)).as(c))
+    val p = pin(root).getOrElse(
+      return false) // declared, never committed: nothing matches
     val (matched, kept, cleanup) = splitMatched(df, condition)
     val transformed = matched.select(outCols: _*)
 
-    try VersionedTable.readPartitionedManifest(root) match {
-      case Some(m) =>
-        val pv = VersionedTable.posDeleteVersion(root)
-        val ev = VersionedTable.eqDeleteVersion(root)
-        val pc = m.partitionColumns
+    try {
+      val pc = p.view.partitionColumns
+      if (pc.nonEmpty) {
         // touched = source partitions of matching rows + destination
         // partitions of their post-images (an assignment may move a
         // row across partitions)
         val affected = matched.select(pc.map(matched(_)): _*)
           .unionByName(transformed.select(pc.map(col): _*))
-        VersionedTable.touchedCover(spark, root, affected) match {
+        VersionedTable.touchedCover(spark, p.view, affected) match {
           case None => false
           case Some((touchedPred, covered)) =>
             val replacement =
               kept.filter(touchedPred).unionByName(transformed)
             VersionedTable.rewritePartitionsCovered(spark, root,
-              replacement, covered, m.version, pv, ev)
+              replacement, covered, p.view.version, p.pos, p.eq)
             true
         }
-      case None =>
-        val fm = VersionedTable.readManifest(root).getOrElse(
-          return false) // declared, never committed: nothing matches
-        val pv = VersionedTable.posDeleteVersion(root)
-        val ev = VersionedTable.eqDeleteVersion(root)
+      } else {
         if (matched.limit(1).isEmpty) return false
         VersionedTable.rewriteLive(spark, root,
-          kept.unionByName(transformed), fm.version, pv, ev)
+          kept.unionByName(transformed), p.view.version, p.pos, p.eq)
         true
+      }
     } finally cleanup()
   }
 
@@ -300,29 +316,26 @@ private[plans] object GraftRowLevelExec {
     GraftMorExec.tryDelete(spark, target, table, condition)
       .foreach(return _)
     val df = SqlShims.ofRows(spark, target)
+    val p = pin(root).getOrElse(return false)
     val (matched, kept, cleanup) = splitMatched(df, Some(condition))
-    try VersionedTable.readPartitionedManifest(root) match {
-      case Some(m) =>
-        val pv = VersionedTable.posDeleteVersion(root)
-        val ev = VersionedTable.eqDeleteVersion(root)
-        val pc = m.partitionColumns
+    try {
+      val pc = p.view.partitionColumns
+      if (pc.nonEmpty) {
         val affected = matched.select(pc.map(matched(_)): _*)
-        VersionedTable.touchedCover(spark, root, affected) match {
+        VersionedTable.touchedCover(spark, p.view, affected) match {
           case None => false
           case Some((touchedPred, covered)) =>
             VersionedTable.rewritePartitionsCovered(spark, root,
-              kept.filter(touchedPred), covered, m.version, pv, ev)
+              kept.filter(touchedPred), covered, p.view.version, p.pos,
+              p.eq)
             true
         }
-      case None =>
-        val fm = VersionedTable.readManifest(root).getOrElse(
-          return false)
-        val pv = VersionedTable.posDeleteVersion(root)
-        val ev = VersionedTable.eqDeleteVersion(root)
+      } else {
         if (matched.limit(1).isEmpty) return false
-        VersionedTable.rewriteLive(spark, root, kept, fm.version, pv,
-          ev)
+        VersionedTable.rewriteLive(spark, root, kept, p.view.version,
+          p.pos, p.eq)
         true
+      }
     } finally cleanup()
   }
 
@@ -457,6 +470,7 @@ private[plans] object GraftRowLevelExec {
     val tdf = tdf0.withColumn(TPresent, lit(true))
       .withColumn(Tid, monotonically_increasing_id())
     val sdf = sdf0.withColumn(SPresent, lit(true))
+    val p = pin(root)
     // localCheckpoint, NOT persist: the joined frame (and the
     // monotonically_increasing_id tids inside it) is consumed by
     // SEVERAL jobs — cardinality check, no-op probes, touched-cover
@@ -530,10 +544,8 @@ private[plans] object GraftRowLevelExec {
       val content = matchedOut.unionByName(bySourceOut)
         .unionByName(insertsOut)
 
-      VersionedTable.readPartitionedManifest(root) match {
-        case Some(m) =>
-          val pv = VersionedTable.posDeleteVersion(root)
-          val ev = VersionedTable.eqDeleteVersion(root)
+      p match {
+        case Some(Pin(m, pv, ev)) if m.partitionColumns.nonEmpty =>
           val pc = m.partitionColumns
           // pre-images of every row an applicable clause removes or
           // rewrites, plus post-images of everything written
@@ -556,45 +568,35 @@ private[plans] object GraftRowLevelExec {
             .unionByName(bySourceChangedPre
               .select(pc.map(c => tcol(c).as(c)): _*))
             .unionByName(changedPost.select(pc.map(col): _*))
-          VersionedTable.touchedCover(spark, root, affected) match {
+          VersionedTable.touchedCover(spark, m, affected) match {
             case None => false
             case Some((touchedPred, covered)) =>
               VersionedTable.rewritePartitionsCovered(spark, root,
                 content.filter(touchedPred), covered, m.version, pv, ev)
               true
           }
+        case Some(Pin(m, pv, ev)) =>
+          val rowsChange = !matchedChangedPre.limit(1).isEmpty ||
+            !bySourceChangedPre.limit(1).isEmpty
+          if (rowsChange)
+            VersionedTable.rewriteLive(spark, root, content,
+              m.version, pv, ev)
+          else if (!insertRows.limit(1).isEmpty)
+            // inserts only: every target row stays where it is and
+            // the inserted rows become a new segment
+            VersionedTable.appendLive(spark, root, insertsOut,
+              m.version, pv, ev)
+          else return false
+          true
         case None =>
-          VersionedTable.readManifest(root) match {
-            case Some(fm) =>
-              val pv = VersionedTable.posDeleteVersion(root)
-              val ev = VersionedTable.eqDeleteVersion(root)
-              val rowsChange = !matchedChangedPre.limit(1).isEmpty ||
-                !bySourceChangedPre.limit(1).isEmpty
-              if (rowsChange)
-                VersionedTable.rewriteLive(spark, root, content,
-                  fm.version, pv, ev)
-              else if (!insertRows.limit(1).isEmpty)
-                // inserts only: every target row stays where it is and
-                // the inserted rows become a new segment
-                VersionedTable.appendLive(spark, root, insertsOut,
-                  fm.version, pv, ev)
-              else return false
-              true
-            case None =>
-              // declared-but-never-committed target: only inserts can
-              // land; route them through the append verb so the first
-              // commit is a normal v1
-              if (insertsOut.limit(1).isEmpty) return false
-              table.partitioning().toSeq match {
-                case ps if ps.nonEmpty =>
-                  VersionedTable.appendPartitioned(spark, root,
-                    insertsOut, ps.map(_.references().head.fieldNames()
-                      .mkString(".")))
-                case _ =>
-                  VersionedTable.append(spark, root, insertsOut)
-              }
-              true
-          }
+          // declared-but-never-committed target: only inserts can
+          // land; route them through the append verb so the first
+          // commit is a normal v1 in the declared form
+          if (insertsOut.limit(1).isEmpty) return false
+          VersionedTable.append(spark, root, insertsOut,
+            partitionBy = table.partitioning().toSeq.map(
+              _.references().head.fieldNames().mkString(".")))
+          true
       }
     } finally SqlShims.unpersistCheckpointed(joined)
   }

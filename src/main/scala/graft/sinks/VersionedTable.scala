@@ -54,8 +54,8 @@ import TableFs.withCommitLock
   * in parallel, and the version assignment + manifest flip happen
   * under a short commit lock with a compare-and-set on the base
   * version — a writer whose merge was computed against a superseded
-  * snapshot gets [[ConcurrentCommitException]] and [[upsert]]/
-  * [[upsertPartitioned]] re-read and re-merge, so interleaved writers
+  * snapshot gets [[ConcurrentCommitException]] and the write verbs
+  * ([[upsert]], [[append]], ...) re-read and re-merge, so interleaved writers
   * can never silently drop each other's rows (lost-update
   * impossibility is proven by VersionedTableSpec's interleaved-writer
   * tests). A production deployment still upgrades to Delta/Iceberg for
@@ -234,7 +234,9 @@ object VersionedTable {
     }
   }
 
-  /** Read the live snapshot. Fails if the table has never committed. */
+  /** Read the live snapshot, either table form (base rows: no delete
+    * is applied). Fails if the table has never committed.
+    */
   def readLive(spark: SparkSession, root: String): DataFrame =
     readLiveStamped(spark, root).drop(SeqCol)
 
@@ -243,12 +245,8 @@ object VersionedTable {
     * stamps need it; rows from pre-stamping commits (or raw
     * [[commit]] calls) default to sequence 0.
     */
-  private def readLiveStamped(spark: SparkSession, root: String): DataFrame = {
-    val m = readManifest(root).getOrElse(throw new IllegalStateException(
-      s"no _manifest.json under $root — table has never committed"))
-    val v = flatView(m.version, m.segments)
-    unionDirs(root, dirFrames(spark, root, v), addressed = false)
-  }
+  private def readLiveStamped(spark: SparkSession, root: String): DataFrame =
+    unionDirs(root, dirFrames(spark, root, liveView(root)), addressed = false)
 
   /** THE stamp-defaulting rule, in one place: a missing or null
     * [[SeqCol]] means sequence 0 — "masked by any delete", the
@@ -675,83 +673,52 @@ object VersionedTable {
     }
   }
 
-  /** Read the snapshot a specific commit produced. Fails if the
-    * version was never committed, or if retention already pruned its
-    * data directory.
+  /** Read the snapshot a specific commit produced, either table form
+    * (a partitioned entry records the FULL partition→dir map as of its
+    * commit, so it reassembles exactly). Fails if the version was never
+    * committed, or if retention already pruned a dir it lists.
     */
   def readVersion(spark: SparkSession, root: String, version: Long): DataFrame =
     // time travel presents the CURRENT logical names (the "query
     // through the current table definition" contract; per-snapshot
     // schema re-presentation would need versioned schema metadata)
-    unionDirs(root, dirFrames(spark, root,
-      flatView(version, flatVersionDirs(root, version))), addressed = false)
-      .drop(SeqCol)
+    readPartitionedSnapshot(spark, root, versionView(root, version))
 
-  /** The segment dirs of committed FLAT `version` — failing loudly if
-    * the version was never committed, is a partitioned snapshot, or
-    * was pruned by retention.
+  /** The snapshot view committed `version` produced, either form —
+    * failing loudly if the version was never committed or retention
+    * pruned a dir its history entry lists.
     */
-  private[graft] def flatVersionDirs(root: String,
-                                     version: Long): Seq[String] = {
+  private[graft] def versionView(root: String,
+                                 version: Long): PartitionedManifest = {
     val rootP = Paths.get(root)
-    if (!Files.exists(versionManifestPath(rootP, version)))
+    val p = versionManifestPath(rootP, version)
+    if (!Files.exists(p))
       throw new IllegalStateException(
         s"version $version was never committed under $root")
-    // a partitioned table's version dir holds only the partitions
-    // THAT commit touched — reading it flat would silently return
-    // partial data; route to the manifest-reassembling reader
-    if (readHistoryPartitionedManifest(rootP, version).isDefined)
+    val body = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+    val v = parsePartitionedManifest(body)
+      .getOrElse(flatView(version, entryDirs(body, version)))
+    val pruned = v.partitions.values.toSeq.distinct.sorted
+      .filterNot(d => Files.isDirectory(rootP.resolve(d)))
+    if (pruned.nonEmpty)
       throw new IllegalStateException(
-        s"version $version of $root is a PARTITIONED snapshot — " +
-          "use readPartitionedVersion (the flat dir holds only the " +
-          "partitions that commit touched)")
-    val dirs = versionDirs(rootP, version)
-    if (!dirs.forall(d => Files.isDirectory(rootP.resolve(d))))
-      throw new IllegalStateException(
-        s"version $version of $root was pruned by retention — " +
-          "raise keepVersions on commit to travel further back")
-    dirs
+        s"version $version of $root was pruned by retention (" +
+          pruned.mkString(", ") + " gone) — raise keepVersions on the " +
+          "writes to travel further back")
+    v
   }
 
   /** The immutable history entry of `version` parsed as a PARTITIONED
     * manifest — None for unpartitioned versions or never-committed
-    * ones. The DSv2 planner uses it to route time-travel reads and to
-    * file-prune historical partitioned snapshots.
+    * ones. The DSv2 planner uses it to file-prune historical
+    * partitioned snapshots.
     */
   private[graft] def historyPartitionedManifest(
-      root: String, version: Long): Option[PartitionedManifest] =
-    readHistoryPartitionedManifest(Paths.get(root), version)
-
-  private def readHistoryPartitionedManifest(
-      rootP: Path, version: Long): Option[PartitionedManifest] = {
-    val p = versionManifestPath(rootP, version)
+      root: String, version: Long): Option[PartitionedManifest] = {
+    val p = versionManifestPath(Paths.get(root), version)
     if (!Files.exists(p)) None
     else parsePartitionedManifest(
       new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-  }
-
-  /** Time-travel read of a PARTITIONED table: each commit's history
-    * entry records the FULL partition→dir map as of that commit, so
-    * any version whose referenced dirs survive retention
-    * (`keepManifests`) reassembles exactly. Fails loudly with the
-    * retention hint when a referenced dir was pruned.
-    */
-  def readPartitionedVersion(spark: SparkSession, root: String,
-                             version: Long): DataFrame = {
-    val rootP = Paths.get(root)
-    val m = readHistoryPartitionedManifest(rootP, version)
-      .getOrElse(throw new IllegalStateException(
-        s"version $version under $root has no partitioned history " +
-          "entry (never committed, or an unpartitioned table — use " +
-          "readVersion)"))
-    val pruned = m.partitions.values.toSet
-      .filterNot(d => Files.isDirectory(rootP.resolve(d)))
-    if (pruned.nonEmpty)
-      throw new IllegalStateException(
-        s"version $version of $root references pruned dirs $pruned — " +
-          "raise keepManifests on upsertPartitioned to travel " +
-          "further back")
-    readPartitionedSnapshot(spark, root, m)
   }
 
   /** Keyed DIFF of two retained versions — the "what changed between
@@ -760,19 +727,14 @@ object VersionedTable {
     * v2), `removed` (only in v1), `changed` (both, any non-key column
     * differs — null-safe), or `same`; the non-key columns ride along
     * as `old_vals`/`new_vals` structs (null on the absent side).
-    * Works on both table forms: partitioned versions reassemble
-    * through [[readPartitionedVersion]], unpartitioned through
-    * [[readVersion]]. Cost: one co-keyed full-outer join of the two
-    * snapshots — at scale both sides shuffle once on the key.
+    * Works on both table forms through [[readVersion]]. Cost: one
+    * co-keyed full-outer join of the two snapshots — at scale both
+    * sides shuffle once on the key.
     */
   def diffVersions(spark: SparkSession, root: String, v1: Long, v2: Long,
                    keys: Seq[String]): DataFrame = {
-    def readAny(v: Long): DataFrame =
-      if (readHistoryPartitionedManifest(Paths.get(root), v).isDefined)
-        readPartitionedVersion(spark, root, v)
-      else readVersion(spark, root, v)
-    val a = readAny(v1)
-    val b = readAny(v2)
+    val a = readVersion(spark, root, v1)
+    val b = readVersion(spark, root, v2)
     // non-key columns from BOTH schemas: SyncAllColumns upserts evolve
     // the schema between versions, so a column present on only one
     // side rides as a typed null on the other (a row whose only
@@ -845,7 +807,7 @@ object VersionedTable {
     val vs = mainlineVersions(root)
     require(vs.contains(toVersion),
       s"version $toVersion of $root is not readable (never committed " +
-        "or pruned by retention — raise keepVersions/keepManifests)")
+        "or pruned by retention — raise keepVersions)")
     require(fromVersion == 0 || vs.contains(fromVersion),
       s"version $fromVersion of $root is not readable (never " +
         "committed or pruned by retention)")
@@ -870,11 +832,7 @@ object VersionedTable {
     */
   private[graft] def readChangesEmptyFrame(spark: SparkSession,
                                            root: String): DataFrame = {
-    val base =
-      if (readPartitionedManifest(root).isDefined)
-        readLivePartitioned(spark, root)
-      else readLive(spark, root)
-    base.limit(0)
+    readLive(spark, root).limit(0)
       .withColumn(ChangeTypeCol, lit(""))
       .withColumn(ChangeVersionCol, lit(0L))
   }
@@ -898,7 +856,7 @@ object VersionedTable {
     * should run without maxFilesPerTrigger so AvailableNow delivers
     * one ordered batch). Retention contract: the dirs of `v-1..v`
     * must still be retained when the batch fires — size
-    * keepVersions/keepManifests to the maximum consumer lag (the
+    * keepVersions to the maximum consumer lag (the
     * stream fails loudly otherwise, never silently skips).
     * `maxFilesPerTrigger=1` gives one-commit-per-trigger pacing.
     */
@@ -1065,7 +1023,7 @@ object VersionedTable {
       if (pruned.nonEmpty)
         throw new IllegalStateException(
           s"cannot tag $root@$version — retention already pruned " +
-            s"$pruned; tag sooner or raise keepVersions/keepManifests")
+            s"$pruned; tag sooner or raise keepVersions")
       writeRefs(rootP, refs(root) + (name -> version))
     }
   }
@@ -1080,17 +1038,9 @@ object VersionedTable {
       refs(root) - name - s"$name@base" - s"$name@posbase") }
   }
 
-  /** Read the snapshot a named ref points at (unpartitioned tables —
-    * [[readPartitionedRef]] for partitioned).
-    */
+  /** Read the snapshot a named ref points at, either table form. */
   def readRef(spark: SparkSession, root: String, name: String): DataFrame =
     readVersion(spark, root, refs(root).getOrElse(name,
-      throw new IllegalStateException(s"no ref '$name' under $root")))
-
-  /** Partitioned flavor of [[readRef]]. */
-  def readPartitionedRef(spark: SparkSession, root: String,
-                         name: String): DataFrame =
-    readPartitionedVersion(spark, root, refs(root).getOrElse(name,
       throw new IllegalStateException(s"no ref '$name' under $root")))
 
   /** Version dirs that ref'd snapshots reference — excluded from both
@@ -1168,114 +1118,72 @@ object VersionedTable {
     }
   }
 
-  /** Append `batch` to branch `branch` of a FLAT table. The first
-    * branch commit forks from the live observable snapshot (both
+  /** Append `batch` to branch `branch`, either table form (the form
+    * and spec come from the branch's base; see [[writeSpec]]). The
+    * first branch commit forks from the live observable snapshot (both
     * delete families + pending MoR post-images folded); later ones
-    * extend the branch head. Returns the branch's new version.
+    * extend the branch head, a raw committed snapshot (the [[readRef]]
+    * contract). A flat branch commit writes its whole snapshot; a
+    * partitioned one rewrites only the batch's partitions and keeps
+    * the base pointers for the rest. Returns the branch's new version.
     */
   def appendToBranch(spark: SparkSession, root: String,
                      batch: DataFrame, branch: String,
+                     partitionBy: Seq[String] = Nil,
                      maxRetries: Int = 10): Long = {
     requireNoReservedColumns(batch.columns,
       s"branch append into $root", Seq(SeqCol, AddrPathCol, AddrPosCol))
     enforceConstraints(root, batch)
-    require(readPartitionedManifest(root).isEmpty,
-      s"$root is partitioned — use appendPartitionedToBranch")
     val rootP = Paths.get(root)
     def once(): Long = {
       val curRef = refs(root).get(branch)
+      val base = curRef match {
+        case Some(v) => Some(versionView(root, v))
+        case None => snapshotView(root)
+      }
+      val spec = writeSpec(root, base, partitionBy, evolve = false)
       val stamped =
         batch.withColumn(SeqCol, lit(TableFs.maxAllocatedVersion(rootP) + 1))
-      val content = curRef match {
-        case Some(v) =>
-          val dirs = versionDirs(rootP, v)
-          if (!dirs.forall(d => Files.isDirectory(rootP.resolve(d))))
-            throw new IllegalStateException(
-              s"branch '$branch' head v$v of $root was pruned")
-          unionDirs(root, dirFrames(spark, root, flatView(v, dirs)),
-            addressed = false)
-            .unionByName(stamped)
-        case None =>
-          if (readManifest(root).isEmpty) stamped
-          else posMaskedSnapshot(spark, root, liveView(root))
-            .unionByName(stamped)
+      // a live fork reads through the observable masks; a branch head
+      // is a raw committed snapshot (the readRef contract); both keep
+      // their rows' stamps
+      def existing(m: PartitionedManifest): DataFrame =
+        if (curRef.isDefined)
+          unionDirs(root, dirFrames(spark, root, m), addressed = false)
+        else posMaskedSnapshot(spark, root, m)
+      if (spec.isEmpty) {
+        val content = base.map(existing(_).unionByName(stamped))
+          .getOrElse(stamped)
+        return commitToBranch(root, branch, curRef, next =>
+          renderFlatManifest(next, Seq(versionDirName(next)),
+            Some(branch))) { dir =>
+          content.write.mode(SaveMode.Overwrite).parquet(dir)
+        }
       }
-      commitToBranch(root, branch, curRef, next =>
-        renderFlatManifest(next, Seq(versionDirName(next)),
-          Some(branch))) { dir =>
-        content.write.mode(SaveMode.Overwrite).parquet(dir)
-      }
-    }
-    retryThenEscalate(rootP, maxRetries)(once())
-  }
-
-  /** [[appendToBranch]]'s PARTITIONED sibling: only the batch's
-    * partitions rewrite onto the branch (merged with the branch
-    * head's — or, on the first commit, the live observable's —
-    * content of those partitions); everything else keeps the base
-    * pointers in the branch's history manifest.
-    */
-  def appendPartitionedToBranch(spark: SparkSession, root: String,
-                                batch: DataFrame,
-                                partitionColumns: Seq[String],
-                                branch: String,
-                                maxRetries: Int = 10): Long = {
-    require(partitionColumns.nonEmpty,
-      "appendPartitionedToBranch needs partition columns")
-    requireNoReservedColumns(batch.columns,
-      s"branch append into $root", Seq(SeqCol, AddrPathCol, AddrPosCol))
-    requirePartitionTypesMatch(root, batch, partitionColumns)
-    enforceConstraints(root, batch)
-    val rootP = Paths.get(root)
-    def once(): Long = {
-      val curRef = refs(root).get(branch)
-      val stamped =
-        batch.withColumn(SeqCol, lit(TableFs.maxAllocatedVersion(rootP) + 1))
-      val baseM: Option[PartitionedManifest] = curRef match {
-        case Some(v) =>
-          Some(historyPartitionedManifest(root, v).getOrElse(
-            throw new IllegalStateException(
-              s"branch '$branch' head v$v of $root is not a " +
-                "partitioned snapshot")))
-        case None => readPartitionedManifest(root)
-      }
-      baseM.foreach(m => require(
-        m.partitionColumns == partitionColumns,
-        s"branch writes keep the partition spec " +
-          s"(${m.partitionColumns.mkString(",")}) — got " +
-          partitionColumns.mkString(",")))
-      val merged = baseM match {
+      requirePartitionTypesMatch(root, batch, spec)
+      val merged = base match {
         case None => stamped
         case Some(m) =>
-          val touched = batch
-            .select(partitionColumns.map(batch(_)): _*)
+          val touched = batch.select(spec.map(batch(_)): _*)
             .distinct().collect()
           if (touched.isEmpty)
             return curRef.getOrElse(m.version) // empty batch: no-op
-          val pred = touchedPredicate(partitionColumns, touched)
-          // live fork reads through the observable masks; a branch
-          // head is a raw committed snapshot (the readRef contract);
-          // both keep their rows' stamps
-          val existing =
-            if (curRef.isDefined)
-              unionDirs(root, dirFrames(spark, root, m), addressed = false)
-            else posMaskedSnapshot(spark, root, m)
-          existing.filter(pred).unionByName(stamped)
+          existing(m).filter(touchedPredicate(spec, touched))
+            .unionByName(stamped)
       }
       commitToBranch(root, branch, curRef, { next =>
         val dirName = versionDirName(next)
         val written = partitionLeafDirs(rootP.resolve(dirName),
-          partitionColumns.size).map(_.toString)
-        val newParts =
-          baseM.map(_.partitions).getOrElse(Map.empty) ++
-            written.map(_ -> dirName)
+          spec.size).map(_.toString)
+        val newParts = base.map(_.partitions).getOrElse(Map.empty) ++
+          written.map(_ -> dirName)
         val body = renderPartitionedManifest(
-          PartitionedManifest(next, partitionColumns, newParts))
+          PartitionedManifest(next, spec, newParts))
         require(body.endsWith("}"), s"unexpected manifest body: $body")
         body.dropRight(1) + s""", "branch": "${escJson(branch)}"}"""
       }) { dir =>
         merged.write.mode(SaveMode.Overwrite)
-          .partitionBy(partitionColumns: _*).parquet(dir)
+          .partitionBy(spec: _*).parquet(dir)
       }
     }
     retryThenEscalate(rootP, maxRetries)(once())
@@ -1372,7 +1280,7 @@ object VersionedTable {
             s"moved past v$posBase) since branch '$branch' forked — " +
             "re-run the branch pipeline against the new base")
       val next = TableFs.maxAllocatedVersion(rootP) + 1
-      readHistoryPartitionedManifest(rootP, head) match {
+      historyPartitionedManifest(root, head) match {
         case Some(m) =>
           val published = PartitionedManifest(next,
             m.partitionColumns, m.partitions)
@@ -1432,8 +1340,9 @@ object VersionedTable {
     // sidecar are relative, so the staging→version rename keeps it)
     writeStatsSidecar(staging)
     withCommitLock(rootP) {
-      val prev = readManifest(root)
-      val live = prev.map(_.version).getOrElse(0L)
+      // either form: a flat write pinned on a table that another writer
+      // committed partitioned in between must not flip over it
+      val live = currentMainVersion(root)
       expectedBase.filter(_ != live).foreach { base =>
         deleteRecursively(staging)
         throw new ConcurrentCommitException(
@@ -1456,27 +1365,31 @@ object VersionedTable {
       // immutable history entry for time travel — written AFTER the
       // flip so a version is only ever listed once fully committed
       writeHistoryEntry(rootP, next, body)
-      // prune: every dir the newest `keepVersions` MAIN-LINE snapshots
-      // list survives — carried segments included (branch dirs never
-      // count toward K — they would evict recent main data while
-      // themselves being retained), ref'd snapshots (incl. branch
-      // heads) are pinned regardless of age, and the just-committed
-      // snapshot is always kept
-      val pinned = refPinnedDirs(rootP)
-      val keepMain = newestMainlineDirs(rootP,
-        math.max(1, keepVersions)) ++ carry + dirName
-      val s = Files.list(rootP)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toSeq
-          .filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.matches("v\\d{8}"))
-          .filterNot(p => pinned(p.getFileName.toString) ||
-            keepMain(p.getFileName.toString))
-          .foreach(deleteRecursively)
-      } finally s.close()
+      pruneRetired(rootP, keepVersions, carry.toSet + dirName)
       next
     }
+  }
+
+  /** Retention, both table forms, run under the commit lock after a
+    * flip: every dir the newest `keepVersions` MAIN-LINE snapshots
+    * list survives (branch dirs never count toward K — they would
+    * evict recent main data while themselves being retained), ref'd
+    * snapshots (incl. branch heads) are pinned regardless of age, and
+    * `keep` — the just-committed snapshot's dirs — always survives.
+    */
+  private def pruneRetired(rootP: Path, keepVersions: Int,
+                           keep: Set[String]): Unit = {
+    val kept = refPinnedDirs(rootP) ++ keep ++
+      newestMainlineDirs(rootP, math.max(1, keepVersions))
+    val s = Files.list(rootP)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.toSeq
+        .filter(p => Files.isDirectory(p) &&
+          p.getFileName.toString.matches("v\\d{8}") &&
+          !kept(p.getFileName.toString))
+        .foreach(deleteRecursively)
+    } finally s.close()
   }
 
   /** Orphan cleanup (Iceberg's remove_orphan_files): reclaim artifacts
@@ -1599,8 +1512,8 @@ object VersionedTable {
   }
 
   /** Keyed upsert against the live snapshot, committed as a new
-    * version — the manifest-indirected form of [[MergeWriter.merge]]
-    * (unpartitioned): same anti-join ∪ updates merge, same schema
+    * version, either table form — the manifest-indirected form of
+    * [[MergeWriter.merge]]: same anti-join ∪ updates merge, same schema
     * policy, but a concurrent reader can never observe a missing or
     * half-swapped directory, and a CONCURRENT WRITER can never be
     * silently overwritten: the merge is pinned to the base snapshot it
@@ -1608,13 +1521,16 @@ object VersionedTable {
     * the new live snapshot and re-merges (bounded retries — updates
     * are a plan, so re-executing them against the fresh base is safe
     * for deterministic inputs, the same contract MERGE INTO gives).
-    * A batch that footer stats prove matches no live row
-    * ([[keysDisjoint]]) is an add-only commit through [[commitAdded]]:
-    * it becomes a new segment and the live segments carry by
-    * reference; any other batch rewrites the whole snapshot.
+    * The form and spec come from the pinned snapshot ([[writeSpec]]).
+    * Flat: a batch that footer stats prove matches no live row
+    * ([[keysDisjoint]]) is an add-only commit through [[commitAdded]]
+    * (a new segment; the live segments carry by reference), any other
+    * batch rewrites the whole snapshot. Partitioned: only the touched
+    * partitions rewrite ([[mergePartitioned]]). `keepVersions` sizes
+    * retention ([[pruneRetired]]).
     */
   def upsert(spark: SparkSession, root: String, updates: DataFrame,
-             keys: Seq[String],
+             keys: Seq[String], partitionBy: Seq[String] = Nil,
              schemaMode: MergeWriter.SchemaMode =
                MergeWriter.SchemaMode.Strict,
              keepVersions: Int = 2, maxRetries: Int = 10): Long = {
@@ -1624,45 +1540,49 @@ object VersionedTable {
     var foldedPosVersion = 0L
     lazy val ranges = keyRanges(updates, keys) // one job, across retries
     def once(): Long = {
-      val base = readManifest(root)
+      val view = snapshotView(root)
+      foldedPosVersion = 0L
+      val spec = writeSpec(root, view, partitionBy, evolve = true)
+      if (spec.nonEmpty)
+        return mergePartitioned(spark, root, updates, Some(keys), spec,
+          view, schemaMode, keepVersions)
       // Rows written by THIS commit carry its version as their write
       // sequence (recomputed on CAS retry); surviving rows keep the
       // sequence of the commit that last wrote them. This is what lets
       // softDelete apply Iceberg's sequence-number rule instead of
       // masking re-upserted keys forever.
-      val next = base.map(_.version + 1).getOrElse(1L)
-      val updatesStamped = updates.withColumn(SeqCol, lit(next))
+      val base = view.map(_.version).getOrElse(0L)
+      val updatesStamped = updates.withColumn(SeqCol, lit(base + 1))
       // the merge rewrites every data file, so pending POSITION
       // deletes must be folded into the base read and validated at
       // commit (see the position-deletes section) — else the rewrite
       // silently un-deletes them
       val pinnedPos = posVersion(root)
       val validate = requirePosVersion(root, pinnedPos, "merge")
-      val expected = Some(base.map(_.version).getOrElse(0L))
-      base match {
+      view match {
         case None =>
           foldedPosVersion = pinnedPos
-          commit(root, keepVersions, expected, validate) { dir =>
+          commit(root, keepVersions, Some(0L), validate) { dir =>
             updatesStamped.write.mode(SaveMode.Overwrite).parquet(dir)
           }
-        case Some(m) =>
-          val existing = posMaskedSnapshot(spark, root,
-            flatView(m.version, m.segments))
+        case Some(v) =>
+          val existing = posMaskedSnapshot(spark, root, v)
           val (existingAligned, updatesAligned) =
             MergeWriter.alignSchemas(existing, updatesStamped, keys,
               schemaMode)
           if (keysDisjoint(root, ranges)) {
             // add-only: no committed row is replaced; the pinned pos
             // version still guards a racing merge-on-read insert
-            val (v, folded) = commitAdded(spark, root, m, updatesAligned,
+            val (ver, folded) = commitAdded(spark, root,
+              flatManifest(v), updatesAligned,
               schemaMode == MergeWriter.SchemaMode.SyncAllColumns,
               keepVersions, validate)
             foldedPosVersion = folded
-            v
+            ver
           } else {
             val batchKeys = updates.select(keys.map(updates(_)): _*)
             foldedPosVersion = pinnedPos
-            commit(root, keepVersions, expected, validate) { dir =>
+            commit(root, keepVersions, Some(base), validate) { dir =>
               existingAligned.join(batchKeys, keys, "left_anti")
                 .unionByName(updatesAligned)
                 .write.mode(SaveMode.Overwrite).parquet(dir)
@@ -1673,6 +1593,37 @@ object VersionedTable {
     val v = retryThenEscalate(Paths.get(root), maxRetries)(once())
     resetPosDeletes(spark, root, foldedPosVersion, keepVersions)
     v
+  }
+
+  /** The partition spec a write verb commits under, read from `view`
+    * (the snapshot its attempt pinned, so the CAS that guards the
+    * commit also guards the form): `partitionBy` = Nil means the
+    * committed spec — flat before the first commit; a non-empty list
+    * must equal it or, where `evolve` (the keyed merge and append),
+    * extend it by appending columns ([[mergePartitioned]]'s
+    * migrate-on-write). A list for a committed flat table, or any
+    * other change, throws before anything is written.
+    */
+  private def writeSpec(root: String, view: Option[PartitionedManifest],
+                        partitionBy: Seq[String],
+                        evolve: Boolean): Seq[String] = view match {
+    case None => partitionBy
+    case Some(v) if partitionBy.isEmpty ||
+        partitionBy == v.partitionColumns => v.partitionColumns
+    case Some(v) =>
+      def show(cs: Seq[String]) = cs.mkString("(", ",", ")")
+      require(!isFlat(v),
+        s"$root is a flat table — a write into it takes no partitionBy " +
+          s"(got ${show(partitionBy)}); a table's form is fixed by its " +
+          "first commit")
+      val old = v.partitionColumns
+      require(evolve && old.size < partitionBy.size &&
+        partitionBy.take(old.size) == old,
+        s"partition-spec change ${show(old)} → ${show(partitionBy)} on " +
+          s"$root is not a prefix extension by a keyed merge or append " +
+          "— only appending partition columns evolves in place; " +
+          "anything else needs a full rewrite into a new table root")
+      partitionBy
   }
 
   /** The batch's [min, max] per key column it can bound (integral,
@@ -1747,17 +1698,20 @@ object VersionedTable {
             .filesScanned == 0
       }
 
-  /** APPEND (no keying): new version = live snapshot ∪ batch, exact
-    * duplicates preserved — the ingest shape for event/log tables
-    * where rows have no natural key. Strict schema (use [[upsert]]
-    * with SyncAllColumns to evolve). Appended rows carry the new
+  /** APPEND (no keying), either table form: new version = live
+    * snapshot ∪ batch, exact duplicates preserved — the ingest shape
+    * for event/log tables where rows have no natural key. Strict
+    * schema unless `schemaMode` syncs. Appended rows carry the new
     * commit's write sequence, so equality-delete masks from older
-    * commits never hide them. The batch becomes a new segment and the
-    * live segments carry by reference, with the pending deletes and
-    * post-images that address them — O(batch) writes (see
-    * [[commitAdded]]).
+    * commits never hide them. Flat: the batch becomes a new segment
+    * and the live segments carry by reference, with the pending
+    * deletes and post-images that address them — O(batch) writes (see
+    * [[commitAdded]]). Partitioned: touched partitions become (their
+    * live rows ∪ batch rows); untouched ones are never read. The form
+    * and spec come from the pinned snapshot ([[writeSpec]]).
     */
   def append(spark: SparkSession, root: String, batch: DataFrame,
+             partitionBy: Seq[String] = Nil,
              keepVersions: Int = 2, maxRetries: Int = 10,
              schemaMode: MergeWriter.SchemaMode =
                MergeWriter.SchemaMode.Strict): Long = {
@@ -1777,22 +1731,26 @@ object VersionedTable {
     var foldedPosVersion = 0L
     var preV = 0L // the CAS-validated predecessor, for the stats fold
     def once(): Long = {
-      val base = readManifest(root)
-      preV = base.map(_.version).getOrElse(0L)
-      val next = base.map(_.version + 1).getOrElse(1L)
-      val stamped = b.withColumn(SeqCol, lit(next))
-      base match {
+      val view = snapshotView(root)
+      preV = view.map(_.version).getOrElse(0L)
+      foldedPosVersion = 0L
+      val spec = writeSpec(root, view, partitionBy, evolve = true)
+      if (spec.nonEmpty)
+        return mergePartitioned(spark, root, b, None, spec, view,
+          schemaMode, keepVersions)
+      val stamped = b.withColumn(SeqCol, lit(preV + 1))
+      view match {
         case None =>
-          foldedPosVersion = 0L
           commit(root, keepVersions, expectedBase = Some(0L)) { dir =>
             stamped.write.mode(SaveMode.Overwrite).parquet(dir)
           }
-        case Some(m) =>
-          val (v, folded) = commitAdded(spark, root, m, stamped,
+        case Some(v) =>
+          val (ver, folded) = commitAdded(spark, root, flatManifest(v),
+            stamped,
             schemaMode == MergeWriter.SchemaMode.SyncAllColumns,
             keepVersions, () => ())
           foldedPosVersion = folded
-          v
+          ver
       }
     }
     val v = retryThenEscalate(Paths.get(root), maxRetries)(once())
@@ -1846,22 +1804,34 @@ object VersionedTable {
         statsFingerprint(root))
 
   /** FULL REPLACE: the next version holds exactly `df` (the static
-    * overwrite / CTAS-over shape). Pending equality deletes stay
-    * harmless by the sequence rule (replacement rows out-sequence
-    * them); pending position deletes reference superseded files and
-    * are ignored by the live filter, reaped at the next fold.
+    * overwrite / CTAS-over shape), either table form — a partitioned
+    * replace vacates every previous partition pointer (Spark's
+    * `partitionOverwriteMode=static`; [[overwritePartitions]] is the
+    * dynamic one). `partitionBy` = Nil keeps the committed spec
+    * ([[writeSpec]]; a replace never changes it). Pending equality
+    * deletes stay harmless by the sequence rule (replacement rows
+    * out-sequence them); pending position deletes reference superseded
+    * files and are ignored by the live filter, reaped at the next fold.
     */
   def replaceTable(spark: SparkSession, root: String, df: DataFrame,
+                   partitionBy: Seq[String] = Nil,
                    keepVersions: Int = 2, maxRetries: Int = 10): Long = {
     requireNoReservedColumns(df.columns, s"replace of $root",
       Seq(SeqCol, AddrPathCol, AddrPosCol))
     enforceConstraints(root, df)
     def once(): Long = {
-      val base = readManifest(root).map(_.version).getOrElse(0L)
-      val next = base + 1
-      commit(root, keepVersions, expectedBase = Some(base)) { dir =>
-        df.withColumn(SeqCol, lit(next))
-          .write.mode(SaveMode.Overwrite).parquet(dir)
+      val view = snapshotView(root)
+      val base = view.map(_.version).getOrElse(0L)
+      val stamped = df.withColumn(SeqCol, lit(base + 1))
+      writeSpec(root, view, partitionBy, evolve = false) match {
+        case Nil =>
+          commit(root, keepVersions, expectedBase = Some(base)) { dir =>
+            stamped.write.mode(SaveMode.Overwrite).parquet(dir)
+          }
+        case spec =>
+          replacePartitioned(spark, root, stamped, spec,
+            covered = view.map(_.partitions.keys.toSeq).getOrElse(Nil),
+            expectedBase = Some(base))
       }
     }
     retryThenEscalate(Paths.get(root), maxRetries)(once())
@@ -2356,8 +2326,7 @@ object VersionedTable {
   // ------------------------------------------------------------------
 
   /** The snapshot view of `root`: live, or as of `version` (time
-    * travel — a partitioned history entry, else the flat segment
-    * list, validated loudly by [[flatVersionDirs]]). None when the
+    * travel, validated loudly by [[versionView]]). None when the
     * table has never committed.
     */
   private[graft] def snapshotView(root: String,
@@ -2367,9 +2336,7 @@ object VersionedTable {
       case None =>
         readPartitionedManifest(root).orElse(readManifest(root).map(m =>
           flatView(m.version, m.segments)))
-      case Some(v) =>
-        historyPartitionedManifest(root, v).orElse(Some(
-          flatView(v, flatVersionDirs(root, v))))
+      case Some(v) => Some(versionView(root, v))
     }
 
   /** A flat snapshot as a view: one leaf per segment, keyed by the
@@ -2378,6 +2345,12 @@ object VersionedTable {
   private def flatView(version: Long,
                        segments: Seq[String]): PartitionedManifest =
     PartitionedManifest(version, Nil, segments.map(d => d -> d).toMap)
+
+  /** A flat view as its manifest: segment dir names sort in commit
+    * order.
+    */
+  private def flatManifest(v: PartitionedManifest): Manifest =
+    Manifest(v.version, v.partitions.values.toSeq.sorted)
 
   private def liveView(root: String): PartitionedManifest =
     snapshotView(root).getOrElse(throw new IllegalStateException(
@@ -2894,16 +2867,19 @@ object VersionedTable {
     * `layout` re-arranges rows only; it must not change their content.
     */
   private def rewriteFoldingPosDeletes(spark: SparkSession, root: String,
+                                       what: String,
                                        keepVersions: Int, maxRetries: Int)
                                       (layout: DataFrame => DataFrame): Long = {
     var foldedPosVersion = 0L
     def once(): Long = {
-      val base = readManifest(root).getOrElse(
-        throw new IllegalStateException(
-          s"no _manifest.json under $root — nothing to rewrite"))
+      val v = liveView(root)
+      require(isFlat(v),
+        s"$what rewrites flat tables; $root is partitioned by " +
+          v.partitionColumns.mkString("(", ",", ")") + " — use " +
+          "compactPartitions or compactPartitionsSorted")
       foldedPosVersion = posVersion(root)
-      val snap = posMaskedSnapshot(spark, root, liveView(root))
-      commit(root, keepVersions, expectedBase = Some(base.version),
+      val snap = posMaskedSnapshot(spark, root, v)
+      commit(root, keepVersions, expectedBase = Some(v.version),
         validate = requirePosVersion(root, foldedPosVersion,
           "rewrite")) { dir =>
         layout(snap).write.mode(SaveMode.Overwrite).parquet(dir)
@@ -3196,17 +3172,6 @@ object VersionedTable {
                                        m: PartitionedManifest): Unit =
     TableFs.publishFile(manifestPath(root), renderPartitionedManifest(m))
 
-  /** Live snapshot of a partitioned versioned table: the manifest's
-    * partition→dir map, read per version dir with Spark's own
-    * partition discovery (basePath = the version dir), unioned.
-    * Partition-column filters prune directories as usual.
-    */
-  def readLivePartitioned(spark: SparkSession, root: String): DataFrame =
-    readPartitionedSnapshot(spark, root,
-      readPartitionedManifest(root).getOrElse(
-        throw new IllegalStateException(
-          s"no partitioned _manifest.json under $root")))
-
   /** The snapshot a SPECIFIC manifest describes (base rows, the
     * hidden write sequence dropped) — lets composite readers (the
     * NearDupIndex cross-table snapshot) read a pinned older pair of
@@ -3251,56 +3216,6 @@ object VersionedTable {
       .parquet(leaves: _*)
   }
 
-  /** Keyed upsert into a partitioned versioned table: merge the
-    * touched partitions' live data with the updates, write ONLY those
-    * partitions into a fresh version dir, flip their manifest
-    * pointers atomically. Untouched partitions are never read or
-    * rewritten; concurrent readers see the old manifest (complete old
-    * snapshot) or the new one (complete new snapshot), never a
-    * half-swapped mix — the property MergeWriter's per-dir swap loses.
-    */
-  /** `keepManifests` widens retention to the dirs referenced by the
-    * NEWEST that-many manifests (history under `_versions/`, a few
-    * bytes per commit): a snapshot-pinned reader — a composite-index
-    * probe, a lagging concurrent merger — stays valid for
-    * keepManifests−1 further commits instead of one. Default 2 = the
-    * original current+predecessor behavior.
-    */
-  def upsertPartitioned(spark: SparkSession, root: String,
-                        updates: DataFrame, keys: Seq[String],
-                        partitionColumns: Seq[String],
-                        schemaMode: MergeWriter.SchemaMode =
-                          MergeWriter.SchemaMode.Strict,
-                        maxRetries: Int = 10,
-                        keepManifests: Int = 2): Long =
-    mergePartitioned(spark, root, updates, keys, partitionColumns,
-      schemaMode, maxRetries, keepManifests, antiJoin = true)
-
-  /** APPEND into a partitioned table (no keying): touched partitions
-    * become (their live rows ∪ batch rows), duplicates preserved;
-    * untouched partitions are never read or rewritten. Strict schema.
-    * Composes with spec evolution exactly like [[upsertPartitioned]].
-    */
-  def appendPartitioned(spark: SparkSession, root: String,
-                        batch: DataFrame,
-                        partitionColumns: Seq[String],
-                        maxRetries: Int = 10,
-                        keepManifests: Int = 2,
-                        schemaMode: MergeWriter.SchemaMode =
-                          MergeWriter.SchemaMode.Strict): Long = {
-    // materialized when a stats fold will run — write and fold must
-    // read the SAME rows (see the flat append for the full rationale)
-    val foldEligible = statsFoldEligible(root)
-    val b = if (foldEligible) batch.localCheckpoint() else batch
-    try mergePartitioned(spark, root, b, keys = Seq.empty,
-      partitionColumns, schemaMode, maxRetries,
-      keepManifests, antiJoin = false,
-      statsFoldBatch = if (foldEligible) Some(b) else None)
-    finally if (foldEligible)
-      org.apache.spark.sql.graft.SqlShims.unpersistCheckpointed(b)
-  }
-
-
   /** Balanced OR over per-partition equality conjunctions: a left
     * fold gives a LINEAR-depth expression tree, and Catalyst's
     * recursive visitors stack-overflow past ~10k touched partitions
@@ -3326,204 +3241,159 @@ object VersionedTable {
       .reduce(_ && _)))
   }
 
+  /** One attempt of the partitioned keyed merge (`keys` given) or
+    * append (None) under `spec`, pinned on `prev` (the snapshot the
+    * caller's attempt read; None = first commit): merge the touched
+    * partitions' live data with the batch, write ONLY those partitions
+    * into a fresh version dir, flip their manifest pointers atomically.
+    * Untouched partitions are never read or rewritten; concurrent
+    * readers see the old manifest (complete old snapshot) or the new
+    * one (complete new snapshot), never a half-swapped mix — the
+    * property MergeWriter's per-dir swap loses. Same CONTRACT as
+    * MergeWriter's partitioned mode: every partition column must be a
+    * function of the merge keys, or a key moving between partition
+    * values leaves its old row behind. Conflicts throw
+    * [[ConcurrentCommitException]] for the caller's retry loop.
+    */
   private def mergePartitioned(spark: SparkSession, root: String,
-                               updates: DataFrame, keys: Seq[String],
+                               updates: DataFrame,
+                               keys: Option[Seq[String]],
                                partitionColumns: Seq[String],
+                               prev: Option[PartitionedManifest],
                                schemaMode: MergeWriter.SchemaMode,
-                               maxRetries: Int,
-                               keepManifests: Int,
-                               antiJoin: Boolean,
-                               statsFoldBatch: Option[DataFrame] =
-                                 None): Long = {
-    require(keepManifests >= 1,
-      s"keepManifests must be >= 1: $keepManifests")
-    require(partitionColumns.nonEmpty,
-      "partitionColumns empty — use upsert() for unpartitioned tables")
+                               keepVersions: Int): Long = {
     // a batch whose partition-column TYPE drifted from the recorded
     // `_part_schema.json` must fail loudly here: union coercion would
     // write correct data but the type mismatch means the caller's
     // mental model of the partition key space is wrong (int 7 vs
     // string "07" address DIFFERENT partitions after path escaping)
     requirePartitionTypesMatch(root, updates, partitionColumns)
-    requireNoReservedColumns(updates.columns, s"write into $root",
-      Seq(SeqCol, AddrPathCol, AddrPosCol))
-    enforceConstraints(root, updates)
     val rootP = Paths.get(root)
     Files.createDirectories(rootP)
-    var preV = 0L // the CAS-validated predecessor, for the stats fold
-    def once(): Long = {
-      // pin the merge to the base snapshot; CAS-check it at commit
-      val prev = readPartitionedManifest(root)
-      preV = prev.map(_.version).getOrElse(0L)
-      val pinnedPosVersion = posVersion(root)
-      // the batch carries this commit's write sequence (recomputed on
-      // CAS retry); kept rows keep theirs, as the flat upsert does
-      val stamped = updates.withColumn(SeqCol, lit(preV + 1))
-      // PARTITION-SPEC EVOLUTION (migrate-on-write): a commit may use
-      // a partition-column list that EXTENDS the table's current spec
-      // (old cols a strict prefix, e.g. day → day,type). The touched
-      // set is then computed on the OLD prefix columns, so every
-      // parent partition the batch lands in is lifted WHOLE, merged,
-      // and rewritten under the new spec; its parent pointer is
-      // dropped from the manifest and its children take over.
-      // Untouched partitions keep their old-spec dirs (readable —
-      // mixed key depths reassemble per dir, the new column coming
-      // from DATA files in old dirs and from the PATH in new ones),
-      // and migrate whenever a later commit touches them. Any other
-      // respec (reorder, replace, drop) needs a full rewrite into a
-      // new root — fail loudly.
-      val evolvesFrom: Option[Seq[String]] =
-        prev.map(_.partitionColumns)
-          .filter(_ != partitionColumns)
-          .map { old =>
-            require(old.size < partitionColumns.size &&
-              partitionColumns.take(old.size) == old,
-              s"partition-spec change ${old.mkString("(", ",", ")")} → " +
-                s"${partitionColumns.mkString("(", ",", ")")} on $root " +
-                "is not a prefix extension — only appending partition " +
-                "columns evolves in place; anything else needs a full " +
-                "rewrite into a new table root")
-            old
-          }
-      // mid-migration tables hold UNMIGRATED parent keys (fewer path
-      // segments than the current spec); every commit on such a table
-      // computes its touched set at the SHALLOWEST retained depth so a
-      // parent partition is always lifted whole — a child-granular
-      // merge would leave the parent pointer (and its stale rows)
-      // beside the new child
-      val minDepth = prev
-        .flatMap(_.partitions.keySet.map(_.count(_ == '/') + 1)
-          .minOption)
-        .getOrElse(partitionColumns.size)
-      val predCols = partitionColumns.take(
-        math.min(minDepth,
-          evolvesFrom.map(_.size).getOrElse(partitionColumns.size)))
-      var liftedKeys: Set[String] = Set.empty
-      val merged = prev match {
-        case None => stamped
-        case Some(m) =>
-          val touched = updates
-            .select(predCols.map(updates(_)): _*).distinct().collect()
-          if (touched.isEmpty) return m.version
-          val touchedPred = touchedPredicate(predCols, touched)
-          if (predCols.size < partitionColumns.size) {
-            // keys this commit supersedes: the touched parents AND any
-            // manifest key UNDER them (a twice-evolved table holds
-            // intermediate-depth pointers like day=A/type=*, which the
-            // prefix merge lifts wholesale — leaving them beside the
-            // deeper children written below would double their rows).
-            // Rendered by Spark's own writer so escaping matches.
-            val prefixSchema = org.apache.spark.sql.types.StructType(
-              predCols.map(c => updates.schema(c)))
-            val parents = renderPartitionKeys(spark, prefixSchema,
-              touched).toSet
-            liftedKeys = m.partitions.keySet.filter(k =>
-              parents.exists(p => k == p || k.startsWith(p + "/")))
-          }
-          // read through the pos-delete fold: the merge rewrites the
-          // touched partitions' files, and carrying a masked row into
-          // new addresses would resurrect it (entries go stale with
-          // the old files). Identity when no pos sub-table exists.
-          val existing = posMaskedSnapshot(spark, root, m)
-            .filter(touchedPred)
-          if (antiJoin) {
+    val pinnedPosVersion = posVersion(root)
+    // the batch carries this commit's write sequence (recomputed on
+    // CAS retry); kept rows keep theirs, as the flat upsert does
+    val stamped = updates.withColumn(SeqCol,
+      lit(prev.map(_.version).getOrElse(0L) + 1))
+    // PARTITION-SPEC EVOLUTION (migrate-on-write): a commit may use
+    // a partition-column list that EXTENDS the table's current spec
+    // (old cols a strict prefix, e.g. day → day,type; [[writeSpec]]
+    // admits nothing else). The touched set is then computed on the
+    // OLD prefix columns, so every parent partition the batch lands in
+    // is lifted WHOLE, merged, and rewritten under the new spec; its
+    // parent pointer is dropped from the manifest and its children
+    // take over. Untouched partitions keep their old-spec dirs
+    // (readable — mixed key depths reassemble per dir, the new column
+    // coming from DATA files in old dirs and from the PATH in new
+    // ones), and migrate whenever a later commit touches them.
+    val evolvesFrom: Option[Seq[String]] =
+      prev.map(_.partitionColumns).filter(_ != partitionColumns)
+    // mid-migration tables hold UNMIGRATED parent keys (fewer path
+    // segments than the current spec); every commit on such a table
+    // computes its touched set at the SHALLOWEST retained depth so a
+    // parent partition is always lifted whole — a child-granular
+    // merge would leave the parent pointer (and its stale rows)
+    // beside the new child
+    val minDepth = prev
+      .flatMap(_.partitions.keySet.map(_.count(_ == '/') + 1)
+        .minOption)
+      .getOrElse(partitionColumns.size)
+    val predCols = partitionColumns.take(
+      math.min(minDepth,
+        evolvesFrom.map(_.size).getOrElse(partitionColumns.size)))
+    var liftedKeys: Set[String] = Set.empty
+    val merged = prev match {
+      case None => stamped
+      case Some(m) =>
+        val touched = updates
+          .select(predCols.map(updates(_)): _*).distinct().collect()
+        if (touched.isEmpty) return m.version
+        val touchedPred = touchedPredicate(predCols, touched)
+        if (predCols.size < partitionColumns.size) {
+          // keys this commit supersedes: the touched parents AND any
+          // manifest key UNDER them (a twice-evolved table holds
+          // intermediate-depth pointers like day=A/type=*, which the
+          // prefix merge lifts wholesale — leaving them beside the
+          // deeper children written below would double their rows).
+          // Rendered by Spark's own writer so escaping matches.
+          val prefixSchema = org.apache.spark.sql.types.StructType(
+            predCols.map(c => updates.schema(c)))
+          val parents = renderPartitionKeys(spark, prefixSchema,
+            touched).toSet
+          liftedKeys = m.partitions.keySet.filter(k =>
+            parents.exists(p => k == p || k.startsWith(p + "/")))
+        }
+        // read through the pos-delete fold: the merge rewrites the
+        // touched partitions' files, and carrying a masked row into
+        // new addresses would resurrect it (entries go stale with
+        // the old files). Identity when no pos sub-table exists.
+        val existing = posMaskedSnapshot(spark, root, m)
+          .filter(touchedPred)
+        keys match {
+          case Some(ks) =>
             val (existingAligned, updatesAligned) =
-              MergeWriter.alignSchemas(existing, stamped, keys,
-                schemaMode)
+              MergeWriter.alignSchemas(existing, stamped, ks, schemaMode)
             existingAligned.join(
-                updates.select(keys.map(updates(_)): _*), keys,
-                "left_anti")
+                updates.select(ks.map(updates(_)): _*), ks, "left_anti")
               .unionByName(updatesAligned)
-          } else existing.unionByName(stamped, allowMissingColumns =
-            schemaMode == MergeWriter.SchemaMode.SyncAllColumns)
-      }
-      val staging = stagingDir(rootP)
-      try merged.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionColumns: _*).parquet(staging.toString)
-      catch { case e: Throwable => deleteRecursively(staging); throw e }
-      writeStatsSidecar(staging)
-      withCommitLock(rootP) {
-          val cur = readPartitionedManifest(root)
-          if (cur.map(_.version) != prev.map(_.version)) {
-            deleteRecursively(staging)
-            throw new ConcurrentCommitException(
-              s"$root moved to v${cur.map(_.version).getOrElse(0L)} " +
-                s"while this writer merged against " +
-                s"v${prev.map(_.version).getOrElse(0L)} — retrying")
-          }
-          if (posVersion(root) != pinnedPosVersion) {
-            deleteRecursively(staging)
-            throw new ConcurrentCommitException(
-              s"position deletes landed under $root during the " +
-                "merge — re-fold and retry")
-          }
-          val next = TableFs.publishVersionDir(rootP, staging)
-          val dirName = versionDirName(next)
-          // the partitions actually written are the touched set, keyed
-          // by their Spark-escaped relative paths; under spec
-          // evolution the lifted parents' pointers are dropped — their
-          // rows now live in the children written under the new spec
-          val written = partitionLeafDirs(rootP.resolve(dirName),
-            partitionColumns.size).map(_.toString)
-          val newParts =
-            (prev.map(_.partitions).getOrElse(Map.empty) -- liftedKeys) ++
-              written.map(_ -> dirName)
-          // partition-level bounds BEFORE the manifest flip: a crash
-          // between the two leaves stats.version > manifest.version,
-          // which readers reject (scan-all fallback, sound); stats
-          // lagging the manifest is equally rejected.
-          // Types come from MERGED — the dataframe actually written —
-          // not the raw batch: alignSchemas/unionByName may have
-          // coerced the batch's partition-column types to the table's,
-          // and recording the batch's type would make readLeavesTyped
-          // parse every dir's path values under the wrong type.
-          writePartSchema(rootP, partitionColumns.map(c =>
-            c -> merged.schema(c).dataType))
-          writePartStats(rootP, next, newParts, prev)
-          writePartitionedManifest(rootP,
-            PartitionedManifest(next, partitionColumns, newParts))
-          // immutable history entry (after the flip, like the
-          // unpartitioned path) — feeds last-K retention below
-          writeHistoryEntry(rootP, next,
-            renderPartitionedManifest(
-              PartitionedManifest(next, partitionColumns, newParts)))
-          // retention: keep dirs referenced by the newest
-          // `keepManifests` manifests (fallback: new + previous, for
-          // tables predating the history dir)
-          val history = {
-            val vd = rootP.resolve("_versions")
-            val s = Files.list(vd)
-            try {
-              import scala.jdk.CollectionConverters._
-              s.iterator().asScala.toSeq
-                .filter(_.getFileName.toString.matches("v\\d{8}\\.json"))
-                .sortBy(_.getFileName.toString).takeRight(keepManifests)
-                .flatMap(p => parsePartitionedManifest(new String(
-                  Files.readAllBytes(p), StandardCharsets.UTF_8)))
-            } finally s.close()
-          }
-          val referenced = newParts.values.toSet ++
-            prev.map(_.partitions.values.toSet).getOrElse(Set.empty) ++
-            history.flatMap(_.partitions.values).toSet ++
-            refPinnedDirs(rootP) // ref'd snapshots pin their dirs
-          val s = Files.list(rootP)
-          try {
-            import scala.jdk.CollectionConverters._
-            s.iterator().asScala.toSeq
-              .filter(p => Files.isDirectory(p) &&
-                p.getFileName.toString.matches("v\\d{8}") &&
-                !referenced(p.getFileName.toString))
-              .foreach(deleteRecursively)
-          } finally s.close()
-          next
-      }
+          case None => existing.unionByName(stamped,
+            allowMissingColumns =
+              schemaMode == MergeWriter.SchemaMode.SyncAllColumns)
+        }
     }
-    val v = retryThenEscalate(rootP, maxRetries)(once())
-    // pure appends (no keys, no anti-join) keep fresh column stats
-    // alive by folding the batch — see foldColumnStatsOnAppend
-    statsFoldBatch.foreach(b =>
-      foldColumnStatsOnAppend(spark, root, b, preV, v))
-    v
+    val staging = stagingDir(rootP)
+    try merged.write.mode(SaveMode.Overwrite)
+      .partitionBy(partitionColumns: _*).parquet(staging.toString)
+    catch { case e: Throwable => deleteRecursively(staging); throw e }
+    writeStatsSidecar(staging)
+    withCommitLock(rootP) {
+      // either form: a first partitioned commit must not flip over a
+      // flat table another writer created in between
+      val live = currentMainVersion(root)
+      val base = prev.map(_.version).getOrElse(0L)
+      if (live != base) {
+        deleteRecursively(staging)
+        throw new ConcurrentCommitException(
+          s"$root moved to v$live while this writer merged against " +
+            s"v$base — retrying")
+      }
+      if (posVersion(root) != pinnedPosVersion) {
+        deleteRecursively(staging)
+        throw new ConcurrentCommitException(
+          s"position deletes landed under $root during the " +
+            "merge — re-fold and retry")
+      }
+      val next = TableFs.publishVersionDir(rootP, staging)
+      val dirName = versionDirName(next)
+      // the partitions actually written are the touched set, keyed
+      // by their Spark-escaped relative paths; under spec
+      // evolution the lifted parents' pointers are dropped — their
+      // rows now live in the children written under the new spec
+      val written = partitionLeafDirs(rootP.resolve(dirName),
+        partitionColumns.size).map(_.toString)
+      val newParts =
+        (prev.map(_.partitions).getOrElse(Map.empty) -- liftedKeys) ++
+          written.map(_ -> dirName)
+      // partition-level bounds BEFORE the manifest flip: a crash
+      // between the two leaves stats.version > manifest.version,
+      // which readers reject (scan-all fallback, sound); stats
+      // lagging the manifest is equally rejected.
+      // Types come from MERGED — the dataframe actually written —
+      // not the raw batch: alignSchemas/unionByName may have
+      // coerced the batch's partition-column types to the table's,
+      // and recording the batch's type would make readLeavesTyped
+      // parse every dir's path values under the wrong type.
+      writePartSchema(rootP, partitionColumns.map(c =>
+        c -> merged.schema(c).dataType))
+      writePartStats(rootP, next, newParts, prev)
+      val published = PartitionedManifest(next, partitionColumns, newParts)
+      writePartitionedManifest(rootP, published)
+      // immutable history entry (after the flip, like the flat
+      // path) — feeds retention below
+      writeHistoryEntry(rootP, next, renderPartitionedManifest(published))
+      pruneRetired(rootP, keepVersions, newParts.values.toSet)
+      next
+    }
   }
 
   // ------------------------------------------------------------------
@@ -3570,7 +3440,7 @@ object VersionedTable {
   }
 
   /** REPLACE the partitions `df` covers with exactly its rows (the
-    * partition-scoped overwrite upsertPartitioned cannot express —
+    * partition-scoped overwrite a keyed merge cannot express —
     * its keyed merge never removes a row): write df partitioned,
     * flip ONLY the written partitions' manifest pointers, leave the
     * rest untouched. `expectedBase` CAS-protects against concurrent
@@ -3579,7 +3449,7 @@ object VersionedTable {
   // ------------------------------------------------------------------
   // Write-time CHECK constraints (Delta's table constraints): named
   // SQL predicates stored in `_constraints.json`; every row-adding
-  // write (upsert / upsertPartitioned / overwriteWhere) validates its
+  // write (upsert / append / overwriteWhere / ...) validates its
   // BATCH in one aggregate pass and rejects the whole commit when any
   // constraint is violated — the table can never transition into a
   // state that violates its contract. Cost is one batch-sized job per
@@ -3713,27 +3583,34 @@ object VersionedTable {
     * dynamic` on the versioned store): every partition PRESENT in
     * `df` is replaced wholesale by its rows; absent partitions are
     * untouched. The backfill write shape — "recompute these days" —
-    * CAS-committed with only the touched pointers flipped. Returns
-    * the new version.
+    * CAS-committed with only the touched pointers flipped. The spec
+    * comes from the pinned snapshot ([[writeSpec]]); a flat table is
+    * one partition and is replaced whole (Spark's rule for an
+    * unpartitioned target). Returns the new version.
     */
   def overwritePartitions(spark: SparkSession, root: String,
-                          df: DataFrame, partitionColumns: Seq[String],
+                          df: DataFrame, partitionBy: Seq[String] = Nil,
                           maxRetries: Int = 10): Long = {
-    require(partitionColumns.nonEmpty,
-      "overwritePartitions needs partition columns")
     requireNoReservedColumns(df.columns, s"overwrite of $root",
       Seq(SeqCol, AddrPathCol, AddrPosCol))
     enforceConstraints(root, df)
-    val rootP = Paths.get(root)
-    Files.createDirectories(rootP)
     def once(): Long = {
-      val base = readPartitionedManifest(root).map(_.version).getOrElse(0L)
-      // covered = exactly the written set: dynamic semantics never
-      // vacate a partition the replacement doesn't mention
-      replacePartitioned(spark, root, df.withColumn(SeqCol, lit(base + 1)),
-        partitionColumns, covered = Seq.empty, expectedBase = Some(base))
+      val view = snapshotView(root)
+      val base = view.map(_.version).getOrElse(0L)
+      val stamped = df.withColumn(SeqCol, lit(base + 1))
+      writeSpec(root, view, partitionBy, evolve = false) match {
+        case Nil =>
+          commit(root, expectedBase = Some(base)) { dir =>
+            stamped.write.mode(SaveMode.Overwrite).parquet(dir)
+          }
+        // covered = exactly the written set: dynamic semantics never
+        // vacate a partition the replacement doesn't mention
+        case spec =>
+          replacePartitioned(spark, root, stamped, spec,
+            covered = Seq.empty, expectedBase = Some(base))
+      }
     }
-    retryThenEscalate(rootP, maxRetries)(once())
+    retryThenEscalate(Paths.get(root), maxRetries)(once())
   }
 
   /** Predicate backfill on the PARTITIONED store (replaceWhere at
@@ -3766,34 +3643,6 @@ object VersionedTable {
         replacement.withColumn(SeqCol, lit(m.version + 1)),
         m.partitionColumns, covered = covered,
         expectedBase = Some(m.version))
-    }
-    retryThenEscalate(rootP, maxRetries)(once())
-  }
-
-  /** FULL static overwrite of a partitioned table: the next version
-    * holds exactly `df` under `partitionColumns` — every previous
-    * partition pointer is vacated (Spark's
-    * `partitionOverwriteMode=static` semantics; use
-    * [[overwritePartitions]] for dynamic). CAS-committed.
-    */
-  def replaceTablePartitioned(spark: SparkSession, root: String,
-                              df: DataFrame,
-                              partitionColumns: Seq[String],
-                              maxRetries: Int = 10): Long = {
-    require(partitionColumns.nonEmpty,
-      "replaceTablePartitioned needs partition columns")
-    requireNoReservedColumns(df.columns, s"replace of $root",
-      Seq(SeqCol, AddrPathCol, AddrPosCol))
-    enforceConstraints(root, df)
-    val rootP = Paths.get(root)
-    Files.createDirectories(rootP)
-    def once(): Long = {
-      val prev = readPartitionedManifest(root)
-      val base = prev.map(_.version).getOrElse(0L)
-      replacePartitioned(spark, root, df.withColumn(SeqCol, lit(base + 1)),
-        partitionColumns,
-        covered = prev.map(_.partitions.keys.toSeq).getOrElse(Seq.empty),
-        expectedBase = Some(base))
     }
     retryThenEscalate(rootP, maxRetries)(once())
   }
@@ -3954,7 +3803,8 @@ object VersionedTable {
         expectedEqVersion))
   }
 
-  /** The touched-partition cover for a row-level rewrite: given a
+  /** The touched-partition cover of partitioned snapshot `m` (the one
+    * the statement pinned) for a row-level rewrite: given a
     * frame of AFFECTED rows (pre-images being removed plus post-images
     * being written), the predicate that selects their partitions and
     * the manifest keys those partitions own. Computed at the
@@ -3963,12 +3813,9 @@ object VersionedTable {
     * same rule every partitioned merge applies. None = no affected
     * rows (the statement is a no-op; commit nothing).
     */
-  def touchedCover(spark: SparkSession, root: String,
+  def touchedCover(spark: SparkSession, m: PartitionedManifest,
                    affected: DataFrame)
       : Option[(Column, Seq[String])] = {
-    val m = readPartitionedManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no partitioned _manifest.json under $root"))
     val minDepth = m.partitions.keySet.map(_.count(_ == '/') + 1)
       .minOption.getOrElse(m.partitionColumns.size)
     val predCols = m.partitionColumns.take(
@@ -4065,7 +3912,7 @@ object VersionedTable {
     * rows land in one task and the dynamic-partition writer emits one
     * file per partition. Returns (version, partitions rewritten) —
     * (current version, 0) when nothing is fragmented. Old version
-    * dirs are pruned by the next upsertPartitioned's retention pass,
+    * dirs are pruned by the next upsert's or append's retention pass,
     * same as the partitioned [[vacuumDeletes]].
     */
   def compactPartitions(spark: SparkSession, root: String,
@@ -4143,6 +3990,7 @@ object VersionedTable {
                                  validate: () => Unit = () => ())
       : Long = {
     val rootP = Paths.get(root)
+    Files.createDirectories(rootP)
     val staging = stagingDir(rootP)
     try df.write.mode(SaveMode.Overwrite)
       .partitionBy(partitionColumns: _*).parquet(staging.toString)
@@ -4153,9 +4001,9 @@ object VersionedTable {
       // a PARTIAL replace under a DIFFERENT partition-column list
       // would silently flip the manifest's spec and merge a mixed key
       // space (`day=...` pointers beside `other=...`) — fail loudly;
-      // spec evolution is the upsertPartitioned prefix-extension path
-      // or a FULL replace (covered ⊇ every previous key: the old key
-      // space is vacated wholesale, so any new spec is consistent)
+      // spec evolution is the prefix extension of a keyed merge or
+      // append (or a FULL replace: covered ⊇ every previous key, the
+      // old key space is vacated wholesale)
       prev.filter(m => m.partitionColumns != partitionColumns &&
           (m.partitions.keySet -- covered.toSet).nonEmpty)
         .foreach { m =>
@@ -4166,10 +4014,10 @@ object VersionedTable {
               s"table is partitioned by " +
               s"${m.partitionColumns.mkString("(", ",", ")")} — a " +
               "partial replace/overwrite never changes the partition " +
-              "spec (evolve via upsertPartitioned prefix extension, " +
-              "or replaceTablePartitioned for a full respec)")
+              "spec (evolve through upsert or append with a " +
+              "prefix-extending partitionBy)")
         }
-      val live = prev.map(_.version).getOrElse(0L)
+      val live = currentMainVersion(root)
       expectedBase.filter(_ != live).foreach { base =>
         deleteRecursively(staging)
         throw new ConcurrentCommitException(
@@ -4192,7 +4040,7 @@ object VersionedTable {
       // mixed-depth safety: a written child beside a surviving
       // UNMIGRATED parent pointer would double its rows — dynamic
       // overwrite cannot migrate a parent (it only covers the keys it
-      // writes); migrate via upsertPartitioned/compactPartitions first
+      // writes); migrate via a partitioned upsert/compactPartitions first
       val keySet = newParts.keySet
       val clash = keySet.filter { k =>
         val segs = k.split('/')
@@ -4205,7 +4053,7 @@ object VersionedTable {
           s"replace into $root would leave child partition(s) " +
             s"${clash.toSeq.sorted.mkString(", ")} beside their " +
             "unmigrated parent pointer (rows would double) — migrate " +
-            "the parent first (any upsertPartitioned touching it, or " +
+            "the parent first (any partitioned upsert touching it, or " +
             "compactPartitions)")
       }
       // keep partition-level bounds current across replace commits
@@ -4679,7 +4527,7 @@ object VersionedTable {
 
   // ------------------------------------------------------------------
   // PARTITION-level column bounds (`_part_stats.json`) — the Iceberg
-  // manifest-entry bounds: each upsertPartitioned commit folds the
+  // manifest-entry bounds: each partitioned upsert commit folds the
   // per-file footer stats of every live partition into one
   // (rows, per-column [min,max]) entry per partition, version-stamped
   // with the manifest version it describes. An interval predicate on a
@@ -4849,53 +4697,52 @@ object VersionedTable {
   private def bloomPath(versionDir: Path): Path =
     versionDir.resolve("_bloom.json")
 
-  /** Build the `_bloom.json` sidecar for `columns` over the live
-    * version dir (one bloom per data file per column, `bits` bits
-    * each). The sidecar lives INSIDE the immutable version dir, so it
-    * can never describe different data than the files beside it and
-    * is reclaimed with the version. Size `bits` ≈ 10× the expected
-    * rows/file for ~1 % fpp. Values are hashed with SQL `xxhash64`;
-    * driver-side probes reproduce it via [[graft.functions.Bloom]].
+  /** Build the `_bloom.json` sidecars for `columns` over the live
+    * snapshot, either table form: one bloom per live data file per
+    * column, `bits` bits each, one sidecar per version dir the view
+    * maps (a flat segment, or the dir holding live partitions). Each
+    * sidecar lives INSIDE its immutable version dir, so it can never
+    * describe different data than the files beside it and is reclaimed
+    * with the version. Size `bits` ≈ 10× the expected rows/file for
+    * ~1 % fpp. Values are hashed with SQL `xxhash64`; driver-side
+    * probes reproduce it via [[graft.functions.Bloom]]. One
+    * grouped-aggregate Spark job per dir.
     */
   def addBloomSidecar(spark: SparkSession, root: String,
                       columns: Seq[String], bits: Int = 1 << 16): Unit = {
     require(columns.nonEmpty, "addBloomSidecar needs at least one column")
-    val m = readManifest(root).getOrElse(throw new IllegalStateException(
-      s"no _manifest.json under $root"))
-    m.segments.foreach(seg =>
-      addBloomSidecarToDir(spark, Paths.get(root), seg, columns, bits))
-  }
-
-  /** [[addBloomSidecar]] for one flat segment dir. */
-  private def addBloomSidecarToDir(spark: SparkSession, rootP: Path,
-                                   seg: String, columns: Seq[String],
-                                   bits: Int): Unit = {
-    val dirP = rootP.resolve(seg)
-    val files = dataFilesUnder(dirP)
-    if (files.isEmpty) return
+    val v = liveView(root)
+    val rootP = Paths.get(root)
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    // relativize inside the job (the withAddress idiom): _metadata
-    // .file_path is a URI string, and driver-side java.net.URI parsing
-    // throws on legal roots containing spaces or other URI-illegal
-    // characters
-    val src = spark.read.option("basePath", dirP.toString)
-      .parquet(files.map(_.toString): _*)
-      .select(expr(s"substring_index(_metadata.file_path, '/$seg/', -1)")
-        .as("_graft_file") +:
-        columns.map(c => xxhash64(col(c)).as(s"_graft_h_$c")): _*)
-    val aggs = columns.map(c =>
-      expr(s"graft_bloom(`_graft_h_$c`, $bits)").as(s"_graft_b_$c"))
-    val rows = src.groupBy(col("_graft_file"))
-      .agg(aggs.head, aggs.tail: _*).collect() // one row per live file
-    Files.write(bloomPath(dirP),
-      renderBloomLines(rows, columns)
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    ()
+    v.partitions.groupBy(_._2).toSeq.sortBy(_._1).foreach {
+      case (dn, leaves) =>
+        val dirP = rootP.resolve(dn)
+        val files = leaves.keys.toSeq.sorted.flatMap(k =>
+          dataFilesUnder(rootP.resolve(viewLeaf(v, k, dn))))
+        if (files.nonEmpty) {
+          // relativize inside the job (the withAddress idiom):
+          // _metadata.file_path is a URI string, and driver-side
+          // java.net.URI parsing throws on legal roots containing
+          // spaces or other URI-illegal characters
+          val src = spark.read.option("basePath", dirP.toString)
+            .parquet(files.map(_.toString): _*)
+            .select(
+              expr(s"substring_index(_metadata.file_path, '/$dn/', -1)")
+                .as("_graft_file") +:
+              columns.map(c => xxhash64(col(c)).as(s"_graft_h_$c")): _*)
+          val aggs = columns.map(c =>
+            expr(s"graft_bloom(`_graft_h_$c`, $bits)").as(s"_graft_b_$c"))
+          val rows = src.groupBy(col("_graft_file"))
+            .agg(aggs.head, aggs.tail: _*).collect() // one row per file
+          Files.write(bloomPath(dirP),
+            renderBloomLines(rows, columns)
+              .mkString("\n").getBytes(StandardCharsets.UTF_8))
+        }
+    }
   }
 
   /** Render collected (file, bloom…) aggregate rows into the
-    * `_bloom.json` line format — shared by both sidecar builders so
-    * the sketch encoding has exactly one writer.
+    * `_bloom.json` line format.
     */
   private def renderBloomLines(rows: Array[org.apache.spark.sql.Row],
                                columns: Seq[String]): Seq[String] = {
@@ -4958,64 +4805,19 @@ object VersionedTable {
       }.toMap
   }
 
-  /** Partitioned flavor of [[addBloomSidecar]]: build per-file blooms
-    * for the LIVE partitions' files, one `_bloom.json` per distinct
-    * version dir (the sidecar stays beside the immutable data it
-    * describes, like the unpartitioned form). One grouped-aggregate
-    * Spark job per distinct dir — usually one or two.
-    */
-  def addBloomSidecarPartitioned(spark: SparkSession, root: String,
-                                 columns: Seq[String],
-                                 bits: Int = 1 << 16): Unit = {
-    require(columns.nonEmpty,
-      "addBloomSidecarPartitioned needs at least one column")
-    val m = readPartitionedManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no partitioned _manifest.json under $root"))
-    val rootP = Paths.get(root)
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    m.partitions.groupBy(_._2).toSeq.sortBy(_._1).foreach {
-      case (dn, parts) =>
-        val dirP = rootP.resolve(dn)
-        val files = parts.keys.toSeq.sorted
-          .flatMap(k => dataFilesUnder(dirP.resolve(k)))
-        if (files.nonEmpty) {
-          val src = spark.read.option("basePath", dirP.toString)
-            .parquet(files.map(_.toString): _*)
-            .select(
-              expr(s"substring_index(_metadata.file_path, '/$dn/', -1)")
-                .as("_graft_file") +:
-              columns.map(c => xxhash64(col(c)).as(s"_graft_h_$c")): _*)
-          val aggs = columns.map(c =>
-            expr(s"graft_bloom(`_graft_h_$c`, $bits)").as(s"_graft_b_$c"))
-          val rows = src.groupBy(col("_graft_file"))
-            .agg(aggs.head, aggs.tail: _*).collect()
-          Files.write(bloomPath(dirP),
-            renderBloomLines(rows, columns)
-              .mkString("\n").getBytes(StandardCharsets.UTF_8))
-          ()
-        }
-    }
-  }
-
   /** Packaged exactly-once-effect streaming sink: the foreachBatch
     * function q215/q298 hand-roll — each micro-batch lands as a keyed
-    * (optionally partitioned) upsert, so at-least-once redelivery
+    * [[upsert]] (`partitionBy` as there), so at-least-once redelivery
     * collapses on the merge key and commits stay reader-atomic.
     * Usage: `stream.writeStream.foreachBatch(
     * VersionedTable.streamUpsertWriter(spark, root, keys)).start()`.
     */
   def streamUpsertWriter(spark: SparkSession, root: String,
                          keys: Seq[String],
-                         partitionColumns: Seq[String] = Seq.empty)
+                         partitionBy: Seq[String] = Nil)
       : (DataFrame, Long) => Unit =
     (batch: DataFrame, _: Long) => {
-      if (!batch.isEmpty) {
-        if (partitionColumns.isEmpty)
-          upsert(spark, root, batch, keys)
-        else
-          upsertPartitioned(spark, root, batch, keys, partitionColumns)
-      }
+      if (!batch.isEmpty) upsert(spark, root, batch, keys, partitionBy)
       ()
     }
 
@@ -5044,8 +4846,8 @@ object VersionedTable {
   def compact(spark: SparkSession, root: String, numFiles: Int,
               keepVersions: Int = 2, maxRetries: Int = 10): Long = {
     require(numFiles > 0, "numFiles must be positive")
-    rewriteFoldingPosDeletes(spark, root, keepVersions, maxRetries)(
-      _.repartition(numFiles))
+    rewriteFoldingPosDeletes(spark, root, "compact", keepVersions,
+      maxRetries)(_.repartition(numFiles))
   }
 
   /** Sort-clustered compaction (the z-order-lite a single sort key
@@ -5062,7 +4864,8 @@ object VersionedTable {
                     sortCols: Seq[String], numFiles: Int,
                     keepVersions: Int = 2, maxRetries: Int = 10): Long = {
     require(sortCols.nonEmpty, "compactSorted needs at least one sort column")
-    rewriteFoldingPosDeletes(spark, root, keepVersions, maxRetries) { snap =>
+    rewriteFoldingPosDeletes(spark, root, "compactSorted", keepVersions,
+      maxRetries) { snap =>
       snap.repartitionByRange(numFiles, sortCols.map(col): _*)
         .sortWithinPartitions(sortCols.map(col): _*)
     }
@@ -5101,7 +4904,8 @@ object VersionedTable {
     val n = cols.size
     val laneBits = math.min(16, 62 / n)
     val laneMax = (1L << laneBits) - 1
-    rewriteFoldingPosDeletes(spark, root, keepVersions, maxRetries) { snap =>
+    rewriteFoldingPosDeletes(spark, root, "compactZOrder", keepVersions,
+      maxRetries) { snap =>
       requireNoReservedColumns(snap.columns,
         s"compactZOrder over $root", Seq("_graft_z"))
       val aggs = cols.flatMap(c => Seq(smin(col(c)).cast("double"),

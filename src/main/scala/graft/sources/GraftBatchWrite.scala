@@ -142,8 +142,7 @@ private[sources] class GraftBatchWrite(root: String,
         // the branch (ref + fork base), and a WAP pipeline's empty
         // epoch must leave a publishable branch behind
         !Option(info.options.get("branch")).exists(_.trim.nonEmpty) &&
-        (VersionedTable.readManifest(root).isDefined ||
-          VersionedTable.readPartitionedManifest(root).isDefined)
+        VersionedTable.snapshotView(root).isDefined
       if (!noopAppend) {
         val staged: DataFrame =
           if (files.isEmpty)
@@ -189,7 +188,9 @@ private[sources] class GraftBatchWrite(root: String,
       opt(k).map(_.split(",").map(_.trim)
         .filter(_.nonEmpty).toSeq).filter(_.nonEmpty)
     val keys = list("keys")
-    val parts = list("partitionColumns")
+    // Nil = the table's committed spec (the verbs read the form from
+    // its manifest); a declared list shapes only the first commit
+    val pc = list("partitionColumns").getOrElse(Nil)
     val schemaMode = opt("schemaMode") match {
       case Some("sync") => graft.sinks.MergeWriter.SchemaMode.SyncAllColumns
       case _            => graft.sinks.MergeWriter.SchemaMode.Strict
@@ -197,12 +198,8 @@ private[sources] class GraftBatchWrite(root: String,
     mode match {
       case GraftNativeWrite.OverwriteFilters(filters) =>
         GraftWriteBuilder.overwriteByFilter(spark, root, filters,
-          staged, parts)
+          staged, pc)
       case GraftNativeWrite.DynamicOverwrite =>
-        val pc = parts.getOrElse(throw new IllegalArgumentException(
-          s"dynamic INSERT OVERWRITE into $root needs partition " +
-            "columns — declare partitionColumns on the table (flat " +
-            "tables have no partitions to overwrite dynamically)"))
         VersionedTable.overwritePartitions(spark, root, staged, pc)
         ()
       case GraftNativeWrite.Truncate =>
@@ -210,15 +207,8 @@ private[sources] class GraftBatchWrite(root: String,
           .getOrElse(spark.conf.get(
             "spark.sql.sources.partitionOverwriteMode", "static"))
           .equalsIgnoreCase("dynamic")
-        (parts, dynamic) match {
-          case (Some(pc), true) =>
-            VersionedTable.overwritePartitions(spark, root, staged, pc)
-          case (Some(pc), false) =>
-            VersionedTable.replaceTablePartitioned(spark, root, staged,
-              pc)
-          case (None, _) =>
-            VersionedTable.replaceTable(spark, root, staged)
-        }
+        if (dynamic) VersionedTable.overwritePartitions(spark, root, staged, pc)
+        else VersionedTable.replaceTable(spark, root, staged, pc)
         ()
       case GraftNativeWrite.Append
           if Option(o.get("branch")).exists(_.trim.nonEmpty) =>
@@ -230,25 +220,14 @@ private[sources] class GraftBatchWrite(root: String,
         require(keys.isEmpty,
           s"branch writes into $root are appends — keyed upsert onto " +
             "a branch is not supported; upsert after fast_forward")
-        parts match {
-          case Some(pc) => VersionedTable.appendPartitionedToBranch(
-            spark, root, staged, pc, b)
-          case None =>
-            VersionedTable.appendToBranch(spark, root, staged, b)
-        }
+        VersionedTable.appendToBranch(spark, root, staged, b, pc)
         ()
       case GraftNativeWrite.Append =>
-        (keys, parts) match {
-          case (Some(k), Some(pc)) =>
-            VersionedTable.upsertPartitioned(spark, root, staged, k,
-              pc, schemaMode)
-          case (Some(k), None) =>
-            VersionedTable.upsert(spark, root, staged, k, schemaMode)
-          case (None, Some(pc)) =>
-            VersionedTable.appendPartitioned(spark, root, staged, pc,
-              schemaMode = schemaMode)
-          case (None, None) =>
-            VersionedTable.append(spark, root, staged,
+        keys match {
+          case Some(k) =>
+            VersionedTable.upsert(spark, root, staged, k, pc, schemaMode)
+          case None =>
+            VersionedTable.append(spark, root, staged, pc,
               schemaMode = schemaMode)
         }
         ()

@@ -239,8 +239,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // the missing column), never as silent misbinding.
     val declared = meta.get(GraftCatalog.SchemaKey)
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-    val committed = VersionedTable.readManifest(rootS).isDefined ||
-      VersionedTable.readPartitionedManifest(rootS).isDefined
+    val committed = VersionedTable.snapshotView(rootS).isDefined
     val syncMode = meta.get("schemaMode").contains("sync")
     val schema =
       if (!committed) declared.getOrElse(throw new IllegalStateException(
@@ -484,8 +483,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // corrected LOCATION would hit TableAlreadyExists on a broken stub
     if (schema.isEmpty) {
       val dataAt = location.map(Paths.get(_)).getOrElse(root).toString
-      require(VersionedTable.readManifest(dataAt).isDefined ||
-        VersionedTable.readPartitionedManifest(dataAt).isDefined,
+      require(VersionedTable.snapshotView(dataAt).isDefined,
         s"CREATE TABLE ${ident.name()} without a schema needs an " +
           s"existing committed graft table at $dataAt — declare " +
           "columns, or fix the LOCATION")

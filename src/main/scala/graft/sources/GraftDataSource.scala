@@ -267,7 +267,7 @@ private[sources] object GraftWriteBuilder {
     */
   private[sources] def overwriteByFilter(spark: SparkSession,
       root: String, filters: Array[Filter], rawData: DataFrame,
-      parts: Option[Seq[String]] = None): Unit = {
+      parts: Seq[String] = Nil): Unit = {
     val pred = filters.flatMap(GraftFilterColumns.translate)
       .reduceOption(_ && _).getOrElse(lit(true))
     // persist: the validation below and the write both consume this
@@ -285,13 +285,8 @@ private[sources] object GraftWriteBuilder {
     // first write to a declared-but-never-committed table: nothing
     // to vacate, the overwrite degenerates to the initial (validated)
     // insert — the standard idempotent-backfill-from-day-one pattern
-    if (VersionedTable.readManifest(root).isEmpty &&
-        VersionedTable.readPartitionedManifest(root).isEmpty) {
-      parts match {
-        case Some(pc) =>
-          VersionedTable.appendPartitioned(spark, root, data, pc)
-        case None => VersionedTable.append(spark, root, data)
-      }
+    if (VersionedTable.snapshotView(root).isEmpty) {
+      VersionedTable.append(spark, root, data, parts)
       return
     }
     VersionedTable.readPartitionedManifest(root) match {
@@ -553,8 +548,7 @@ private[sources] class GraftV1Relation(context: SQLContext,
     // versionAsOf excluded: time travel on a never-committed table
     // must fail loudly (a typo'd version is not an empty snapshot)
     if (opts.emptyOk && opts.versionAsOf.isEmpty &&
-        VersionedTable.readManifest(opts.root).isEmpty &&
-        VersionedTable.readPartitionedManifest(opts.root).isEmpty) {
+        VersionedTable.snapshotView(opts.root).isEmpty) {
       // a created-but-never-written catalog table: its declared
       // schema with zero rows, zero files opened
       GraftScanAudit.last = Some(GraftScanAudit.Decision(0, 0, 0, 0,
@@ -847,9 +841,7 @@ private[graft] object GraftScanPlanner {
                       required: StructType,
                       pushed: Seq[Filter]): Option[String] = {
     if (o.changes.isDefined || o.metadata.isDefined) return None
-    if (VersionedTable.readManifest(o.root).isEmpty &&
-        VersionedTable.readPartitionedManifest(o.root).isEmpty)
-      return None
+    if (VersionedTable.snapshotView(o.root).isEmpty) return None
     val rootP = Paths.get(o.root)
     val token = VersionedTable.listingToken(Seq(rootP,
       Paths.get(VersionedTable.posDeletesRoot(o.root)),
@@ -933,8 +925,9 @@ private[graft] object GraftScanPlanner {
         o.versionAsOf match {
           case Some(v) =>
             // never committed or pruned: unknowable
-            scala.util.Try(VersionedTable.flatVersionDirs(o.root, v))
-              .toOption.map(segmentBytes(rootP, _))
+            scala.util.Try(VersionedTable.versionView(o.root, v))
+              .toOption.map(vw => segmentBytes(rootP,
+                vw.partitions.values.toSeq))
           case None =>
             VersionedTable.readManifest(o.root) match {
               case Some(m) =>
@@ -963,11 +956,7 @@ private[graft] object GraftScanPlanner {
       else VersionedTable.readChanges(spark, o.root, from, to, keys)
     }
     o.versionAsOf match {
-      case Some(v) =>
-        if (VersionedTable.readPartitionedManifest(o.root).isDefined ||
-            VersionedTable.historyPartitionedManifest(o.root, v).isDefined)
-          VersionedTable.readPartitionedVersion(spark, o.root, v)
-        else VersionedTable.readVersion(spark, o.root, v)
+      case Some(v) => VersionedTable.readVersion(spark, o.root, v)
       case None =>
         val view = VersionedTable.snapshotView(o.root).getOrElse(
           throw new IllegalStateException(
@@ -1253,8 +1242,9 @@ private[graft] object GraftScanPlanner {
 
   /** Literal → exact BigDecimal in the stats' physical domain (micros
     * for timestamps, days for dates) — BigDecimal, not double, so
-    * longs beyond 2^53 can never be wrongly excluded. NaN → None
-    * (no pruning).
+    * longs beyond 2^53 can never be wrongly excluded. NaN and ±Infinity
+    * → None (no pruning: BigDecimal has no infinity, and a file holding
+    * an infinite value keeps an open bound).
     */
   private def num(v: Any): Option[BigDecimal] = {
     import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -1268,9 +1258,9 @@ private[graft] object GraftScanPlanner {
         // harvest stores FLOAT bounds as f.doubleValue(), and a
         // decimal-repr literal (0.7) compared against the binary
         // bound (0.699999988…) would wrongly skip the file
-        if (n.isNaN) None else Some(BigDecimal(n.toDouble))
+        if (n.isNaN || n.isInfinite) None else Some(BigDecimal(n.toDouble))
       case n: Double =>
-        if (n.isNaN) None else Some(BigDecimal(n))
+        if (n.isNaN || n.isInfinite) None else Some(BigDecimal(n))
       // java.math.BigDecimal (DecimalType literals) is deliberately
       // UNPRUNABLE: decimal columns are physically INT32/INT64
       // unscaled values, so the footer bounds are in a different

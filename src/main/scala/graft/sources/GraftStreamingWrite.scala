@@ -97,26 +97,18 @@ private[sources] class GraftStreamingWrite(root: String,
       opt(k).map(_.split(",").map(_.trim)
         .filter(_.nonEmpty).toSeq).filter(_.nonEmpty)
     val keys = list("keys")
-    val parts = list("partitionColumns")
+    // Nil = the table's committed spec (see GraftBatchWrite.route)
+    val pc = list("partitionColumns").getOrElse(Nil)
     val schemaMode = opt("schemaMode") match {
       case Some("sync") => graft.sinks.MergeWriter.SchemaMode.SyncAllColumns
       case _            => graft.sinks.MergeWriter.SchemaMode.Strict
     }
-    (truncate, keys, parts) match {
-      case (true, _, Some(pc)) =>
-        VersionedTable.replaceTablePartitioned(spark, root, staged, pc)
-      case (true, _, None) =>
-        VersionedTable.replaceTable(spark, root, staged)
-      case (false, Some(k), Some(pc)) =>
-        VersionedTable.upsertPartitioned(spark, root, staged, k, pc,
-          schemaMode)
-      case (false, Some(k), None) =>
-        VersionedTable.upsert(spark, root, staged, k, schemaMode)
-      case (false, None, Some(pc)) =>
-        VersionedTable.appendPartitioned(spark, root, staged, pc,
-          schemaMode = schemaMode)
-      case (false, None, None) =>
-        VersionedTable.append(spark, root, staged,
+    (truncate, keys) match {
+      case (true, _) => VersionedTable.replaceTable(spark, root, staged, pc)
+      case (false, Some(k)) =>
+        VersionedTable.upsert(spark, root, staged, k, pc, schemaMode)
+      case (false, None) =>
+        VersionedTable.append(spark, root, staged, pc,
           schemaMode = schemaMode)
     }
     ()

@@ -93,8 +93,8 @@ object Profile {
           .select(col("id"),
             expr(s"CAST(id * 32 DIV $n AS STRING)").as("p"),
             (col("id") * 3).as("m"))
-        VersionedTable.upsertPartitioned(spark, root, batch,
-          Seq("id"), Seq("p"), keepManifests = 20)
+        VersionedTable.upsert(spark, root, batch,
+          Seq("id"), Seq("p"), keepVersions = 20)
         ()
       }
     }
@@ -106,7 +106,7 @@ object Profile {
       println(s"  sum=$s audit=${graft.sources.GraftScanAudit.last}")
     }
     t("full-scan equivalent") {
-      println("  sum=" + VersionedTable.readLivePartitioned(spark, root)
+      println("  sum=" + VersionedTable.readLive(spark, root)
         .filter(col("m") >= lo && col("m") <= hi).agg(sum("id")).head())
     }
     t("readChanges: LAST commit only") {

@@ -48,13 +48,13 @@ class CdfSpec extends SparkSpec {
   test("partitioned steps read only touched partitions and the feed " +
     "reflects them") {
     val root = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((1L, "p0", 10L), (2L, "p1", 20L), (3L, "p2", 30L))
-        .toDF("id", "p", "x"), Seq("id"), Seq("p"), keepManifests = 10)
+        .toDF("id", "p", "x"), Seq("id"), Seq("p"), keepVersions = 10)
     // touch ONLY p1
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((2L, "p1", 25L), (9L, "p1", 90L)).toDF("id", "p", "x"),
-      Seq("id"), Seq("p"), keepManifests = 10)
+      Seq("id"), Seq("p"), keepVersions = 10)
     val step = VersionedTable.readChanges(spark, root, 1L, 2L, Seq("id"))
     val got = step.select("id", "p", "x", "_change_type")
       .as[(Long, String, Long, String)].collect().toSet

@@ -79,7 +79,7 @@ class DoubleStatsSpec extends SparkSpec {
     val df = spark.range(0, 900)
       .select(col("id"), (col("id") % 3).cast("string").as("p"),
         (col("id") * lit(0.25)).as("x"))
-    VersionedTable.upsertPartitioned(spark, root, df,
+    VersionedTable.upsert(spark, root, df,
       Seq("id"), Seq("p"))
     // x within each partition spans ~[0, 225); probe an interval no
     // partition's bound excludes vs one that all exclude
@@ -89,14 +89,14 @@ class DoubleStatsSpec extends SparkSpec {
       s"out-of-range interval must skip all partitions: $pAll/$pTot")
     val pruned = VersionedTable.readLivePruned(
       spark, root, between("x", 10.0, 50.0))
-    val plain = VersionedTable.readLivePartitioned(spark, root)
+    val plain = VersionedTable.readLive(spark, root)
       .filter(col("x") >= 10.0 && col("x") <= 50.0)
     assert(pruned.count() === plain.count())
     assert(pruned.agg(sum("id")).head.getLong(0)
       === plain.agg(sum("id")).head.getLong(0))
     // poison one partition with a NaN — its bound disappears, so it
     // scans even for intervals far outside its clean values
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((9000L, "0", Double.NaN)).toDF("id", "p", "x"),
       Seq("id"), Seq("p"))
     val (pSel2, pTot2, _, _) = twoLevel(VersionedTable
@@ -104,5 +104,21 @@ class DoubleStatsSpec extends SparkSpec {
     assert(pTot2 === 3)
     assert(pSel2 === 1, // only the poisoned partition must scan
       s"NaN partition must lose its bound and scan: $pSel2")
+  }
+
+  test("an infinite literal plans without error and never prunes a " +
+    "match") {
+    val root = tmpRoot()
+    VersionedTable.upsert(spark, root,
+      Seq((1L, 1.5), (2L, Double.PositiveInfinity),
+        (3L, Double.NegativeInfinity)).toDF("id", "x"), Seq("id"))
+    def ids(cond: String): Set[Long] =
+      spark.read.format("graft").load(root).where(cond)
+        .select("id").as[Long].collect().toSet
+    assert(ids("x > double('inf')") === Set.empty[Long])
+    assert(ids("x < double('-inf')") === Set.empty[Long])
+    assert(ids("x = double('inf')") === Set(2L))
+    assert(ids("x = double('-inf')") === Set(3L))
+    assert(ids("x >= double('inf') OR x < 2.0") === Set(1L, 2L, 3L))
   }
 }

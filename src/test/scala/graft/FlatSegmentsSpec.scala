@@ -54,7 +54,8 @@ class FlatSegmentsSpec extends SparkSpec {
     assert(ids(VersionedTable.readLive(spark, root)) ===
       (0L until 105L).toSet)
     // the history entry lists the same segments
-    assert(VersionedTable.flatVersionDirs(root, v2) === segments(root))
+    assert(VersionedTable.versionView(root, v2).partitions.values.toSeq
+      .sorted === segments(root))
   }
 
   test("a key-disjoint upsert commits only the batch; an upsert that " +
@@ -282,7 +283,7 @@ class FlatSegmentsSpec extends SparkSpec {
     assert(spark.read.format("graft").load(root).count() === 64L)
     // every dir the retained history lists is on disk
     VersionedTable.versions(root).foreach(v =>
-      VersionedTable.flatVersionDirs(root, v))
+      VersionedTable.versionView(root, v))
   }
 
   test("a second vacuumDeletes leaves the version, the dirs and the " +

@@ -73,6 +73,11 @@ class FormParitySpec extends SparkSpec {
     VersionedTable.readLiveWithPosDeletes(spark, root)
       .select("id", "v", "s", "g").as[Row4].collect().toSeq.sortBy(_._1)
 
+  /** The facade's read: the DSv2 path read `SELECT *` plans. */
+  private def facadeRows(root: String): Seq[Row4] =
+    Graft.readTable(spark, root)
+      .select("id", "v", "s", "g").as[Row4].collect().toSeq.sortBy(_._1)
+
   /** Runs the lifecycle on one form; returns the entry audit taken
     * before the vacuum.
     */
@@ -83,6 +88,7 @@ class FormParitySpec extends SparkSpec {
       val want = sorted(model.values.toSeq)
       assert(tableRows(name) === want, s"$form after $step (SQL)")
       assert(libraryRows(root) === want, s"$form after $step (library)")
+      assert(facadeRows(root) === want, s"$form after $step (facade)")
     }
     check("seed")
 
@@ -152,14 +158,12 @@ class FormParitySpec extends SparkSpec {
   private val forms = Seq("flat" -> "fp_flat", "nested" -> "fp_nested",
     "partitioned" -> "fp_part")
 
-  /** The paper's keyed load: upsert `rows` by `id` in `form`. */
-  private def upsertRows(root: String, form: String,
-                         rows: Seq[Row4]): Unit = {
-    val df = rows.toDF("id", "v", "s", "g")
-    if (form == "partitioned")
-      VersionedTable.upsertPartitioned(spark, root, df, Seq("id"), Seq("g"))
-    else VersionedTable.upsert(spark, root, df, Seq("id"))
-  }
+  /** The paper's keyed load: upsert `rows` by `id` — the form comes
+    * from the table's manifest, never from the caller.
+    */
+  private def upsertRows(root: String, rows: Seq[Row4]): Unit =
+    VersionedTable.upsert(spark, root, rows.toDF("id", "v", "s", "g"),
+      Seq("id"))
 
   private def eqRows(root: String): Seq[Row4] =
     VersionedTable.readLiveWithDeletes(spark, root, Seq("id"))
@@ -175,13 +179,14 @@ class FormParitySpec extends SparkSpec {
         val want = sorted(model.values.toSeq)
         assert(tableRows(t) === want, s"$form after $step (SQL)")
         assert(eqRows(root) === want, s"$form after $step (library)")
+        assert(facadeRows(root) === want, s"$form after $step (facade)")
       }
       VersionedTable.softDelete(spark, root, Seq(2L, 5L).toDF("id"),
         Seq("id"))
       model --= Seq(2L, 5L)
       check("softDelete")
       val back = (2L, 21L, "r", "g2")
-      upsertRows(root, form, Seq(back))
+      upsertRows(root, Seq(back))
       model += 2L -> back
       check("re-upsert")
       VersionedTable.vacuumDeletes(spark, root, Seq("id"))
@@ -195,9 +200,12 @@ class FormParitySpec extends SparkSpec {
       val t = s"${name}_mu"
       val root = create(t, form)
       var model: Map[Long, Row4] = seedRows.map(r => r._1 -> r).toMap
-      def check(step: String): Unit =
+      def check(step: String): Unit = {
         assert(tableRows(t) === sorted(model.values.toSeq),
           s"$form after $step")
+        assert(facadeRows(root) === sorted(model.values.toSeq),
+          s"$form after $step (facade)")
+      }
       spark.sql(s"UPDATE fpcat.f.$t SET v = v + 1000 WHERE id IN (4, 8)")
       model ++= Seq(4L, 8L).map(k =>
         k -> model(k).copy(_2 = model(k)._2 + 1000))
@@ -222,7 +230,7 @@ class FormParitySpec extends SparkSpec {
         .getBytes("UTF-8"))
     var model: Map[Long, Row4] = seedRows.map(r => r._1 -> r).toMap
     val fresh = (13L, 130L, "n", "g1")
-    upsertRows(root, "partitioned", Seq(fresh))
+    upsertRows(root, Seq(fresh))
     model += 13L -> fresh
     val m = VersionedTable.readPartitionedManifest(root).get
     assert(m.partitions("g=g0") == "v00000001" &&
@@ -249,7 +257,7 @@ class FormParitySpec extends SparkSpec {
     val t = "fp_hidden"
     val root = create(t, "partitioned")
     val v1 = VersionedTable.readPartitionedManifest(root).get.version
-    upsertRows(root, "partitioned", Seq((1L, 11L, "o", "g1")))
+    upsertRows(root, Seq((1L, 11L, "o", "g1")))
     val v2 = VersionedTable.readPartitionedManifest(root).get.version
     val seq = VersionedTable.SeqCol
     val leaf = Files.walk(java.nio.file.Paths.get(root, f"v$v2%08d"))
@@ -263,10 +271,10 @@ class FormParitySpec extends SparkSpec {
       spark.sql(s"SELECT * FROM fpcat.f.$t VERSION AS OF $v1"))
     assert(!spark.sql(s"DESCRIBE fpcat.f.$t").collect()
       .exists(_.getString(0) == seq), "DESCRIBE")
-    hidden("readPartitionedVersion",
-      VersionedTable.readPartitionedVersion(spark, root, v1))
-    hidden("readLivePartitioned",
-      VersionedTable.readLivePartitioned(spark, root))
+    hidden("readVersion",
+      VersionedTable.readVersion(spark, root, v1))
+    hidden("readLive",
+      VersionedTable.readLive(spark, root))
     hidden("readChanges",
       VersionedTable.readChanges(spark, root, v1, v2, Seq("id")))
     hidden("diffVersions",

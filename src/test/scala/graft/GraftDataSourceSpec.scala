@@ -123,7 +123,7 @@ class GraftDataSourceSpec extends SparkSpec {
     val df = spark.range(0, 3000)
       .select(col("id"), (col("id") % 3).cast("string").as("p"),
         (col("id") % 1000).as("x"))
-    VersionedTable.upsertPartitioned(spark, root, df, Seq("id"), Seq("p"))
+    VersionedTable.upsert(spark, root, df, Seq("id"), Seq("p"))
     VersionedTable.softDelete(spark, root,
       Seq(0L, 9L).toDF("id"), Seq("id"))
     val q = spark.read.format("graft").load(root)
@@ -178,15 +178,15 @@ class GraftDataSourceSpec extends SparkSpec {
     val df = (1L to 60L)
       .map(i => (i, s"d${i % 3}", s"t${i % 2}", i * 10L))
       .toDF("id", "day", "typ", "cents")
-    VersionedTable.upsertPartitioned(spark, root, df,
-      Seq("id"), Seq("day"), keepManifests = 10)
+    VersionedTable.upsert(spark, root, df,
+      Seq("id"), Seq("day"), keepVersions = 10)
     // migrate ONLY d1 to (day, typ)
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((1000L, "d1", "t0", 1L)).toDF("id", "day", "typ", "cents"),
-      Seq("id"), Seq("day", "typ"), keepManifests = 10)
+      Seq("id"), Seq("day", "typ"), keepVersions = 10)
     val got = spark.read.format("graft").load(root)
       .filter(col("typ") === "t0").count()
-    val want = VersionedTable.readLivePartitioned(spark, root)
+    val want = VersionedTable.readLive(spark, root)
       .filter(col("typ") === "t0").count()
     assert(got === want)
     // rows from unmigrated d0/d2 must be present (they hold typ in
@@ -256,20 +256,20 @@ class GraftDataSourceSpec extends SparkSpec {
       .toDF("id", "p", "x")
       .write.format("graft").mode("append")
       .option("keys", "id").option("partitionColumns", "p").save(root)
-    assert(VersionedTable.readLivePartitioned(spark, root).count() === 3)
+    assert(VersionedTable.readLive(spark, root).count() === 3)
     // dynamic overwrite of ONLY p0
     Seq((7L, "p0", 70L)).toDF("id", "p", "x")
       .write.format("graft").mode("overwrite")
       .option("partitionColumns", "p")
       .option("partitionOverwriteMode", "dynamic").save(root)
-    val after = VersionedTable.readLivePartitioned(spark, root)
+    val after = VersionedTable.readLive(spark, root)
       .select("id").as[Long].collect().sorted
     assert(after === Array(2L, 7L)) // p0 replaced wholesale, p1 kept
     // static overwrite replaces the whole table
     Seq((100L, "p9", 1L)).toDF("id", "p", "x")
       .write.format("graft").mode("overwrite")
       .option("partitionColumns", "p").save(root)
-    assert(VersionedTable.readLivePartitioned(spark, root)
+    assert(VersionedTable.readLive(spark, root)
       .select("id").as[Long].collect().toSeq === Seq(100L))
   }
 
@@ -325,7 +325,7 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(d.filesScanned === 0 && d.pushed.exists(_.contains("CountStar")))
     // partitioned form too
     val root2 = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, root2,
+    VersionedTable.upsert(spark, root2,
       (1L to 90L).map(i => (i, s"p${i % 3}")).toDF("id", "p"),
       Seq("id"), Seq("p"))
     assert(spark.read.format("graft").load(root2).count() === 90)

@@ -137,22 +137,21 @@ class GraftFacadeSpec extends SparkSpec {
     "time travel, version diff") {
     val root = java.nio.file.Files.createTempDirectory("gfp")
       .resolve("t").toString
-    Graft.versionedUpsertPartitioned(spark, root,
+    Graft.versionedUpsert(spark, root,
       Seq(("d0", 1L, 10L), ("d1", 2L, 20L)).toDF("dt", "id", "v"),
-      Seq("dt", "id"), Seq("dt"), keepManifests = 4)
-    Graft.versionedUpsertPartitioned(spark, root,
-      Seq(("d0", 1L, 11L)).toDF("dt", "id", "v"),
-      Seq("dt", "id"), Seq("dt"), keepManifests = 4)
-    assert(Graft.readVersionedPartitionedAt(spark, root, 1L)
+      Seq("dt", "id"), Seq("dt"))
+    Graft.versionedUpsert(spark, root,
+      Seq(("d0", 1L, 11L)).toDF("dt", "id", "v"), Seq("dt", "id"))
+    assert(Graft.readTableVersion(spark, root, 1L)
       .filter($"id" === 1L).select("v").as[Long].head() === 10L)
     assert(Graft.diffVersions(spark, root, 1L, 2L, Seq("dt", "id"))
       .filter($"status" === "changed").count() === 1L)
     Graft.softDelete(spark, root, Seq(2L).toDF("id"),
       Seq("id"))
-    assert(Graft.readWithDeletes(spark, root, Seq("id"))
+    assert(Graft.readTable(spark, root)
       .select("id").as[Long].collect().toSeq === Seq(1L))
     Graft.vacuumDeletes(spark, root, Seq("id"))
-    assert(Graft.readVersionedPartitioned(spark, root).count() === 1L)
+    assert(Graft.readTable(spark, root).count() === 1L)
   }
 
   test("round-12 table wrappers wired: position deletes, compaction " +
@@ -164,7 +163,7 @@ class GraftFacadeSpec extends SparkSpec {
       (0L until 100L).map(i => (i, i * 3L)).toDF("id", "v"), Seq("id"))
     Graft.tag(root, "t0", 1L)
     Graft.softDeleteByPosition(spark, root, col("id") < 5L)
-    assert(Graft.readWithPositionDeletes(spark, root).count() === 95L)
+    assert(Graft.readTable(spark, root).count() === 95L)
     val (_, rw) = Graft.vacuumPositionDeletes(spark, root)
     assert(rw >= 1)
     assert(Graft.compactTable(spark, root, 2) >= 3L)
@@ -174,10 +173,10 @@ class GraftFacadeSpec extends SparkSpec {
     assert(Graft.removeOrphans(root, 0L) === ((0, 0, 0, 0)))
     assert(Graft.readTag(spark, root, "t0").count() === 100L)
     Graft.dropTag(root, "t0")
-    assert(Graft.readVersioned(spark, root).count() === 95L)
+    assert(Graft.readTable(spark, root).count() === 95L)
     val proot = java.nio.file.Files.createTempDirectory("gfac12p")
       .resolve("t").toString
-    Graft.versionedUpsertPartitioned(spark, proot,
+    Graft.versionedUpsert(spark, proot,
       (0L until 300L).map(i => (i, s"g${i % 3}", i))
         .toDF("id", "grp", "v").repartition(4, col("id")),
       Seq("id"), Seq("grp"))
@@ -185,15 +184,14 @@ class GraftFacadeSpec extends SparkSpec {
     val (_, nComp) = Graft.compactPartitions(spark, proot)
     assert(nComp === 3)
     Graft.compactPartitionsSorted(spark, proot, Seq("v"))
-    Graft.addBloomSkippingPartitioned(spark, proot, Seq("v"),
-      bits = 1 << 14)
-    assert(Graft.readTagPartitioned(spark, proot, "snap")
+    Graft.addBloomSkipping(spark, proot, Seq("v"), bits = 1 << 14)
+    assert(Graft.readTag(spark, proot, "snap")
       .count() === 300L)
-    assert(Graft.readVersionedPartitioned(spark, proot).count() === 300L)
+    assert(Graft.readTable(spark, proot).count() === 300L)
     // overwrite + constraint wrappers
     Graft.overwritePartitions(spark, proot,
       Seq((500L, "g0", 1L)).toDF("id", "grp", "v"), Seq("grp"))
-    assert(Graft.readVersionedPartitioned(spark, proot)
+    assert(Graft.readTable(spark, proot)
       .filter(col("grp") === "g0").count() === 1L)
     Graft.addConstraint(root, "pos_id", "id >= 0")
     intercept[sinks.VersionedTable.ConstraintViolationException] {
@@ -203,11 +201,11 @@ class GraftFacadeSpec extends SparkSpec {
     Graft.dropConstraint(root, "pos_id")
     Graft.overwriteWhere(spark, root, col("id") < 10L,
       Seq((5L, 555L)).toDF("id", "v"))
-    assert(Graft.readVersioned(spark, root)
+    assert(Graft.readTable(spark, root)
       .filter(col("id") < 10L).count() === 1L)
     val w = Graft.streamUpsertWriter(spark, root, Seq("id"))
     w(Seq((777L, 7L)).toDF("id", "v"), 99L)
-    assert(Graft.readVersioned(spark, root)
+    assert(Graft.readTable(spark, root)
       .filter(col("id") === 777L).count() === 1L)
   }
 
@@ -267,14 +265,14 @@ class GraftFacadeSpec extends SparkSpec {
   test("partitioned pos-delete wrappers wired") {
     val root = java.nio.file.Files.createTempDirectory("facadeppd")
       .resolve("t").toString
-    graft.sinks.VersionedTable.upsertPartitioned(spark, root,
+    graft.sinks.VersionedTable.upsert(spark, root,
       Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
         .toDF("id", "p", "x"), Seq("id"), Seq("p"))
     Graft.softDeleteByPosition(spark, root, $"id" === 2L)
-    assert(Graft.readWithPositionDeletes(spark, root).count() === 2)
+    assert(Graft.readTable(spark, root).count() === 2)
     val (_, rewritten) = Graft.vacuumPositionDeletes(spark, root)
     assert(rewritten === 1)
     assert(graft.sinks.VersionedTable
-      .readLivePartitioned(spark, root).count() === 2)
+      .readLive(spark, root).count() === 2)
   }
 }

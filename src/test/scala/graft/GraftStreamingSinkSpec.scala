@@ -50,7 +50,7 @@ class GraftStreamingSinkSpec extends SparkSpec {
   }
 
   test("keyless partitioned streaming append routes through " +
-    "appendPartitioned; a replayed epoch is skipped by the marker") {
+    "the partitioned append; a replayed epoch is skipped by the marker") {
     val root = tmpDir("graft_ss_part")
     val ckpt = tmpDir("graft_ss_part_ckpt")
     val in = MemoryStream[(Long, String)](spark)

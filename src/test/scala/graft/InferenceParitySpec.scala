@@ -62,7 +62,7 @@ class InferenceParitySpec extends SparkSpec {
       (2L, "2024-01-02", "b", 20L),
       (3L, null: String, "a", 30L)
     ).toDF("id", "day", "typ", "v")
-    VersionedTable.upsertPartitioned(spark, root, df, Seq("id"),
+    VersionedTable.upsert(spark, root, df, Seq("id"),
       Seq("day", "typ"))
     val m = VersionedTable.readPartitionedManifest(root).get
     val rootP = Paths.get(root)
@@ -84,7 +84,7 @@ class InferenceParitySpec extends SparkSpec {
       assert(relax(typed) === inferred, s"dir $dn leaves $leaves")
     }
     // row content identical through the memoized read
-    val got = VersionedTable.readLivePartitioned(spark, root)
+    val got = VersionedTable.readLive(spark, root)
       .select("id", "day", "typ", "v").as[(Long, String, String, Long)]
       .collect().sortBy(_._1)
     assert(got.toSeq === Seq((1L, "2024-01-01", "a", 10L),
@@ -99,7 +99,7 @@ class InferenceParitySpec extends SparkSpec {
       (2L, "2024-01-02", 20L),
       (3L, "2024-01-02", 30L)
     ).toDF("id", "day", "v")
-    VersionedTable.upsertPartitioned(spark, root, df, Seq("id"),
+    VersionedTable.upsert(spark, root, df, Seq("id"),
       Seq("day"))
     val m = VersionedTable.readPartitionedManifest(root).get
     val rootP = Paths.get(root)

@@ -17,9 +17,9 @@ class MetadataTablesSpec extends SparkSpec {
     val root = Files.createTempDirectory("meta").resolve("t").toString
     val df = (1L to 300L)
       .map(i => (i, s"d${i % 3}", i * 2)).toDF("id", "part", "v")
-    VersionedTable.upsertPartitioned(spark, root, df, Seq("id"),
+    VersionedTable.upsert(spark, root, df, Seq("id"),
       Seq("part"))
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((301L, "d0", 999L)).toDF("id", "part", "v"), Seq("id"),
       Seq("part"))
     VersionedTable.setRef(root, "stable", 1L)

@@ -86,7 +86,7 @@ class NearDupIndexSpec extends SparkSpec {
     val retry = pairsOf(NearDupIndex.ingestAndProbe(spark, root, batch,
       "text", "doc_id", epoch = "e1", threshold = 0.5))
     assert(retry === first) // batch ids excluded from the corpus side
-    val bands = VersionedTable.readLivePartitioned(spark, s"$root/bands")
+    val bands = VersionedTable.readLive(spark, s"$root/bands")
     assert(bands.select("id").distinct().count() === 7) // 4 corpus + 3 batch
     assert(bands.select("epoch").distinct().count() === 2)
   }
@@ -124,10 +124,10 @@ class NearDupIndexSpec extends SparkSpec {
       .select(col("id"), explode(Dedup.bandHashes(col("sig"), 16, 4)).as("bh"))
       .select(lit("e1").as("epoch"), col("id"),
         col("bh.band").as("band"), col("bh.h").as("h"))
-    VersionedTable.upsertPartitioned(spark, s"$root/bands", e1Bands,
-      keys = Seq("epoch", "id", "band"), partitionColumns = Seq("epoch"))
+    VersionedTable.upsert(spark, s"$root/bands", e1Bands,
+      keys = Seq("epoch", "id", "band"), partitionBy = Seq("epoch"))
     // the live bands table DOES contain the in-flight epoch ...
-    assert(VersionedTable.readLivePartitioned(spark, s"$root/bands")
+    assert(VersionedTable.readLive(spark, s"$root/bands")
       .filter(col("epoch") === "e1").count() > 0)
     val probe2 = Seq(
       (8L, "the quick brown fox jumps over the lazy dog near the river bend"))

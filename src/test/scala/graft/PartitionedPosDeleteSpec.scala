@@ -17,10 +17,10 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     Files.createTempDirectory("ppd").resolve("t").toString
 
   private def seed(root: String): Unit =
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       (1L to 30L).map(i => (i, s"p${i % 3}", i * 10L))
         .toDF("id", "p", "x"),
-      Seq("id"), Seq("p"), keepManifests = 10)
+      Seq("id"), Seq("p"), keepVersions = 10)
 
   test("softDeletePosPartitioned masks immediately; re-delete is a " +
     "keyed no-op; plain read unchanged") {
@@ -33,7 +33,7 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     assert(masked.count() === 23)
     assert(masked.filter(col("id") === 4L).count() === 0)
     // raw read keeps everything (MoR metadata, zero rewrite)
-    assert(VersionedTable.readLivePartitioned(spark, root).count() === 30)
+    assert(VersionedTable.readLive(spark, root).count() === 30)
     // re-deleting a subset must not disturb the set
     VersionedTable.softDeletePos(spark, root,
       col("id") === 8L)
@@ -58,7 +58,7 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     assert(after.partitions("p=p2") === before.partitions("p=p2"))
     assert(after.partitions("p=p1") !== before.partitions("p=p1"))
     // physically gone now — raw read agrees
-    assert(VersionedTable.readLivePartitioned(spark, root).count() === 27)
+    assert(VersionedTable.readLive(spark, root).count() === 27)
     assert(VersionedTable
       .readLiveWithPosDeletes(spark, root).count() === 27)
     // delete set reset: second vacuum is a no-op
@@ -73,11 +73,11 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     VersionedTable.softDeletePos(spark, root,
       col("id") === 6L) // partition p0
     // upsert a DIFFERENT key into p0: rewrites p0's files
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((300L, "p0", 1L)).toDF("id", "p", "x"),
-      Seq("id"), Seq("p"), keepManifests = 10)
+      Seq("id"), Seq("p"), keepVersions = 10)
     // id 6 must stay gone in BOTH reads (physically folded away)
-    assert(VersionedTable.readLivePartitioned(spark, root)
+    assert(VersionedTable.readLive(spark, root)
       .filter(col("id") === 6L).count() === 0)
     assert(VersionedTable
       .readLiveWithPosDeletes(spark, root).count() === 30)
@@ -97,9 +97,9 @@ class PartitionedPosDeleteSpec extends SparkSpec {
         deleter.join(3000) // a deleter that must wait for the lock
       }
     } {
-      VersionedTable.upsertPartitioned(spark, root,
+      VersionedTable.upsert(spark, root,
         Seq((300L, "p0", 1L)).toDF("id", "p", "x"),
-        Seq("id"), Seq("p"), keepManifests = 10)
+        Seq("id"), Seq("p"), keepVersions = 10)
     }
     deleter.join()
     val ids = VersionedTable.readLiveWithPosDeletes(spark, root)
@@ -113,17 +113,17 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     val root = tmpRoot()
     seed(root)
     // fragment p2 (two one-row commits), then pos-delete one p2 row
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((100L, "p2", 5L)).toDF("id", "p", "x"), Seq("id"), Seq("p"),
-      keepManifests = 10)
-    VersionedTable.upsertPartitioned(spark, root,
+      keepVersions = 10)
+    VersionedTable.upsert(spark, root,
       Seq((101L, "p2", 6L)).toDF("id", "p", "x"), Seq("id"), Seq("p"),
-      keepManifests = 10)
+      keepVersions = 10)
     VersionedTable.softDeletePos(spark, root,
       col("id") === 11L) // p2 row
     val (_, compacted) = VersionedTable.compactPartitions(spark, root)
     assert(compacted >= 1)
-    assert(VersionedTable.readLivePartitioned(spark, root)
+    assert(VersionedTable.readLive(spark, root)
       .filter(col("id") === 11L).count() === 0)
     // equality vacuum path: pos-delete then softDelete+vacuum another
     // partition — the rewrite reads through the pos mask
@@ -132,7 +132,7 @@ class PartitionedPosDeleteSpec extends SparkSpec {
     VersionedTable.softDelete(spark, root,
       Seq(15L).toDF("id"), Seq("id")) // p0, equality
     VersionedTable.vacuumDeletes(spark, root, Seq("id"))
-    val live = VersionedTable.readLivePartitioned(spark, root)
+    val live = VersionedTable.readLive(spark, root)
     assert(live.filter(col("id").isin(11L, 12L, 15L)).count() === 0)
   }
 

@@ -257,7 +257,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     val root = tmpRoot()
     val rows = (0L until 2000L).map(i => (i, s"p${i % 5}", i * 3L))
       .toDF("id", "grp", "v")
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       rows.repartitionByRange(8, col("id")), Seq("id"), Seq("grp"))
     def grpProbe(g: String) = EqualTo("grp", g) +: between("id", 100L, 200L)
     val (pScan, pTotal, fScan, fTotal) =
@@ -271,7 +271,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     assert(got === want, "pruned read must equal the plain filter")
     // a second upsert moves ONE partition to a new version dir — the
     // survivors must come from each partition's OWN pinned dir
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((102L, "p2", 9999L)).toDF("id", "grp", "v"),
       Seq("id"), Seq("grp"))
     val got2 = VersionedTable.readLivePruned(spark, root, grpProbe("p2"))
@@ -292,7 +292,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     // monotone-ingest shape)
     val rows = (0L until 1000L).map(i => (i, s"g${i / 100}", i * 2L))
       .toDF("id", "grp", "v")
-    VersionedTable.upsertPartitioned(spark, root, rows,
+    VersionedTable.upsert(spark, root, rows,
       Seq("id"), Seq("grp"))
     val (pScan, pTotal, fScan, fTotal) = twoLevel(
       VersionedTable.pruneDecision(root, between("id", 250L, 399L)))
@@ -305,7 +305,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     assert(got === (250L to 399L).toSet)
     // incremental upsert into ONE partition refreshes the bounds file
     // for the new manifest version — pruning still works after
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((260L, "g2", 9999L)).toDF("id", "grp", "v"),
       Seq("id"), Seq("grp"))
     val (pScan2, _, _, _) = twoLevel(
@@ -331,10 +331,10 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     // 5 partitions with disjoint id ranges, fragmented 4 ways
     val rows = (0L until 1000L).map(i => (i, s"g${i / 200}", i * 2L))
       .toDF("id", "grp", "v")
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       rows.repartition(4, col("id")), Seq("id"), Seq("grp"))
     // make ONE partition healthy: single-row rewrite of g4 only
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       rows.filter(col("grp") === "g4").coalesce(1),
       Seq("id"), Seq("grp"))
     val mBefore = VersionedTable.readPartitionedManifest(root).get
@@ -353,7 +353,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
         .count() === 1L)
       finally files.close()
     }
-    val got = VersionedTable.readLivePartitioned(spark, root)
+    val got = VersionedTable.readLive(spark, root)
       .select("id", "v").as[(Long, Long)].collect().toSet
     assert(got === (0L until 1000L).map(i => (i, i * 2L)).toSet)
     // part-stats refreshed by the replace commit: interval pruning
@@ -372,14 +372,14 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     val rows = (0L until 2000L)
       .map(i => (i, (i * 2654435761L) % 100000L, s"g${i % 4}"))
       .toDF("id", "k", "grp")
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       rows.repartition(4, col("id")), Seq("id"), Seq("grp"))
     // move ONE partition to a second version dir, then build blooms:
     // the builder must cover live files in BOTH dirs
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((9999L, (9999L * 2654435761L) % 100000L, "g3"))
         .toDF("id", "k", "grp"), Seq("id"), Seq("grp"))
-    VersionedTable.addBloomSidecarPartitioned(spark, root, Seq("k"),
+    VersionedTable.addBloomSidecar(spark, root, Seq("k"),
       bits = 1 << 15)
     val probe = (777L * 2654435761L) % 100000L
     val (pScan, pTot) =
@@ -408,11 +408,11 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
       spark, root, Seq(EqualTo("k", -5L))).count() === 0L)
     // string twin over a derived string key
     val sroot = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, sroot,
+    VersionedTable.upsert(spark, sroot,
       (0L until 1000L).map(i => (i, s"u${(i * 37L) % 500L}", s"g${i % 4}"))
         .toDF("id", "name", "grp").repartition(4, col("id")),
       Seq("id"), Seq("grp"))
-    VersionedTable.addBloomSidecarPartitioned(spark, sroot, Seq("name"),
+    VersionedTable.addBloomSidecar(spark, sroot, Seq("name"),
       bits = 1 << 15)
     val (sScan, sTot) = files(
       VersionedTable.pruneDecision(sroot, Seq(EqualTo("name", "u74"))))
@@ -450,15 +450,15 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     VersionedTable.upsert(spark, root,
       Seq((4L, -1L)).toDF("id", "v"), Seq("id"))
     assert(VersionedTable.readLive(spark, root).count() === 3L)
-    // partitioned form enforced through upsertPartitioned and
+    // partitioned form enforced through the partitioned upsert and
     // overwritePartitions
     val proot = tmpRoot()
     VersionedTable.addConstraint(proot, "named", "name IS NOT NULL")
-    VersionedTable.upsertPartitioned(spark, proot,
+    VersionedTable.upsert(spark, proot,
       Seq((1L, "a", "g0")).toDF("id", "name", "grp"),
       Seq("id"), Seq("grp"))
     intercept[VersionedTable.ConstraintViolationException] {
-      VersionedTable.upsertPartitioned(spark, proot,
+      VersionedTable.upsert(spark, proot,
         Seq((2L, null.asInstanceOf[String], "g0"))
           .toDF("id", "name", "grp"), Seq("id"), Seq("grp"))
     }
@@ -467,7 +467,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
         Seq((3L, null.asInstanceOf[String], "g1"))
           .toDF("id", "name", "grp"), Seq("grp"))
     }
-    assert(VersionedTable.readLivePartitioned(spark, proot)
+    assert(VersionedTable.readLive(spark, proot)
       .count() === 1L)
   }
 
@@ -486,7 +486,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
       Seq("grp"))
     val pb = Seq((1L, "g0", 10L), (2L, "g1", 20L)).toDF("id", "grp", "v")
     pw(pb, 0L); pw(pb, 0L)
-    assert(VersionedTable.readLivePartitioned(spark, proot)
+    assert(VersionedTable.readLive(spark, proot)
       .count() === 2L)
   }
 
@@ -520,16 +520,16 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     }
     // partitioned: the ref pins every dir its manifest references
     val proot = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, proot,
+    VersionedTable.upsert(spark, proot,
       (0L until 90L).map(i => (i, s"g${i % 3}", i)).toDF("id", "grp", "v"),
       Seq("id"), Seq("grp"))
     VersionedTable.setRef(proot, "snap", 1L)
     (1 to 4).foreach { i =>
-      VersionedTable.upsertPartitioned(spark, proot,
+      VersionedTable.upsert(spark, proot,
         Seq((i.toLong, s"g${i % 3}", i * 100L)).toDF("id", "grp", "v"),
         Seq("id"), Seq("grp"))
     }
-    val snap = VersionedTable.readPartitionedRef(spark, proot, "snap")
+    val snap = VersionedTable.readRef(spark, proot, "snap")
       .select("id", "v").as[(Long, Long)].collect().toMap
     assert(snap === (0L until 90L).map(i => (i, i)).toMap)
   }
@@ -558,7 +558,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     val root = tmpRoot()
     val rows = (0L until 200L).map(i => (i, f"${i % 4}%02d", i))
       .toDF("id", "grp", "v") // grp in {00, 01, 02, 03} — all lossy
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       rows.repartition(4, col("id")), Seq("id"), Seq("grp"))
     val keysBefore = VersionedTable.readPartitionedManifest(root)
       .get.partitions.keySet
@@ -571,7 +571,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
       s"compaction renamed partition keys: $keysAfter")
     // values in the data are the original zero-padded strings, typed
     // string per the recorded schema
-    val got = VersionedTable.readLivePartitioned(spark, root)
+    val got = VersionedTable.readLive(spark, root)
     assert(got.schema("grp").dataType ===
       org.apache.spark.sql.types.StringType)
     assert(got.filter(col("grp") === "07").count() === 0L)
@@ -581,7 +581,7 @@ class PosDeleteBloomZOrderSpec extends SparkSpec {
     VersionedTable.compactPartitionsSorted(spark, root, Seq("v"), 2)
     assert(VersionedTable.readPartitionedManifest(root)
       .get.partitions.keySet === keysBefore)
-    assert(VersionedTable.readLivePartitioned(spark, root)
+    assert(VersionedTable.readLive(spark, root)
       .filter(col("grp") === "03").count() === 50L)
   }
 

@@ -20,27 +20,27 @@ class TableGuardrailsSpec extends SparkSpec {
   private def tmpRoot(): String =
     Files.createTempDirectory("guard").resolve("t").toString
 
-  test("upsertPartitioned rejects partition-column TYPE drift against " +
+  test("a partitioned upsert rejects partition-column TYPE drift against " +
     "the recorded _part_schema.json") {
     val root = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((1L, "07", "a"), (2L, "11", "b")).toDF("id", "day", "v"),
       Seq("id"), Seq("day"))
     // same values, but the partition column arrives as INT — "07"
     // versus 7 address DIFFERENT path-escaped partitions; must fail
     // loudly, not coerce
     val e = intercept[IllegalArgumentException] {
-      VersionedTable.upsertPartitioned(spark, root,
+      VersionedTable.upsert(spark, root,
         Seq((3L, 7, "c")).toDF("id", "day", "v"),
         Seq("id"), Seq("day"))
     }
     assert(e.getMessage.contains("type drift"))
     assert(e.getMessage.contains("day"))
     // matching type still works and the key space is intact
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((3L, "07", "c")).toDF("id", "day", "v"),
       Seq("id"), Seq("day"))
-    val got = VersionedTable.readLivePartitioned(spark, root)
+    val got = VersionedTable.readLive(spark, root)
     assert(got.count() === 3)
     assert(got.select("day").distinct().as[String].collect().sorted
       === Array("07", "11"))
@@ -49,7 +49,7 @@ class TableGuardrailsSpec extends SparkSpec {
   test("overwritePartitions under a different partition-column list " +
     "fails instead of flipping the spec") {
     val root = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((1L, "x", "a"), (2L, "y", "b")).toDF("id", "day", "v"),
       Seq("id"), Seq("day"))
     val e = intercept[IllegalArgumentException] {
@@ -60,7 +60,7 @@ class TableGuardrailsSpec extends SparkSpec {
     // manifest spec unchanged, data unchanged
     val m = VersionedTable.readPartitionedManifest(root).get
     assert(m.partitionColumns === Seq("day"))
-    assert(VersionedTable.readLivePartitioned(spark, root).count() === 2)
+    assert(VersionedTable.readLive(spark, root).count() === 2)
   }
 
   test("removeOrphans ages staging dirs by the newest nested mtime — " +
@@ -127,7 +127,7 @@ class TableGuardrailsSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       VersionedTable.upsert(spark, root,
         Seq((2L, "b")).toDF("id", "v"), Seq("id"),
-        graft.sinks.MergeWriter.SchemaMode.SyncAllColumns)
+        schemaMode = graft.sinks.MergeWriter.SchemaMode.SyncAllColumns)
     }
     assert(e.getMessage.contains("score_pos"))
     assert(e.getMessage.contains("score"))
@@ -145,5 +145,28 @@ class TableGuardrailsSpec extends SparkSpec {
         Seq((2L, "b")).toDF("id", "v"), Seq("id"))
     }
     assert(e.getMessage.contains("oops"))
+  }
+
+  test("flat-only maintenance on a partitioned table names the " +
+    "partitioned verbs") {
+    val root = tmpRoot()
+    VersionedTable.upsert(spark, root,
+      Seq((1L, "x", "a"), (2L, "y", "b")).toDF("id", "day", "v"),
+      Seq("id"), Seq("day"))
+    val before = Files.readAllBytes(Paths.get(root, "_manifest.json")).toSeq
+    Seq[(String, () => Any)](
+      "compact" -> (() => VersionedTable.compact(spark, root, 1)),
+      "compactSorted" ->
+        (() => VersionedTable.compactSorted(spark, root, Seq("id"), 1)),
+      "compactZOrder" -> (() =>
+        VersionedTable.compactZOrder(spark, root, "id", "v", 1))
+    ).foreach { case (verb, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(s"$verb rewrites flat tables") &&
+        e.getMessage.contains("partitioned") &&
+        e.getMessage.contains("compactPartitions"), e.getMessage)
+    }
+    assert(Files.readAllBytes(Paths.get(root, "_manifest.json")).toSeq ===
+      before)
   }
 }

@@ -45,7 +45,7 @@ class VersionedTableSpec extends SparkSpec {
     }
     VersionedTable.upsert(spark, root,
       Seq((2L, "b", 9L)).toDF("id", "v", "extra"), Seq("id"),
-      MergeWriter.SchemaMode.SyncAllColumns)
+      schemaMode = MergeWriter.SchemaMode.SyncAllColumns)
     val live = VersionedTable.readLive(spark, root)
     assert(live.columns.sorted.toSeq === Seq("extra", "id", "v"))
     assert(live.filter($"id" === 1L).select("extra").head().isNullAt(0))
@@ -142,10 +142,10 @@ class VersionedTableSpec extends SparkSpec {
     "only touched partitions, a fully-emptied partition vacates its " +
     "manifest pointer") {
     val root = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq(("d0", 1L, "a"), ("d0", 2L, "b"), ("d1", 3L, "c"),
         ("d2", 4L, "d")).toDF("dt", "id", "v"),
-      Seq("dt", "id"), Seq("dt"), keepManifests = 4)
+      Seq("dt", "id"), Seq("dt"), keepVersions = 4)
     VersionedTable.softDelete(spark, root,
       Seq(1L, 3L).toDF("id"), Seq("id"))
     def liveIds() = VersionedTable
@@ -153,7 +153,7 @@ class VersionedTableSpec extends SparkSpec {
       .select("id").as[Long].collect().sorted.toSeq
     // masked immediately, physical data untouched
     assert(liveIds() === Seq(2L, 4L))
-    assert(VersionedTable.readLivePartitioned(spark, root).count() === 4)
+    assert(VersionedTable.readLive(spark, root).count() === 4)
     val before = VersionedTable.readPartitionedManifest(root).get
     VersionedTable.vacuumDeletes(spark, root, Seq("id"))
     val after = VersionedTable.readPartitionedManifest(root).get
@@ -165,7 +165,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(!after.partitions.contains("dt=d1"),
       s"fully-emptied partition still pointed: ${after.partitions}")
     assert(liveIds() === Seq(2L, 4L))
-    assert(VersionedTable.readLivePartitioned(spark, root).count() === 2)
+    assert(VersionedTable.readLive(spark, root).count() === 2)
     // delete set reset: a fresh delete + immediate read still works
     VersionedTable.softDelete(spark, root,
       Seq(4L).toDF("id"), Seq("id"))
@@ -176,7 +176,7 @@ class VersionedTableSpec extends SparkSpec {
     "commit before its manifest flip") {
     val root = tmpRoot()
     val rows = Seq(("07", 1L), ("08", 2L)).toDF("dt", "id")
-    VersionedTable.upsertPartitioned(spark, root, rows, Seq("id"),
+    VersionedTable.upsert(spark, root, rows, Seq("id"),
       Seq("dt"))
     val before = VersionedTable.readPartitionedManifest(root).get
     val e = intercept[Exception] {
@@ -184,14 +184,14 @@ class VersionedTableSpec extends SparkSpec {
         if (target.getFileName.toString == "_part_schema.json")
           throw new java.io.IOException("part schema publish failed")
       } {
-        VersionedTable.upsertPartitioned(spark, root,
+        VersionedTable.upsert(spark, root,
           Seq(("09", 3L)).toDF("dt", "id"), Seq("id"), Seq("dt"))
       }
     }
     assert(e.getMessage.contains("part schema publish failed"),
       e.getMessage)
     assert(VersionedTable.readPartitionedManifest(root).get === before)
-    assert(VersionedTable.readLivePartitioned(spark, root)
+    assert(VersionedTable.readLive(spark, root)
       .select("dt").as[String].collect().sorted.toSeq === Seq("07", "08"))
   }
 
@@ -202,10 +202,10 @@ class VersionedTableSpec extends SparkSpec {
     // which String.valueOf-based hand rendering ("null") would miss —
     // the emptied partition's stale pointer would resurface its rows
     val root = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((Some("d0"), 1L, "a"), (Option.empty[String], 2L, "b"),
         (Option.empty[String], 3L, "c")).toDF("dt", "id", "v"),
-      Seq("dt", "id"), Seq("dt"), keepManifests = 4)
+      Seq("dt", "id"), Seq("dt"), keepVersions = 4)
     val before = VersionedTable.readPartitionedManifest(root).get
     assert(before.partitions.keySet ===
       Set("dt=d0", "dt=__HIVE_DEFAULT_PARTITION__"))
@@ -217,33 +217,33 @@ class VersionedTableSpec extends SparkSpec {
       s"emptied null partition still pointed: ${after.partitions}")
     assert(after.partitions("dt=d0") === before.partitions("dt=d0"),
       "untouched partition must keep its pointer")
-    assert(VersionedTable.readLivePartitioned(spark, root)
+    assert(VersionedTable.readLive(spark, root)
       .select("id").as[Long].collect().toSeq === Seq(1L))
     // timestamp partition value: Spark renders the session-tz wall
     // time with ':' path-escaped — hand rendering diverges there too
     val troot = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, troot,
+    VersionedTable.upsert(spark, troot,
       Seq((java.sql.Timestamp.valueOf("2024-01-01 10:30:00"), 1L),
         (java.sql.Timestamp.valueOf("2024-01-02 11:45:00"), 2L))
         .toDF("h", "id"),
-      Seq("h", "id"), Seq("h"), keepManifests = 4)
+      Seq("h", "id"), Seq("h"), keepVersions = 4)
     VersionedTable.softDelete(spark, troot,
       Seq(2L).toDF("id"), Seq("id"))
     VersionedTable.vacuumDeletes(spark, troot, Seq("id"))
     val tafter = VersionedTable.readPartitionedManifest(troot).get
     assert(tafter.partitions.size === 1,
       s"emptied timestamp partition still pointed: ${tafter.partitions}")
-    assert(VersionedTable.readLivePartitioned(spark, troot)
+    assert(VersionedTable.readLive(spark, troot)
       .select("id").as[Long].collect().toSeq === Seq(1L))
     // empty-string and path-hostile string values (space, '=', '%',
     // '/'): Spark's writer folds "" into the null partition and
     // percent-escapes the rest — the driver-side renderer (r16) must
     // keep matching the harvested keys byte-for-byte for all of them
     val sroot = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, sroot,
+    VersionedTable.upsert(spark, sroot,
       Seq(("", 1L), ("a b=c", 2L), ("p%2F/q", 3L), ("keep", 4L))
         .toDF("k", "id"),
-      Seq("k", "id"), Seq("k"), keepManifests = 4)
+      Seq("k", "id"), Seq("k"), keepVersions = 4)
     val sbefore = VersionedTable.readPartitionedManifest(sroot).get
     VersionedTable.softDelete(spark, sroot,
       Seq(1L, 2L, 3L).toDF("id"), Seq("id"))
@@ -252,7 +252,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(safter.partitions.keySet === Set("k=keep"),
       s"emptied escaped partitions still pointed: ${safter.partitions} " +
         s"(before: ${sbefore.partitions.keySet})")
-    assert(VersionedTable.readLivePartitioned(spark, sroot)
+    assert(VersionedTable.readLive(spark, sroot)
       .select("id").as[Long].collect().toSeq === Seq(4L))
   }
 
@@ -300,14 +300,14 @@ class VersionedTableSpec extends SparkSpec {
       .select("id", "status").as[(Long, String)].collect().toMap
     assert(d === Map(1L -> "removed", 2L -> "changed",
       3L -> "same", 4L -> "added"))
-    // partitioned form routes through readPartitionedVersion
+    // the partitioned form diffs through the same readVersion
     val proot = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, proot,
+    VersionedTable.upsert(spark, proot,
       Seq(("d0", 1L, 10L)).toDF("dt", "id", "v"), Seq("dt", "id"),
-      Seq("dt"), keepManifests = 4)
-    VersionedTable.upsertPartitioned(spark, proot,
+      Seq("dt"), keepVersions = 4)
+    VersionedTable.upsert(spark, proot,
       Seq(("d0", 1L, 11L), ("d1", 2L, 20L)).toDF("dt", "id", "v"),
-      Seq("dt", "id"), Seq("dt"), keepManifests = 4)
+      Seq("dt", "id"), Seq("dt"), keepVersions = 4)
     val pd = VersionedTable
       .diffVersions(spark, proot, 1L, 2L, Seq("dt", "id"))
       .select("id", "status").as[(Long, String)].collect().toMap
@@ -552,10 +552,10 @@ class VersionedTableSpec extends SparkSpec {
     val root = tmpRoot()
     val day1 = Seq((1L, "d1", 10L), (2L, "d1", 20L))
     val day2 = Seq((3L, "d2", 30L))
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       (day1 ++ day2).toDF("id", "dt", "v"), Seq("id"), Seq("dt"))
     // second batch touches ONLY d2 (update 3, insert 4)
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((3L, "d2", 31L), (4L, "d2", 40L)).toDF("id", "dt", "v"),
       Seq("id"), Seq("dt"))
     val m = VersionedTable.readPartitionedManifest(root).get
@@ -563,7 +563,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(m.partitions("dt=d1") === "v00000001",
       "untouched partition must keep its old version dir")
     assert(m.partitions("dt=d2") === "v00000002")
-    val got = VersionedTable.readLivePartitioned(spark, root)
+    val got = VersionedTable.readLive(spark, root)
       .collect().map(r => (r.getAs[Long]("id"),
         r.getAs[String]("dt"), r.getAs[Long]("v"))).toSet
     assert(got === Set((1L, "d1", 10L), (2L, "d1", 20L),
@@ -571,12 +571,12 @@ class VersionedTableSpec extends SparkSpec {
     // v1 still holds d1's live data so it must survive pruning; after
     // a third commit touching d1, v1 is only the PREVIOUS snapshot's
     // dependency and survives one more round
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq((1L, "d1", 11L)).toDF("id", "dt", "v"), Seq("id"), Seq("dt"))
     val m3 = VersionedTable.readPartitionedManifest(root).get
     assert(m3.partitions("dt=d1") === "v00000003")
     assert(m3.partitions("dt=d2") === "v00000002")
-    val got3 = VersionedTable.readLivePartitioned(spark, root)
+    val got3 = VersionedTable.readLive(spark, root)
       .filter($"dt" === "d1").select("v").as[Long].collect().toSet
     assert(got3 === Set(11L, 20L))
   }
@@ -674,9 +674,9 @@ class VersionedTableSpec extends SparkSpec {
     "reassembles exact snapshots and fails loudly past retention") {
     val root = tmpRoot()
     def put(id: Long, v: Long, keep: Int = 3) =
-      VersionedTable.upsertPartitioned(spark, root,
+      VersionedTable.upsert(spark, root,
         Seq((s"d${id % 2}", id, v)).toDF("dt", "id", "v"),
-        Seq("dt", "id"), Seq("dt"), keepManifests = keep)
+        Seq("dt", "id"), Seq("dt"), keepVersions = keep)
     put(0L, 0L); put(1L, 1L)
     // pin the v2 snapshot, then land two more commits (keep=3 keeps
     // dirs referenced by the newest 3 manifests: v2, v3, v4)
@@ -688,37 +688,36 @@ class VersionedTableSpec extends SparkSpec {
     assert(snap === Map(0L -> 0L, 1L -> 1L),
       "the 2-commits-old pinned snapshot must still read under keep=3")
     // partitioned time travel: every retained version exact
-    assert(VersionedTable.readPartitionedVersion(spark, root, 2L)
+    assert(VersionedTable.readVersion(spark, root, 2L)
       .select("id", "v").as[(Long, Long)].collect().toMap ===
       Map(0L -> 0L, 1L -> 1L))
-    assert(VersionedTable.readPartitionedVersion(spark, root, 4L)
+    assert(VersionedTable.readVersion(spark, root, 4L)
       .select("id", "v").as[(Long, Long)].collect().toMap ===
       Map(0L -> 10L, 1L -> 11L))
-    // the flat reader refuses partitioned versions (it would return
-    // only the touched partitions)
-    val eFlat = intercept[IllegalStateException] {
-      VersionedTable.readVersion(spark, root, 2L)
-    }
-    assert(eFlat.getMessage.contains("readPartitionedVersion"))
+    // time travel reassembles the whole snapshot, not only the
+    // partitions the version's own dir holds
+    assert(VersionedTable.readVersion(spark, root, 3L)
+      .select("id", "v").as[(Long, Long)].collect().toMap ===
+      Map(0L -> 10L, 1L -> 1L))
     // push v1's dirs past retention: reading it names the pruned dirs
-    // and the keepManifests remedy
+    // and the keepVersions remedy
     put(0L, 20L); put(1L, 21L); put(0L, 22L)
     val eOld = intercept[IllegalStateException] {
-      VersionedTable.readPartitionedVersion(spark, root, 1L)
+      VersionedTable.readVersion(spark, root, 1L)
     }
-    assert(eOld.getMessage.contains("keepManifests"))
+    assert(eOld.getMessage.contains("keepVersions"))
   }
 
   test("interleaved partitioned upserts converge with all partitions") {
     val root = tmpRoot()
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq(("seed", 0L, 0L)).toDF("dt", "id", "v"), Seq("dt", "id"),
       Seq("dt"))
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val writers = (1 to 2).map { w =>
       new Thread(() => {
         try (1 to 3).foreach { i =>
-          VersionedTable.upsertPartitioned(spark, root,
+          VersionedTable.upsert(spark, root,
             Seq((s"d$w", w * 10L + i, w.toLong)).toDF("dt", "id", "v"),
             Seq("dt", "id"), Seq("dt"))
         } catch { case t: Throwable => errors.add(t) }
@@ -726,7 +725,7 @@ class VersionedTableSpec extends SparkSpec {
     }
     writers.foreach(_.start()); writers.foreach(_.join(120000))
     assert(errors.isEmpty, s"writer threw: ${errors.toArray.headOption}")
-    val got = VersionedTable.readLivePartitioned(spark, root)
+    val got = VersionedTable.readLive(spark, root)
       .select("id").as[Long].collect().toSet
     assert(got === (Set(0L) ++
       (1 to 2).flatMap(w => (1 to 3).map(i => w * 10L + i)).toSet))

@@ -96,7 +96,7 @@ class VersionedTableStressSpec extends SparkSpec {
   test("8 partitioned writers converge: cross-partition interleaving " +
     "never loses a partition pointer or a row") {
     val root = Files.createTempDirectory("vstressP").resolve("t").toString
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq(("seed", 0L, -1L)).toDF("dt", "id", "v"), Seq("dt", "id"),
       Seq("dt"))
     val nWriters = 8
@@ -117,9 +117,9 @@ class VersionedTableStressSpec extends SparkSpec {
             // writers within each shared partition
             val k = (w + 1) * 100L + rnd.nextInt(10)
             val dt = s"d${k % 3}"
-            VersionedTable.upsertPartitioned(spark, root,
+            VersionedTable.upsert(spark, root,
               Seq((dt, k, w * 1000L + step)).toDF("dt", "id", "v"),
-              Seq("dt", "id"), partitionColumns = Seq("dt"),
+              Seq("dt", "id"), partitionBy = Seq("dt"),
               maxRetries = 30)
             models(w)(k) = w * 1000L + step
           }
@@ -130,7 +130,7 @@ class VersionedTableStressSpec extends SparkSpec {
     threads.foreach(_.join(180000))
     assert(threads.forall(!_.isAlive), "a partitioned writer is stuck")
     assert(errors.isEmpty, s"writer threw: ${errors.toArray.toSeq}")
-    val rows = VersionedTable.readLivePartitioned(spark, root)
+    val rows = VersionedTable.readLive(spark, root)
       .select("id", "v").as[(Long, Long)].collect()
     assert(rows.map(_._1).distinct.length === rows.length,
       s"duplicate live rows for a key: ${rows.toSeq.sortBy(_._1)}")
@@ -149,9 +149,9 @@ class VersionedTableStressSpec extends SparkSpec {
     "interleave with 4 upsert writers without losing rows or pointers") {
     val root = Files.createTempDirectory("vstressM").resolve("t").toString
     val rootP = java.nio.file.Paths.get(root)
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       Seq(("seed", 0L, -1L)).toDF("dt", "id", "v"), Seq("dt", "id"),
-      Seq("dt"), keepManifests = 40)
+      Seq("dt"), keepVersions = 40)
     // planted AGED crash artifacts: the orphan thread's grace period
     // must reap exactly these while every live writer's staging stays
     // untouched
@@ -179,10 +179,10 @@ class VersionedTableStressSpec extends SparkSpec {
           (0 until opsPerWriter).foreach { step =>
             val k = (w + 1) * 100L + rnd.nextInt(10)
             val dt = s"d${k % 3}"
-            VersionedTable.upsertPartitioned(spark, root,
+            VersionedTable.upsert(spark, root,
               Seq((dt, k, w * 1000L + step)).toDF("dt", "id", "v"),
-              Seq("dt", "id"), partitionColumns = Seq("dt"),
-              maxRetries = 30, keepManifests = 40)
+              Seq("dt", "id"), partitionBy = Seq("dt"),
+              maxRetries = 30, keepVersions = 40)
             models(w)(k) = w * 1000L + step
           }
         } catch { case t: Throwable => errors.add(t) }
@@ -208,7 +208,7 @@ class VersionedTableStressSpec extends SparkSpec {
     // aged artifacts reaped; live data byte-for-byte the serial replay
     assert(!Files.exists(rootP.resolve("_staging-dead")))
     assert(!Files.exists(rootP.resolve("v00000099")))
-    val got = VersionedTable.readLivePartitioned(spark, root)
+    val got = VersionedTable.readLive(spark, root)
       .select("id", "v").as[(Long, Long)].collect().toMap
     val expected = Map(0L -> -1L) ++ models.flatMap(_.toSeq)
     assert(got === expected,
@@ -221,9 +221,9 @@ class VersionedTableStressSpec extends SparkSpec {
     val root = Files.createTempDirectory("vstressPD").resolve("t").toString
     // seed: 6 dedicated delete-target keys (ids 1..6) the writers
     // never touch, spread across 3 partitions
-    VersionedTable.upsertPartitioned(spark, root,
+    VersionedTable.upsert(spark, root,
       (1L to 6L).map(k => (s"d${k % 3}", k, -k)).toDF("dt", "id", "v"),
-      Seq("dt", "id"), Seq("dt"), keepManifests = 80)
+      Seq("dt", "id"), Seq("dt"), keepVersions = 80)
     val nWriters = 4
     val opsPerWriter = 4
     val errors =
@@ -236,11 +236,11 @@ class VersionedTableStressSpec extends SparkSpec {
           val rnd = new java.util.Random(9100L + w)
           (0 until opsPerWriter).foreach { step =>
             val k = (w + 1) * 100L + rnd.nextInt(8)
-            VersionedTable.upsertPartitioned(spark, root,
+            VersionedTable.upsert(spark, root,
               Seq((s"d${k % 3}", k, w * 1000L + step))
                 .toDF("dt", "id", "v"),
               Seq("dt", "id"), Seq("dt"), maxRetries = 40,
-              keepManifests = 80)
+              keepVersions = 80)
             models(w)(k) = w * 1000L + step
           }
         } catch { case t: Throwable => errors.add(t) }
@@ -285,7 +285,7 @@ class VersionedTableStressSpec extends SparkSpec {
       s"diverged: missing=${expected.keySet -- got.keySet} " +
         s"extra=${got.keySet -- expected.keySet}")
     // physically folded too
-    assert(VersionedTable.readLivePartitioned(spark, root)
+    assert(VersionedTable.readLive(spark, root)
       .filter(col("id") <= 6L).count() === 0)
   }
 }
